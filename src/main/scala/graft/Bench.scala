@@ -302,7 +302,8 @@ object Bench {
     val b0 = System.nanoTime()
     graft.wheel.WheelIndex.build(Q.t(spark, sfDir, "events"), "ts", "value")
     val buildSec = (System.nanoTime() - b0) / 1e9
-    val idx = WheelCatalog.cached(spark, s"$sfDir/events.parquet")(Q.t(spark, sfDir, "events"))
+    val idx = WheelCatalog.cached(spark, "sum", s"$sfDir/events.parquet", "ts", "value")(
+      graft.wheel.WheelIndex.build(Q.t(spark, sfDir, "events"), "ts", "value"))
     val slotCounts = idx.slotCounts.map { case (t, n) => s""""${t.name}":$n""" }
       .mkString("{", ",", "}")
     // fanOut before cache: the single-row-group events file would pin

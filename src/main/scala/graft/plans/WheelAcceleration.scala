@@ -46,12 +46,136 @@ import graft.wheel.{AllAggregate, WheelIndex}
   * index from the caller's DataFrame.
   */
 object WheelAcceleration {
+  import graft.wheel.{CohortWheel, FrequencyWheel, KeyedSketchWheels, KeyedWheelIndex,
+    PersistentWheel, QuantileWheel, RollupBuilder, WheelCatalog}
 
-  private final case class Reg(tsCol: String, wheels: Map[String, WheelIndex],
-      fingerprint: String, hadoopConf: org.apache.hadoop.conf.Configuration)
+  private type Conf = org.apache.hadoop.conf.Configuration
+  private type SqlRow = org.apache.spark.sql.Row
 
-  /** Registered indexes keyed by the source file's URI path. */
-  private val registry = new ConcurrentHashMap[String, Reg]()
+  /** Registration diagnostics: the stale-fingerprint notice at WARN, the
+    * swallowed append-refresh and rewrite exceptions at DEBUG. */
+  private[plans] val log =
+    org.apache.logging.log4j.LogManager.getLogger("graft.plans.WheelAcceleration")
+
+  /** What every family's registration carries for the freshness check:
+    * the source fingerprint it was built against, and the Hadoop conf to
+    * re-list the source with. */
+  private[plans] sealed trait Slot {
+    def fingerprint: String
+    def hadoopConf: Conf
+  }
+
+  /** The sum-family wheels of one source: measure column → index. */
+  private[plans] final case class SumReg(tsCol: String, wheels: Map[String, WheelIndex],
+      fingerprint: String, hadoopConf: Conf) extends Slot
+
+  /** The PER-KEY index family of one source (GROUP BY keyCol × time-slot). */
+  private[plans] final case class KeyedReg(keyCol: String, tsCol: String,
+      wheels: Map[String, KeyedWheelIndex], fingerprint: String,
+      hadoopConf: Conf) extends Slot {
+    /** All wheels share one build, so span/keys/keyType agree. */
+    def any: KeyedWheelIndex = wheels.valuesIterator.next()
+  }
+
+  /** COMPOSITE-dimension keyed wheels: the per-key index keyed on an
+    * N-TUPLE of dimension columns, so `GROUP BY k1, k2, time-slot` — the
+    * (country, event_type, day) dashboard shape — folds at plan time. The
+    * tuple rides as ONE struct-valued key through the UNCHANGED
+    * [[graft.wheel.KeyedWheelIndex]] machinery: `keyCols` is recorded only
+    * so the rewrite can match the statement's separate grouping
+    * attributes and re-emit each key COMPONENT as its own output literal. */
+  private[plans] final case class Keyed2Reg(keyCols: Seq[String], tsCol: String,
+      wheels: Map[String, KeyedWheelIndex], fingerprint: String,
+      hadoopConf: Conf) extends Slot {
+    def any: KeyedWheelIndex = wheels.valuesIterator.next()
+  }
+
+  /** The sketch wheels serving the APPROXIMATE SQL spellings for one
+    * source, keyed by input column: Theta for `approx_count_distinct`,
+    * KLL for `percentile_approx`, Misra-Gries for `approx_top_k`. */
+  private[plans] final case class SketchReg(tsCol: String,
+      distinct: Map[String, CohortWheel],
+      quantile: Map[String, QuantileWheel],
+      freq: Map[String, FrequencyWheel],
+      fingerprint: String, hadoopConf: Conf) extends Slot {
+    /** Indexed span [base, horizon) of any member wheel (all are built
+      * from the same source, so the spans agree). */
+    def span: Option[(Long, Long)] =
+      distinct.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption()
+        .orElse(quantile.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption())
+        .orElse(freq.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption())
+  }
+
+  /** PER-DIMENSION-KEY sketch wheels for one source: the keyed analogue
+    * of [[SketchReg]], serving the approximate spellings PER KEY inside
+    * `GROUP BY keyCol × time-slot` rewrites. Maps are column →
+    * (dimension value → wheel). */
+  private[plans] final case class KeyedSketchReg(keyCol: String, tsCol: String,
+      distinct: Map[String, Map[Any, CohortWheel]],
+      quantile: Map[String, Map[Any, QuantileWheel]],
+      freq: Map[String, Map[Any, FrequencyWheel]],
+      fingerprint: String, hadoopConf: Conf) extends Slot {
+    /** The unkeyed [[SketchReg]] view for ONE dimension value — every
+      * downstream fold / clamp / accuracy-gate path is the proven
+      * unkeyed one. Columns whose wheel map lacks this key simply drop
+      * out (their aggregates bail to the scan). */
+    def viewFor(key: Any): SketchReg = SketchReg(tsCol,
+      distinct.flatMap { case (c, m) => m.get(key).map(c -> _) },
+      quantile.flatMap { case (c, m) => m.get(key).map(c -> _) },
+      freq.flatMap { case (c, m) => m.get(key).map(c -> _) },
+      fingerprint, hadoopConf)
+  }
+
+  /** Everything registered for one source path: one optional slot per
+    * wheel family. Every registration replaces only its own slot. */
+  private[plans] final case class Registration(sum: Option[SumReg],
+      keyed: Option[KeyedReg], composite: Option[Keyed2Reg],
+      sketch: Option[SketchReg], keyedSketch: Option[KeyedSketchReg])
+  private val Unregistered = Registration(None, None, None, None, None)
+
+  /** How to read and replace one family's slot of a [[Registration]]. */
+  private final case class SlotOf[S <: Slot](get: Registration => Option[S],
+      set: (Registration, S) => Registration)
+  private val SumSlot = SlotOf[SumReg](_.sum, (r, s) => r.copy(sum = Some(s)))
+  private val KeyedSlot = SlotOf[KeyedReg](_.keyed, (r, s) => r.copy(keyed = Some(s)))
+  private val CompositeSlot =
+    SlotOf[Keyed2Reg](_.composite, (r, s) => r.copy(composite = Some(s)))
+  private val SketchSlot = SlotOf[SketchReg](_.sketch, (r, s) => r.copy(sketch = Some(s)))
+  private val KeyedSketchSlot =
+    SlotOf[KeyedSketchReg](_.keyedSketch, (r, s) => r.copy(keyedSketch = Some(s)))
+
+  /** Registered indexes keyed by the source's normalized path. */
+  private val registry = new ConcurrentHashMap[String, Registration]()
+
+  /** Replace `slot` of `path`'s registration with `next(current slot)`
+    * and enable the rewrite on the session. `next` runs under the path's
+    * registry entry, so two registrations of one path serialize and a
+    * registry hit can hand back the current slot unchanged. Cached
+    * freshness verdicts for the path are dropped, so the new slot is
+    * judged on a fresh listing. */
+  private def update[S <: Slot](spark: SparkSession, path: String, slot: SlotOf[S])(
+      next: Option[S] => S): S = {
+    val p = normalize(path)
+    var out: Option[S] = None
+    registry.compute(p, (_, old) => {
+      val r = Option(old).getOrElse(Unregistered)
+      val s = next(slot.get(r))
+      out = Some(s)
+      slot.set(r, s)
+    })
+    fpCache.keySet.removeIf(_._1 == p)
+    enable(spark)
+    out.get
+  }
+
+  /** `path`'s registration in one family's slot, validated against the
+    * CURRENT source fingerprint — None (rule bails, scan path) if the
+    * files changed since registration. */
+  private[plans] def lookup[S <: Slot](path: String)(slot: Registration => Option[S]): Option[S] =
+    registered(path)(slot).filter(r => fresh(path, r.fingerprint, r.hadoopConf))
+
+  private def registered[S](path: String)(slot: Registration => Option[S]): Option[S] =
+    Option(registry.get(normalize(path))).flatMap(slot)
 
   /** Source-data fingerprint: sorted (name, length, mtime) of every file
     * under `path`. Captured at registration; [[WheelSumRewrite]] bails on
@@ -62,14 +186,66 @@ object WheelAcceleration {
     * with [[graft.streaming.WheelIngest]]'s restart bootstrap, which
     * diffs a persisted fingerprint against the current listing to
     * aggregate only the uncovered tail files. */
-  private[graft] def sourceFingerprint(
-      path: String, conf: org.apache.hadoop.conf.Configuration): String =
-    fingerprint(path, conf)
-
-  private def fingerprint(path: String, conf: org.apache.hadoop.conf.Configuration): String =
+  private[graft] def sourceFingerprint(path: String, conf: Conf): String =
     graft.wheel.SourceFingerprint.of(path, conf)
 
-  /** Build (via [[graft.wheel.WheelCatalog]]-style one-time work) and
+  /** What a registration call did for its path and family:
+    * `FullReuse` — a persisted sidecar's fingerprint matched and the
+    * saved partials loaded with NO source scan; `TailRefresh` — the
+    * files the old wheels cover are a STRICT SUBSET of the files now on
+    * disk (append-only growth), so only the uncovered tail files were
+    * aggregated and merged in; `FullBuild` — anything else (first build,
+    * mutated/deleted files, different columns, torn dir);
+    * `CacheServed` — the build-once catalog already held the wheels, so
+    * no source scan ran. Registry hits (unchanged fingerprint) record
+    * nothing. */
+  sealed trait PersistedOutcome
+  case object FullReuse extends PersistedOutcome
+  final case class TailRefresh(coveredFiles: Int, tailFiles: Seq[String])
+    extends PersistedOutcome
+  case object FullBuild extends PersistedOutcome
+  case object CacheServed extends PersistedOutcome
+
+  /** The wheel families whose registrations report a [[PersistedOutcome]].
+    * The in-memory and persisted registrations of one family report to
+    * the same slot. */
+  sealed trait Family
+  object Family {
+    case object Sum extends Family
+    case object Keyed extends Family
+    case object Sketch extends Family
+    case object KeyedSketch extends Family
+  }
+
+  private val outcomes = new ConcurrentHashMap[(String, Family), PersistedOutcome]()
+
+  /** What the latest registration of `family` for `path` did. */
+  def lastOutcome(path: String, family: Family): Option[PersistedOutcome] =
+    Option(outcomes.get((normalize(path), family)))
+
+  private def record(path: String, family: Family, outcome: PersistedOutcome): Unit = {
+    outcomes.put((normalize(path), family), outcome)
+    ()
+  }
+
+  /** The in-memory registration lifecycle every family shares: keep a
+    * registry hit (same files and `hit`), else try the family's append
+    * `refresh` of the old slot, else `build` through the catalog — and
+    * record which happened for `family` (the refresh records itself). */
+  private def registerInMemory[S <: Slot](spark: SparkSession, path: String,
+      slot: SlotOf[S], family: Option[Family], fp: String)(hit: S => Boolean,
+      refresh: S => Option[(S, TailRefresh)], build: Option[S] => (S, Boolean)): S =
+    update(spark, path, slot) {
+      case Some(old) if old.fingerprint == fp && hit(old) => old
+      case old =>
+        old.filter(_.fingerprint != fp).flatMap(refresh).map(_._1).getOrElse {
+          val (s, built) = build(old)
+          family.foreach(record(path, _, if (built) FullBuild else CacheServed))
+          s
+        }
+    }
+
+  /** Build (via the build-once [[graft.wheel.WheelCatalog]]) and
     * register an index for `path`, and enable the rewrite rule on the
     * session. `events` must be the same reading pipeline queries use.
     *
@@ -80,154 +256,99 @@ object WheelAcceleration {
     * change is a PROVABLE APPEND (the registered files all still listed
     * unchanged, plus strictly new ones), the re-register aggregates
     * only the tail files into the retained minute partials instead of
-    * re-scanning the source — the same economics as the persisted tail
-    * refresh, observable via [[lastRegisterOutcome]]. */
+    * re-scanning the source, observable via [[lastOutcome]]. */
   def register(spark: SparkSession, path: String, events: => DataFrame,
-      tsCol: String = "ts", valueCol: String = "value"): WheelIndex = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    // The catalog key embeds the fingerprint, so re-registering after a
-    // data change rebuilds instead of serving the stale cached index.
-    val reg = registry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.wheels.contains(valueCol)) old
-      else refreshOrBuild(spark, path, old, events, tsCol, Seq(valueCol), fp,
-        conf, () => Map(valueCol ->
-          graft.wheel.WheelCatalog.cached(spark, s"$path@$fp", tsCol, valueCol)(events))))
-    enable(spark)
-    reg.wheels(valueCol)
-  }
+      tsCol: String = "ts", valueCol: String = "value"): WheelIndex =
+    registerSum(spark, path, events, tsCol, Seq(valueCol))(key =>
+      WheelCatalog.getOrBuild(spark, "sum", key, tsCol, valueCol)(
+        WheelIndex.build(events, tsCol, valueCol)) match {
+        case (w, built) => (Map(valueCol -> w), built)
+      })(valueCol)
 
-  /** MULTI-MEASURE registration (round 7): one [[WheelIndex.buildMulti]]
-    * pass indexes every listed measure column, and the rewrite rule then
+  /** MULTI-MEASURE registration: one [[WheelIndex.buildMulti]] pass
+    * indexes every listed measure column, and the rewrite rule then
     * folds SQL statements aggregating ANY MIX of them — e.g.
     * `SELECT SUM(l_quantity), AVG(l_tax) FROM …` — from the per-measure
     * wheels, at plan time. Same fingerprint/staleness discipline as
     * [[register]]. */
   def registerMulti(spark: SparkSession, path: String, events: => DataFrame,
-      tsCol: String, valueCols: Seq[String]): Map[String, WheelIndex] = {
+      tsCol: String, valueCols: Seq[String]): Map[String, WheelIndex] =
+    registerSum(spark, path, events, tsCol, valueCols)(key =>
+      WheelCatalog.getOrBuild(spark, "summulti", key, tsCol, valueCols.mkString(","))(
+        WheelIndex.buildMulti(events, tsCol, valueCols)))
+
+  /** Shared step of [[register]]/[[registerMulti]]: `build` takes the
+    * fingerprint-embedding catalog key, so re-registering after a data
+    * change rebuilds instead of serving the stale cached index. */
+  private def registerSum(spark: SparkSession, path: String, events: => DataFrame,
+      tsCol: String, valueCols: Seq[String])(
+      build: String => (Map[String, WheelIndex], Boolean)): Map[String, WheelIndex] = {
     val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val reg = registry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp &&
-          valueCols.forall(old.wheels.contains)) old
-      else refreshOrBuild(spark, path, old, events, tsCol, valueCols, fp, conf,
-        () => graft.wheel.WheelCatalog.cachedMulti(
-          spark, s"$path@$fp", tsCol, valueCols)(events)))
-    enable(spark)
-    reg.wheels
+    val fp = sourceFingerprint(path, conf)
+    registerInMemory(spark, path, SumSlot, Some(Family.Sum), fp)(
+      old => old.tsCol == tsCol && valueCols.forall(old.wheels.contains),
+      old => tailRefreshSum(spark, path, old, events, tsCol, valueCols, fp, conf),
+      _ => build(s"$path@$fp") match {
+        case (wheels, built) => (SumReg(tsCol, wheels, fp, conf), built)
+      }).wheels
   }
 
-  /** Shared rebuild step of [[register]]/[[registerMulti]]: try the
-    * in-memory tail refresh first, fall back to `build` (a full
-    * catalog-cached build from `events`), and record which one happened
-    * for [[lastRegisterOutcome]]. */
-  private def refreshOrBuild(spark: SparkSession, path: String, old: Reg,
+  /** Append-only refresh of an IN-MEMORY sum registration: the
+    * replacement wheels merge the old index's retained minute partials
+    * with the tail files' ones, driver-side and O(slots). Bails to the
+    * full rebuild (None) for measures the old registration lacks or an
+    * incomplete minute tier (retention-rotated spans can't reproduce
+    * their partials). */
+  private def tailRefreshSum(spark: SparkSession, path: String, old: SumReg,
       events: => DataFrame, tsCol: String, valueCols: Seq[String], fp: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      build: () => Map[String, WheelIndex]): Reg = {
-    Option(old).flatMap(o =>
-      tailRefreshInMemory(spark, path, o, events, tsCol, valueCols, fp, conf)
-    ) match {
-      case Some((wheels, coveredN, tail)) =>
-        persistedOutcomes.put(normalize(path) + "#mem", TailRefresh(coveredN, tail))
-        Reg(tsCol, wheels, fp, conf)
-      case None =>
-        persistedOutcomes.put(normalize(path) + "#mem", FullBuild)
-        Reg(tsCol, build(), fp, conf)
-    }
-  }
-
-  /** Append-only refresh of an IN-MEMORY registration (round 11): when
-    * `path` grew by strictly new files since `old` was built — every
-    * token of the old fingerprint still listed unchanged, plus at least
-    * one new data file — the replacement wheels are built by
-    * aggregating ONLY the tail files and merging those minute partials
-    * with the old index's retained ones, driver-side and O(slots). The
-    * covered data is never re-read: the term that matters when the
-    * covered portion is 100 TB and the tail is one day. Bails to the
-    * full rebuild (None) for anything unprovable: mutated or deleted
-    * files, measures the old registration lacks, an incomplete minute
-    * tier (retention-rotated spans can't reproduce their partials), or
-    * an `events` pipeline that isn't the raw read of `path` (same
-    * contract as the persisted tail refresh — the tail is aggregated
-    * through a raw read, so a transformed pipeline must rebuild). */
-  private def tailRefreshInMemory(spark: SparkSession, path: String,
-      old: Reg, events: => DataFrame, tsCol: String, valueCols: Seq[String],
-      fp: String, conf: org.apache.hadoop.conf.Configuration)
-      : Option[(Map[String, WheelIndex], Int, Seq[String])] = {
-    import graft.wheel.{AllAggregate, RollupBuilder}
-    val oldWheels = valueCols.flatMap(c => old.wheels.get(c).map(c -> _))
+      conf: Conf): Option[(SumReg, TailRefresh)] = {
+    val oldWheels = valueCols.flatMap(old.wheels.get)
     if (old.tsCol != tsCol || oldWheels.size != valueCols.size ||
-        oldWheels.exists(!_._2.minuteTierComplete)) None
-    else provableAppendTail(path, old.fingerprint, fp, conf).flatMap {
-      case (coveredCount, tail) => scala.util.Try {
-        requireRawPipeline(spark, path, tsCol, events)
-        val partials = RollupBuilder.minuteRollupMulti(
-          RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol),
-          tsCol, valueCols)
-        val tailRows = partials.collect()
-        def tfi(name: String): Int = partials.schema.fieldIndex(name)
-        // driver-side merge of two bounded minute maps — the old
-        // index's retained partials and the tail's fresh ones
-        val merged = scala.collection.mutable.HashMap
-          .empty[Long, (Long, Array[AllAggregate])]
-        val head = oldWheels.head._2
-        head.minuteEntries(head.baseMs, head.horizonMs).foreach { case (slot, a0) =>
-          merged(slot) = (a0.rows,
-            oldWheels.map { case (_, w) => w.minuteAt(slot) }.toArray)
-        }
-        tailRows.foreach { r =>
-          // same never-null-ts contract as the builds: a Try-swallowed
-          // failure here routes to the full rebuild, which throws loudly
-          require(!r.isNullAt(tfi("slot_ms")), "null ts in tail files")
-          val slot = r.getLong(tfi("slot_ms"))
-          val aggs = valueCols.map { c =>
-            // nullable measures: an all-null tail slot has null stats —
-            // contribute the combine identity (rows ride separately)
-            if (r.isNullAt(tfi(s"sum_$c")))
-              AllAggregate.identity.copy(rows = r.getLong(tfi("rows")))
-            else AllAggregate(r.getDouble(tfi(s"sum_$c")), r.getLong(tfi(s"cnt_$c")),
-              r.getDouble(tfi(s"min_$c")), r.getDouble(tfi(s"max_$c")),
-              r.getDouble(tfi(s"m2_$c")), r.getLong(tfi("rows")))
-          }.toArray
-          val n = r.getLong(tfi("rows"))
-          merged.get(slot) match {
-            case Some((n0, a0)) => merged(slot) =
-              (n0 + n, a0.zip(aggs).map { case (x, y) => x.combine(y) })
-            case None => merged(slot) = (n, aggs)
-          }
-        }
-        val partialCols = "slot_ms" +: valueCols.flatMap(c =>
-          Seq(s"sum_$c", s"cnt_$c", s"min_$c", s"max_$c", s"m2_$c")) :+ "rows"
-        val fiMap = partialCols.zipWithIndex.toMap
-        val rows = merged.toArray.sortBy(_._1).map { case (slot, (n, aggs)) =>
-          // Seq[Any], element by element: a mixed Seq(double, long, …)
-          // literal would numerically WIDEN the longs to doubles
-          val vals = Seq.newBuilder[Any]
-          vals += slot
-          valueCols.indices.foreach { i =>
-            vals += aggs(i).sum; vals += aggs(i).count
-            vals += aggs(i).min; vals += aggs(i).max; vals += aggs(i).m2
-          }
-          vals += n
-          org.apache.spark.sql.Row.fromSeq(vals.result())
-        }
-        lazy val residueSource = RollupBuilder.normalizeTs(events, tsCol)
-        val wheels = WheelIndex.fromMultiPartials(rows, fiMap, valueCols,
-          Map.empty,
-          c => Some(WheelIndex.scanFallback(residueSource, tsCol, c)))
-        (wheels, coveredCount, tail)
-      }.recoverWith(debugRefreshFallback(path)).toOption
+        oldWheels.exists(!_.minuteTierComplete)) None
+    else appendRefresh(spark, path, Family.Sum, old.fingerprint, fp, conf, tsCol,
+        events) { tail =>
+      val head = oldWheels.head
+      val (rows, fi) = mergeMinutePartials(Nil, valueCols,
+        head.minuteEntries(head.baseMs, head.horizonMs).map { case (slot, a0) =>
+          (Nil, slot, a0.rows, oldWheels.map(_.minuteAt(slot)).toArray) },
+        RollupBuilder.minuteRollupMulti(tail, tsCol, valueCols))
+      lazy val residueSource = RollupBuilder.normalizeTs(events, tsCol)
+      SumReg(tsCol, WheelIndex.fromMultiPartials(rows, fi, valueCols, Map.empty,
+        c => Some(WheelIndex.scanFallback(residueSource, tsCol, c))), fp, conf)
     }
   }
 
-  /** The append-only diff both in-memory tail refreshes share: Some
-    * ((covered-file count, tail file paths)) when the old fingerprint's
-    * every data token is still listed unchanged and at least one new
-    * file appeared; None for anything else (mutation, deletion, a
-    * listing that no longer matches `fp`). */
+  /** The one append-refresh step every family shares. When `path`
+    * provably grew by appended files only since `oldFp`, and `events` is
+    * the raw read of `path`, the family's `merge` gets a read of ONLY the
+    * tail files — the covered data is never re-read: the term that
+    * matters when the covered portion is 100 TB and the tail is one day.
+    * A success records and returns `TailRefresh` for `family`; any
+    * failure routes to the caller's full rebuild (None), logged at
+    * DEBUG. */
+  private def appendRefresh[T](spark: SparkSession, path: String, family: Family,
+      oldFp: String, fp: String, conf: Conf, tsCol: String, events: => DataFrame)(
+      merge: DataFrame => T): Option[(T, TailRefresh)] =
+    provableAppendTail(path, oldFp, fp, conf).flatMap { case (coveredN, tail) =>
+      scala.util.Try {
+        requireRawPipeline(spark, path, tsCol, events)
+        merge(RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol))
+      }.fold(
+        e => { log.debug(s"append refresh for $path fell back to full rebuild", e); None },
+        v => {
+          val outcome = TailRefresh(coveredN, tail)
+          record(path, family, outcome)
+          Some((v, outcome))
+        })
+    }
+
+  /** The append-only diff: Some((covered-file count, tail file paths))
+    * when the old fingerprint's every data token is still listed
+    * unchanged and at least one new file appeared; None for anything
+    * else (mutation, deletion, a listing that no longer matches `fp` — a
+    * writer racing the registration). */
   private def provableAppendTail(path: String, oldFp: String, fp: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[(Int, Seq[String])] = {
+      conf: Conf): Option[(Int, Seq[String])] = {
     import graft.wheel.SourceFingerprint
     val current = SourceFingerprint.listTokens(path, conf)
     val currentTokens = current.map(_._1).toSet
@@ -239,212 +360,15 @@ object WheelAcceleration {
     else Some((covered.size, tail))
   }
 
-  /** A failed refresh routes to the full rebuild; surface why under the
-    * same debug flag as the rewrite's swallowed bails. */
-  private def debugRefreshFallback[T](path: String)
-      : PartialFunction[Throwable, scala.util.Try[T]] = { case e =>
-    if (sys.props.get("graft.wheel.rewrite.debug").contains("true"))
-      System.err.println(s"[graft] in-memory tail refresh for $path " +
-        s"fell back to full rebuild: $e")
-    scala.util.Failure(e)
-  }
-
-  /** The KEYED mirror of [[tailRefreshInMemory]] (round 11): on a
-    * provable append, the new per-key wheels merge the old index's
-    * retained (key, minute) partials with one bounded keyed rollup of
-    * the tail files — the covered data never re-read. The keyed index
-    * retains its full minute map (no rotation), so no tier-completeness
-    * gate is needed; the driver ceiling is re-checked by the shared
-    * fill ([[graft.wheel.KeyedWheelIndex.fromMultiPartialRows]]), and a
-    * merged state past it routes to the full rebuild's identical loud
-    * failure. */
-  private def tailRefreshKeyedInMemory(spark: SparkSession, path: String,
-      old: KeyedReg, events: => DataFrame, keyCol: String, tsCol: String,
-      valueCols: Seq[String], fp: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[(Map[String, graft.wheel.KeyedWheelIndex], Int, Seq[String])] = {
-    import graft.wheel.{AllAggregate, KeyedWheelIndex, RollupBuilder}
-    val oldWheels = valueCols.flatMap(c => old.wheels.get(c).map(c -> _))
-    if (old.keyCol != keyCol || old.tsCol != tsCol ||
-        oldWheels.size != valueCols.size) None
-    else provableAppendTail(path, old.fingerprint, fp, conf).flatMap {
-      case (coveredCount, tail) => scala.util.Try {
-        requireRawPipeline(spark, path, tsCol, events)
-        val partials = RollupBuilder.keyedRollupMulti(
-          RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol),
-          keyCol, tsCol, valueCols, graft.wheel.Tier.Minute)
-        val tailRows = partials.collect()
-        def tfi(name: String): Int = partials.schema.fieldIndex(name)
-        val merged = scala.collection.mutable.HashMap
-          .empty[(Any, Long), (Long, Array[AllAggregate])]
-        val head = oldWheels.head._2
-        head.minuteEntries(head.baseMs, head.horizonMs).foreach {
-          case (key, slot, a0) =>
-            merged((key, slot)) = (a0.rows,
-              oldWheels.map { case (_, w) => w.minuteAt(key, slot) }.toArray)
-        }
-        tailRows.foreach { r =>
-          require(!r.isNullAt(tfi("slot_ms")), "null ts in tail files")
-          val key = r.get(tfi(keyCol))
-          val slot = r.getLong(tfi("slot_ms"))
-          val aggs = valueCols.map { c =>
-            // nullable measures: an all-null tail slot has null stats —
-            // contribute the combine identity (rows ride separately)
-            if (r.isNullAt(tfi(s"sum_$c")))
-              AllAggregate.identity.copy(rows = r.getLong(tfi("rows")))
-            else AllAggregate(r.getDouble(tfi(s"sum_$c")), r.getLong(tfi(s"cnt_$c")),
-              r.getDouble(tfi(s"min_$c")), r.getDouble(tfi(s"max_$c")),
-              r.getDouble(tfi(s"m2_$c")), r.getLong(tfi("rows")))
-          }.toArray
-          val n = r.getLong(tfi("rows"))
-          merged.get((key, slot)) match {
-            case Some((n0, a0)) => merged((key, slot)) =
-              (n0 + n, a0.zip(aggs).map { case (x, y) => x.combine(y) })
-            case None => merged((key, slot)) = (n, aggs)
-          }
-        }
-        val partialCols = Seq(keyCol, "slot_ms") ++ valueCols.flatMap(c =>
-          Seq(s"sum_$c", s"cnt_$c", s"min_$c", s"max_$c", s"m2_$c")) :+ "rows"
-        val fiMap = partialCols.zipWithIndex.toMap
-        val rows = merged.toArray
-          .sortBy { case ((k, slot), _) => (k.toString, slot) }
-          .map { case ((key, slot), (n, aggs)) =>
-            val vals = Seq.newBuilder[Any]
-            vals += key; vals += slot
-            valueCols.indices.foreach { i =>
-              vals += aggs(i).sum; vals += aggs(i).count
-              vals += aggs(i).min; vals += aggs(i).max; vals += aggs(i).m2
-            }
-            vals += n
-            org.apache.spark.sql.Row.fromSeq(vals.result())
-          }
-        val wheels = KeyedWheelIndex.fromMultiPartialRows(
-          rows, fiMap, keyCol, head.keyType, valueCols)
-        (wheels, coveredCount, tail)
-      }.recoverWith(debugRefreshFallback(path)).toOption
-    }
-  }
-
-  /** PERSISTED registration (round 7): serve the index from a saved
-    * copy at `indexDir` when it provably matches the current source —
-    * [[graft.wheel.PersistentWheel]] records the source fingerprint at
-    * save time, and a load is O(slots) (one tiny parquet read, NO
-    * source scan: the piece that matters when the source is 100 TB and
-    * the build's scan+shuffle is the cost). When `indexDir` is absent,
-    * torn, or recorded against different source files / columns, the
-    * index is rebuilt from `events` and re-saved for the next caller.
-    * Same registry, fingerprint and rewrite discipline as
-    * [[register]]/[[registerMulti]]. CONTRACT for the append-only tail
-    * refresh (round 11, ADVICE r10): `events` must read `path` raw —
-    * no projections/renames/recasts (schema-checked against the raw
-    * read; a mismatch takes the full rebuild) and no row filters
-    * (schema-invisible, so on the caller's honor) — because the tail
-    * files are aggregated through a raw read restricted to the new
-    * files. */
-  def registerPersisted(spark: SparkSession, path: String, indexDir: String,
-      events: => DataFrame, tsCol: String = "ts",
-      valueCols: Seq[String] = Seq("value")): Map[String, WheelIndex] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val reg = registry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.tsCol == tsCol &&
-          valueCols.forall(old.wheels.contains)) old
-      else {
-        val saved = graft.wheel.PersistentWheel.peek(spark, indexDir)
-          .filter(m => m.sourceFingerprint == fp && m.tsCol == tsCol &&
-            valueCols.forall(m.valueCols.contains))
-        // a torn save (slots/sidecar mismatch) throws from load —
-        // rebuild and re-save rather than fail the registration. The
-        // load rides the build-once dir-load cache (round 18); the
-        // residue-armed variant is cached separately from the table
-        // read's minute-aligned load.
-        val loaded = saved.flatMap(m => scala.util.Try(
-          graft.wheel.WheelCatalog.cachedDirLoad(
-            spark, indexDir, m, "accel-sum-residue")(
-            graft.wheel.PersistentWheel.load(spark, indexDir, Some(events))._2)
-        ).toOption)
-        loaded.foreach(_ =>
-          persistedOutcomes.put(normalize(path), FullReuse))
-        val wheels = loaded
-          .orElse(tailRefreshPersisted(
-            spark, path, indexDir, events, tsCol, valueCols, fp, conf))
-          .getOrElse {
-            persistedOutcomes.put(normalize(path), FullBuild)
-            graft.wheel.PersistentWheel.save(
-              spark, indexDir, events, tsCol, valueCols, fp, path)
-          }
-        Reg(tsCol, wheels, fp, conf)
-      })
-    enable(spark)
-    reg.wheels
-  }
-
-  /** What the latest [[registerPersisted]] call did for its path (late
-    * round 10): `FullReuse` — the sidecar's fingerprint matched and the
-    * saved partials loaded with NO source scan; `TailRefresh` — the
-    * saved partials' recorded files were a STRICT SUBSET of the files
-    * now on disk (append-only growth), so only the uncovered tail files
-    * were aggregated, merged into the saved partials and re-saved;
-    * `FullBuild` — anything else (first save, mutated/deleted files,
-    * different columns, torn dir). In-memory registry hits record
-    * nothing. */
-  sealed trait PersistedOutcome
-  case object FullReuse extends PersistedOutcome
-  final case class TailRefresh(coveredFiles: Int, tailFiles: Seq[String])
-    extends PersistedOutcome
-  case object FullBuild extends PersistedOutcome
-  /** The registration was served from a build-once catalog cache — no
-    * source scan ran (ADVICE r17: a cache hit previously misreported as
-    * [[FullBuild]] in diagnostics). */
-  case object CacheServed extends PersistedOutcome
-
-  private val persistedOutcomes =
-    new ConcurrentHashMap[String, PersistedOutcome]()
-
-  def lastPersistedOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path)))
-
-  /** The keyed-multi analogue of [[lastPersistedOutcome]] — tracked
-    * under its own key so a path's unkeyed and keyed registrations
-    * never clobber each other's reports. */
-  def lastPersistedKeyedOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#keyed"))
-
-  /** The in-memory analogue (round 11): what the last
-    * [[register]]/[[registerMulti]] rebuild for `path` actually did —
-    * `TailRefresh` when a provable append aggregated only the tail
-    * files into the retained minute partials, `FullBuild` for a first
-    * build or anything unprovable. Registry cache hits (unchanged
-    * fingerprint) record nothing. */
-  def lastRegisterOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#mem"))
-
-  /** The keyed mirror of [[lastRegisterOutcome]] — what the last
-    * [[registerKeyed]]/[[registerKeyedMulti]] rebuild for `path` did. */
-  def lastRegisterKeyedOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#keyedmem"))
-
-  /** Append-only refresh of a persisted sum-family dir (late round 10):
-    * when the sidecar's recorded files are a strict subset of the files
-    * now at `path` — the daily-append table shape — aggregate ONLY the
-    * uncovered tail files, merge their minute partials into the saved
-    * ones ([[graft.wheel.RollupBuilder.mergeMulti]]) and re-save under
-    * the new fingerprint. At 100 TB this is the difference between
-    * scanning a day and scanning the table: the saved partials stand in
-    * for all covered history. None (→ full rebuild) when coverage
-    * cannot be proven, the dir records different columns, or anything
-    * fails to read; a writer racing the registration changes the
-    * listing away from `fp`, which the same-listing check catches. */
-  /** Guard for the tail-refresh paths (round 11, ADVICE r10): the tail
-    * files are aggregated through a RAW `spark.read.parquet` restricted
-    * to just the new files — at 100 TB filtering `events` by file name
-    * would scan the whole table — so a refresh is only sound when that
-    * raw read is pipeline-equivalent to the caller's `events`. Checked
-    * structurally: identical schemas after ts normalization, which
-    * catches projections, renames, recasts and derived columns (those
-    * throw here → the caller takes the full rebuild, which uses
-    * `events` itself). A pipeline that only FILTERS rows is
-    * schema-invisible and excluded by the registerPersisted* contract:
+  /** Guard for the append refresh: the tail files are aggregated through
+    * a RAW `spark.read.parquet` restricted to just the new files — at
+    * 100 TB filtering `events` by file name would scan the whole table —
+    * so a refresh is only sound when that raw read is pipeline-equivalent
+    * to the caller's `events`. Checked structurally: identical schemas
+    * after ts normalization, which catches projections, renames, recasts
+    * and derived columns (those throw here → the caller takes the full
+    * rebuild, which uses `events` itself). A pipeline that only FILTERS
+    * rows is schema-invisible and excluded by the registration contract:
     * `events` must carry every row of `path`. */
   private def requireRawPipeline(spark: SparkSession, path: String,
       tsCol: String, events: DataFrame): Unit = {
@@ -456,70 +380,152 @@ object WheelAcceleration {
         s"(schemas differ: $ev vs $raw); rebuilding from events instead")
   }
 
-  private def tailRefreshPersisted(spark: SparkSession, path: String,
-      indexDir: String, events: => DataFrame, tsCol: String,
-      valueCols: Seq[String], fp: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[Map[String, WheelIndex]] = {
-    import graft.wheel.{PersistentWheel, RollupBuilder, SourceFingerprint}
-    PersistentWheel.peek(spark, indexDir).filter(m =>
-      m.kind == PersistentWheel.SumKind && m.tsCol == tsCol &&
-        m.valueCols == valueCols && m.sourceFingerprint.nonEmpty)
-      .flatMap { m =>
-        val current = SourceFingerprint.listTokens(path, conf)
-        val currentTokens = current.map(_._1).toSet
-        val covered = m.sourceFingerprint.split('|').toSet
-          .filter(t => SourceFingerprint.isDataToken(SourceFingerprint.tokenRel(t)))
-        val tail = current.collect { case (tok, p) if !covered(tok) => p }
-        if (current.map(_._1).sorted.mkString("|") != fp ||
-            covered.isEmpty || tail.isEmpty || !covered.subsetOf(currentTokens))
-          None
-        else scala.util.Try {
-          requireRawPipeline(spark, path, tsCol, events)
-          val partialCols = "slot_ms" +: valueCols.flatMap(c =>
-            Seq(s"sum_$c", s"cnt_$c", s"min_$c", s"max_$c", s"m2_$c")) :+ "rows"
-          // loadPartials validates version + slots fingerprint (torn
-          // dirs throw -> full rebuild)
-          val (_, persisted) = PersistentWheel.loadPartials(spark, indexDir)
-          val tailPartials = RollupBuilder.minuteRollupMulti(
-            RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol),
-            tsCol, valueCols)
-          val merged = RollupBuilder.mergeMulti(
-            persisted.select(partialCols.head, partialCols.tail: _*)
-              .unionByName(tailPartials.select(partialCols.head, partialCols.tail: _*)),
-            valueCols)
-          PersistentWheel.savePartials(
-            spark, indexDir, merged, tsCol, valueCols, fp, path)
-          // reload what was just written: round-trip validation plus
-          // the residue fallback re-armed on the CURRENT source
-          val wheels = PersistentWheel.load(spark, indexDir, Some(events))._2
-          persistedOutcomes.put(normalize(path), TailRefresh(covered.size, tail))
-          wheels
-        }.toOption
+  /** Column layout of minute partials: `keyCols`, slot, five stats per
+    * measure, row count. */
+  private def partialCols(keyCols: Seq[String], valueCols: Seq[String]): Seq[String] =
+    (keyCols :+ "slot_ms") ++ valueCols.flatMap(c =>
+      Seq(s"sum_$c", s"cnt_$c", s"min_$c", s"max_$c", s"m2_$c")) :+ "rows"
+
+  /** Driver-side merge of two bounded minute-partial maps — an old
+    * index's retained (key parts, slot, rows, per-measure aggregates)
+    * entries and the `tail` rollup's rows — into partial rows in the
+    * [[partialCols]] layout, with their field index. `keyCols` is empty
+    * for the unkeyed index. */
+  private def mergeMinutePartials(keyCols: Seq[String], valueCols: Seq[String],
+      old: Iterator[(Seq[Any], Long, Long, Array[AllAggregate])], tail: DataFrame)
+      : (Array[SqlRow], Map[String, Int]) = {
+    val merged = scala.collection.mutable.HashMap
+      .empty[(Seq[Any], Long), (Long, Array[AllAggregate])]
+    old.foreach { case (k, slot, n, aggs) => merged((k, slot)) = (n, aggs) }
+    def tfi(name: String): Int = tail.schema.fieldIndex(name)
+    tail.collect().foreach { r =>
+      // same never-null-ts contract as the builds: a failure here routes
+      // to the full rebuild, which throws loudly
+      require(!r.isNullAt(tfi("slot_ms")), "null ts in tail files")
+      val k = (keyCols.map(c => r.get(tfi(c))), r.getLong(tfi("slot_ms")))
+      val n = r.getLong(tfi("rows"))
+      val aggs = valueCols.map { c =>
+        // nullable measures: an all-null tail slot has null stats —
+        // contribute the combine identity (rows ride separately)
+        if (r.isNullAt(tfi(s"sum_$c"))) AllAggregate.identity.copy(rows = n)
+        else AllAggregate(r.getDouble(tfi(s"sum_$c")), r.getLong(tfi(s"cnt_$c")),
+          r.getDouble(tfi(s"min_$c")), r.getDouble(tfi(s"max_$c")),
+          r.getDouble(tfi(s"m2_$c")), n)
+      }.toArray
+      merged(k) = merged.get(k) match {
+        case Some((n0, a0)) => (n0 + n, a0.zip(aggs).map { case (x, y) => x.combine(y) })
+        case None => (n, aggs)
+      }
+    }
+    val rows = merged.toArray.sortBy { case ((k, slot), _) => (k.mkString(","), slot) }
+      .map { case ((k, slot), (n, aggs)) =>
+        // Seq[Any], element by element: a mixed Seq(double, long, …)
+        // literal would numerically WIDEN the longs to doubles
+        val vals = Seq.newBuilder[Any]
+        vals ++= k; vals += slot
+        aggs.foreach { a => vals += a.sum; vals += a.count; vals += a.min
+          vals += a.max; vals += a.m2 }
+        vals += n
+        org.apache.spark.sql.Row.fromSeq(vals.result())
+      }
+    (rows, partialCols(keyCols, valueCols).zipWithIndex.toMap)
+  }
+
+  /** The persisted lifecycle every dir-backed registration shares:
+    *  1. the sidecar at `dir` `matches` and records the current source
+    *     fingerprint → LOAD through the build-once dir-load cache, no
+    *     source scan — the term that matters at 100 TB;
+    *  2. the source provably grew by appended files → the family's
+    *     `refresh` of the saved dir (None: this dir can't be refreshed);
+    *  3. anything else (first save, mutation, foreign or torn dir — a
+    *     torn load throws and rebuilds) → full `save` from `events`.
+    * Records and returns what happened for `family`. */
+  private def resolvePersisted[W <: AnyRef](spark: SparkSession, path: String,
+      dir: String, family: Family, fp: String, conf: Conf, tsCol: String,
+      events: => DataFrame, variant: String)(matches: PersistentWheel.Meta => Boolean,
+      load: => W, save: => W,
+      refresh: PersistentWheel.Meta => Option[DataFrame => W]): (W, PersistedOutcome) = {
+    val saved = PersistentWheel.peek(spark, dir).filter(matches)
+    val loaded = saved.filter(_.sourceFingerprint == fp).flatMap(m =>
+      scala.util.Try(WheelCatalog.cachedDirLoad(spark, dir, m, variant)(load)).toOption)
+    loaded.map { w => record(path, family, FullReuse); (w, FullReuse) }
+      .orElse(for {
+        m <- saved if m.sourceFingerprint.nonEmpty
+        merge <- refresh(m)
+        refreshed <- appendRefresh(spark, path, family, m.sourceFingerprint, fp, conf,
+          tsCol, events)(merge)
+      } yield refreshed)
+      .getOrElse {
+        val w = save
+        record(path, family, FullBuild)
+        (w, FullBuild)
       }
   }
 
-  /** Register an ALREADY-BUILT index for `path`, fingerprinting the
-    * source as it stands right now — the refresh primitive behind
-    * [[graft.streaming.WheelIngest]]'s live registration: the ingest
-    * sink rebuilds the (O(slots), driver-local) index from its
+  /** PERSISTED registration: serve the index from a saved copy at
+    * `indexDir` when it provably matches the current source —
+    * [[graft.wheel.PersistentWheel]] records the source fingerprint at
+    * save time, and a load is O(slots) (one tiny parquet read, NO source
+    * scan). On append-only growth only the tail files are aggregated,
+    * merged into the saved partials and re-saved; otherwise the index is
+    * rebuilt from `events` and re-saved for the next caller. Same
+    * registry, fingerprint and rewrite discipline as [[register]].
+    * CONTRACT for the append refresh: `events` must read `path` raw — no
+    * projections/renames/recasts (schema-checked against the raw read; a
+    * mismatch takes the full rebuild) and no row filters
+    * (schema-invisible, so on the caller's honor). */
+  def registerPersisted(spark: SparkSession, path: String, indexDir: String,
+      events: => DataFrame, tsCol: String = "ts",
+      valueCols: Seq[String] = Seq("value")): Map[String, WheelIndex] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fp = sourceFingerprint(path, conf)
+    update(spark, path, SumSlot) {
+      case Some(old) if old.fingerprint == fp && old.tsCol == tsCol &&
+        valueCols.forall(old.wheels.contains) => old
+      case _ => SumReg(tsCol, resolvePersisted(spark, path, indexDir, Family.Sum, fp,
+          conf, tsCol, events, "accel-sum-residue")(
+        m => m.kind == PersistentWheel.SumKind && m.tsCol == tsCol &&
+          valueCols.forall(m.valueCols.contains),
+        PersistentWheel.load(spark, indexDir, Some(events))._2,
+        PersistentWheel.save(spark, indexDir, events, tsCol, valueCols, fp, path),
+        m => Option.when(m.valueCols == valueCols) { (tail: DataFrame) =>
+          val cols = partialCols(Nil, valueCols)
+          // loadPartials validates version + slots fingerprint (torn
+          // dirs throw -> full rebuild)
+          val (_, persisted) = PersistentWheel.loadPartials(spark, indexDir)
+          val merged = RollupBuilder.mergeMulti(
+            persisted.select(cols.head, cols.tail: _*).unionByName(
+              RollupBuilder.minuteRollupMulti(tail, tsCol, valueCols)
+                .select(cols.head, cols.tail: _*)), valueCols)
+          PersistentWheel.savePartials(spark, indexDir, merged, tsCol, valueCols, fp, path)
+          // reload what was just written: round-trip validation plus
+          // the residue fallback re-armed on the CURRENT source
+          PersistentWheel.load(spark, indexDir, Some(events))._2
+        })._1, fp, conf)
+    }.wheels
+  }
+
+  /** Register an ALREADY-BUILT index for `path` — the refresh primitive
+    * behind [[graft.streaming.WheelIngest]]'s live registration: the
+    * ingest sink rebuilds the (O(slots), driver-local) index from its
     * accumulated partials after each committed micro-batch and swaps it
     * in here. `coveredFingerprint`, when provided, records the files
     * PROVABLY folded into the index (the ingest's covered-token set)
     * instead of a fresh listing — a file appended by a foreign writer
     * between the fold and this call then fails the freshness check and
     * takes the scan path, rather than being silently claimed as
-    * indexed. Without it the source is fingerprinted as it stands
-    * right now; anything racing a concurrent writer is caught by the
-    * usual fingerprint check and falls back to the scan. */
+    * indexed. Without it the source is fingerprinted as it stands right
+    * now; anything racing a concurrent writer is caught by the usual
+    * fingerprint check and falls back to the scan. */
   def registerPrebuilt(spark: SparkSession, path: String, tsCol: String,
       wheels: Map[String, WheelIndex],
       coveredFingerprint: Option[String] = None): Unit = {
     require(wheels.nonEmpty, "need at least one measure wheel")
-    // uniform layout across a registration's measure wheels (round 16,
-    // ADVICE r15): the multi-measure fold paths read SIBLING wheels at
-    // the head wheel's slots, which is only sound when every wheel
-    // shares the span and retention. The library's own builders always
-    // produce uniform families; this guards a foreign map, loudly.
+    // uniform layout across a registration's measure wheels: the
+    // multi-measure fold paths read SIBLING wheels at the head wheel's
+    // slots, which is only sound when every wheel shares the span and
+    // retention. The library's own builders always produce uniform
+    // families; this guards a foreign map, loudly.
     val head = wheels.valuesIterator.next()
     wheels.foreach { case (c, w) =>
       require(w.baseMs == head.baseMs && w.horizonMs == head.horizonMs &&
@@ -531,67 +537,52 @@ object WheelAcceleration {
           "built over the same source with the same retention policy")
     }
     val conf = spark.sessionState.newHadoopConf()
-    val fp = coveredFingerprint.getOrElse(fingerprint(path, conf))
-    registry.put(normalize(path), Reg(tsCol, wheels, fp, conf))
-    // the fingerprint verdict cache may hold a recent STALE verdict for
-    // this path from plans run mid-ingest; drop it so the fresh
-    // registration folds immediately rather than after the TTL
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    enable(spark)
+    val fp = coveredFingerprint.getOrElse(sourceFingerprint(path, conf))
+    update(spark, path, SumSlot)(_ => SumReg(tsCol, wheels, fp, conf))
+    ()
   }
 
-  /** Keyed analogue of [[registerPrebuilt]]: swap an ALREADY-BUILT
-    * keyed index in for `path`, fingerprinting the source as it stands
-    * right now — the refresh primitive behind
+  /** Keyed analogue of [[registerPrebuilt]]: swap an ALREADY-BUILT keyed
+    * index in for `path` — the refresh primitive behind
     * [[graft.streaming.WheelIngest]]'s live KEYED registration. */
   def registerPrebuiltKeyed(spark: SparkSession, path: String,
-      keyCol: String, tsCol: String,
-      wheels: Map[String, graft.wheel.KeyedWheelIndex],
+      keyCol: String, tsCol: String, wheels: Map[String, KeyedWheelIndex],
       coveredFingerprint: Option[String] = None): Unit = {
     require(wheels.nonEmpty, "need at least one keyed measure wheel")
     val conf = spark.sessionState.newHadoopConf()
-    val fp = coveredFingerprint.getOrElse(fingerprint(path, conf))
-    keyedRegistry.put(normalize(path), KeyedReg(keyCol, tsCol, wheels, fp, conf))
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    enable(spark)
+    val fp = coveredFingerprint.getOrElse(sourceFingerprint(path, conf))
+    update(spark, path, KeyedSlot)(_ => KeyedReg(keyCol, tsCol, wheels, fp, conf))
+    ()
   }
 
-  /** Drop the registered index for `path` (the rewrite rule stops firing
-    * for it; queries fall back to the scan path). Cached freshness
-    * verdicts go with it, so a later re-registration is judged on a
-    * fresh listing. */
+  /** Drop the registered indexes for `path` (the rewrite rule stops
+    * firing for it; queries fall back to the scan path). Cached
+    * freshness verdicts go with them, so a later re-registration is
+    * judged on a fresh listing. */
   def unregister(path: String): Unit = {
     registry.remove(normalize(path))
-    keyedRegistry.remove(normalize(path))
-    sketchRegistry.remove(normalize(path))
-    keyedSketchRegistry.remove(normalize(path))
     bailReasons.remove(normalize(path))
     fpCache.keySet.removeIf(_._1 == normalize(path))
     ()
   }
 
-  /** The sketch wheels serving the APPROXIMATE SQL spellings for one
-    * source (round 11, VERDICT r10 #1), keyed by input column:
-    * Theta for `approx_count_distinct`, KLL for `percentile_approx`,
-    * Misra-Gries for `approx_top_k`. */
-  private[plans] final case class SketchReg(tsCol: String,
-      distinct: Map[String, graft.wheel.CohortWheel],
-      quantile: Map[String, graft.wheel.QuantileWheel],
-      freq: Map[String, graft.wheel.FrequencyWheel],
-      fingerprint: String, hadoopConf: org.apache.hadoop.conf.Configuration) {
-    /** Indexed span [base, horizon) of any member wheel (all are built
-      * from the same source, so the spans agree). */
-    def span: Option[(Long, Long)] =
-      distinct.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption()
-        .orElse(quantile.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption())
-        .orElse(freq.valuesIterator.map(w => (w.baseMs, w.horizonMs)).nextOption())
+  /** Adds the requested sketch columns a registration lacks, each built
+    * once through the catalog under `parts` (source key and the ts/dim
+    * columns) plus the column; `built` reports whether any build ran. */
+  private final class SketchColumns(spark: SparkSession, parts: Seq[String]) {
+    var built = false
+    def add[W <: AnyRef](have: Map[String, W], cols: Seq[String], family: String)(
+        build: String => W): Map[String, W] =
+      have ++ cols.filterNot(have.contains).map { c =>
+        val (w, b) = WheelCatalog.getOrBuild(spark, family, parts :+ c: _*)(build(c))
+        built |= b
+        c -> w
+      }
   }
 
-  private val sketchRegistry = new ConcurrentHashMap[String, SketchReg]()
-
-  /** SKETCH-WHEEL registration (round 11, VERDICT r10 #1): make the
-    * sketch-wheel family reachable from the UNCHANGED SQL interface.
-    * [[WheelSumRewrite]] then folds, over a registered half-open range,
+  /** SKETCH-WHEEL registration: make the sketch-wheel family reachable
+    * from the UNCHANGED SQL interface. [[WheelSumRewrite]] then folds,
+    * over a registered half-open range,
     *
     *  - `approx_count_distinct(col)` from a per-slot Theta sketch wheel
     *    ([[graft.wheel.CohortWheel]] — exact while retained entries stay
@@ -609,192 +600,138 @@ object WheelAcceleration {
     * `percentile_disc`), which are never folded and always keep the
     * scan. Builds go through [[graft.wheel.WheelCatalog]] (build-once /
     * query-many); same fingerprint/staleness discipline as
-    * [[register]]. */
+    * [[register]]. Columns already registered for `path` are kept. */
   def registerSketches(spark: SparkSession, path: String, events: => DataFrame,
       tsCol: String = "ts", distinctCols: Seq[String] = Nil,
       quantileCols: Seq[String] = Nil, freqCols: Seq[String] = Nil): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val key = s"$path@$fp"
-    sketchRegistry.compute(normalize(path), (_, old) => {
-      val base =
-        if (old != null && old.fingerprint == fp && old.tsCol == tsCol) old
-        else Option(old).filter(_.tsCol == tsCol).flatMap(o =>
-          tailRefreshSketches(spark, path, o, events, tsCol, fp, conf)
-        ) match {
-          case Some((refreshed, coveredN, tail)) =>
-            persistedOutcomes.put(normalize(path) + "#sketchmem",
-              TailRefresh(coveredN, tail))
-            refreshed
-          case None =>
-            persistedOutcomes.put(normalize(path) + "#sketchmem", FullBuild)
-            SketchReg(tsCol, Map.empty, Map.empty, Map.empty, fp, conf)
-        }
-      // catalog-cached per column, so re-requesting a column is free;
-      // columns a tail refresh already carried forward are kept as-is
-      base.copy(
-        distinct = base.distinct ++ distinctCols.filterNot(base.distinct.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedCohort(spark, key, tsCol, c)(events)),
-        quantile = base.quantile ++ quantileCols.filterNot(base.quantile.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedQuantile(spark, key, tsCol, c)(events)),
-        freq = base.freq ++ freqCols.filterNot(base.freq.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedFrequency(spark, key, tsCol, c)(events)))
-    })
-    enable(spark)
+    val fp = sourceFingerprint(path, conf)
+    def withColumns(base: SketchReg): (SketchReg, Boolean) = {
+      val cols = new SketchColumns(spark, Seq(s"$path@$fp", tsCol))
+      val reg = base.copy(
+        distinct = cols.add(base.distinct, distinctCols, "cohort")(
+          CohortWheel.build(events, tsCol, _)),
+        quantile = cols.add(base.quantile, quantileCols, "quantile")(
+          QuantileWheel.build(events, tsCol, _)),
+        freq = cols.add(base.freq, freqCols, "frequency")(
+          FrequencyWheel.build(events, tsCol, _)))
+      (reg, cols.built)
+    }
+    registerInMemory(spark, path, SketchSlot, Some(Family.Sketch), fp)(
+      old => old.tsCol == tsCol && distinctCols.forall(old.distinct.contains) &&
+        quantileCols.forall(old.quantile.contains) && freqCols.forall(old.freq.contains),
+      old => Option.when(old.tsCol == tsCol)(old)
+        .flatMap(tailRefreshSketches(spark, path, _, events, fp, conf))
+        .map { case (reg, outcome) => (withColumns(reg)._1, outcome) },
+      old => withColumns(old.filter(o => o.fingerprint == fp && o.tsCol == tsCol)
+        .getOrElse(SketchReg(tsCol, Map.empty, Map.empty, Map.empty, fp, conf))))
+    ()
   }
 
-  /** The SKETCH-FAMILY mirror of [[tailRefreshInMemory]] (round 11):
-    * on a provable append, each already-registered column's new wheel
-    * is the old wheel's retained minute sketches merged with one
-    * bounded slot-sketch job over ONLY the tail files — sound because
-    * every family's merge (Theta union / KLL merge / Misra-Gries
+  /** The SKETCH-FAMILY append refresh: each already-registered column's
+    * new wheel is the old wheel's retained minute sketches merged with
+    * one bounded slot-sketch job over ONLY the tail files — sound
+    * because every family's merge (Theta union / KLL merge / Misra-Gries
     * merge) is associative, so old-then-tail equals a full rebuild.
-    * The covered data is never re-read — the append economics that
-    * matter when the table is 100 TB and the append is a day. Bails
-    * (full rebuild from `events`) on anything unprovable: mutations,
-    * deletions, an evicted minute tier, a non-raw `events` pipeline. */
+    * Bails on an empty registration or an evicted minute tier. */
   private def tailRefreshSketches(spark: SparkSession, path: String,
-      old: SketchReg, events: => DataFrame, tsCol: String, fp: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[(SketchReg, Int, Seq[String])] = {
-    import graft.wheel.{CohortWheel, FrequencyWheel, QuantileWheel, RollupBuilder}
+      old: SketchReg, events: => DataFrame, fp: String,
+      conf: Conf): Option[(SketchReg, TailRefresh)] = {
+    val tsCol = old.tsCol
     val empty = old.distinct.isEmpty && old.quantile.isEmpty && old.freq.isEmpty
     val complete = old.distinct.valuesIterator.forall(_.minuteTierComplete) &&
       old.quantile.valuesIterator.forall(_.minuteTierComplete) &&
       old.freq.valuesIterator.forall(_.minuteTierComplete)
     if (empty || !complete) None
-    else provableAppendTail(path, old.fingerprint, fp, conf).flatMap {
-      case (coveredCount, tail) => scala.util.Try {
-        requireRawPipeline(spark, path, tsCol, events)
-        val tailDf =
-          RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol)
-        val refreshed = old.copy(
-          distinct = old.distinct.map { case (c, w) =>
-            c -> w.withTailMinutes(
-              CohortWheel.slotSketches(tailDf, tsCol, c).collect()) },
-          quantile = old.quantile.map { case (c, w) =>
-            c -> w.withTailMinutes(
-              QuantileWheel.slotSketches(tailDf, tsCol, c).collect()) },
-          freq = old.freq.map { case (c, w) =>
-            c -> w.withTailMinutes(
-              FrequencyWheel.slotSketches(tailDf, tsCol, c).collect()) },
-          fingerprint = fp)
-        (refreshed, coveredCount, tail)
-      }.recoverWith(debugRefreshFallback(path)).toOption
+    else appendRefresh(spark, path, Family.Sketch, old.fingerprint, fp, conf, tsCol,
+        events) { tail =>
+      old.copy(
+        distinct = old.distinct.map { case (c, w) =>
+          c -> w.withTailMinutes(CohortWheel.slotSketches(tail, tsCol, c).collect()) },
+        quantile = old.quantile.map { case (c, w) =>
+          c -> w.withTailMinutes(QuantileWheel.slotSketches(tail, tsCol, c).collect()) },
+        freq = old.freq.map { case (c, w) =>
+          c -> w.withTailMinutes(FrequencyWheel.slotSketches(tail, tsCol, c).collect()) },
+        fingerprint = fp)
     }
   }
 
-  /** The sketch-family mirror of [[lastRegisterOutcome]] — what the
-    * last [[registerSketches]] rebuild for `path` did. */
-  def lastRegisterSketchOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#sketchmem"))
+  /** The persisted sketch columns of one registration, each resolved
+    * load / tail-refresh / rebuild against its own subdir of
+    * `indexBaseDir` (one [[graft.wheel.PersistentWheel]] kind per dir).
+    * `keyCol` is None for the unkeyed family, whose sidecars record just
+    * the column, and the dimension column for the keyed family, whose
+    * sidecars record (dimension, column). [[summary]] is the
+    * registration's worst-case work: FullBuild if ANY column scanned the
+    * source, else TailRefresh if any read tail files, else FullReuse. */
+  private final class SketchDirs(spark: SparkSession, path: String, family: Family,
+      indexBaseDir: String, tsCol: String, keyCol: Option[String],
+      events: => DataFrame) {
+    val conf: Conf = spark.sessionState.newHadoopConf()
+    val fp: String = sourceFingerprint(path, conf)
+    private val outcomes = Seq.newBuilder[PersistedOutcome]
 
-  /** PERSISTED sketch registration (round 11): the sketch-family
-    * mirror of [[registerPersisted]]. Each requested column resolves
-    * against its own subdir of `indexBaseDir` (`theta_<col>` /
-    * `kll_<col>` / `mg_<col>`, one [[graft.wheel.PersistentWheel]] kind
-    * per dir):
-    *
-    *  1. sidecar fingerprint matches the source → LOAD, no source scan
-    *     — the term that matters at 100 TB;
-    *  2. the source provably grew by appended files → TAIL REFRESH:
-    *     slot sketches built over ONLY the tail, merged into the saved
-    *     minute sketches, atomically re-saved, then loaded;
-    *  3. anything else (first save, mutation, foreign dir) → full
-    *     build + save from `events`.
-    *
-    * The loaded wheels replace any previous sketch registration for
-    * `path` (same put-semantics as [[registerPrebuiltSketches]]).
-    * [[lastPersistedSketchOutcome]] reports the registration's
-    * worst-case work: FullBuild if ANY column scanned the source, else
-    * TailRefresh if any read tail files, else FullReuse. */
+    def add[W <: AnyRef](cols: Seq[String], prefix: String, kind: String)(
+        load: String => W, tailSlots: (DataFrame, String) => Array[SqlRow],
+        mergeBytes: (Array[Byte], Array[Byte]) => Array[Byte],
+        save: (String, String) => W): Map[String, W] =
+      cols.map { c =>
+        val dir = s"$indexBaseDir/${prefix}_$c"
+        val (w, outcome) = resolvePersisted(spark, path, dir, family, fp, conf, tsCol,
+            events, s"accel-$kind")(
+          m => m.kind == kind && m.tsCol == tsCol && m.valueCols == keyCol.toSeq :+ c &&
+            m.sourceFingerprint.nonEmpty,
+          load(dir), save(dir, c),
+          _ => Some { (tail: DataFrame) =>
+            val refreshDir =
+              if (keyCol.isEmpty) PersistentWheel.refreshSketchDir _
+              else PersistentWheel.refreshKeyedSketchDir _
+            refreshDir(spark, dir, kind, tailSlots(tail, c), mergeBytes, fp)
+            load(dir)
+          })
+        outcomes += outcome
+        c -> w
+      }.toMap
+
+    def summary: PersistedOutcome = {
+      val all = outcomes.result()
+      if (all.contains(FullBuild)) FullBuild
+      else all.collectFirst { case t: TailRefresh => t }.getOrElse(FullReuse)
+    }
+  }
+
+  /** PERSISTED sketch registration: the sketch-family mirror of
+    * [[registerPersisted]]. Each requested column resolves against its
+    * own subdir of `indexBaseDir` (`theta_<col>` / `kll_<col>` /
+    * `mg_<col>`): load when the sidecar fingerprint matches the source,
+    * tail-refresh on a provable append, else full build + save. The
+    * loaded wheels replace any previous sketch registration for `path`
+    * (same put-semantics as [[registerPrebuiltSketches]]), and
+    * [[lastOutcome]] reports the registration's worst-case work. */
   def registerPersistedSketches(spark: SparkSession, path: String,
       indexBaseDir: String, events: => DataFrame, tsCol: String = "ts",
       distinctCols: Seq[String] = Nil, quantileCols: Seq[String] = Nil,
       freqCols: Seq[String] = Nil): Unit = {
-    import graft.wheel.{CohortWheel, FrequencyWheel, PersistentWheel,
-      QuantileWheel, RollupBuilder}
-    type SqlRow = org.apache.spark.sql.Row
     require(distinctCols.nonEmpty || quantileCols.nonEmpty || freqCols.nonEmpty,
       "need at least one sketch column")
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val outcomes = Seq.newBuilder[PersistedOutcome]
-
-    def resolve[W <: AnyRef](c: String, sub: String, kind: String,
-        load: String => W,
-        tailSlots: (DataFrame, String) => Array[SqlRow],
-        mergeBytes: (Array[Byte], Array[Byte]) => Array[Byte],
-        fullSave: String => W): W = {
-      val dir = s"$indexBaseDir/$sub"
-      val saved = PersistentWheel.peek(spark, dir).filter(m =>
-        m.kind == kind && m.tsCol == tsCol && m.valueCols == Seq(c) &&
-          m.sourceFingerprint.nonEmpty)
-      saved.filter(_.sourceFingerprint == fp)
-        // the FullReuse load rides the build-once dir-load cache (r18)
-        .flatMap(m => scala.util.Try(graft.wheel.WheelCatalog.cachedDirLoad(
-          spark, dir, m, s"accel-$kind")(load(dir))).toOption)
-        .map { w => outcomes += FullReuse; w }
-        .orElse(saved.flatMap(m =>
-          provableAppendTail(path, m.sourceFingerprint, fp, conf).flatMap {
-            case (coveredN, tail) => scala.util.Try {
-              requireRawPipeline(spark, path, tsCol, events)
-              val tailDf =
-                RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol)
-              PersistentWheel.refreshSketchDir(spark, dir, kind,
-                tailSlots(tailDf, c), mergeBytes, fp)
-              val w = load(dir)
-              outcomes += TailRefresh(coveredN, tail)
-              w
-            }.recoverWith(debugRefreshFallback(path)).toOption
-          }))
-        .getOrElse { outcomes += FullBuild; fullSave(dir) }
-    }
-
-    val distinct = distinctCols.map(c =>
-      c -> resolve[graft.wheel.CohortWheel](c, s"theta_$c",
-        PersistentWheel.ThetaKind,
-        d => PersistentWheel.loadCohort(spark, d)._2,
-        (df, cc) => CohortWheel.slotSketches(df, tsCol, cc).collect(),
-        CohortWheel.mergeBytes,
-        d => PersistentWheel.saveCohort(spark, d, events, tsCol, c, fp, path))
-    ).toMap
-    val quantile = quantileCols.map(c =>
-      c -> resolve[graft.wheel.QuantileWheel](c, s"kll_$c",
-        PersistentWheel.KllKind,
-        d => PersistentWheel.loadQuantile(spark, d)._2,
-        (df, cc) => QuantileWheel.slotSketches(df, tsCol, cc).collect(),
-        QuantileWheel.mergeBytes,
-        d => PersistentWheel.saveQuantile(spark, d, events, tsCol, c, fp, path))
-    ).toMap
-    val freq = freqCols.map(c =>
-      c -> resolve[graft.wheel.FrequencyWheel](c, s"mg_$c",
-        PersistentWheel.MgKind,
-        d => PersistentWheel.loadFrequency(spark, d)._2,
-        (df, cc) => FrequencyWheel.slotSketches(df, tsCol, cc).collect(),
-        FrequencyWheel.mergeBytes,
-        d => PersistentWheel.saveFrequency(spark, d, events, tsCol, c, fp, path))
-    ).toMap
-
-    sketchRegistry.put(normalize(path), SketchReg(tsCol, distinct, quantile,
-      freq, fp, conf))
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    val all = outcomes.result()
-    val summary =
-      if (all.contains(FullBuild)) FullBuild
-      else all.collectFirst { case t: TailRefresh => t }.getOrElse(FullReuse)
-    persistedOutcomes.put(normalize(path) + "#sketchpersist", summary)
-    enable(spark)
+    val P = PersistentWheel
+    val dirs = new SketchDirs(spark, path, Family.Sketch, indexBaseDir, tsCol, None, events)
+    val distinct = dirs.add(distinctCols, "theta", P.ThetaKind)(
+      P.loadCohort(spark, _)._2,
+      (df, c) => CohortWheel.slotSketches(df, tsCol, c).collect(), CohortWheel.mergeBytes,
+      (d, c) => P.saveCohort(spark, d, events, tsCol, c, dirs.fp, path))
+    val quantile = dirs.add(quantileCols, "kll", P.KllKind)(
+      P.loadQuantile(spark, _)._2,
+      (df, c) => QuantileWheel.slotSketches(df, tsCol, c).collect(), QuantileWheel.mergeBytes,
+      (d, c) => P.saveQuantile(spark, d, events, tsCol, c, dirs.fp, path))
+    val freq = dirs.add(freqCols, "mg", P.MgKind)(
+      P.loadFrequency(spark, _)._2,
+      (df, c) => FrequencyWheel.slotSketches(df, tsCol, c).collect(), FrequencyWheel.mergeBytes,
+      (d, c) => P.saveFrequency(spark, d, events, tsCol, c, dirs.fp, path))
+    update(spark, path, SketchSlot)(_ =>
+      SketchReg(tsCol, distinct, quantile, freq, dirs.fp, dirs.conf))
+    record(path, Family.Sketch, dirs.summary)
   }
-
-  /** What the last [[registerPersistedSketches]] for `path` did —
-    * FullBuild if any column scanned the source, TailRefresh if any
-    * read tail files, FullReuse when every column loaded from disk. */
-  def lastPersistedSketchOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#sketchpersist"))
 
   /** The KEYED mirror of [[registerPersistedSketches]]: per-dimension
     * sketch wheels resolved load / tail-refresh / rebuild against
@@ -806,89 +743,33 @@ object WheelAcceleration {
       indexBaseDir: String, events: => DataFrame, keyCol: String,
       tsCol: String = "ts", distinctCols: Seq[String] = Nil,
       quantileCols: Seq[String] = Nil, freqCols: Seq[String] = Nil): Unit = {
-    import graft.wheel.{KeyedSketchWheels, PersistentWheel, RollupBuilder}
-    type SqlRow = org.apache.spark.sql.Row
     require(distinctCols.nonEmpty || quantileCols.nonEmpty || freqCols.nonEmpty,
       "need at least one keyed sketch column")
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val outcomes = Seq.newBuilder[PersistedOutcome]
-
-    def resolve[W](c: String, sub: String, kind: String,
-        load: String => Map[Any, W],
-        tailSlots: (DataFrame, String) => Array[SqlRow],
-        mergeBytes: (Array[Byte], Array[Byte]) => Array[Byte],
-        fullSave: String => Map[Any, W]): Map[Any, W] = {
-      val dir = s"$indexBaseDir/$sub"
-      val saved = PersistentWheel.peek(spark, dir).filter(m =>
-        m.kind == kind && m.tsCol == tsCol &&
-          m.valueCols == Seq(keyCol, c) && m.sourceFingerprint.nonEmpty)
-      saved.filter(_.sourceFingerprint == fp)
-        // the FullReuse load rides the build-once dir-load cache (r18)
-        .flatMap(m => scala.util.Try(graft.wheel.WheelCatalog.cachedDirLoad(
-          spark, dir, m, s"accel-$kind")(load(dir))).toOption)
-        .map { w => outcomes += FullReuse; w }
-        .orElse(saved.flatMap(m =>
-          provableAppendTail(path, m.sourceFingerprint, fp, conf).flatMap {
-            case (coveredN, tail) => scala.util.Try {
-              requireRawPipeline(spark, path, tsCol, events)
-              val tailDf =
-                RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol)
-              PersistentWheel.refreshKeyedSketchDir(spark, dir, kind,
-                tailSlots(tailDf, c), mergeBytes, fp)
-              val w = load(dir)
-              outcomes += TailRefresh(coveredN, tail)
-              w
-            }.recoverWith(debugRefreshFallback(path)).toOption
-          }))
-        .getOrElse { outcomes += FullBuild; fullSave(dir) }
-    }
-
-    val distinct = distinctCols.map(c =>
-      c -> resolve[graft.wheel.CohortWheel](c, s"keyedtheta_$c",
-        PersistentWheel.KeyedThetaKind,
-        d => PersistentWheel.loadKeyedCohort(spark, d)._2,
-        (df, cc) => KeyedSketchWheels
-          .cohortSlotSketches(df, keyCol, tsCol, cc).collect(),
-        graft.wheel.CohortWheel.mergeBytes,
-        d => PersistentWheel.saveKeyedCohort(
-          spark, d, events, keyCol, tsCol, c, fp, path))).toMap
-    val quantile = quantileCols.map(c =>
-      c -> resolve[graft.wheel.QuantileWheel](c, s"keyedkll_$c",
-        PersistentWheel.KeyedKllKind,
-        d => PersistentWheel.loadKeyedQuantile(spark, d)._2,
-        (df, cc) => KeyedSketchWheels
-          .quantileSlotSketches(df, keyCol, tsCol, cc).collect(),
-        graft.wheel.QuantileWheel.mergeBytes,
-        d => PersistentWheel.saveKeyedQuantile(
-          spark, d, events, keyCol, tsCol, c, fp, path))).toMap
-    val freq = freqCols.map(c =>
-      c -> resolve[graft.wheel.FrequencyWheel](c, s"keyedmg_$c",
-        PersistentWheel.KeyedMgKind,
-        d => PersistentWheel.loadKeyedFrequency(spark, d)._2,
-        (df, cc) => KeyedSketchWheels
-          .frequencySlotSketches(df, keyCol, tsCol, cc).collect(),
-        graft.wheel.FrequencyWheel.mergeBytes,
-        d => PersistentWheel.saveKeyedFrequency(
-          spark, d, events, keyCol, tsCol, c, fp, path))).toMap
-
-    keyedSketchRegistry.put(normalize(path),
-      KeyedSketchReg(keyCol, tsCol, distinct, quantile, freq, fp, conf))
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    val all = outcomes.result()
-    val summary =
-      if (all.contains(FullBuild)) FullBuild
-      else all.collectFirst { case t: TailRefresh => t }.getOrElse(FullReuse)
-    persistedOutcomes.put(normalize(path) + "#keyedsketchpersist", summary)
-    enable(spark)
+    val P = PersistentWheel
+    val K = KeyedSketchWheels
+    val dirs = new SketchDirs(spark, path, Family.KeyedSketch, indexBaseDir, tsCol,
+      Some(keyCol), events)
+    val distinct = dirs.add(distinctCols, "keyedtheta", P.KeyedThetaKind)(
+      P.loadKeyedCohort(spark, _)._2,
+      (df, c) => K.cohortSlotSketches(df, keyCol, tsCol, c).collect(), CohortWheel.mergeBytes,
+      (d, c) => P.saveKeyedCohort(spark, d, events, keyCol, tsCol, c, dirs.fp, path))
+    val quantile = dirs.add(quantileCols, "keyedkll", P.KeyedKllKind)(
+      P.loadKeyedQuantile(spark, _)._2,
+      (df, c) => K.quantileSlotSketches(df, keyCol, tsCol, c).collect(),
+      QuantileWheel.mergeBytes,
+      (d, c) => P.saveKeyedQuantile(spark, d, events, keyCol, tsCol, c, dirs.fp, path))
+    val freq = dirs.add(freqCols, "keyedmg", P.KeyedMgKind)(
+      P.loadKeyedFrequency(spark, _)._2,
+      (df, c) => K.frequencySlotSketches(df, keyCol, tsCol, c).collect(),
+      FrequencyWheel.mergeBytes,
+      (d, c) => P.saveKeyedFrequency(spark, d, events, keyCol, tsCol, c, dirs.fp, path))
+    update(spark, path, KeyedSketchSlot)(_ =>
+      KeyedSketchReg(keyCol, tsCol, distinct, quantile, freq, dirs.fp, dirs.conf))
+    record(path, Family.KeyedSketch, dirs.summary)
   }
 
-  /** What the last [[registerPersistedKeyedSketches]] for `path` did. */
-  def lastPersistedKeyedSketchOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#keyedsketchpersist"))
-
   /** Register ALREADY-BUILT sketch wheels for `path` — the live-ingest
-    * refresh primitive for the approximate SQL spellings (round 11):
+    * refresh primitive for the approximate SQL spellings:
     * [[graft.streaming.WheelIngest]] rebuilds the per-column wheels
     * from its accumulated minute sketches after each committed batch
     * and swaps them in here, so `approx_count_distinct` /
@@ -897,186 +778,119 @@ object WheelAcceleration {
     * foreign-writer semantics as [[registerPrebuilt]]. */
   def registerPrebuiltSketches(spark: SparkSession, path: String,
       tsCol: String,
-      distinct: Map[String, graft.wheel.CohortWheel] = Map.empty,
-      quantile: Map[String, graft.wheel.QuantileWheel] = Map.empty,
-      freq: Map[String, graft.wheel.FrequencyWheel] = Map.empty,
+      distinct: Map[String, CohortWheel] = Map.empty,
+      quantile: Map[String, QuantileWheel] = Map.empty,
+      freq: Map[String, FrequencyWheel] = Map.empty,
       coveredFingerprint: Option[String] = None): Unit = {
     require(distinct.nonEmpty || quantile.nonEmpty || freq.nonEmpty,
       "need at least one sketch wheel")
     val conf = spark.sessionState.newHadoopConf()
-    val fp = coveredFingerprint.getOrElse(fingerprint(path, conf))
-    sketchRegistry.put(normalize(path),
+    val fp = coveredFingerprint.getOrElse(sourceFingerprint(path, conf))
+    update(spark, path, SketchSlot)(_ =>
       SketchReg(tsCol, distinct, quantile, freq, fp, conf))
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    enable(spark)
+    ()
   }
 
-  /** Sketch registration for `path`, validated against the CURRENT
-    * source fingerprint — None (scan path) if the files changed. */
-  private[plans] def lookupSketch(path: String): Option[SketchReg] =
-    Option(sketchRegistry.get(normalize(path)))
-      .filter(r => fresh(path, r.fingerprint, r.hadoopConf))
-
-  /** PER-DIMENSION-KEY sketch wheels for one source (late round 11):
-    * the keyed analogue of [[SketchReg]], serving the approximate
-    * spellings PER KEY inside `GROUP BY keyCol × time-slot` rewrites.
-    * Maps are column → (dimension value → wheel). */
-  private[plans] final case class KeyedSketchReg(keyCol: String, tsCol: String,
-      distinct: Map[String, Map[Any, graft.wheel.CohortWheel]],
-      quantile: Map[String, Map[Any, graft.wheel.QuantileWheel]],
-      freq: Map[String, Map[Any, graft.wheel.FrequencyWheel]],
-      fingerprint: String, hadoopConf: org.apache.hadoop.conf.Configuration) {
-    /** The unkeyed [[SketchReg]] view for ONE dimension value — every
-      * downstream fold / clamp / accuracy-gate path is the proven
-      * unkeyed one. Columns whose wheel map lacks this key simply drop
-      * out (their aggregates bail to the scan). */
-    def viewFor(key: Any): SketchReg = SketchReg(tsCol,
-      distinct.flatMap { case (c, m) => m.get(key).map(c -> _) },
-      quantile.flatMap { case (c, m) => m.get(key).map(c -> _) },
-      freq.flatMap { case (c, m) => m.get(key).map(c -> _) },
-      fingerprint, hadoopConf)
-  }
-
-  private val keyedSketchRegistry = new ConcurrentHashMap[String, KeyedSketchReg]()
-
-  /** KEYED sketch-wheel registration (late round 11): the keyed grid
-    * analogue of [[registerSketches]] — after it,
-    * `GROUP BY keyCol, time-bucket` statements aggregating
-    * `approx_count_distinct` / `percentile_approx` / `approx_top_k`
-    * fold per (key, cell) from per-dimension sketch wheels
-    * ([[graft.wheel.KeyedSketchWheels]]: one two-stage build job per
-    * family, driver-resident under a hard entry ceiling). Requires a
-    * [[registerKeyed]] registration on the same key and ts columns —
-    * the keyed rewrite's key enumeration and cell-emptiness checks run
-    * off the keyed SUM wheels. Same fingerprint/staleness discipline
-    * and the same per-key accuracy gate as the unkeyed folds. */
+  /** KEYED sketch-wheel registration: the keyed grid analogue of
+    * [[registerSketches]] — after it, `GROUP BY keyCol, time-bucket`
+    * statements aggregating `approx_count_distinct` /
+    * `percentile_approx` / `approx_top_k` fold per (key, cell) from
+    * per-dimension sketch wheels ([[graft.wheel.KeyedSketchWheels]]: one
+    * two-stage build job per family, driver-resident under a hard entry
+    * ceiling). Requires a [[registerKeyed]] registration on the same key
+    * and ts columns — the keyed rewrite's key enumeration and
+    * cell-emptiness checks run off the keyed SUM wheels. Same
+    * fingerprint/staleness discipline and the same per-key accuracy gate
+    * as the unkeyed folds. */
   def registerKeyedSketches(spark: SparkSession, path: String,
       events: => DataFrame, keyCol: String, tsCol: String = "ts",
       distinctCols: Seq[String] = Nil, quantileCols: Seq[String] = Nil,
       freqCols: Seq[String] = Nil): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val key = s"$path@$fp"
-    keyedSketchRegistry.compute(normalize(path), (_, old) => {
-      val base =
-        if (old != null && old.fingerprint == fp && old.keyCol == keyCol &&
-          old.tsCol == tsCol) old
-        else Option(old).filter(o => o.keyCol == keyCol && o.tsCol == tsCol)
-          .flatMap(o => tailRefreshKeyedSketches(
-            spark, path, o, events, keyCol, tsCol, fp, conf)
-        ) match {
-          case Some((refreshed, coveredN, tail)) =>
-            persistedOutcomes.put(normalize(path) + "#keyedsketchmem",
-              TailRefresh(coveredN, tail))
-            refreshed
-          case None =>
-            persistedOutcomes.put(normalize(path) + "#keyedsketchmem", FullBuild)
-            KeyedSketchReg(keyCol, tsCol, Map.empty, Map.empty, Map.empty, fp, conf)
-        }
-      // columns a tail refresh carried forward are kept as-is
-      base.copy(
-        distinct = base.distinct ++ distinctCols.filterNot(base.distinct.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedKeyedCohort(
-              spark, key, keyCol, tsCol, c)(events)),
-        quantile = base.quantile ++ quantileCols.filterNot(base.quantile.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedKeyedQuantile(
-              spark, key, keyCol, tsCol, c)(events)),
-        freq = base.freq ++ freqCols.filterNot(base.freq.contains)
-          .map(c =>
-            c -> graft.wheel.WheelCatalog.cachedKeyedFrequency(
-              spark, key, keyCol, tsCol, c)(events)))
-    })
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    enable(spark)
+    val fp = sourceFingerprint(path, conf)
+    def sameCols(o: KeyedSketchReg) = o.keyCol == keyCol && o.tsCol == tsCol
+    def withColumns(base: KeyedSketchReg): (KeyedSketchReg, Boolean) = {
+      val cols = new SketchColumns(spark, Seq(s"$path@$fp", keyCol, tsCol))
+      val reg = base.copy(
+        distinct = cols.add(base.distinct, distinctCols, "keyedcohort")(
+          KeyedSketchWheels.buildCohort(events, keyCol, tsCol, _)),
+        quantile = cols.add(base.quantile, quantileCols, "keyedquantile")(
+          KeyedSketchWheels.buildQuantile(events, keyCol, tsCol, _)),
+        freq = cols.add(base.freq, freqCols, "keyedfrequency")(
+          KeyedSketchWheels.buildFrequency(events, keyCol, tsCol, _)))
+      (reg, cols.built)
+    }
+    registerInMemory(spark, path, KeyedSketchSlot, Some(Family.KeyedSketch), fp)(
+      old => sameCols(old) && distinctCols.forall(old.distinct.contains) &&
+        quantileCols.forall(old.quantile.contains) && freqCols.forall(old.freq.contains),
+      old => Option.when(sameCols(old))(old)
+        .flatMap(tailRefreshKeyedSketches(spark, path, _, events, fp, conf))
+        .map { case (reg, outcome) => (withColumns(reg)._1, outcome) },
+      old => withColumns(old.filter(o => o.fingerprint == fp && sameCols(o)).getOrElse(
+        KeyedSketchReg(keyCol, tsCol, Map.empty, Map.empty, Map.empty, fp, conf))))
+    ()
   }
 
-  /** The KEYED sketch mirror of [[tailRefreshSketches]]: on a provable
-    * append, one bounded keyed slot-sketch job per family×column over
-    * ONLY the tail files; each dimension's tail rows merge into that
-    * dimension's old wheel (associative family merges), dims first seen
-    * in the tail get fresh wheels, untouched dims keep theirs. The
-    * driver-resident ceiling is re-checked against the merged entry
-    * count — past it the refresh routes to the full rebuild's own loud
-    * failure. */
+  /** The KEYED sketch append refresh: one bounded keyed slot-sketch job
+    * per family×column over ONLY the tail files; each dimension's tail
+    * rows merge into that dimension's old wheel (associative family
+    * merges), dims first seen in the tail get fresh wheels, untouched
+    * dims keep theirs. The driver-resident ceiling is re-checked against
+    * the merged entry count — past it the refresh routes to the full
+    * rebuild's own loud failure. */
   private def tailRefreshKeyedSketches(spark: SparkSession, path: String,
-      old: KeyedSketchReg, events: => DataFrame, keyCol: String,
-      tsCol: String, fp: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[(KeyedSketchReg, Int, Seq[String])] = {
-    import graft.wheel.{CohortWheel, FrequencyWheel, KeyedSketchWheels,
-      QuantileWheel, RollupBuilder}
-    type SqlRow = org.apache.spark.sql.Row
+      old: KeyedSketchReg, events: => DataFrame, fp: String,
+      conf: Conf): Option[(KeyedSketchReg, TailRefresh)] = {
+    val (keyCol, tsCol) = (old.keyCol, old.tsCol)
     val empty = old.distinct.isEmpty && old.quantile.isEmpty && old.freq.isEmpty
     val complete =
-      old.distinct.valuesIterator.flatMap(_.valuesIterator)
-        .forall(_.minuteTierComplete) &&
-      old.quantile.valuesIterator.flatMap(_.valuesIterator)
-        .forall(_.minuteTierComplete) &&
-      old.freq.valuesIterator.flatMap(_.valuesIterator)
-        .forall(_.minuteTierComplete)
+      old.distinct.valuesIterator.flatMap(_.valuesIterator).forall(_.minuteTierComplete) &&
+      old.quantile.valuesIterator.flatMap(_.valuesIterator).forall(_.minuteTierComplete) &&
+      old.freq.valuesIterator.flatMap(_.valuesIterator).forall(_.minuteTierComplete)
+    def refreshFamily[W](oldMap: Map[Any, W], tailRows: Array[SqlRow],
+        withTail: (W, Array[SqlRow]) => W,
+        fresh: Array[SqlRow] => W, count: W => Int): Map[Any, W] = {
+      // conservative merged-entry bound (in-slot merges counted twice);
+      // past it the full rebuild's grouped() fill enforces the exact
+      // ceiling with its own loud failure
+      require(oldMap.valuesIterator.map(count).sum + tailRows.length <=
+        KeyedSketchWheels.MaxEntries,
+        "keyed sketch tail refresh would exceed the driver-resident " +
+          s"entry ceiling (${KeyedSketchWheels.MaxEntries})")
+      val byDim = tailRows.groupBy(_.get(0)).map { case (d, rs) =>
+        d -> rs.map(r => org.apache.spark.sql.Row(r.getLong(1), r.getAs[Array[Byte]](2)))
+      }
+      (oldMap.keySet ++ byDim.keySet).iterator.map { d =>
+        d -> ((oldMap.get(d), byDim.get(d)) match {
+          case (Some(w), Some(rs)) => withTail(w, rs)
+          case (Some(w), None) => w
+          case (_, Some(rs)) => fresh(rs)
+          case _ => throw new IllegalStateException("unreachable")
+        })
+      }.toMap
+    }
     if (empty || !complete) None
-    else provableAppendTail(path, old.fingerprint, fp, conf).flatMap {
-      case (coveredCount, tail) => scala.util.Try {
-        requireRawPipeline(spark, path, tsCol, events)
-        val tailDf =
-          RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol)
-        def refreshFamily[W](oldMap: Map[Any, W], tailRows: Array[SqlRow],
-            withTail: (W, Array[SqlRow]) => W,
-            fresh: Array[SqlRow] => W, count: W => Int): Map[Any, W] = {
-          // conservative merged-entry bound (in-slot merges counted
-          // twice); past it the full rebuild's grouped() fill enforces
-          // the exact ceiling with its own loud failure
-          require(oldMap.valuesIterator.map(count).sum + tailRows.length <=
-            KeyedSketchWheels.MaxEntries,
-            "keyed sketch tail refresh would exceed the driver-resident " +
-              s"entry ceiling (${KeyedSketchWheels.MaxEntries})")
-          val byDim = tailRows.groupBy(_.get(0)).map { case (d, rs) =>
-            d -> rs.map(r => org.apache.spark.sql.Row(
-              r.getLong(1), r.getAs[Array[Byte]](2)))
-          }
-          (oldMap.keySet ++ byDim.keySet).iterator.map { d =>
-            d -> ((oldMap.get(d), byDim.get(d)) match {
-              case (Some(w), Some(rs)) => withTail(w, rs)
-              case (Some(w), None) => w
-              case (_, Some(rs)) => fresh(rs)
-              case _ => throw new IllegalStateException("unreachable")
-            })
-          }.toMap
-        }
-        val refreshed = old.copy(
-          distinct = old.distinct.map { case (c, m) =>
-            c -> refreshFamily[CohortWheel](m,
-              KeyedSketchWheels.cohortSlotSketches(tailDf, keyCol, tsCol, c)
-                .collect(),
-              (w, rs) => w.withTailMinutes(rs),
-              rs => CohortWheel.fromMinuteSketches(rs, Map.empty),
-              _.minuteEntryCount) },
-          quantile = old.quantile.map { case (c, m) =>
-            c -> refreshFamily[QuantileWheel](m,
-              KeyedSketchWheels.quantileSlotSketches(tailDf, keyCol, tsCol, c)
-                .collect(),
-              (w, rs) => w.withTailMinutes(rs),
-              rs => QuantileWheel.fromMinuteSketches(rs, Map.empty),
-              _.minuteEntryCount) },
-          freq = old.freq.map { case (c, m) =>
-            c -> refreshFamily[FrequencyWheel](m,
-              KeyedSketchWheels.frequencySlotSketches(tailDf, keyCol, tsCol, c)
-                .collect(),
-              (w, rs) => w.withTailMinutes(rs),
-              rs => FrequencyWheel.fromMinuteSketches(rs, Map.empty),
-              _.minuteEntryCount) },
-          fingerprint = fp)
-        (refreshed, coveredCount, tail)
-      }.recoverWith(debugRefreshFallback(path)).toOption
+    else appendRefresh(spark, path, Family.KeyedSketch, old.fingerprint, fp, conf, tsCol,
+        events) { tail =>
+      old.copy(
+        distinct = old.distinct.map { case (c, m) =>
+          c -> refreshFamily[CohortWheel](m,
+            KeyedSketchWheels.cohortSlotSketches(tail, keyCol, tsCol, c).collect(),
+            _.withTailMinutes(_), CohortWheel.fromMinuteSketches(_, Map.empty),
+            _.minuteEntryCount) },
+        quantile = old.quantile.map { case (c, m) =>
+          c -> refreshFamily[QuantileWheel](m,
+            KeyedSketchWheels.quantileSlotSketches(tail, keyCol, tsCol, c).collect(),
+            _.withTailMinutes(_), QuantileWheel.fromMinuteSketches(_, Map.empty),
+            _.minuteEntryCount) },
+        freq = old.freq.map { case (c, m) =>
+          c -> refreshFamily[FrequencyWheel](m,
+            KeyedSketchWheels.frequencySlotSketches(tail, keyCol, tsCol, c).collect(),
+            _.withTailMinutes(_), FrequencyWheel.fromMinuteSketches(_, Map.empty),
+            _.minuteEntryCount) },
+        fingerprint = fp)
     }
   }
-
-  /** The keyed-sketch mirror of [[lastRegisterOutcome]] — what the last
-    * [[registerKeyedSketches]] rebuild for `path` did. */
-  def lastRegisterKeyedSketchOutcome(path: String): Option[PersistedOutcome] =
-    Option(persistedOutcomes.get(normalize(path) + "#keyedsketchmem"))
 
   /** Swap ALREADY-BUILT keyed sketch wheels in for `path` — the
     * live-ingest refresh primitive for the KEYED approximate spellings
@@ -1085,92 +899,222 @@ object WheelAcceleration {
     * [[registerPrebuilt]]. */
   def registerPrebuiltKeyedSketches(spark: SparkSession, path: String,
       keyCol: String, tsCol: String,
-      distinct: Map[String, Map[Any, graft.wheel.CohortWheel]] = Map.empty,
-      quantile: Map[String, Map[Any, graft.wheel.QuantileWheel]] = Map.empty,
-      freq: Map[String, Map[Any, graft.wheel.FrequencyWheel]] = Map.empty,
+      distinct: Map[String, Map[Any, CohortWheel]] = Map.empty,
+      quantile: Map[String, Map[Any, QuantileWheel]] = Map.empty,
+      freq: Map[String, Map[Any, FrequencyWheel]] = Map.empty,
       coveredFingerprint: Option[String] = None): Unit = {
     require(distinct.nonEmpty || quantile.nonEmpty || freq.nonEmpty,
       "need at least one keyed sketch wheel")
     val conf = spark.sessionState.newHadoopConf()
-    val fp = coveredFingerprint.getOrElse(fingerprint(path, conf))
-    keyedSketchRegistry.put(normalize(path),
+    val fp = coveredFingerprint.getOrElse(sourceFingerprint(path, conf))
+    update(spark, path, KeyedSketchSlot)(_ =>
       KeyedSketchReg(keyCol, tsCol, distinct, quantile, freq, fp, conf))
-    fpCache.keySet.removeIf(_._1 == normalize(path))
-    enable(spark)
+    ()
   }
 
-  /** Keyed sketch registration for `path`, freshness-validated. */
-  private[plans] def lookupKeyedSketch(path: String): Option[KeyedSketchReg] =
-    Option(keyedSketchRegistry.get(normalize(path)))
-      .filter(r => fresh(path, r.fingerprint, r.hadoopConf))
+  /** Register a PER-KEY index for `path` (GROUP BY keyCol × time-slot
+    * rewrites). Same fingerprint/staleness discipline as [[register]]. */
+  def registerKeyed(spark: SparkSession, path: String, events: => DataFrame,
+      keyCol: String, tsCol: String = "ts", valueCol: String = "value"): KeyedWheelIndex =
+    registerKeyedMulti(spark, path, events, keyCol, tsCol, Seq(valueCol))(valueCol)
 
-  /** Why the most recent NON-FIRING rewrite attempt for `path` bailed
-    * (round 11, VERDICT r10 #7): queryable fold diagnostics, replacing
-    * the `-Dgraft.wheel.rewrite.debug` stderr archaeology. Recorded at
-    * the decisive bail points — stale fingerprint, non-range filter
-    * shape, non-time-bucket grouping, unsupported aggregate,
-    * ill-conditioned second moment, above-cap unaligned sliding,
-    * swallowed exception. The entry answers "why didn't THAT query
-    * fold": a later successful fold for the path does not erase it;
-    * `unregister`/`clear` do. Best-effort diagnostics only — two
-    * queries racing on one path may interleave reasons, never
-    * correctness. */
+  /** N-measure keyed registration: ONE
+    * [[graft.wheel.KeyedWheelIndex.buildMulti]] pass indexes every
+    * listed measure per key, and `GROUP BY (key, time-slot)` SQL
+    * aggregating ANY MIX of them folds at plan time — the keyed analogue
+    * of [[registerMulti]]. Built once through the catalog: the
+    * fingerprint-keyed cache serves re-registrations of unchanged data. */
+  def registerKeyedMulti(spark: SparkSession, path: String, events: => DataFrame,
+      keyCol: String, tsCol: String,
+      valueCols: Seq[String]): Map[String, KeyedWheelIndex] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fp = sourceFingerprint(path, conf)
+    registerInMemory(spark, path, KeyedSlot, Some(Family.Keyed), fp)(
+      old => old.keyCol == keyCol && old.tsCol == tsCol &&
+        valueCols.forall(old.wheels.contains),
+      old => tailRefreshKeyed(spark, path, old, events, keyCol, tsCol, valueCols, fp, conf),
+      _ => WheelCatalog.getOrBuild(spark, "keyedmulti", s"$path@$fp", keyCol, tsCol,
+          valueCols.mkString(","))(
+          KeyedWheelIndex.buildMulti(events, keyCol, tsCol, valueCols)) match {
+        case (wheels, built) => (KeyedReg(keyCol, tsCol, wheels, fp, conf), built)
+      }).wheels
+  }
+
+  /** The KEYED in-memory append refresh: the new per-key wheels merge
+    * the old index's retained (key, minute) partials with one bounded
+    * keyed rollup of the tail files. The keyed index retains its full
+    * minute map (no rotation), so no tier-completeness gate is needed;
+    * the driver ceiling is re-checked by the shared fill
+    * ([[graft.wheel.KeyedWheelIndex.fromMultiPartialRows]]), and a
+    * merged state past it routes to the full rebuild's identical loud
+    * failure. */
+  private def tailRefreshKeyed(spark: SparkSession, path: String,
+      old: KeyedReg, events: => DataFrame, keyCol: String, tsCol: String,
+      valueCols: Seq[String], fp: String,
+      conf: Conf): Option[(KeyedReg, TailRefresh)] = {
+    val oldWheels = valueCols.flatMap(old.wheels.get)
+    if (old.keyCol != keyCol || old.tsCol != tsCol || oldWheels.size != valueCols.size) None
+    else appendRefresh(spark, path, Family.Keyed, old.fingerprint, fp, conf, tsCol,
+        events) { tail =>
+      val head = oldWheels.head
+      val (rows, fi) = mergeMinutePartials(Seq(keyCol), valueCols,
+        head.minuteEntries(head.baseMs, head.horizonMs).map { case (key, slot, a0) =>
+          (Seq(key), slot, a0.rows, oldWheels.map(_.minuteAt(key, slot)).toArray) },
+        RollupBuilder.keyedRollupMulti(tail, keyCol, tsCol, valueCols,
+          graft.wheel.Tier.Minute))
+      KeyedReg(keyCol, tsCol, KeyedWheelIndex.fromMultiPartialRows(
+        rows, fi, keyCol, head.keyType, valueCols), fp, conf)
+    }
+  }
+
+  /** PERSISTED keyed registration: the per-key index served from a
+    * saved copy at `indexDir` when its recorded source fingerprint, key
+    * and measure column match — an O(|keys| × slots) load with NO source
+    * scan — and rebuilt+re-saved otherwise. The keyed analogue of
+    * [[registerPersisted]]. */
+  def registerPersistedKeyed(spark: SparkSession, path: String,
+      indexDir: String, events: => DataFrame, keyCol: String,
+      tsCol: String = "ts", valueCol: String = "value"): KeyedWheelIndex =
+    registerPersistedKeyedWith(spark, path, indexDir, events, keyCol, tsCol,
+        Seq(valueCol), PersistentWheel.KeyedKind, "accel-keyed")(
+      Map(valueCol -> PersistentWheel.loadKeyed(spark, indexDir)._2),
+      fp => Map(valueCol -> PersistentWheel.saveKeyed(
+        spark, indexDir, events, keyCol, tsCol, valueCol, fp, path)),
+      None)(valueCol)
+
+  /** PERSISTED N-measure keyed registration: every listed measure's
+    * per-key wheel served from a `keyedmulti` dir when its recorded
+    * source fingerprint, key and measure columns match, tail-refreshed
+    * on append-only growth (one keyedRollupMulti job over the new files,
+    * merged into the saved (key, slot) partials and re-saved), and
+    * rebuilt+re-saved otherwise. Because the live keyed ingest
+    * checkpoints in exactly this format, a batch session can register
+    * straight off `persistDir/keyed`. */
+  def registerPersistedKeyedMulti(spark: SparkSession, path: String,
+      indexDir: String, events: => DataFrame, keyCol: String,
+      tsCol: String, valueCols: Seq[String]): Map[String, KeyedWheelIndex] =
+    registerPersistedKeyedWith(spark, path, indexDir, events, keyCol, tsCol,
+        valueCols, PersistentWheel.KeyedMultiKind, "accel-keyedmulti")(
+      PersistentWheel.loadKeyedMulti(spark, indexDir)._2,
+      PersistentWheel.saveKeyedMulti(
+        spark, indexDir, events, keyCol, tsCol, valueCols, _, path),
+      Some { (tail: DataFrame, fp: String) =>
+        val cols = partialCols(Seq(keyCol), valueCols)
+        val (_, persisted) = PersistentWheel.loadPartialsKeyedMulti(spark, indexDir)
+        val merged = RollupBuilder.mergeKeyedMulti(
+          persisted.select(cols.head, cols.tail: _*).unionByName(
+            RollupBuilder.keyedRollupMulti(tail, keyCol, tsCol, valueCols,
+              graft.wheel.Tier.Minute).select(cols.head, cols.tail: _*)),
+          keyCol, valueCols)
+        PersistentWheel.savePartialsKeyedMulti(
+          spark, indexDir, merged, tsCol, keyCol, valueCols, fp, path)
+        PersistentWheel.loadKeyedMulti(spark, indexDir)._2
+      })
+
+  /** Shared step of the persisted keyed registrations: `save` and
+    * `refresh` take the current source fingerprint. */
+  private def registerPersistedKeyedWith(spark: SparkSession, path: String,
+      indexDir: String, events: => DataFrame, keyCol: String, tsCol: String,
+      valueCols: Seq[String], kind: String, variant: String)(
+      load: => Map[String, KeyedWheelIndex],
+      save: String => Map[String, KeyedWheelIndex],
+      refresh: Option[(DataFrame, String) => Map[String, KeyedWheelIndex]])
+      : Map[String, KeyedWheelIndex] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fp = sourceFingerprint(path, conf)
+    update(spark, path, KeyedSlot) {
+      case Some(old) if old.fingerprint == fp && old.keyCol == keyCol &&
+        old.tsCol == tsCol && valueCols.forall(old.wheels.contains) => old
+      case _ => KeyedReg(keyCol, tsCol, resolvePersisted(spark, path, indexDir,
+          Family.Keyed, fp, conf, tsCol, events, variant)(
+        m => m.kind == kind && m.tsCol == tsCol && m.valueCols == keyCol +: valueCols,
+        load, save(fp), _ => refresh.map(r => r(_, fp)))._1, fp, conf)
+    }.wheels
+  }
+
+  /** Synthetic struct column carrying the composite key through the
+    * keyed build — never visible to queries. */
+  private val CompositeKeyCol = "__graft_ckey"
+
+  /** COMPOSITE-dimension keyed registration ([[Keyed2Reg]]): same build
+    * ceiling (now over the tuple cardinality |k1 × k2 × …|), same
+    * fingerprint/staleness discipline as [[registerKeyed]]. */
+  def registerKeyedComposite(spark: SparkSession, path: String,
+      events: => DataFrame, keyCols: Seq[String], tsCol: String = "ts",
+      valueCols: Seq[String] = Seq("value")): Unit = {
+    require(keyCols.size >= 2,
+      s"composite keyed registration needs >= 2 key columns, got $keyCols " +
+        "(use registerKeyed for a single dimension)")
+    val conf = spark.sessionState.newHadoopConf()
+    val fp = sourceFingerprint(path, conf)
+    import org.apache.spark.sql.functions.{col, struct}
+    registerInMemory(spark, path, CompositeSlot, None, fp)(
+      old => old.keyCols == keyCols && old.tsCol == tsCol &&
+        valueCols.forall(old.wheels.contains),
+      _ => None,
+      // the same catalog family as registerKeyedMulti; the component
+      // list folds into the key so (k1,k2) and (k2,k1) stay distinct
+      _ => WheelCatalog.getOrBuild(spark, "keyedmulti",
+          s"$path@$fp#${keyCols.mkString(",")}", CompositeKeyCol, tsCol,
+          valueCols.mkString(","))(KeyedWheelIndex.buildMulti(
+          events.withColumn(CompositeKeyCol, struct(keyCols.map(col): _*)),
+          CompositeKeyCol, tsCol, valueCols)) match {
+        case (wheels, built) => (Keyed2Reg(keyCols, tsCol, wheels, fp, conf), built)
+      })
+    ()
+  }
+
+  /** Why the most recent NON-FIRING rewrite attempt for `path` bailed:
+    * queryable fold diagnostics. Recorded at the decisive bail points —
+    * stale fingerprint, non-range filter shape, non-time-bucket grouping,
+    * unsupported aggregate, ill-conditioned second moment, above-cap
+    * unaligned sliding, swallowed exception (whose stack trace the
+    * `graft.plans.WheelAcceleration` logger prints at DEBUG). The entry
+    * answers "why didn't THAT query fold": a later successful fold for
+    * the path does not erase it; `unregister`/`clear` do. Best-effort
+    * diagnostics only — two queries racing on one path may interleave
+    * reasons, never correctness. */
   def lastBailReason(path: String): Option[String] =
     Option(bailReasons.get(normalize(path)))
 
-  /** One-stop operator answer to "why isn't my query accelerated?"
-    * (round 11): what every registry holds for `path` — measures /
-    * sketch columns, indexed span, fingerprint freshness — plus
-    * [[lastBailReason]]. Human-readable, for logs and consoles; the
-    * programmatic per-field surface stays [[lastBailReason]] and the
-    * registration APIs themselves. Freshness is evaluated with the
-    * same TTL-cached check the rewrite uses, so the verdict shown is
-    * the verdict the next query would get. */
+  /** One-stop operator answer to "why isn't my query accelerated?": what
+    * every family holds for `path` — measures / sketch columns, indexed
+    * span, fingerprint freshness — plus [[lastBailReason]].
+    * Human-readable, for logs and consoles; the programmatic per-field
+    * surface stays [[lastBailReason]] and the registration APIs
+    * themselves. Freshness is evaluated with the same TTL-cached check
+    * the rewrite uses, so the verdict shown is the verdict the next query
+    * would get. */
   def accelerationStatus(path: String): String = {
     val p = normalize(path)
     def fmt(ms: Long) = java.time.Instant.ofEpochMilli(ms).toString
-    def freshness(fp: String, conf: org.apache.hadoop.conf.Configuration) =
-      if (fresh(path, fp, conf)) "fingerprint FRESH" else "fingerprint STALE (scan path until re-registered)"
-    val lines = Seq.newBuilder[String]
-    Option(registry.get(p)).foreach { r =>
+    def cols(m: Map[String, Any]) = m.keys.toSeq.sorted.mkString("[", ", ", "]")
+    def freshness(s: Slot) =
+      if (fresh(path, s.fingerprint, s.hadoopConf)) "fingerprint FRESH"
+      else "fingerprint STALE (scan path until re-registered)"
+    def span(w: KeyedWheelIndex) = s" span [${fmt(w.baseMs)}, ${fmt(w.horizonMs)})"
+    val reg = Option(registry.get(p)).getOrElse(Unregistered)
+    val regs = reg.sum.map { r =>
       val span = r.wheels.valuesIterator.nextOption()
         .map(w => s" span [${fmt(w.baseMs)}, ${fmt(w.horizonMs)})").getOrElse("")
-      lines += s"  sum wheels: measures ${r.wheels.keys.toSeq.sorted.mkString("[", ", ", "]")}" +
-        s"$span, ts=${r.tsCol}, ${freshness(r.fingerprint, r.hadoopConf)}"
+      s"  sum wheels: measures ${cols(r.wheels)}$span, ts=${r.tsCol}, ${freshness(r)}"
+    } ++ reg.keyed.map { r =>
+      s"  keyed wheels: key=${r.keyCol}, measures ${cols(r.wheels)}" +
+        s"${span(r.any)}, ts=${r.tsCol}, ${freshness(r)}"
+    } ++ reg.composite.map { r =>
+      s"  composite keyed wheels: keys=${r.keyCols.mkString("(", ", ", ")")}, " +
+        s"measures ${cols(r.wheels)}${span(r.any)}, ts=${r.tsCol}, ${freshness(r)}"
+    } ++ reg.sketch.map { r =>
+      s"  sketch wheels: distinct ${cols(r.distinct)}, quantile ${cols(r.quantile)}, " +
+        s"freq ${cols(r.freq)}, ts=${r.tsCol}, ${freshness(r)}"
+    } ++ reg.keyedSketch.map { r =>
+      s"  keyed sketch wheels: key=${r.keyCol}, distinct ${cols(r.distinct)}, " +
+        s"quantile ${cols(r.quantile)}, freq ${cols(r.freq)}, ts=${r.tsCol}, " +
+        freshness(r)
     }
-    Option(keyedRegistry.get(p)).foreach { r =>
-      val a = r.any
-      lines += s"  keyed wheels: key=${r.keyCol}, measures ${r.wheels.keys.toSeq.sorted.mkString("[", ", ", "]")}" +
-        s" span [${fmt(a.baseMs)}, ${fmt(a.horizonMs)}), ts=${r.tsCol}, ${freshness(r.fingerprint, r.hadoopConf)}"
-    }
-    Option(keyed2Registry.get(p)).foreach { r =>
-      val a = r.any
-      lines += s"  composite keyed wheels: keys=${r.keyCols.mkString("(", ", ", ")")}, " +
-        s"measures ${r.wheels.keys.toSeq.sorted.mkString("[", ", ", "]")}" +
-        s" span [${fmt(a.baseMs)}, ${fmt(a.horizonMs)}), ts=${r.tsCol}, " +
-        freshness(r.fingerprint, r.hadoopConf)
-    }
-    Option(sketchRegistry.get(p)).foreach { r =>
-      lines += s"  sketch wheels: distinct ${r.distinct.keys.toSeq.sorted.mkString("[", ", ", "]")}, " +
-        s"quantile ${r.quantile.keys.toSeq.sorted.mkString("[", ", ", "]")}, " +
-        s"freq ${r.freq.keys.toSeq.sorted.mkString("[", ", ", "]")}, ts=${r.tsCol}, " +
-        freshness(r.fingerprint, r.hadoopConf)
-    }
-    Option(keyedSketchRegistry.get(p)).foreach { r =>
-      lines += s"  keyed sketch wheels: key=${r.keyCol}, " +
-        s"distinct ${r.distinct.keys.toSeq.sorted.mkString("[", ", ", "]")}, " +
-        s"quantile ${r.quantile.keys.toSeq.sorted.mkString("[", ", ", "]")}, " +
-        s"freq ${r.freq.keys.toSeq.sorted.mkString("[", ", ", "]")}, ts=${r.tsCol}, " +
-        freshness(r.fingerprint, r.hadoopConf)
-    }
-    val regs = lines.result()
-    val head = s"wheel acceleration for $p:"
-    val body = if (regs.isEmpty) Seq("  nothing registered (scan path)") else regs
-    val bail = lastBailReason(path) match {
-      case Some(rsn) => Seq(s"  last non-firing rewrite: $rsn")
-      case None => Seq("  last non-firing rewrite: none recorded")
-    }
-    (head +: (body ++ bail)).mkString("\n")
+    val body = if (regs.isEmpty) Seq("  nothing registered (scan path)") else regs.toSeq
+    val bail = "  last non-firing rewrite: " + lastBailReason(path).getOrElse("none recorded")
+    (s"wheel acceleration for $p:" +: body :+ bail).mkString("\n")
   }
 
   private val bailReasons = new ConcurrentHashMap[String, String]()
@@ -1181,39 +1125,33 @@ object WheelAcceleration {
   }
 
   /** Read-only view of an in-memory registration for external serving
-    * (round 12: the DSv2 wheel table exposes a registered index as a
-    * queryable DataFrame): (tsCol, measure → index). */
-  def registeredWheels(path: String): Option[(String, Map[String, graft.wheel.WheelIndex])] =
-    Option(registry.get(normalize(path))).map(r => (r.tsCol, r.wheels))
+    * (the DSv2 wheel table exposes a registered index as a queryable
+    * DataFrame): (tsCol, measure → index). */
+  def registeredWheels(path: String): Option[(String, Map[String, WheelIndex])] =
+    registered(path)(_.sum).map(r => (r.tsCol, r.wheels))
 
-  /** The registered KEYED index family for `path` (round 12: the DSv2
-    * keyed wheel table): (keyCol, tsCol, measure → keyed index). */
+  /** The registered KEYED index family for `path` (the DSv2 keyed wheel
+    * table): (keyCol, tsCol, measure → keyed index). */
   def registeredKeyedWheels(path: String)
-      : Option[(String, String, Map[String, graft.wheel.KeyedWheelIndex])] =
-    Option(keyedRegistry.get(normalize(path)))
-      .map(r => (r.keyCol, r.tsCol, r.wheels))
+      : Option[(String, String, Map[String, KeyedWheelIndex])] =
+    registered(path)(_.keyed).map(r => (r.keyCol, r.tsCol, r.wheels))
 
   def clear(): Unit = {
     registry.clear()
-    keyedRegistry.clear()
-    keyed2Registry.clear()
-    sketchRegistry.clear()
-    keyedSketchRegistry.clear()
-    // symmetry with unregister (ADVICE r10): a clear()+re-register inside
-    // the TTL window must not act on a stale cached verdict, and the
-    // outcome map must not grow unboundedly across distinct paths
+    // symmetry with unregister: a clear()+re-register inside the TTL
+    // window must not act on a stale cached verdict, and the outcome map
+    // must not grow unboundedly across distinct paths
     fpCache.clear()
-    persistedOutcomes.clear()
+    outcomes.clear()
     bailReasons.clear()
   }
 
-  /** Per-session rewrite knob (round 11, VERDICT r10 #4): the value of
-    * `key` from the QUERYING session's SQLConf (set via
-    * `spark.conf.set(key, …)`), falling back to the legacy JVM-global
-    * system property (`key` minus the `spark.` prefix), then `default`.
-    * The optimizer runs with the session's SQLConf active, so two
-    * sessions in one JVM hold independent ceilings/TTLs — the sys.prop
-    * spelling worked single-tenant only. */
+  /** Per-session rewrite knob: the value of `key` from the QUERYING
+    * session's SQLConf (set via `spark.conf.set(key, …)`), falling back
+    * to the legacy JVM-global system property (`key` minus the `spark.`
+    * prefix), then `default`. The optimizer runs with the session's
+    * SQLConf active, so two sessions in one JVM hold independent
+    * ceilings/TTLs — the sys.prop spelling worked single-tenant only. */
   private[plans] def confLong(key: String, default: Long): Long = {
     val fromConf =
       try Option(org.apache.spark.sql.internal.SQLConf.get.getConfString(key, null))
@@ -1222,242 +1160,10 @@ object WheelAcceleration {
       .map(_.toLong).getOrElse(default)
   }
 
-  private[plans] final case class KeyedReg(keyCol: String, tsCol: String,
-      wheels: Map[String, graft.wheel.KeyedWheelIndex], fingerprint: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration) {
-    /** All wheels share one build, so span/keys/keyType agree. */
-    def any: graft.wheel.KeyedWheelIndex = wheels.valuesIterator.next()
-  }
-
-  private val keyedRegistry = new ConcurrentHashMap[String, KeyedReg]()
-
-  /** Register a PER-KEY index for `path` (GROUP BY keyCol × time-slot
-    * rewrites). Same fingerprint/staleness discipline as [[register]]. */
-  def registerKeyed(spark: SparkSession, path: String, events: => DataFrame,
-      keyCol: String, tsCol: String = "ts", valueCol: String = "value"): graft.wheel.KeyedWheelIndex =
-    registerKeyedMulti(spark, path, events, keyCol, tsCol, Seq(valueCol))(valueCol)
-
-  /** N-measure keyed registration (round 10, VERDICT r9 #5): ONE
-    * [[graft.wheel.KeyedWheelIndex.buildMulti]] pass indexes every
-    * listed measure per key, and `GROUP BY (key, time-slot)` SQL
-    * aggregating ANY MIX of them folds at plan time — the keyed
-    * analogue of [[registerMulti]]. */
-  def registerKeyedMulti(spark: SparkSession, path: String, events: => DataFrame,
-      keyCol: String, tsCol: String,
-      valueCols: Seq[String]): Map[String, graft.wheel.KeyedWheelIndex] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val reg = keyedRegistry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.keyCol == keyCol &&
-          old.tsCol == tsCol && valueCols.forall(old.wheels.contains)) old
-      else Option(old).flatMap(o => tailRefreshKeyedInMemory(
-        spark, path, o, events, keyCol, tsCol, valueCols, fp, conf)
-      ) match {
-        case Some((wheels, coveredN, tail)) =>
-          persistedOutcomes.put(normalize(path) + "#keyedmem",
-            TailRefresh(coveredN, tail))
-          KeyedReg(keyCol, tsCol, wheels, fp, conf)
-        case None =>
-          // build-once via the catalog (round 17): the fingerprint-keyed
-          // cache serves re-registrations of unchanged data, exactly like
-          // the unkeyed register() → WheelCatalog.cached path. The
-          // outcome records whether a build actually ran (ADVICE r17):
-          // the events thunk is only forced on a cache miss.
-          var built = false
-          val wheels = graft.wheel.WheelCatalog.cachedKeyedMulti(
-            spark, s"$path@$fp", keyCol, tsCol, valueCols)({ built = true; events })
-          persistedOutcomes.put(normalize(path) + "#keyedmem",
-            if (built) FullBuild else CacheServed)
-          KeyedReg(keyCol, tsCol, wheels, fp, conf)
-      })
-    enable(spark)
-    reg.wheels
-  }
-
-  /** PERSISTED keyed registration (round 8): the per-key index served
-    * from a saved copy at `indexDir` when its recorded source
-    * fingerprint, key and measure columns match — an O(|keys| × slots)
-    * load with NO source scan — and rebuilt+re-saved otherwise. The
-    * keyed analogue of [[registerPersisted]]. */
-  def registerPersistedKeyed(spark: SparkSession, path: String,
-      indexDir: String, events: => DataFrame, keyCol: String,
-      tsCol: String = "ts", valueCol: String = "value"): graft.wheel.KeyedWheelIndex = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val reg = keyedRegistry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.keyCol == keyCol &&
-          old.tsCol == tsCol && old.wheels.contains(valueCol)) old
-      else {
-        val saved = graft.wheel.PersistentWheel.peek(spark, indexDir)
-          .filter(m => m.kind == graft.wheel.PersistentWheel.KeyedKind &&
-            m.sourceFingerprint == fp && m.tsCol == tsCol &&
-            m.valueCols == Seq(keyCol, valueCol))
-        // torn saves rebuild, same as the unkeyed path; load rides the
-        // build-once dir-load cache (round 18)
-        val idx = saved.flatMap(m => scala.util.Try(
-          graft.wheel.WheelCatalog.cachedDirLoad(
-            spark, indexDir, m, "accel-keyed")(
-            graft.wheel.PersistentWheel.loadKeyed(spark, indexDir)._2)
-        ).toOption).getOrElse(
-          graft.wheel.PersistentWheel.saveKeyed(
-            spark, indexDir, events, keyCol, tsCol, valueCol, fp, path))
-        KeyedReg(keyCol, tsCol, Map(valueCol -> idx), fp, conf)
-      })
-    enable(spark)
-    reg.wheels(valueCol)
-  }
-
-  /** PERSISTED N-measure keyed registration (round 10): every listed
-    * measure's per-key wheel served from a `keyedmulti` dir when its
-    * recorded source fingerprint, key and measure columns match — an
-    * O(|keys| × slots × measures) load with NO source scan — and
-    * rebuilt+re-saved (one keyedRollupMulti job) otherwise. Because
-    * the live keyed ingest checkpoints in exactly this format, a batch
-    * session can register straight off `persistDir/keyed` — the keyed
-    * mirror of the unkeyed ingest-checkpoint interop. */
-  def registerPersistedKeyedMulti(spark: SparkSession, path: String,
-      indexDir: String, events: => DataFrame, keyCol: String,
-      tsCol: String, valueCols: Seq[String]): Map[String, graft.wheel.KeyedWheelIndex] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    val reg = keyedRegistry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.keyCol == keyCol &&
-          old.tsCol == tsCol && valueCols.forall(old.wheels.contains)) old
-      else {
-        val saved = graft.wheel.PersistentWheel.peek(spark, indexDir)
-          .filter(m => m.kind == graft.wheel.PersistentWheel.KeyedMultiKind &&
-            m.sourceFingerprint == fp && m.tsCol == tsCol &&
-            m.valueCols == keyCol +: valueCols)
-        // torn saves rebuild, same as every persisted path; load rides
-        // the build-once dir-load cache (round 18)
-        val loaded = saved.flatMap(m => scala.util.Try(
-          graft.wheel.WheelCatalog.cachedDirLoad(
-            spark, indexDir, m, "accel-keyedmulti")(
-            graft.wheel.PersistentWheel.loadKeyedMulti(spark, indexDir)._2)
-        ).toOption)
-        loaded.foreach(_ =>
-          persistedOutcomes.put(normalize(path) + "#keyed", FullReuse))
-        val wheels = loaded
-          .orElse(tailRefreshPersistedKeyedMulti(
-            spark, path, indexDir, events, keyCol, tsCol, valueCols, fp, conf))
-          .getOrElse {
-            persistedOutcomes.put(normalize(path) + "#keyed", FullBuild)
-            graft.wheel.PersistentWheel.saveKeyedMulti(
-              spark, indexDir, events, keyCol, tsCol, valueCols, fp, path)
-          }
-        KeyedReg(keyCol, tsCol, wheels, fp, conf)
-      })
-    enable(spark)
-    reg.wheels
-  }
-
-  /** Keyed-multi analogue of [[tailRefreshPersisted]] (late round 10):
-    * append-only growth of a `keyedmulti`-persisted source aggregates
-    * ONLY the uncovered tail files (one keyedRollupMulti job over the
-    * new files), merges them into the saved (key, slot) partials
-    * ([[graft.wheel.RollupBuilder.mergeKeyedMulti]]) and re-saves —
-    * same strict-subset coverage proof and same-listing race guard as
-    * the unkeyed path. */
-  private def tailRefreshPersistedKeyedMulti(spark: SparkSession,
-      path: String, indexDir: String, events: => DataFrame, keyCol: String,
-      tsCol: String, valueCols: Seq[String], fp: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[Map[String, graft.wheel.KeyedWheelIndex]] = {
-    import graft.wheel.{PersistentWheel, RollupBuilder, SourceFingerprint}
-    PersistentWheel.peek(spark, indexDir).filter(m =>
-      m.kind == PersistentWheel.KeyedMultiKind && m.tsCol == tsCol &&
-        m.valueCols == keyCol +: valueCols && m.sourceFingerprint.nonEmpty)
-      .flatMap { m =>
-        val current = SourceFingerprint.listTokens(path, conf)
-        val currentTokens = current.map(_._1).toSet
-        val covered = m.sourceFingerprint.split('|').toSet
-          .filter(t => SourceFingerprint.isDataToken(SourceFingerprint.tokenRel(t)))
-        val tail = current.collect { case (tok, p) if !covered(tok) => p }
-        if (current.map(_._1).sorted.mkString("|") != fp ||
-            covered.isEmpty || tail.isEmpty || !covered.subsetOf(currentTokens))
-          None
-        else scala.util.Try {
-          requireRawPipeline(spark, path, tsCol, events)
-          val keyedCols = keyCol +: "slot_ms" +: valueCols.flatMap(c =>
-            Seq(s"sum_$c", s"cnt_$c", s"min_$c", s"max_$c", s"m2_$c")) :+ "rows"
-          val (_, persisted) = PersistentWheel.loadPartialsKeyedMulti(spark, indexDir)
-          val tailPartials = RollupBuilder.keyedRollupMulti(
-            RollupBuilder.normalizeTs(spark.read.parquet(tail: _*), tsCol),
-            keyCol, tsCol, valueCols, graft.wheel.Tier.Minute)
-          val merged = RollupBuilder.mergeKeyedMulti(
-            persisted.select(keyedCols.head, keyedCols.tail: _*)
-              .unionByName(tailPartials.select(keyedCols.head, keyedCols.tail: _*)),
-            keyCol, valueCols)
-          PersistentWheel.savePartialsKeyedMulti(
-            spark, indexDir, merged, tsCol, keyCol, valueCols, fp, path)
-          val wheels = PersistentWheel.loadKeyedMulti(spark, indexDir)._2
-          persistedOutcomes.put(normalize(path) + "#keyed",
-            TailRefresh(covered.size, tail))
-          wheels
-        }.toOption
-      }
-  }
-
-  private[plans] def lookupKeyed(path: String): Option[KeyedReg] =
-    Option(keyedRegistry.get(normalize(path)))
-      .filter(r => fresh(path, r.fingerprint, r.hadoopConf))
-
-  /** COMPOSITE-dimension keyed registration (round 13, VERDICT r12 #4):
-    * the per-key index keyed on an N-TUPLE of dimension columns, so
-    * `GROUP BY k1, k2, time-slot` — the (country, event_type, day)
-    * dashboard shape — folds at plan time. The tuple rides as ONE
-    * struct-valued key through the UNCHANGED [[graft.wheel
-    * .KeyedWheelIndex]] machinery (build grouping, entry maps, tier
-    * walks): `keyCols` is recorded here only so the rewrite can match
-    * the statement's separate grouping attributes and re-emit each key
-    * COMPONENT as its own output literal. Same build ceiling (now over
-    * the tuple cardinality |k1 × k2 × …|), same fingerprint/staleness
-    * discipline. */
-  private[plans] final case class Keyed2Reg(keyCols: Seq[String], tsCol: String,
-      wheels: Map[String, graft.wheel.KeyedWheelIndex], fingerprint: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration) {
-    def any: graft.wheel.KeyedWheelIndex = wheels.valuesIterator.next()
-  }
-
-  private val keyed2Registry = new ConcurrentHashMap[String, Keyed2Reg]()
-
-  /** Synthetic struct column carrying the composite key through the
-    * keyed build — never visible to queries. */
-  private val CompositeKeyCol = "__graft_ckey"
-
-  def registerKeyedComposite(spark: SparkSession, path: String,
-      events: => DataFrame, keyCols: Seq[String], tsCol: String = "ts",
-      valueCols: Seq[String] = Seq("value")): Unit = {
-    require(keyCols.size >= 2,
-      s"composite keyed registration needs >= 2 key columns, got $keyCols " +
-        "(use registerKeyed for a single dimension)")
-    val conf = spark.sessionState.newHadoopConf()
-    val fp = fingerprint(path, conf)
-    keyed2Registry.compute(normalize(path), (_, old) =>
-      if (old != null && old.fingerprint == fp && old.keyCols == keyCols &&
-          old.tsCol == tsCol && valueCols.forall(old.wheels.contains)) old
-      else {
-        import org.apache.spark.sql.functions.{col, struct}
-        // build-once via the catalog (round 17), the composite twin of
-        // registerKeyedMulti's cache: the component list folds into the
-        // cache key so (k1,k2) and (k2,k1) registrations stay distinct
-        Keyed2Reg(keyCols, tsCol,
-          graft.wheel.WheelCatalog.cachedKeyedMulti(
-            spark, s"$path@$fp#${keyCols.mkString(",")}",
-            CompositeKeyCol, tsCol, valueCols)(
-            events.withColumn(CompositeKeyCol, struct(keyCols.map(col): _*))),
-          fp, conf)
-      })
-    enable(spark)
-  }
-
-  private[plans] def lookupKeyed2(path: String): Option[Keyed2Reg] =
-    Option(keyed2Registry.get(normalize(path)))
-      .filter(r => fresh(path, r.fingerprint, r.hadoopConf))
-
   /** Idempotently add the rule to an already-built session (the
     * config-time path is `spark.sql.extensions=graft.plans.GraftExtensions`),
-    * and register the SQL-visible introspection functions (round 13) —
-    * "why didn't acceleration fire" answerable from a SQL console:
+    * and register the SQL-visible introspection functions — "why didn't
+    * acceleration fire" answerable from a SQL console:
     * {{{ SELECT graft_bail_reason('/data/events.parquet');
     *     SELECT graft_acceleration_status('/data/events.parquet'); }}} */
   def enable(spark: SparkSession): Unit = {
@@ -1472,13 +1178,11 @@ object WheelAcceleration {
   }
 
   /** Canonical registry key: URI → path, and RELATIVE paths resolved
-    * against the working directory (round 14). A registration made with
-    * a relative dir (`".bench/sf1/events.parquet"`) must match the
-    * plan's `HadoopFsRelation` root, which always reports the ABSOLUTE
-    * `file:` URI — before this fix the lookup silently missed and every
-    * query on a relatively-registered source kept the scan (the sf1
-    * soak measured exactly that, mis-read as build cost until the
-    * round-14 prepare/exec split exposed it). */
+    * against the working directory. A registration made with a relative
+    * dir (`".bench/sf1/events.parquet"`) must match the plan's
+    * `HadoopFsRelation` root, which always reports the ABSOLUTE `file:`
+    * URI — otherwise the lookup silently misses and every query on a
+    * relatively-registered source keeps the scan. */
   private def normalize(p: String): String = {
     val path = new java.net.URI(p).getPath match { case null => p; case s => s }
     if (new java.io.File(path).isAbsolute) path
@@ -1498,34 +1202,25 @@ object WheelAcceleration {
   private final case class FpCheck(atMs: Long, ok: Boolean)
   private val fpCache = new ConcurrentHashMap[(String, String), FpCheck]()
 
-  private def fresh(path: String, expected: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
+  private def fresh(path: String, expected: String, conf: Conf): Boolean = {
     val key = (normalize(path), expected)
     val now = System.currentTimeMillis()
     val cached = fpCache.get(key)
     if (cached != null && now - cached.atMs < fingerprintTtlMs) cached.ok
     else {
-      val ok = fingerprint(path, conf) == expected
+      val ok = sourceFingerprint(path, conf) == expected
       fpCache.put(key, FpCheck(now, ok))
       if (!ok) {
         recordBail(path, "stale fingerprint: source files changed since " +
           "registration — re-register to rebuild")
-        System.err.println(s"[graft] wheel index for $path is stale " +
-          "(source files changed); skipping rewrite — re-register to rebuild")
+        log.warn(s"wheel index for $path is stale (source files changed); " +
+          "skipping rewrite — re-register to rebuild")
       }
       ok
     }
   }
-
-  /** Registration for `path`, validated against the CURRENT source
-    * fingerprint — None (rule bails, scan path) if the files changed
-    * since registration. */
-  private[plans] def lookup(path: String): Option[(String, Map[String, WheelIndex])] =
-    Option(registry.get(normalize(path))).flatMap { r =>
-      if (fresh(path, r.fingerprint, r.hadoopConf)) Some((r.tsCol, r.wheels))
-      else None
-    }
 }
+
 
 /** Config-time injection: `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -1637,9 +1332,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(groupings, aggExprs, child, _) =>
       // Any internal surprise (evicted retention span, odd shapes) must
-      // leave the plan untouched, never fail optimization. With
-      // -Dgraft.wheel.rewrite.debug=true the swallowed exception is
-      // printed, so "why didn't acceleration fire" is diagnosable.
+      // leave the plan untouched, never fail optimization. The swallowed
+      // exception is logged at DEBUG, so "why didn't acceleration fire"
+      // is diagnosable.
       val attempt = scala.util.Try {
         // a stale note from a PREVIOUS aggregate's refused grid or
         // conditional leg must not attach to this one's bail (ADVICE r13)
@@ -1650,15 +1345,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       }
       attempt.failed.foreach { e =>
         // best-effort path attribution for lastBailReason (the leaf may
-        // be unreachable through unusual shapes — then only the debug
-        // stderr line reports)
+        // be unreachable through unusual shapes — then only the DEBUG
+        // log line reports)
         scala.util.Try {
           findFilter(child).map(_._2).orElse(Option(child)).flatMap(sourcePath)
             .foreach(p => WheelAcceleration.recordBail(
               p, s"exception during rewrite (plan kept): $e"))
         }
-        if (sys.props.get("graft.wheel.rewrite.debug").contains("true"))
-          System.err.println(s"[graft] wheel rewrite bailed on exception: $e")
+        WheelAcceleration.log.debug("wheel rewrite bailed on exception (plan kept)", e)
       }
       attempt.toOption.flatten.getOrElse {
         // the conditional leg's diagnosis outranks whichever generic
@@ -1688,14 +1382,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     .orElse(rewriteConditional(agg, aggExprs, filterOpt, below))
     .orElse(for {
     path <- sourcePath(below)
-    sumReg = WheelAcceleration.lookup(path)
+    sumReg = WheelAcceleration.lookup(path)(_.sum)
     // sketch wheels (round 11): serve the approximate SQL spellings; a
     // sketch-only registration folds too, but when both exist they must
     // agree on the ts column (same reading pipeline)
-    tsCol <- sumReg.map(_._1)
-      .orElse(WheelAcceleration.lookupSketch(path).map(_.tsCol))
-    sketch = WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol)
-    wheels = sumReg.map(_._2).getOrElse(Map.empty[String, WheelIndex])
+    tsCol <- sumReg.map(_.tsCol)
+      .orElse(WheelAcceleration.lookup(path)(_.sketch).map(_.tsCol))
+    sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
+    wheels = sumReg.map(_.wheels).getOrElse(Map.empty[String, WheelIndex])
     (aOpt, bOpt) <- filterOpt match {
       case Some((cond, _)) =>
         bail(path, "filter is not a bare half-open range on " +
@@ -1769,7 +1463,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     for {
       (cond, _) <- filterOpt
       path <- sourcePath(below)
-      (tsCol, wheels) <- WheelAcceleration.lookup(path)
+      WheelAcceleration.SumReg(tsCol, wheels, _, _) <- WheelAcceleration.lookup(path)(_.sum)
       if wheels.nonEmpty
       ranges <- orRangesUs(cond, tsCol)
       merged = mergeRanges(ranges)
@@ -1787,7 +1481,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // family is MERGEABLE, so the union-range sketch — per-range
           // range-sketches merged — equals one built over the
           // concatenated data; the gates judge the merged result
-          val sketch = WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol)
+          val sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
           bail(path, foldNote("OR-ranges fold: aggregate list not foldable"))(
             foldRow(aggExprs, alls, Seq.empty, sketch, ms.head, ms.tail))
             .map(r => LocalRelation(agg.output, Seq(InternalRow.fromSeq(r))))
@@ -1804,7 +1498,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
                 // round 17: approximate spellings over unaligned OR
                 // outers ride the residue sketch seam (the conditional
                 // hybrid accepts any merged outer set)
-                val sketch = WheelAcceleration.lookupSketch(path)
+                val sketch = WheelAcceleration.lookup(path)(_.sketch)
                   .filter(_.tsCol == tsCol)
                 if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
                   foldBailNote = ""
@@ -1921,7 +1615,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     if (!hasConditional) return None
     for {
       path <- sourcePath(below)
-      (tsCol, wheels) <- WheelAcceleration.lookup(path)
+      WheelAcceleration.SumReg(tsCol, wheels, _, _) <- WheelAcceleration.lookup(path)(_.sum)
       if wheels.nonEmpty
       (spanBase, spanHorizon) <- wheels.valuesIterator
         .map(w => (w.baseMs, w.horizonMs)).nextOption()
@@ -1974,7 +1668,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           if (anyUnaligned)
             foldConditionalResidue(agg, aggExprs, below, tsCol, wheels,
               outers,
-              WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol))
+              WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol))
           else foldConditionalRow(aggExprs, path, tsCol, wheels,
             outers, MinuteUs)
             .map(r => LocalRelation(agg.output,
@@ -2351,7 +2045,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       // grouping spellings in the select list — same contract as
       // [[foldRow]]'s groupSubst
       groupSubst: Seq[(Seq[Expression], Literal)] = Nil): Option[Seq[Any]] = {
-    val sketch = WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol)
+    val sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
     // per-span-set index answers, cached — aggregates often share a
     // range (SUM + COUNT over the same week)
     val allsCache = scala.collection.mutable
@@ -2479,7 +2173,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     val MinuteUs = MinuteMs * 1000L
     for {
       path <- sourcePath(child)
-      reg <- WheelAcceleration.lookupKeyed(path)
+      reg <- WheelAcceleration.lookup(path)(_.keyed)
       keyAttr <- grouping match {
         case a: AttributeReference if a.name == reg.keyCol => Some(a)
         case _ => None
@@ -2540,7 +2234,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             foldKeyedConditionalResidue(agg, keyAttr, aggExprs,
               findFilter(child).map(_._2).getOrElse(child), reg,
               outerRanges,
-              WheelAcceleration.lookupKeyedSketch(path).filter(r =>
+              WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
                 r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
           else if (reg.any.keys.size.toLong > maxFoldRows)
             // ABOVE-CAP distributed form (round 15, VERDICT r14 #1):
@@ -2550,7 +2244,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             // scan past the key ceiling
             distributedKeyedConditional(agg, keyAttr, aggExprs, reg,
               outerA / 1000L, outerB / 1000L,
-              WheelAcceleration.lookupKeyedSketch(path)
+              WheelAcceleration.lookup(path)(_.keyedSketch)
                 .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
           else foldKeyedConditionalRows(agg, keyAttr, aggExprs, path,
             reg, outerA / 1000L, outerB / 1000L)
@@ -3109,7 +2803,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       aggExprs: Seq[NamedExpression], path: String,
       reg: WheelAcceleration.KeyedReg,
       outerAMs: Long, outerBMs: Long): Option[LogicalPlan] = {
-    val keyedSk = WheelAcceleration.lookupKeyedSketch(path)
+    val keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
       .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
     var supported = true
     def refuse[T](msg: String, keep: T): T = {
@@ -4734,8 +4428,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     for {
       (expand, membership) <- findExpand(child)
       path <- sourcePath(expand.child)
-      (tsCol, wheels) <- WheelAcceleration.lookup(path)
-      sketch = WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol)
+      WheelAcceleration.SumReg(tsCol, wheels, _, _) <- WheelAcceleration.lookup(path)(_.sum)
+      sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
       if membership.forall(f => isMembershipFilter(f.condition, winAttr, expand, tsCol))
       (slideMs, offMs, sizeMs) <- slidingGridOf(expand, winAttr, tsCol,
         membership.nonEmpty)
@@ -4903,7 +4597,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       winAttr <- winAttrOpt
       (expand, membership) <- findExpand(child)
       path <- sourcePath(expand.child)
-      reg <- WheelAcceleration.lookupKeyed(path)
+      reg <- WheelAcceleration.lookup(path)(_.keyed)
       keyAttr <- groupings.collectFirst {
         case a: AttributeReference if a.name == reg.keyCol => a
       }
@@ -4933,7 +4627,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
         case _ => false
       })
-      keyedSkOpt = WheelAcceleration.lookupKeyedSketch(path)
+      keyedSkOpt = WheelAcceleration.lookup(path)(_.keyedSketch)
         .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
       result <-
         // CONDITIONAL aggregates take the KEYED sliding conditional
@@ -4973,7 +4667,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // per-key sketch views (late round 11): keyed approx
           // spellings fold per (key, window) through the same gate as
           // the unkeyed path
-          val keyedSk = WheelAcceleration.lookupKeyedSketch(path)
+          val keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
             .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
           val out = Seq.newBuilder[InternalRow]
           var ok = true
@@ -5871,8 +5565,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       child: LogicalPlan): Option[LogicalPlan] = {
     for {
       path <- sourcePath(child)
-      (tsCol, wheels) <- WheelAcceleration.lookup(path)
-      sketch = WheelAcceleration.lookupSketch(path).filter(_.tsCol == tsCol)
+      WheelAcceleration.SumReg(tsCol, wheels, _, _) <- WheelAcceleration.lookup(path)(_.sum)
+      sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
       gExpr <- bail(path, "grouping is not a time-bucketing expression " +
         s"over the registered ts column '$tsCol'")(resolveGrouping(child, groupKey))
       grid <- bail(path, gridNote("grouping is not a time-bucketing " +
@@ -6478,7 +6172,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       child: LogicalPlan): Option[LogicalPlan] = {
     for {
       path <- sourcePath(child)
-      reg <- WheelAcceleration.lookupKeyed(path)
+      reg <- WheelAcceleration.lookup(path)(_.keyed)
       // identify which grouping is the key and which the slot bucketing
       keyAttrOpt = groupings.collectFirst {
         case a: AttributeReference if a.name == reg.keyCol => a
@@ -6506,7 +6200,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         foldKeyedGroupedConditionalResidue(agg, keyAttr, slotGroup, gExpr,
           grid, aggExprs, child,
           findFilter(child).map(_._2).getOrElse(child), reg, outers,
-          WheelAcceleration.lookupKeyedSketch(path).filter(r =>
+          WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
             r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
       // KEYED OR-ranges (round 13): a disjunction of ranges folds per
       // (key, cell) with contributions combined across ranges — same
@@ -6533,7 +6227,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
               // round 17: sketch spellings over unaligned keyed-grouped
               // OR outers ride the residue sketch seam
               if (hasSketchAgg(aggExprs) &&
-                  WheelAcceleration.lookupKeyedSketch(path).exists(r =>
+                  WheelAcceleration.lookup(path)(_.keyedSketch).exists(r =>
                     r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)) {
                 foldBailNote = ""
                 keyedGroupedCond(rangesUs)
@@ -6571,13 +6265,13 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           if (reg.any.keys.size.toLong * cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
             distributedGrouped(aggExprs, Map.empty, grid, gExpr,
               Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), Seq((a, b)),
-              keyedSk = WheelAcceleration.lookupKeyedSketch(path)
+              keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
                 .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
           else {
           // per-key sketch views (late round 11): keyed approx
           // spellings fold per (key, cell) through the same gate as
           // the unkeyed grouped path
-          val keyedSk = WheelAcceleration.lookupKeyedSketch(path)
+          val keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
             .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
           val out = Seq.newBuilder[InternalRow]
           var ok = true
@@ -6609,7 +6303,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // round 17: an approximate spelling refuses the numeric
           // keyed-grouped hybrid — ride the residue sketch seam
           if (hasSketchAgg(aggExprs) &&
-              WheelAcceleration.lookupKeyedSketch(path).exists(r =>
+              WheelAcceleration.lookup(path)(_.keyedSketch).exists(r =>
                 r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)) {
             foldBailNote = ""
             keyedGroupedCond(Seq((aUs, bUs)))
@@ -6643,7 +6337,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     if (reg.any.keys.size.toLong * cellsTotal > maxFoldRows)
       return distributedGrouped(aggExprs, Map.empty, grid, gExpr,
         Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), ranges,
-        keyedSk = WheelAcceleration.lookupKeyedSketch(path)
+        keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
           .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
     val out = Seq.newBuilder[InternalRow]
     var ok = true
@@ -6701,7 +6395,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       child: LogicalPlan): Option[LogicalPlan] = {
     for {
       path <- sourcePath(child)
-      reg <- WheelAcceleration.lookupKeyed2(path)
+      reg <- WheelAcceleration.lookup(path)(_.composite)
       if groupings.size == reg.keyCols.size + 1
       keyAttrs <- {
         val found = reg.keyCols.map(kc => groupings.collectFirst {

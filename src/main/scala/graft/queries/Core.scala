@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.wheel.{RollupBuilder, Tier, WheelCatalog}
+import graft.wheel.{CohortWheel, DistinctWheel, FrequencyWheel, QuantileWheel,
+  RollupBuilder, Tier, WheelCatalog, WheelIndex}
 import Q._
 
 /** Core surface the reference literally executes (SURVEY.md §2.1):
@@ -34,6 +35,13 @@ object Core {
       .agg(round(sum(col("value")), 2).as("sum_value"), count(lit(1)).as("n"))
       .orderBy(col("slot_ms"))
   }
+
+  /** The build-once `family` wheel over `dir`'s events table, indexing
+    * `col` against `ts`: `build` runs on the events read only on a miss. */
+  private def eventsWheel[T <: AnyRef](s: SparkSession, dir: String, family: String,
+      col: String)(build: DataFrame => T): T =
+    WheelCatalog.cached(s, family, s"$dir/events.parquet", "ts", col)(
+      build(t(s, dir, "events")))
 
   val queries: Map[String, Fn] = Map(
     "q_scan_project" -> ((s, dir) =>
@@ -105,7 +113,7 @@ object Core {
     // Index path (SURVEY.md §3.2): answered from the cached WheelIndex —
     // range decomposition + partial combines, no scan, no Spark job.
     "q_wheel_query" -> ((s, dir) => {
-      val idx = WheelCatalog.cached(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "sum", "value")(WheelIndex.build(_, "ts", "value"))
       val raw = idx.querySum(R2Start, R2End)
       s.range(1).select(round(lit(raw), 2).as("sum_value"))
     }),
@@ -118,7 +126,7 @@ object Core {
     // query = µs driver-side union along the usual decomposition.
     // Approximate → no oracle; parity vs exact distinct in WheelSpec.
     "q_wheel_distinct" -> ((s, dir) => {
-      val idx = WheelCatalog.cachedDistinct(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "distinct", "user_id")(DistinctWheel.build(_, "ts", "user_id"))
       val est = idx.queryDistinct(R1Start, R1End)
       s.range(1).select(round(lit(est), 1).as("est_users"))
     }),
@@ -146,7 +154,7 @@ object Core {
     // oracle; rank-error parity vs exact percentiles in
     // QuantileWheelSpec.
     "q_wheel_quantile" -> ((s, dir) => {
-      val idx = WheelCatalog.cachedQuantile(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "quantile", "value")(QuantileWheel.build(_, "ts", "value"))
       val Seq(p50, p95, p99) =
         idx.queryQuantiles(R1Start, R1End, Seq(0.5, 0.95, 0.99))
       s.range(1).select(
@@ -166,7 +174,7 @@ object Core {
     // beyond are covered in CohortWheelSpec.
     "q_wheel_cohort" -> ((s, dir) => {
       import s.implicits._
-      val idx = WheelCatalog.cachedCohort(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "cohort", "user_id")(CohortWheel.build(_, "ts", "user_id"))
       // each range's sketch materializes ONCE; all four numbers derive
       // from the two sketches
       val sa = idx.rangeSketch(R1Start, R1End)
@@ -191,7 +199,7 @@ object Core {
     // NO_FALSE_NEGATIVES bounds are covered in FrequencyWheelSpec.
     "q_wheel_freq" -> ((s, dir) => {
       import s.implicits._
-      val idx = WheelCatalog.cachedFrequency(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "frequency", "user_id")(FrequencyWheel.build(_, "ts", "user_id"))
       idx.topK(R1Start, R1End, 5)
         .map { case (key, est, _, _) => (key, est) }
         .toDF("user_id", "n")
@@ -203,7 +211,7 @@ object Core {
     // §7.3's promised fallback — previously ScalaTest-only, now
     // oracle-checked end-to-end against DuckDB on the same range).
     "q_wheel_residue" -> ((s, dir) => {
-      val idx = WheelCatalog.cached(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "sum", "value")(WheelIndex.build(_, "ts", "value"))
       val r = idx.query(RuStart, RuEnd)
       s.range(1).select(
         round(lit(r.sum), 2).as("sum_value"),
@@ -747,7 +755,7 @@ object Core {
     // over the minute rollup in DuckDB.
     "q_wheel_sliding" -> ((s, dir) => {
       import s.implicits._
-      val idx = WheelCatalog.cached(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "sum", "value")(WheelIndex.build(_, "ts", "value"))
       idx.slidingSeries(RsStart, RsEnd, Hour)
         .toDF("slot_ms", "raw_sum", "trail_n")
         .select(col("slot_ms"), round(col("raw_sum"), 2).as("trail_sum"),
@@ -773,11 +781,11 @@ object Core {
       // scan answers with percentile_disc (same inclusive-rank
       // semantics as the sketch's exact mode and DuckDB's
       // quantile_disc). The query is exact at EVERY SF either way.
-      val n = WheelCatalog.cached(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val n = eventsWheel(s, dir, "sum", "value")(WheelIndex.build(_, "ts", "value"))
         .queryCount(RqStart, RqEnd)
       val Seq(p25, p50, p90) =
         if (n <= graft.wheel.QuantileWheel.K)
-          WheelCatalog.cachedQuantile(s, s"$dir/events.parquet")(t(s, dir, "events"))
+          eventsWheel(s, dir, "quantile", "value")(QuantileWheel.build(_, "ts", "value"))
             .queryQuantiles(RqStart, RqEnd, Seq(0.25, 0.5, 0.9))
         else
           t(s, dir, "events")
@@ -800,7 +808,7 @@ object Core {
     // sketch family is oracle-exact, complementing the HLL wheel's
     // declared-approximate q_wheel_distinct.
     "q_wheel_distinct_exact" -> ((s, dir) => {
-      val idx = WheelCatalog.cachedCohort(s, s"$dir/events.parquet")(t(s, dir, "events"))
+      val idx = eventsWheel(s, dir, "cohort", "user_id")(CohortWheel.build(_, "ts", "user_id"))
       val sk = idx.rangeSketch(R1Start, R1End)
       // Regime ROUTING (ADVICE r6, upgraded from a fail-loud guard):
       // exactness holds while the Theta sketch retains every hash
@@ -830,9 +838,10 @@ object Core {
       // (RollupBuilder.normalizeTs; pure type-tag change on a UTC
       // session). Build-once lifecycle like every wheel query (the
       // build cost comparison lives in Bench's multi_measure block).
-      val idxs = WheelCatalog.cachedMulti(s, s"$dir/lineitem.parquet",
-        "l_shipdate", Seq("l_quantity", "l_discount", "l_tax"))(
-        t(s, dir, "lineitem"))
+      val measures = Seq("l_quantity", "l_discount", "l_tax")
+      val idxs = WheelCatalog.cached(s, "summulti", s"$dir/lineitem.parquet",
+        "l_shipdate", measures.mkString(","))(
+        WheelIndex.buildMulti(t(s, dir, "lineitem"), "l_shipdate", measures))
       s.range(1).select(
         round(lit(idxs("l_quantity").querySum(LiMStart, LiMEnd)), 2).as("sum_qty"),
         round(lit(idxs("l_discount").querySum(LiMStart, LiMEnd)), 2).as("sum_disc"),

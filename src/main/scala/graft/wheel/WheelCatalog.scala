@@ -1,236 +1,119 @@
 package graft.wheel
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 
-/** Process-wide cache of built [[WheelIndex]]es. Mirrors the reference's
-  * build-once / query-many lifecycle (/root/reference/src/main.rs:48–68):
-  * the wheel is built one time, then serves thousands of range queries at
-  * microsecond latency with no further Spark jobs. */
+/** Process-wide build-once cache of wheel indexes and persisted-dir loads.
+  * Mirrors the reference's build-once / query-many lifecycle: a wheel is
+  * built one time, then serves thousands of range queries at microsecond
+  * latency with no further Spark jobs.
+  *
+  * One map serves every family. An entry is keyed by (session, family
+  * tag, key parts), and the caller names the builder at the call site:
+  * {{{ WheelCatalog.cached(spark, "quantile", key, "ts", "value")(
+  *       QuantileWheel.build(events, "ts", "value")) }}}
+  * The family tag keeps, say, a distinct and a quantile wheel over the
+  * same (source, ts, column) apart.
+  *
+  * Builds run outside the map's locks, one at a time per key: concurrent
+  * callers of one key wait for the single build, other keys never wait,
+  * a build may itself call back into the catalog, and a failed build is
+  * not cached (the next caller builds again). */
 object WheelCatalog {
   // Keyed by session identity as well as the logical source key: a
   // WheelIndex built from session A retains A's DataFrame as its
   // residue-scan fallback, so serving it to session B after A stops
   // would make unaligned queries fail (aligned ones never noticed).
-  private val cache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), WheelIndex]()
+  private final case class Key(session: SparkSession, family: String, parts: Seq[String])
+
+  /** One key's build slot: the value once built, guarded by the entry's
+    * own monitor so only that key's callers serialize on the build. */
+  private final class Entry { @volatile var value: AnyRef = _ }
+
+  private val cache = new ConcurrentHashMap[Key, Entry]()
 
   // Sweep when any tracked session stops (not just on the next call) —
   // otherwise a stopped session's pinned DataFrames are retained until
-  // some future cached() happens to run.
+  // some future lookup happens to run.
   SessionSweeper.addSweep(() => sweepStopped())
 
-  /** Build (or return the cached) index for a logical source key. The
-    * source DataFrame thunk is only evaluated on a cache miss. */
-  def cached(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String = "ts", valueCol: String = "value")(
-      events: => DataFrame): WheelIndex = {
+  /** Build (or return the cached) value for (session, family, parts).
+    * `build` is only evaluated on a miss. */
+  def cached[T <: AnyRef](spark: SparkSession, family: String, parts: String*)(
+      build: => T): T = getOrBuild(spark, family, parts: _*)(build)._1
+
+  /** [[cached]], also reporting whether THIS call ran `build` (false:
+    * the value was served from the cache, no Spark job ran). */
+  def getOrBuild[T <: AnyRef](spark: SparkSession, family: String, parts: String*)(
+      build: => T): (T, Boolean) = {
     sweepStopped()
     SessionSweeper.track(spark)
-    cache.computeIfAbsent((spark, key, tsCol, valueCol),
-      _ => WheelIndex.build(events, tsCol, valueCol))
+    val key = Key(spark, family, parts)
+    var result: Option[(T, Boolean)] = None
+    while (result.isEmpty) {
+      val entry = cache.computeIfAbsent(key, _ => new Entry)
+      result = entry.synchronized {
+        if (entry.value != null) Some((entry.value.asInstanceOf[T], false))
+        // the entry was dropped (failed build, clear, sweep) while this
+        // caller waited: start over on whatever the map holds now
+        else if (cache.get(key) ne entry) None
+        else {
+          val v = try build catch { case e: Throwable => cache.remove(key, entry); throw e }
+          entry.value = v
+          Some((v, true))
+        }
+      }
+    }
+    result.get
   }
 
-  def clear(): Unit =
-    { cache.clear(); distinctCache.clear(); quantileCache.clear()
-      frequencyCache.clear(); cohortCache.clear(); multiCache.clear()
-      keyedCohortCache.clear(); keyedQuantileCache.clear()
-      keyedFrequencyCache.clear(); keyedMultiCache.clear()
-      dirLoadCache.clear() }
+  def clear(): Unit = cache.clear()
 
-  // (session, source key, dim col(s), tsCol, measure cols) → keyed wheels
-  private val keyedMultiCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String, String), Map[String, KeyedWheelIndex]]()
+  /** Number of cached entries, built or building. */
+  private[wheel] def size: Int = cache.size
 
-  /** Build-once cache for the PER-KEY numeric wheel set
-    * ([[KeyedWheelIndex.buildMulti]]) — round 17: the keyed numeric index
-    * was the ONE family member without a catalog cache, so every
-    * registration re-ran the keyed rollup + collect from source while its
-    * unkeyed and sketch siblings served the build-once copy. Same
-    * lifecycle, same fingerprint-embedding `key` discipline as
-    * [[cachedMulti]]; `keyCol` joins the cache key (composite
-    * registrations pass their synthetic struct column plus the component
-    * list folded into `key`). */
-  def cachedKeyedMulti(spark: org.apache.spark.sql.SparkSession, key: String,
-      keyCol: String, tsCol: String, valueCols: Seq[String])(
-      events: => DataFrame): Map[String, KeyedWheelIndex] = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    keyedMultiCache.computeIfAbsent(
-      (spark, key, keyCol, tsCol, valueCols.mkString(",")),
-      _ => KeyedWheelIndex.buildMulti(events, keyCol, tsCol, valueCols))
-  }
-
-  // (session, index dir, payload file, payload fingerprint, load variant)
-  // → whatever the family's loader returned
-  private val dirLoadCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String, String), AnyRef]()
-
-  /** Build-once cache for PERSISTED-DIR loads (round 18): every dir-mode
-    * resolution — the DSv2 wheel table's plan-time load and the
-    * registerPersisted* FullReuse branch — re-read and re-collected the
-    * saved partials parquet per invocation (a full Spark job each time),
-    * while the in-memory index families served their build-once copy.
-    * Same lifecycle, same staleness discipline as [[cachedKeyedMulti]]:
-    * the cache key is the PAYLOAD IDENTITY the sidecar records — the
-    * uniquely-named `slots-<uuid>.parquet` plus its content fingerprint
-    * — so ANY re-save (rebuild, tail refresh, overwrite) is a different
-    * key and loads fresh; callers re-peek the sidecar every resolution,
-    * which is what decides staleness. `variant` discriminates load
-    * flavors of one payload (e.g. the rewrite path's residue-armed load
-    * vs the table's minute-aligned load). Legacy dirs with no recorded
-    * payload fingerprint are never cached (their payload file is
-    * overwritten in place, so identity can't be proven cheap).
+  /** Build-once cache for PERSISTED-DIR loads: every dir-mode resolution
+    * — the DSv2 wheel table's plan-time load and the persisted
+    * registrations' reuse branch — would otherwise re-read and re-collect
+    * the saved partials (a full Spark job each time). The cache key is
+    * the PAYLOAD IDENTITY the sidecar records — the uniquely-named
+    * `slots-<uuid>.parquet` plus its content fingerprint — so ANY re-save
+    * (rebuild, tail refresh, overwrite) is a different key and loads
+    * fresh; callers re-peek the sidecar every resolution, which is what
+    * decides staleness. `variant` discriminates load flavors of one
+    * payload (e.g. the rewrite path's residue-armed load vs the table's
+    * minute-aligned load). Legacy dirs with no recorded payload
+    * fingerprint are never cached (their payload file is overwritten in
+    * place, so identity can't be proven cheap).
     *
-    * Two deliberate semantics (round-18 review): (1) a cache hit still
-    * reports [[graft.plans.WheelAcceleration]]'s FullReuse at the
-    * register sites — FullReuse means "served from the saved artifact,
-    * no source scan", which holds whether the load came from disk or
-    * from the session's build-once copy of that same payload (the
-    * CacheServed distinction is recorded where it matters:
-    * BUILD vs cache); (2) residue-armed loads close over the FIRST
-    * registration's events DataFrame — safe because the cache is only
-    * consulted after the caller proves sourceFingerprint equality, so
-    * any later events argument reads the same data by contract. */
-  def cachedDirLoad[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
+    * Two deliberate semantics: (1) a cache hit still reports
+    * [[graft.plans.WheelAcceleration]]'s FullReuse at the register sites
+    * — FullReuse means "served from the saved artifact, no source scan",
+    * which holds whether the load came from disk or from the session's
+    * build-once copy of that same payload; (2) residue-armed loads close
+    * over the FIRST registration's events DataFrame — safe because the
+    * cache is only consulted after the caller proves sourceFingerprint
+    * equality, so any later events argument reads the same data by
+    * contract. */
+  def cachedDirLoad[T <: AnyRef](spark: SparkSession,
       indexDir: String, meta: PersistentWheel.Meta, variant: String)(
       load: => T): T =
     if (meta.slotsFingerprint.isEmpty) load
     else {
-      sweepStopped()
-      SessionSweeper.track(spark)
-      val key = (spark, indexDir, meta.slotsDir, meta.slotsFingerprint, variant)
+      val family = s"dir:$variant"
       // a re-save supersedes the previous payload generation: evict
       // stale generations of this (session, dir, variant) so
       // rebuild/tail-refresh churn can't grow the cache unboundedly
-      // over a long-lived session (round-18 review finding)
-      if (!dirLoadCache.containsKey(key))
-        dirLoadCache.keySet.removeIf(k =>
-          k._1 == spark && k._2 == indexDir && k._5 == variant &&
-            !(k._3 == meta.slotsDir && k._4 == meta.slotsFingerprint))
-      dirLoadCache.computeIfAbsent(key, _ => load).asInstanceOf[T]
+      // over a long-lived session
+      cache.keySet.removeIf(k => k.session == spark && k.family == family &&
+        k.parts.head == indexDir &&
+        k.parts.tail != Seq(meta.slotsDir, meta.slotsFingerprint))
+      cached(spark, family, indexDir, meta.slotsDir, meta.slotsFingerprint)(load)
     }
 
-  private val multiCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), Map[String, WheelIndex]]()
-
-  /** Build-once cache for a MULTI-MEASURE wheel set ([[WheelIndex
-    * .buildMulti]]) — same build-once/query-many lifecycle; the cache
-    * key folds the ordered measure list. */
-  def cachedMulti(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String, valueCols: Seq[String])(
-      events: => DataFrame): Map[String, WheelIndex] = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    multiCache.computeIfAbsent((spark, key, tsCol, valueCols.mkString(",")),
-      _ => WheelIndex.buildMulti(events, tsCol, valueCols))
-  }
-
   /** Drop entries owned by stopped sessions so they (and their pinned
-    * DataFrames) can be collected — the maps stay bounded by the live
+    * DataFrames) can be collected — the map stays bounded by the live
     * sessions' working sets. */
-  private def sweepStopped(): Unit = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    distinctCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    quantileCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    frequencyCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    cohortCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    multiCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    keyedCohortCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    keyedQuantileCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    keyedFrequencyCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    keyedMultiCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    dirLoadCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-  }
-
-  private val distinctCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), DistinctWheel]()
-
-  private val quantileCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), QuantileWheel]()
-
-  /** Build-once cache for the KLL [[QuantileWheel]], same lifecycle. */
-  def cachedQuantile(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String = "ts", valueCol: String = "value")(
-      events: => DataFrame): QuantileWheel = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    quantileCache.computeIfAbsent((spark, key, tsCol, valueCol),
-      _ => QuantileWheel.build(events, tsCol, valueCol))
-  }
-
-  private val cohortCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), CohortWheel]()
-
-  /** Build-once cache for the Theta [[CohortWheel]], same lifecycle. */
-  def cachedCohort(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String = "ts", keyCol: String = "user_id")(
-      events: => DataFrame): CohortWheel = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    cohortCache.computeIfAbsent((spark, key, tsCol, keyCol),
-      _ => CohortWheel.build(events, tsCol, keyCol))
-  }
-
-  private val frequencyCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String), FrequencyWheel]()
-
-  /** Build-once cache for the Misra-Gries [[FrequencyWheel]], same
-    * lifecycle. */
-  def cachedFrequency(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String = "ts", keyCol: String = "user_id")(
-      events: => DataFrame): FrequencyWheel = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    frequencyCache.computeIfAbsent((spark, key, tsCol, keyCol),
-      _ => FrequencyWheel.build(events, tsCol, keyCol))
-  }
-
-  // (session, source key, dimCol, tsCol, measure col) → per-dim wheels
-  private val keyedCohortCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String, String), Map[Any, CohortWheel]]()
-  private val keyedQuantileCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String, String), Map[Any, QuantileWheel]]()
-  private val keyedFrequencyCache =
-    new ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String, String, String, String), Map[Any, FrequencyWheel]]()
-
-  /** Build-once caches for the PER-DIMENSION-KEY sketch wheels
-    * ([[KeyedSketchWheels]]) — same lifecycle, the dimension column
-    * joining the cache key. */
-  def cachedKeyedCohort(spark: org.apache.spark.sql.SparkSession, key: String,
-      dimCol: String, tsCol: String, keyCol: String)(
-      events: => DataFrame): Map[Any, CohortWheel] = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    keyedCohortCache.computeIfAbsent((spark, key, dimCol, tsCol, keyCol),
-      _ => KeyedSketchWheels.buildCohort(events, dimCol, tsCol, keyCol))
-  }
-
-  def cachedKeyedQuantile(spark: org.apache.spark.sql.SparkSession, key: String,
-      dimCol: String, tsCol: String, valueCol: String)(
-      events: => DataFrame): Map[Any, QuantileWheel] = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    keyedQuantileCache.computeIfAbsent((spark, key, dimCol, tsCol, valueCol),
-      _ => KeyedSketchWheels.buildQuantile(events, dimCol, tsCol, valueCol))
-  }
-
-  def cachedKeyedFrequency(spark: org.apache.spark.sql.SparkSession, key: String,
-      dimCol: String, tsCol: String, keyCol: String)(
-      events: => DataFrame): Map[Any, FrequencyWheel] = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    keyedFrequencyCache.computeIfAbsent((spark, key, dimCol, tsCol, keyCol),
-      _ => KeyedSketchWheels.buildFrequency(events, dimCol, tsCol, keyCol))
-  }
-
-  /** Build-once cache for the HLL [[DistinctWheel]], same lifecycle. */
-  def cachedDistinct(spark: org.apache.spark.sql.SparkSession, key: String,
-      tsCol: String = "ts", keyCol: String = "user_id")(
-      events: => DataFrame): DistinctWheel = {
-    sweepStopped()
-    SessionSweeper.track(spark)
-    distinctCache.computeIfAbsent((spark, key, tsCol, keyCol),
-      _ => DistinctWheel.build(events, tsCol, keyCol))
-  }
+  private def sweepStopped(): Unit =
+    cache.keySet.removeIf(k => k.session.sparkContext.isStopped)
 }

@@ -260,7 +260,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
     try {
       write(0 until 60, 0.0, "overwrite")
       registerRaw()
-      assert(WheelAcceleration.lastRegisterOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
         .contains(WheelAcceleration.FullBuild))
 
       // append-only growth: the re-register must aggregate ONLY the new
@@ -268,7 +268,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // the full merged span — including the no-predicate fold
       write(60 until 90, 1000.0, "append")
       registerRaw()
-      val outcome = WheelAcceleration.lastRegisterOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -303,7 +303,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // a MUTATION (overwrite) is not an append: full rebuild
       write(0 until 30, 5.0, "overwrite")
       registerRaw()
-      assert(WheelAcceleration.lastRegisterOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
         .contains(WheelAcceleration.FullBuild))
       spark.read.parquet(src).createOrReplaceTempView("memtail_events")
       val after = spark.sql(
@@ -336,12 +336,12 @@ class WheelAccelerationSpec extends AnyFunSuite {
     try {
       write(0 until 60, 0.0, "overwrite")
       registerRaw()
-      assert(WheelAcceleration.lastRegisterKeyedOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed)
         .contains(WheelAcceleration.FullBuild))
 
       write(60 until 90, 1000.0, "append")
       registerRaw()
-      val outcome = WheelAcceleration.lastRegisterKeyedOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -407,12 +407,12 @@ class WheelAccelerationSpec extends AnyFunSuite {
     try {
       write(0 until 60, 0L, 0.0, "overwrite")
       registerAll()
-      assert(WheelAcceleration.lastRegisterSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullBuild))
 
       write(30 until 90, 7L, 1000.0, "append")
       registerAll()
-      val outcome = WheelAcceleration.lastRegisterSketchOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -451,7 +451,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // an overwrite is NOT a provable append: full rebuild
       write(0 until 60, 0L, 0.0, "overwrite")
       registerAll()
-      assert(WheelAcceleration.lastRegisterSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullBuild))
     } finally {
       System.clearProperty("graft.wheel.fingerprint.ttlMs")
@@ -482,12 +482,12 @@ class WheelAccelerationSpec extends AnyFunSuite {
     try {
       write(0 until 60, Array("a", "b"), 0L, "overwrite")
       registerAll()
-      assert(WheelAcceleration.lastRegisterKeyedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
         .contains(WheelAcceleration.FullBuild))
 
       write(30 until 90, Array("b", "c"), 5L, "append")
       registerAll()
-      val outcome = WheelAcceleration.lastRegisterKeyedSketchOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -521,6 +521,49 @@ class WheelAccelerationSpec extends AnyFunSuite {
       System.clearProperty("graft.wheel.fingerprint.ttlMs")
       WheelAcceleration.unregister(src)
     }
+  }
+
+  test("a re-registration the catalog serves reports CacheServed and never reads events") {
+    import spark.implicits._
+    import WheelAcceleration.{CacheServed, Family, FullBuild, lastOutcome}
+    val src = new java.io.File("target/test-fixtures/accel/cacheserved.parquet")
+      .getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
+    (0 until 60).map(i => (new java.sql.Timestamp(Q.Jan1 + i * 60000L), i.toDouble,
+      (i % 5).toLong)).toDF("ts", "value", "user_id").write.mode("overwrite").parquet(src)
+    var forced = 0
+    def events = { forced += 1; spark.read.parquet(src) }
+    def registerAll(): Unit = {
+      WheelAcceleration.register(spark, src, events)
+      WheelAcceleration.registerSketches(spark, src, events,
+        distinctCols = Seq("user_id"), quantileCols = Seq("value"))
+    }
+    try {
+      registerAll()
+      assert(forced > 0)
+      assert(lastOutcome(src, Family.Sum).contains(FullBuild))
+      assert(lastOutcome(src, Family.Sketch).contains(FullBuild))
+
+      // a fresh registry over unchanged files: the build-once catalog
+      // serves both families, so no build and no read of events runs
+      WheelAcceleration.clear()
+      forced = 0
+      registerAll()
+      assert(forced == 0, "the events thunk was forced on a catalog hit")
+      assert(lastOutcome(src, Family.Sum).contains(CacheServed),
+        lastOutcome(src, Family.Sum).toString)
+      assert(lastOutcome(src, Family.Sketch).contains(CacheServed),
+        lastOutcome(src, Family.Sketch).toString)
+
+      spark.read.parquet(src).createOrReplaceTempView("cacheserved_events")
+      val df = spark.sql("SELECT SUM(value) AS s, approx_count_distinct(user_id) AS u " +
+        "FROM cacheserved_events")
+      assert(df.queryExecution.optimizedPlan.collect {
+        case l: LocalRelation => l
+      }.nonEmpty, df.queryExecution.optimizedPlan.treeString)
+      val r = df.collect()(0)
+      assert(r.getDouble(0) == (0 until 60).sum.toDouble && r.getLong(1) == 5L)
+    } finally WheelAcceleration.unregister(src)
   }
 
   test("persisted sketch registration: load / tail-refresh / rebuild lifecycle (round 11)") {
@@ -567,14 +610,14 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // 1. first touch: nothing on disk -> FullBuild (saves the dirs)
       write(0 until 60, 0L, "overwrite")
       registerAll()
-      assert(WheelAcceleration.lastPersistedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullBuild))
       checkFolds(10, 50)
 
       // 2. fresh process start (registry dropped): pure disk LOAD
       WheelAcceleration.clear()
       registerAll()
-      assert(WheelAcceleration.lastPersistedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullReuse))
       checkFolds(10, 50)
 
@@ -583,7 +626,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       write(30 until 90, 6L, "append")
       WheelAcceleration.clear()
       registerAll()
-      val outcome = WheelAcceleration.lastPersistedSketchOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -594,7 +637,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // 4. the refreshed dirs are the new truth: next start pure-loads
       WheelAcceleration.clear()
       registerAll()
-      assert(WheelAcceleration.lastPersistedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullReuse))
       checkFolds(20, 80)
 
@@ -602,7 +645,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       write(0 until 60, 0L, "overwrite")
       WheelAcceleration.clear()
       registerAll()
-      assert(WheelAcceleration.lastPersistedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sketch)
         .contains(WheelAcceleration.FullBuild))
       checkFolds(10, 50)
     } finally {
@@ -655,13 +698,13 @@ class WheelAccelerationSpec extends AnyFunSuite {
     try {
       write(0 until 60, Array("a", "b"), 0L, "overwrite")
       registerAll()
-      assert(WheelAcceleration.lastPersistedKeyedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
         .contains(WheelAcceleration.FullBuild))
       checkFolds(10, 50)
 
       WheelAcceleration.clear()
       registerAll()
-      assert(WheelAcceleration.lastPersistedKeyedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
         .contains(WheelAcceleration.FullReuse))
       checkFolds(10, 50)
 
@@ -669,7 +712,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
       write(30 until 90, Array("b", "c"), 4L, "append")
       WheelAcceleration.clear()
       registerAll()
-      val outcome = WheelAcceleration.lastPersistedKeyedSketchOutcome(src)
+      val outcome = WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
       assert(outcome.exists {
         case WheelAcceleration.TailRefresh(covered, tailFiles) =>
           covered > 0 && tailFiles.nonEmpty
@@ -679,7 +722,7 @@ class WheelAccelerationSpec extends AnyFunSuite {
 
       WheelAcceleration.clear()
       registerAll()
-      assert(WheelAcceleration.lastPersistedKeyedSketchOutcome(src)
+      assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.KeyedSketch)
         .contains(WheelAcceleration.FullReuse))
       checkFolds(20, 80)
     } finally {

@@ -137,9 +137,9 @@ class PersistentWheelSpec extends AnyFunSuite {
     append(src1)
     WheelAcceleration.clear()
     WheelAcceleration.registerPersisted(spark, src1, idx1, projected)
-    assert(WheelAcceleration.lastPersistedOutcome(src1)
+    assert(WheelAcceleration.lastOutcome(src1, WheelAcceleration.Family.Sum)
       .contains(WheelAcceleration.FullBuild),
-      WheelAcceleration.lastPersistedOutcome(src1).toString)
+      WheelAcceleration.lastOutcome(src1, WheelAcceleration.Family.Sum).toString)
     assert(PersistentWheel.load(spark, idx1)._2("value")
       .query(Q.Jan1, Q.Jan1 + 180000L).sum == 8.0)
 
@@ -150,9 +150,9 @@ class PersistentWheelSpec extends AnyFunSuite {
     append(src2)
     WheelAcceleration.clear()
     WheelAcceleration.registerPersisted(spark, src2, idx2, raw)
-    assert(WheelAcceleration.lastPersistedOutcome(src2).exists(
+    assert(WheelAcceleration.lastOutcome(src2, WheelAcceleration.Family.Sum).exists(
       _.isInstanceOf[WheelAcceleration.TailRefresh]),
-      WheelAcceleration.lastPersistedOutcome(src2).toString)
+      WheelAcceleration.lastOutcome(src2, WheelAcceleration.Family.Sum).toString)
     assert(PersistentWheel.load(spark, idx2)._2("value")
       .query(Q.Jan1, Q.Jan1 + 180000L).sum == 8.0)
     WheelAcceleration.clear()
@@ -506,14 +506,14 @@ class PersistentWheelSpec extends AnyFunSuite {
     // first touch: nothing persisted yet -> FullBuild
     WheelAcceleration.clear()
     val w1 = WheelAcceleration.registerPersisted(spark, src, idxDir, source)
-    assert(WheelAcceleration.lastPersistedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
       .contains(WheelAcceleration.FullBuild))
     assert(w1("value").query(Q.Jan1, Q.Jan1 + 120000L).sum == 3.0)
 
     // unchanged source -> the disk copy serves, no source scan
     WheelAcceleration.clear()
     WheelAcceleration.registerPersisted(spark, src, idxDir, source)
-    assert(WheelAcceleration.lastPersistedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
       .contains(WheelAcceleration.FullReuse))
 
     // append-only growth -> TailRefresh aggregates ONLY the new files
@@ -523,7 +523,7 @@ class PersistentWheelSpec extends AnyFunSuite {
       .toDF("ts", "value").write.mode("append").parquet(src)
     WheelAcceleration.clear()
     val w3 = WheelAcceleration.registerPersisted(spark, src, idxDir, source)
-    WheelAcceleration.lastPersistedOutcome(src) match {
+    WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum) match {
       case Some(t: WheelAcceleration.TailRefresh) =>
         assert(t.coveredFiles >= 1 && t.tailFiles.nonEmpty)
         // the tail is exactly the appended files — no covered file is
@@ -538,7 +538,7 @@ class PersistentWheelSpec extends AnyFunSuite {
     // the refreshed sidecar covers everything -> next touch is FullReuse
     WheelAcceleration.clear()
     WheelAcceleration.registerPersisted(spark, src, idxDir, source)
-    assert(WheelAcceleration.lastPersistedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
       .contains(WheelAcceleration.FullReuse))
 
     // mutated history (whole-dir overwrite) -> coverage unprovable ->
@@ -547,7 +547,7 @@ class PersistentWheelSpec extends AnyFunSuite {
       .toDF("ts", "value").write.mode("overwrite").parquet(src)
     WheelAcceleration.clear()
     val w4 = WheelAcceleration.registerPersisted(spark, src, idxDir, source)
-    assert(WheelAcceleration.lastPersistedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Sum)
       .contains(WheelAcceleration.FullBuild))
     assert(w4("value").query(Q.Jan1, Q.Jan1 + 180000L).sum == 10.0)
     WheelAcceleration.clear()
@@ -571,13 +571,13 @@ class PersistentWheelSpec extends AnyFunSuite {
     WheelAcceleration.clear()
     WheelAcceleration.registerPersistedKeyedMulti(
       spark, src, idxDir, source, "k", "ts", Seq("value"))
-    assert(WheelAcceleration.lastPersistedKeyedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed)
       .contains(WheelAcceleration.FullBuild))
 
     WheelAcceleration.clear()
     WheelAcceleration.registerPersistedKeyedMulti(
       spark, src, idxDir, source, "k", "ts", Seq("value"))
-    assert(WheelAcceleration.lastPersistedKeyedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed)
       .contains(WheelAcceleration.FullReuse))
 
     val beforeNames = new java.io.File(src).listFiles
@@ -587,7 +587,7 @@ class PersistentWheelSpec extends AnyFunSuite {
     WheelAcceleration.clear()
     val w = WheelAcceleration.registerPersistedKeyedMulti(
       spark, src, idxDir, source, "k", "ts", Seq("value"))
-    WheelAcceleration.lastPersistedKeyedOutcome(src) match {
+    WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed) match {
       case Some(t: WheelAcceleration.TailRefresh) =>
         assert(t.coveredFiles >= 1 && t.tailFiles.nonEmpty)
         assert(t.tailFiles.forall(p =>
@@ -601,7 +601,7 @@ class PersistentWheelSpec extends AnyFunSuite {
     WheelAcceleration.clear()
     WheelAcceleration.registerPersistedKeyedMulti(
       spark, src, idxDir, source, "k", "ts", Seq("value"))
-    assert(WheelAcceleration.lastPersistedKeyedOutcome(src)
+    assert(WheelAcceleration.lastOutcome(src, WheelAcceleration.Family.Keyed)
       .contains(WheelAcceleration.FullReuse))
     WheelAcceleration.clear()
   }
