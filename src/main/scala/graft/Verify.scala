@@ -35,6 +35,15 @@ object Verify {
       require(unknown.isEmpty,
         s"Verify: unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
     }
+    // a filtered run writes a filtered oracle_sql.json: over a directory
+    // that already holds one, it would replace the full oracle and a later
+    // check_oracle.py would check only the subset without saying so
+    val oracle = Paths.get(outDir, "oracle_sql.json")
+    if (only.nonEmpty && Files.exists(oracle)) {
+      System.err.println(s"Verify: $oracle already exists; a filtered run " +
+        "would replace it with a partial oracle — use a fresh output directory")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -63,7 +72,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(oracle, json)
     spark.stop()
   }
 }

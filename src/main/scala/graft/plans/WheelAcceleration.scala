@@ -1170,11 +1170,18 @@ object WheelAcceleration {
     val existing = spark.experimental.extraOptimizations
     if (!existing.exists(_.isInstanceOf[WheelSumRewrite]))
       spark.experimental.extraOptimizations = existing :+ WheelSumRewrite()
-    // idempotent (re-registration replaces with an identical function)
-    spark.udf.register("graft_bail_reason",
-      (p: String) => lastBailReason(p).getOrElse(""))
-    spark.udf.register("graft_acceleration_status",
-      (p: String) => accelerationStatus(p))
+    // once per session: every registration (each WheelIngest batch's
+    // registerPrebuilt* swap included) lands here, and a re-register
+    // replaces the function with a Spark WARN each time
+    def missing(name: String): Boolean =
+      !spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+    if (missing("graft_bail_reason"))
+      spark.udf.register("graft_bail_reason",
+        (p: String) => lastBailReason(p).getOrElse(""))
+    if (missing("graft_acceleration_status"))
+      spark.udf.register("graft_acceleration_status",
+        (p: String) => accelerationStatus(p))
   }
 
   /** Canonical registry key: URI → path, and RELATIVE paths resolved
@@ -1432,7 +1439,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
               // sketch seam — per-minute sketch bytes ∪ raw edge rows
               if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
                 foldBailNote = ""
-                foldConditionalResidue(agg, aggExprs, below, tsCol,
+                foldConditionalResidue(aggExprs, below, tsCol,
                   wheels, Seq((aUs, bUs)), sketch)
               } else None
             })
@@ -1502,7 +1509,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
                   .filter(_.tsCol == tsCol)
                 if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
                   foldBailNote = ""
-                  foldConditionalResidue(agg, aggExprs, below, tsCol,
+                  foldConditionalResidue(aggExprs, below, tsCol,
                     wheels, merged, sketch)
                 } else None
               })
@@ -1666,7 +1673,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             })
         val folded =
           if (anyUnaligned)
-            foldConditionalResidue(agg, aggExprs, below, tsCol, wheels,
+            foldConditionalResidue(aggExprs, below, tsCol, wheels,
               outers,
               WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol))
           else foldConditionalRow(aggExprs, path, tsCol, wheels,
@@ -1682,44 +1689,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     } yield result
   }
 
-  /** CONDITIONAL-AGGREGATE HYBRID for UNALIGNED ranges (round 16,
-    * VERDICT r15 "what's missing" #2): a period-comparison statement
-    * whose outer WHERE — or any per-aggregate condition — carries
-    * sub-minute bounds, e.g.
-    *
-    * {{{ SELECT SUM(CASE WHEN ts ∈ [a+0.5s, b) THEN v END), AVG(v), …
-    *     FROM t WHERE ts ∈ [A, B) }}}
-    *
-    * Pure plan-time folding is impossible (the wheel is
-    * minute-granular), but the existing hybrid edge machinery applies
-    * PER AGGREGATE: ship the outer interiors' minute states as
-    * slot-tagged partials rows, union ONE bounded edge scan of the
-    * merged sub-minute slivers (each row keeping its raw ts), and
-    * rewrite every aggregate to merge form with ITS OWN filter —
-    *
-    *  - partials rows qualify when their whole minute lies inside the
-    *    aggregate's range (`slot ∈ [ceil(a), floor(b))`, plan-time
-    *    constants), and
-    *  - edge rows qualify when their ts lies in the aggregate's own
-    *    slivers `[a, ceil(a)) ∪ [floor(b), b)` — NEVER inside its
-    *    interior, so a row scanned for one aggregate's sliver cannot
-    *    double-count in another's interior.
-    *
-    * Each leg's rows carry the discriminating column the other leg
-    * NULLs (slot vs ts), so SQL's NULL-is-false FILTER semantics keep
-    * the legs disjoint per aggregate with no tag column. `ELSE 0`
-    * NULL-vs-0 resolves from two more filtered row-count sums (the
-    * ADVICE r14 semantics). Second moments center on the outer
-    * interior's mean and gate per aggregate
-    * ([[AllAggregate.varWellConditionedAround]] over the aggregate's
-    * own interior). Refuses — note pinned — on sketch spellings
-    * (sub-minute sketch ranges don't exist), non-range conditions,
-    * DISTINCT, minute-tier eviction, and non-merge aggregates.
-    *
-    * Scale: the edge scan is pushed-ts-bounds slivers (row-group
-    * pruned, kilobytes at any source volume); the partials relation is
-    * O(minutes in the outer range) — the same envelope as every other
-    * distributed interior. */
   /** The minute-aligned interior of a µs span (ms domain) — None when
     * the span fits inside one minute. Shared by the conditional
     * hybrids (unkeyed and keyed). */
@@ -1748,42 +1717,72 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       if (a < b) Some((a, b)) else None
     }
 
-  private def foldConditionalResidue(
-      agg: Aggregate, aggExprs: Seq[NamedExpression],
-      below: LogicalPlan, tsCol: String,
-      wheels: Map[String, WheelIndex],
-      outersUs: Seq[(Long, Long)],
-      // round 17: the source's sketch registration, when fresh — lets
-      // approximate spellings fold through the same two-leg union (see
-      // the RESIDUE SKETCH SEAM below) instead of refusing outright
-      sketchOpt: Option[WheelAcceleration.SketchReg] = None): Option[LogicalPlan] = {
-    val MinuteUs = MinuteMs * 1000L
-    var supported = true
-    def refuse[T](msg: String, keep: T): T = {
+  /** CONDITIONAL-AGGREGATE HYBRID for UNALIGNED ranges (round 16,
+    * VERDICT r15 "what's missing" #2): a period-comparison statement
+    * whose outer WHERE — or any per-aggregate condition — carries
+    * sub-minute bounds, e.g.
+    *
+    * {{{ SELECT SUM(CASE WHEN ts ∈ [a+0.5s, b) THEN v END), AVG(v), …
+    *     FROM t WHERE ts ∈ [A, B) }}}
+    *
+    * Pure plan-time folding is impossible (the wheel is
+    * minute-granular), but the existing hybrid edge machinery applies
+    * PER AGGREGATE: ship the outer interiors' minute states as
+    * slot-tagged partials rows, union ONE bounded edge scan of the
+    * merged sub-minute slivers (each row keeping its raw ts), and
+    * rewrite every aggregate to merge form with ITS OWN filter —
+    *
+    *  - partials rows qualify when their whole minute lies inside the
+    *    aggregate's range (`slot ∈ [ceil(a), floor(b))`, plan-time
+    *    constants), and
+    *  - edge rows qualify when their ts lies in the aggregate's own
+    *    slivers `[a, ceil(a)) ∪ [floor(b), b)` — NEVER inside its
+    *    interior, so a row scanned for one aggregate's sliver cannot
+    *    double-count in another's interior.
+    *
+    * Each leg's rows carry the discriminating column the other leg
+    * NULLs (slot vs ts), so SQL's NULL-is-false FILTER semantics keep
+    * the legs disjoint per aggregate with no tag column. `ELSE 0`
+    * NULL-vs-0 resolves from two more filtered row-count sums (the
+    * ADVICE r14 semantics).
+    *
+    * ONE builder serves every shape: the shapes differ only in their
+    * [[CondGroup]] columns — none (ungrouped), key, time cell, key ×
+    * cell, composite keys × cell — and in their [[CondInterior]] walk
+    * (unkeyed or keyed index). Interior rows are pre-keyed to their
+    * groups, edge rows derive them from the raw row, and a real
+    * executor-side Aggregate groups per tuple, so any group count is
+    * served. With groups, the outer slivers scan unconditionally (group
+    * presence: a group whose only rows fall there must still emit).
+    * Second moments center on the outer interior's GLOBAL mean and gate
+    * per (group, aggregate range) off [[condShifts]]' one pre-walk.
+    * Approximate spellings ride the residue sketch seam when `sketch`
+    * serves them. Refuses — note pinned — on non-range conditions,
+    * DISTINCT, minute-tier eviction, and non-merge aggregates.
+    *
+    * Scale: the edge scan's ts bounds are pushed to the source, but the
+    * reader still reads every row group it cannot skip — on a
+    * `TIMESTAMP_NTZ` ts Spark skips none, so a sliver reads the whole
+    * table. The partials relation is O(minute entries in the outer
+    * range) — the same envelope as every other distributed interior. */
+  private def condHybrid(noun: String, aggExprs: Seq[NamedExpression],
+      below: LogicalPlan, tsCol: String, interior: CondInterior,
+      outersUs: Seq[(Long, Long)], groups: Seq[CondGroup],
+      sketch: CondSketch): Option[LogicalPlan] = {
+    def refuse(msg: String): Option[LogicalPlan] = {
       if (foldBailNote.isEmpty) foldBailNote = msg
-      supported = false; keep
+      None
     }
     // the interior ships as MINUTE states with per-aggregate slot
     // filters selecting whole minutes — a retained coarser tier can't
     // key to one minute, so KeepN eviction refuses (honest)
-    if (!wheels.valuesIterator.forall(_.minuteTierComplete))
-      return refuse("conditional hybrid: the minute tier is " +
-        "retention-evicted (evicted interiors keep the scan)", None)
-    val measures = wheels.keys.toSeq
-    def interiorMsOf(a: Long, b: Long) = minuteInteriorMs(a, b)
-    def sliversUs(a: Long, b: Long) = minuteSliversUs(a, b)
-    def clipToOuters(lo: Option[Long], hi: Option[Long]): Seq[(Long, Long)] =
-      clipSpansUs(outersUs, lo, hi)
-    val outerInteriors = outersUs.flatMap { case (a, b) => interiorMsOf(a, b) }
-    // shift: the outer interiors' combined mean per measure (plan-time
-    // tier walks) — near every well-conditioned sub-range's mean
-    val needCond = hasSecondMoment(aggExprs)
-    lazy val interiorCombined: Map[String, AllAggregate] =
-      wheels.map { case (c, i) =>
-        c -> outerInteriors.map { case (a, b) => i.query(a, b) }
-          .foldLeft(AllAggregate.identity)(_ combine _)
-      }
-    val shifts = shiftsFor(needCond, measures, interiorCombined(_))
+    if (!interior.minuteTierComplete)
+      return refuse(s"$noun: the minute tier is " +
+        "retention-evicted (evicted interiors keep the scan)")
+    val measures = interior.measures
+    val shifts = condShifts(aggExprs, tsCol, interior, measures, outersUs,
+      (key, slotMs) => Iterator.single(groups.map(_.interior(key, slotMs))))
+      .getOrElse(return None)
     val cols = partialColsFor(measures, shifts)
     val slotAttr = AttributeReference("__graft_slot", LongType,
       nullable = true)()
@@ -1794,185 +1793,191 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
     val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
       nullable = true)()
-    // RESIDUE SKETCH SEAM (round 17): approximate spellings fold
-    // through the same two-leg union instead of refusing — interior
-    // minutes ship the family's raw per-minute sketch BYTES (one
-    // binary column per served (family, input column)), the edge rows
-    // ship the RAW sketched value (cast exactly as the build casts),
-    // and a union-or-update aggregate
-    // ([[graft.functions.SketchUpdateAgg]]) unions bytes / updates
-    // raws behind the same per-aggregate span FILTER that keeps the
-    // numeric legs disjoint. Theta stays order-insensitive under the
-    // mixed feed, so exact-regime answers equal the scan's; KLL and
-    // Misra-Gries ride the family's any-merge-order bounds. Accuracy
-    // gates are the STATIC worst-case forms (the distributed posture):
-    // requests tighter than the wheels' worst case refuse to the scan.
-    val neededSketch = scala.collection.mutable.LinkedHashMap
-      .empty[(String, String), (AttributeReference, AttributeReference)]
-    def sketchAttrs(family: String, colName: String,
-        rawType: DataType): (AttributeReference, AttributeReference) =
-      neededSketch.getOrElseUpdate((family, colName), (
-        AttributeReference(s"__graft_skb_${family}_$colName", BinaryType,
-          nullable = true)(),
-        AttributeReference(s"__graft_skr_${family}_$colName", rawType,
-          nullable = true)()))
-    // every spanFilter registers its slivers here — the edge scan's
-    // merged window set
-    val edgeWins = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
-    def spanFilter(spans: Seq[(Long, Long)]): Expression = {
-      val slivers = spans.flatMap { case (a, b) => sliversUs(a, b) }
-      edgeWins ++= slivers
-      val slotConds = spans.flatMap { case (a, b) => interiorMsOf(a, b) }
-        .map { case (ia, ib) =>
-          And(GreaterThanOrEqual(slotAttr, Literal(ia, LongType)),
-            LessThan(slotAttr, Literal(ib, LongType))): Expression
-        }
-      val tsConds = slivers.map { case (wa, wb) =>
-        And(GreaterThanOrEqual(tsOut, Literal(wa, tsOut.dataType)),
-          LessThan(tsOut, Literal(wb, tsOut.dataType))): Expression
-      }
-      (slotConds ++ tsConds).reduceOption(Or.apply)
-        .getOrElse(Literal.FalseLiteral)
-    }
-    def sumRowsAe(filter: Expression): Expression =
-      AggregateExpression(Sum(cols.rowsAttr), Complete, isDistinct = false)
-        .copy(filter = Some(filter))
-    /** The union-or-update merge expression for one approximate
-      * spelling over its clipped spans, or None — with the refusal
-      * note set (and `supported` cleared) when a GATE failed, unset
-      * when no fresh registration serves the column. */
-    def sketchMerged(fn: AggregateFunction,
-        spans: Seq[(Long, Long)]): Option[Expression] =
-      residueSketchExpr(fn,
-        served = sketchServedOf(sketchOpt),
-        rawSrcOk = residueRawSrcOk(below),
-        sketchAttrs = sketchAttrs,
-        refuseMsg = msg => { refuse(msg, ()); () },
-        mkAgg = f => AggregateExpression(f, Complete, isDistinct = false)
-          .copy(filter = Some(spanFilter(spans))))
-    def mergedCond(ae: AggregateExpression): Expression = {
-      if (!supported) return ae
-      condParts(ae) match {
-        case None => supported = false; ae
-        case Some((fn, condOpt, elseZero)) =>
-          val spans = condOpt match {
-            case None => outersUs
-            case Some(c) => rangeUs(c, tsCol) match {
-              case Some((lo, hi)) => clipToOuters(lo, hi)
-              case None =>
-                return refuse("conditional hybrid: a per-aggregate " +
-                  "condition is not a bare time range on " +
-                  s"'$tsCol'", ae)
-            }
-          }
-          fn match {
-            case _: HyperLogLogPlusPlus | _: ApproximatePercentile
-                 | _: ApproxTopK =>
-              // round 17: ride the union-or-update seam when a fresh
-              // registration serves the column; gates refuse honestly
-              return sketchMerged(fn, spans).getOrElse {
-                if (supported)
-                  refuse("conditional hybrid: no fresh sketch " +
-                    s"registration serves ${fn.prettyName} on this " +
-                    "column (or the source misses the typed raw " +
-                    "column its edge updates need) — scan kept", ae)
-                else ae
-              }
-            case _ => ()
-          }
-          val secondMoment = fn match {
-            case _: VariancePop | _: StddevPop
-                 | _: VarianceSamp | _: StddevSamp => true
-            case _ => false
-          }
-          if (secondMoment) {
-            // gate THIS aggregate's interior around the shared shift
-            val gateOk = fn.children.flatMap(_.collect {
-              case a: AttributeReference if wheels.contains(a.name) => a.name
-            }).forall { n =>
-              val al = spans
-                .flatMap { case (a, b) => interiorMsOf(a, b) }
-                .map { case (a, b) => wheels(n).query(a, b) }
-                .foldLeft(AllAggregate.identity)(_ combine _)
-              al.varWellConditionedAround(cols.shiftOf(n))
-            }
-            if (!gateOk) return refuse(IllCondNote, ae)
-          }
-          val plain = AggregateExpression(fn, Complete, isDistinct = false)
-          mergeAggExprs(cols, wheels.keySet,
-            Seq(Alias(plain, "__graft_m")()), Nil) match {
-            case None => supported = false; ae // note set by mergeAggExprs
-            case Some(Seq(alias)) =>
-              val cond = spanFilter(spans)
-              val filtered = alias.asInstanceOf[Alias].child.transformUp {
-                case iae: AggregateExpression => iae.copy(filter = Some(cond))
-              }
-              if (!elseZero) filtered
-              else {
-                val outerRowsE = sumRowsAe(spanFilter(outersUs))
-                val spanRowsE = Coalesce(Seq(sumRowsAe(cond), Literal(0L, LongType)))
-                If(And(IsNull(filtered), GreaterThan(outerRowsE, spanRowsE)),
-                  Literal(0.0, filtered.dataType), filtered)
-              }
-            case Some(_) => supported = false; ae
-          }
-      }
-    }
-    val newAggExprs = aggExprs.map { ne =>
-      val out = ne.transformUp {
-        case e: AggregateExpression => mergedCond(e)
-      }.asInstanceOf[NamedExpression]
-      if (out.exprId == ne.exprId) out else Alias(out, ne.name)(ne.exprId)
-    }
-    if (!supported) return None
-    val skCols = neededSketch.toSeq
+    val cr = new CondResidue(noun, tsCol, measures.toSet, cols, outersUs,
+      slotAttr, tsOut, sketchServed = sketch.served,
+      rawSrcOk = residueRawSrcOk(below))
+    val newAggExprs = cr.rewriteAggExprs(aggExprs,
+      groups.map(g => (g.spellings, g.out))).getOrElse(return None)
+    val skCols = cr.sketchCols
     val skAttrs = skCols.flatMap { case (_, (b, r)) => Seq(b, r) }
-    val allowed = cols.partialAttrs.map(_.exprId).toSet +
-      slotAttr.exprId + tsOut.exprId ++ skAttrs.map(_.exprId)
-    if (newAggExprs.exists(_.exists {
-      case at: Attribute => !allowed.contains(at.exprId)
-      case _ => false
-    })) return None
-    val skBytesAt = sketchBytesAt(sketchOpt) _
-    // interior leg: one slot-tagged partials row per non-empty minute
-    val headMeasure = measures.head
-    val headIdx = wheels(headMeasure)
-    val rows = Seq.newBuilder[InternalRow]
-    outerInteriors.foreach { case (a, b) =>
-      headIdx.minuteEntries(a, b).foreach { case (slot, headAll) =>
-        val alls = wheels.map {
-          case (c, _) if c == headMeasure => c -> headAll
-          case (c, i) => c -> i.minuteAt(slot)
-        }
-        val skVals = skCols.flatMap { case ((f, c), _) =>
-          Seq(skBytesAt(f, c, slot), null) }
-        rows += InternalRow.fromSeq(
-          (slot +: (null +: cols.partialsRow(alls, headAll.rows))) ++ skVals)
-      }
-    }
+    // interior leg: one slot-tagged partials row per interior entry
+    // (sketch bytes where served), pre-keyed to its groups
+    val rows = interior.entries(
+      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) })
+      .map { case (key, slotMs, alls) =>
+        InternalRow.fromSeq(groups.map(_.interior(key, slotMs)) ++
+          (slotMs +: null +: cols.partialsRow(alls, alls(measures.head).rows)) ++
+          skCols.flatMap { case ((f, c), _) =>
+            Seq(sketch.bytesAt(f, c, key, slotMs), null) })
+      }.toList
     val interiorRel = LocalRelation(
-      (slotAttr +: tsOut +: cols.partialAttrs) ++ skAttrs, rows.result())
-    // edge leg: ONE bounded scan of the merged slivers; each row keeps
-    // its raw ts and NULLs the slot tag — sketch columns invert: the
-    // raw value rides (cast as the build casts), the bytes are NULL
-    val mergedWins =
-      if (edgeWins.isEmpty) Nil else mergeRanges(edgeWins.toSeq)
+      groups.map(_.out) ++ (slotAttr +: tsOut +: cols.partialAttrs) ++ skAttrs,
+      rows)
+    // edge leg: ONE bounded scan of the merged slivers; each row derives
+    // its groups, keeps its raw ts and NULLs the slot tag — sketch
+    // columns invert: the raw value rides (cast as the build casts),
+    // the bytes are NULL
+    val mergedWins = cr.mergedEdgeWindows(outerSlivers = groups.nonEmpty)
+    val edges = groups.flatMap(_.edge)
     val child: LogicalPlan =
       if (mergedWins.isEmpty) interiorRel
       else residueParts(below, tsCol, measures, mergedWins, shifts) match {
-        case None =>
-          return refuse("conditional hybrid: the source is missing the " +
-            "typed ts/measure columns an edge scan needs", None)
-        case Some(parts) =>
+        case Some(parts) if edges.size == groups.size =>
           val edgeLeg = Project(
-            (Alias(Literal(null, LongType), "__graft_slot")() +:
-              Alias(tsAttrSrc, "__graft_ts")() +:
-              parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
+            groups.zip(edges).map { case (g, e) =>
+              Alias(e, g.out.name)(): NamedExpression } ++
+              (Alias(Literal(null, LongType), "__graft_slot")() +:
+                Alias(tsAttrSrc, "__graft_ts")() +:
+                parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
             parts.edgeFilter)
           Union(Seq(interiorRel, edgeLeg))
+        case _ =>
+          return refuse(s"$noun: the source is missing the typed " +
+            "ts/measure columns an edge scan needs")
       }
-    Some(Aggregate(Nil, newAggExprs, child))
+    Some(Aggregate(groups.map(_.out), newAggExprs, child))
   }
+
+  /** One interior entry of a conditional hybrid: (key — null on an
+    * unkeyed index —, minute slot ms, per-measure minute partials). */
+  private type CondEntry = (Any, Long, Map[String, AllAggregate])
+
+  /** A conditional hybrid's interior: its measures (the first one's
+    * partial carries an entry's row count), whether every wheel keeps
+    * its minute tier, and the walk over every non-empty minute of the
+    * given ms ranges (a fresh iterator per call). */
+  private final case class CondInterior(measures: Seq[String],
+      minuteTierComplete: Boolean,
+      entries: Seq[(Long, Long)] => Iterator[CondEntry])
+
+  private def condInterior(wheels: Map[String, WheelIndex]): CondInterior =
+    CondInterior(wheels.keys.toSeq,
+      wheels.valuesIterator.forall(_.minuteTierComplete),
+      ranges => {
+        val (anyMeasure, anyIdx) = wheels.head
+        ranges.iterator.flatMap { case (a, b) =>
+          anyIdx.minuteEntries(a, b).map { case (slotMs, anyAll) =>
+            (null: Any, slotMs, wheels.map {
+              case (c, _) if c == anyMeasure => c -> anyAll
+              case (c, i) => c -> i.minuteAt(slotMs)
+            })
+          }
+        }
+      })
+
+  /** The keyed index has no retention policy — its minute tier is
+    * always complete. */
+  private def keyedCondInterior(
+      wheels: Map[String, graft.wheel.KeyedWheelIndex]): CondInterior =
+    CondInterior(wheels.keys.toSeq, minuteTierComplete = true,
+      ranges => {
+        val (anyMeasure, anyIdx) = wheels.head
+        ranges.iterator.flatMap { case (a, b) =>
+          anyIdx.minuteEntries(a, b).map { case (key, slotMs, anyAll) =>
+            (key, slotMs, wheels.map {
+              case (c, _) if c == anyMeasure => c -> anyAll
+              case (c, i) => c -> i.minuteAt(key, slotMs)
+            })
+          }
+        }
+      })
+
+  /** One GROUP column of a conditional hybrid: its union and output
+    * attribute, its value on an interior entry (key, minute slot), its
+    * edge-leg expression over the raw rows (None: not derivable there,
+    * so an edge scan refuses), and the select-list spellings it
+    * replaces. */
+  private final case class CondGroup(out: AttributeReference,
+      interior: (Any, Long) => Any, edge: Option[Expression],
+      spellings: Seq[Expression])
+
+  /** The time-cell group: interior minutes pre-keyed to their grid
+    * cell, edge rows re-deriving it from the raw ts. */
+  private def cellGroup(grid: SlotGrid, gExpr: Expression,
+      spellings: Seq[Expression], child: LogicalPlan,
+      below: LogicalPlan): CondGroup = {
+    val cellVals = new java.util.HashMap[Long, Any]()
+    CondGroup(
+      AttributeReference("__graft_cell", gExpr.dataType,
+        nullable = gExpr.nullable)(),
+      (_, slotMs) => cellVals.computeIfAbsent(grid.floorOf(slotMs),
+        s0 => slotLiteral(grid, s0, grid.end(s0)).value),
+      rebaseOnto(child, below, gExpr), spellings)
+  }
+
+  /** One group per key column of a keyed registration: interior values
+    * are `component(key, i)` as a literal of the column's type, edge
+    * rows carry the typed raw key column. None when the source misses
+    * one. */
+  private def keyGroups(keyAttrs: Seq[AttributeReference],
+      keyCols: Seq[String], keyTypes: Seq[DataType], below: LogicalPlan,
+      component: (Any, Int) => Any): Option[Seq[CondGroup]] = {
+    val srcs = keyCols.zip(keyTypes).flatMap { case (kc, dt) =>
+      below.output.find(o => o.name == kc && o.dataType == dt) }
+    if (srcs.size != keyCols.size) None
+    else Some(keyAttrs.zip(keyTypes).zip(srcs).zipWithIndex.map {
+      case (((kA, dt), src), i) =>
+        val vals = new java.util.HashMap[Any, Any]()
+        CondGroup(
+          AttributeReference(s"__graft_key$i", dt, nullable = kA.nullable)(),
+          (key, _) => vals.computeIfAbsent(key,
+            k => Literal.create(component(k, i), dt).value),
+          Some(src), Seq(kA))
+    })
+  }
+
+  /** The conditional hybrids' ONE pre-walk over the interior entries,
+    * taken only when a second moment asks: the outer interior's GLOBAL
+    * per-measure mean (the shift centers — raw edge rows cannot know
+    * their group's shift) and the per-(group, gate) conditioning check,
+    * since every group's gated interior recombines around that center.
+    * `groupsOf` names the groups an entry feeds. Empty shifts when no
+    * second moment is asked; None — note pinned — when a gate fails. */
+  private def condShifts(aggExprs: Seq[NamedExpression], tsCol: String,
+      interior: CondInterior, shiftMeasures: Seq[String],
+      outersUs: Seq[(Long, Long)],
+      groupsOf: (Any, Long) => Iterator[Any]): Option[Map[String, Double]] = {
+    if (!hasSecondMoment(aggExprs)) return Some(Map.empty)
+    val gateSpecs = condGateSpecs(aggExprs, tsCol, interior.measures.toSet,
+      outersUs)
+    val gateInteriors = gateSpecs.map { case (_, spans) =>
+      spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
+    val globalAcc = new java.util.HashMap[String, AllAggregate]()
+    val gateAccs = new java.util.HashMap[(Any, Int), AllAggregate]()
+    interior.entries(outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) })
+      .foreach { case (key, slotMs, alls) =>
+        shiftMeasures.foreach { c =>
+          globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
+        }
+        gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
+          if (gateInteriors(gi).exists(r => slotMs >= r._1 && slotMs < r._2))
+            groupsOf(key, slotMs).foreach { g =>
+              gateAccs.merge((g, gi), alls(c), (x, y) => x.combine(y))
+            }
+        }
+      }
+    val shifts = shiftMeasures.map { c =>
+      val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
+      c -> (if (al.count == 0L) 0.0 else al.avg)
+    }.toMap
+    import scala.jdk.CollectionConverters._
+    val ill = gateAccs.asScala.exists { case ((_, gi), al) =>
+      !al.varWellConditionedAround(shifts.getOrElse(gateSpecs(gi)._1, 0.0))
+    }
+    if (!ill) Some(shifts)
+    else {
+      if (foldBailNote.isEmpty) foldBailNote = IllCondNote
+      None
+    }
+  }
+
+  /** The ungrouped conditional hybrid ([[condHybrid]] with no group). */
+  private def foldConditionalResidue(aggExprs: Seq[NamedExpression],
+      below: LogicalPlan, tsCol: String, wheels: Map[String, WheelIndex],
+      outersUs: Seq[(Long, Long)],
+      sketchOpt: Option[WheelAcceleration.SketchReg]): Option[LogicalPlan] =
+    condHybrid("conditional hybrid", aggExprs, below, tsCol,
+      condInterior(wheels), outersUs, Nil, condSketchOf(sketchOpt))
 
   private def isNullElseLit(e: Option[Expression]): Boolean = e match {
     case None => true
@@ -2231,7 +2236,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             // through the hybrid — for aligned disjuncts the sliver set
             // is empty, so the plan degenerates to pure per-(key,
             // minute) partials + an executor Aggregate, still scan-free
-            foldKeyedConditionalResidue(agg, keyAttr, aggExprs,
+            foldKeyedConditionalResidue(keyAttr, aggExprs,
               findFilter(child).map(_._2).getOrElse(child), reg,
               outerRanges,
               WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
@@ -2257,34 +2262,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     } yield result
   }
 
-  /** KEYED conditional hybrid for UNALIGNED ranges (round 16 — the
-    * keyed mirror of [[foldConditionalResidue]], closing the "both
-    * fold regimes" half of VERDICT r15 missing #2): `GROUP BY key`
-    * with sub-minute bounds on the outer WHERE or on per-aggregate
-    * conditions. The outer interiors ship as per-(key, minute)
-    * slot-tagged partials, ONE bounded edge scan of the merged
-    * sub-minute slivers carries the raw KEY column and ts, and a real
-    * executor-side Aggregate groups per key — so the path serves ANY
-    * key cardinality (it IS a distributed form; no per-key driver
-    * queries anywhere: shifts and conditioning gates accumulate off
-    * one O(entries) pre-walk). Keys present only in the slivers emerge
-    * from the edge rows; `ELSE 0` NULL-vs-0 resolves per key from
-    * exactly-counted outer rows. Second moments center on the outer
-    * interior's GLOBAL mean (edge rows cannot know their key's shift)
-    * and gate per (key, aggregate range) — heterogeneous key means far
-    * from the global center refuse to the scan, the raw-edge-leg
-    * contract. Sketch spellings refuse (no sub-minute sketch state). */
-  /** Shared machinery of the conditional residue hybrids (round 17 —
-    * the keyed / grouped / keyed-grouped regimes differ ONLY in their
-    * GROUP columns and interior emission): per-aggregate span filters
-    * over the union's (slot, ts) columns, the merged edge-window set,
-    * ELSE-0 outer-row counting, sketch refusals, and the select-list
-    * rewrite. Callers: build the interior partials rows with their own
-    * group prefix, call [[rewriteAggExprs]] (which registers every
-    * aggregate's slivers), then [[mergedEdgeWindows]] (which adds the
-    * OUTER slivers unconditionally — group presence: a group whose
-    * only outer rows fall there must still emit, with every
-    * aggregate's own FILTER excluding the extra rows from values). */
   /** Shared gate + expression construction of the RESIDUE SKETCH SEAM
     * (round 17): one approximate spelling's union-or-update merge
     * aggregate, or None — with the refusal note recorded via
@@ -2405,31 +2382,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
   }
 
-  /** The seam's `served` callback for an UNKEYED sketch registration:
-    * Some(minute-tier complete) when a wheel serves (family, col). */
-  private def sketchServedOf(sketchOpt: Option[WheelAcceleration.SketchReg])
-      : (String, String) => Option[Boolean] = (family, col) =>
-    sketchOpt.flatMap(sk => family match {
-      case "d" => sk.distinct.get(col).map(_.minuteTierComplete)
-      case "q" => sk.quantile.get(col).map(_.minuteTierComplete)
-      case _ => sk.freq.get(col).map(_.minuteTierComplete)
-    })
-
-  /** The seam's `served` callback for a KEYED sketch registration —
-    * EVERY key's wheel must retain its minute tier (the same forall
-    * the distributed keyed sketch form gates on). */
-  private def keyedSketchServedOf(
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg])
-      : (String, String) => Option[Boolean] = (family, col) =>
-    keyedSk.flatMap(sk => family match {
-      case "d" => sk.distinct.get(col)
-        .map(_.valuesIterator.forall(_.minuteTierComplete))
-      case "q" => sk.quantile.get(col)
-        .map(_.valuesIterator.forall(_.minuteTierComplete))
-      case _ => sk.freq.get(col)
-        .map(_.valuesIterator.forall(_.minuteTierComplete))
-    })
-
   /** Does the edge scan's source carry the typed raw column an edge
     * update needs — integral for the Theta/Misra-Gries long-key
     * contract, any numeric for KLL (both mirror the builds' casts). */
@@ -2441,29 +2393,59 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           .contains(at.dataType)
       else at.dataType.isInstanceOf[NumericType]))
 
-  /** Per-minute sketch bytes for an UNKEYED interior row (null = empty
-    * minute for that family/column — contributes nothing). */
-  private def sketchBytesAt(sketchOpt: Option[WheelAcceleration.SketchReg])(
-      family: String, col: String, slotMs: Long): Array[Byte] =
-    sketchOpt.map { sk =>
-      family match {
+  /** The RESIDUE SKETCH SEAM (round 17) as a conditional hybrid sees
+    * one registration. Approximate spellings fold through the same
+    * two-leg union: interior minutes ship the family's raw per-minute
+    * sketch BYTES (one binary column per served (family, input
+    * column)), edge rows ship the RAW sketched value (cast as the build
+    * casts), and a union-or-update aggregate
+    * ([[graft.functions.SketchUpdateAgg]]) unions bytes / updates raws
+    * behind the same per-aggregate span FILTER that keeps the numeric
+    * legs disjoint. `served(family, col)` is Some(every serving wheel
+    * keeps its minute tier) when a fresh wheel serves the column, None
+    * when unserved; `bytesAt(family, col, key, slotMs)` is an interior
+    * entry's per-minute sketch bytes (null = empty minute — contributes
+    * nothing). */
+  private final case class CondSketch(
+      served: (String, String) => Option[Boolean],
+      bytesAt: (String, String, Any, Long) => Array[Byte])
+
+  /** The seam over an UNKEYED sketch registration (entry keys unused). */
+  private def condSketchOf(
+      sketchOpt: Option[WheelAcceleration.SketchReg]): CondSketch =
+    CondSketch(
+      (family, col) => sketchOpt.flatMap(sk => family match {
+        case "d" => sk.distinct.get(col).map(_.minuteTierComplete)
+        case "q" => sk.quantile.get(col).map(_.minuteTierComplete)
+        case _ => sk.freq.get(col).map(_.minuteTierComplete)
+      }),
+      (family, col, _, slotMs) => sketchOpt.map(sk => family match {
         case "d" => sk.distinct(col).minuteBytesAt(slotMs)
         case "q" => sk.quantile(col).minuteBytesAt(slotMs)
         case _ => sk.freq(col).minuteBytesAt(slotMs)
-      }
-    }.orNull
+      }).orNull)
 
-  /** Per-(key, minute) sketch bytes for a KEYED interior row. */
-  private def keyedSketchBytesAt(
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg])(
-      family: String, col: String, key: Any, slotMs: Long): Array[Byte] =
-    keyedSk.flatMap { sk =>
-      (family match {
-        case "d" => sk.distinct(col).get(key).map(_.minuteBytesAt(slotMs))
-        case "q" => sk.quantile(col).get(key).map(_.minuteBytesAt(slotMs))
-        case _ => sk.freq(col).get(key).map(_.minuteBytesAt(slotMs))
-      }).flatMap(Option(_))
-    }.orNull
+  /** The seam over a KEYED sketch registration — EVERY key's wheel must
+    * retain its minute tier (the same forall the distributed keyed
+    * sketch form gates on). */
+  private def keyedCondSketchOf(
+      keyedSk: Option[WheelAcceleration.KeyedSketchReg]): CondSketch =
+    CondSketch(
+      (family, col) => keyedSk.flatMap(sk => family match {
+        case "d" => sk.distinct.get(col)
+          .map(_.valuesIterator.forall(_.minuteTierComplete))
+        case "q" => sk.quantile.get(col)
+          .map(_.valuesIterator.forall(_.minuteTierComplete))
+        case _ => sk.freq.get(col)
+          .map(_.valuesIterator.forall(_.minuteTierComplete))
+      }),
+      (family, col, key, slotMs) => keyedSk.flatMap { sk =>
+        (family match {
+          case "d" => sk.distinct(col).get(key).map(_.minuteBytesAt(slotMs))
+          case "q" => sk.quantile(col).get(key).map(_.minuteBytesAt(slotMs))
+          case _ => sk.freq(col).get(key).map(_.minuteBytesAt(slotMs))
+        }).flatMap(Option(_))
+      }.orNull)
 
   /** The seam's edge-leg projection tail: NULL bytes + the cast raw
     * column per needed sketch, positionally matching the interior
@@ -2478,6 +2460,12 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         Alias(Cast(src, castType), rAttr.name)())
     }
 
+  /** Shared select-list machinery of the conditional hybrids
+    * ([[condHybrid]] and [[slidingCondResidue]]): per-aggregate span
+    * filters over the union's (slot, ts) columns, the merged edge-window
+    * set, ELSE-0 outer-row counting, the sketch seam, and the
+    * select-list rewrite. Call [[rewriteAggExprs]] (which registers
+    * every aggregate's slivers), then [[mergedEdgeWindows]]. */
   private final class CondResidue(
       noun: String, tsCol: String, measureNames: Set[String],
       cols: PartialCols, outersUs: Seq[(Long, Long)],
@@ -2624,10 +2612,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       else Some(out)
     }
 
-    /** Outer slivers registered unconditionally (group presence), then
-      * the merged edge-window set. Call AFTER [[rewriteAggExprs]]. */
-    def mergedEdgeWindows(): Seq[(Long, Long)] = {
-      edgeWins ++= outersUs.flatMap { case (a, b) => minuteSliversUs(a, b) }
+    /** The merged edge-window set — with `outerSlivers`, the outer
+      * slivers join unconditionally (group presence: a group whose only
+      * outer rows fall there must still emit, with every aggregate's own
+      * FILTER excluding the extra rows from values). Call AFTER
+      * [[rewriteAggExprs]]. */
+    def mergedEdgeWindows(outerSlivers: Boolean): Seq[(Long, Long)] = {
+      if (outerSlivers)
+        edgeWins ++= outersUs.flatMap { case (a, b) => minuteSliversUs(a, b) }
       if (edgeWins.isEmpty) Nil else mergeRanges(edgeWins.toSeq)
     }
   }
@@ -2663,136 +2655,22 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       }
     }
 
-  private def foldKeyedConditionalResidue(
-      agg: Aggregate, keyAttr: AttributeReference,
+  /** KEYED conditional hybrid (round 16): `GROUP BY key` with
+    * sub-minute bounds on the outer WHERE or on per-aggregate
+    * conditions — [[condHybrid]] grouped per key, so the path serves
+    * ANY key cardinality (no per-key driver queries anywhere). Keys
+    * present only in the slivers emerge from the edge rows;
+    * heterogeneous key means far from the global shift center refuse
+    * to the scan, the raw-edge-leg contract. */
+  private def foldKeyedConditionalResidue(keyAttr: AttributeReference,
       aggExprs: Seq[NamedExpression], below: LogicalPlan,
-      reg: WheelAcceleration.KeyedReg,
-      outersUs: Seq[(Long, Long)],
-      // round 17 sketch seam: the per-key sketch wheels, when fresh —
-      // approximate spellings then ship per-(key, minute) bytes on the
-      // interior and raw values on the edge instead of refusing
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg] = None): Option[LogicalPlan] = {
-    def refuse(msg: String): Option[LogicalPlan] = {
-      if (foldBailNote.isEmpty) foldBailNote = msg
-      None
-    }
-    val measures = reg.wheels.keys.toSeq
-    val anyIdx = reg.any
-    val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-    val outerInteriors =
-      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) }
-    val needCond = hasSecondMoment(aggExprs)
-    val gateSpecs =
-      if (!needCond) Nil
-      else condGateSpecs(aggExprs, reg.tsCol, reg.wheels.keySet, outersUs)
-    // ONE pre-walk (only when second moments ask): global per-measure
-    // interior sums (the shift centers) + per-(key, gate) partials
-    val globalAcc = new java.util.HashMap[String, AllAggregate]()
-    val gateAccs = new java.util.HashMap[(Any, Int), AllAggregate]()
-    if (needCond) {
-      val gateInteriors = gateSpecs.map { case (_, spans) =>
-        spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
-      outerInteriors.foreach { case (a, b) =>
-        anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-          val alls = reg.wheels.map {
-            case (c, _) if c == anyMeasure => c -> anyAll
-            case (c, i) => c -> i.minuteAt(key, slotMs)
-          }
-          measures.foreach { c =>
-            globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
-          }
-          gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-            if (gateInteriors(gi).exists(r =>
-                slotMs >= r._1 && slotMs < r._2))
-              gateAccs.merge((key, gi), alls(c), (x, y) => x.combine(y))
-          }
-        }
-      }
-    }
-    val shifts: Map[String, Double] =
-      if (!needCond) Map.empty
-      else measures.map { c =>
-        val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
-        c -> (if (al.count == 0L) 0.0 else al.avg)
-      }.toMap
-    val cols = partialColsFor(measures, shifts)
-    // the per-(key, gate) conditioning check — raw edge rows recombine
-    // around the GLOBAL center, so every key's gated interior must be
-    // well-conditioned there
-    if (needCond) {
-      import scala.jdk.CollectionConverters._
-      val ill = gateAccs.entrySet().asScala.exists { e =>
-        val (_, gi) = e.getKey
-        !e.getValue.varWellConditionedAround(cols.shiftOf(gateSpecs(gi)._1))
-      }
-      if (ill) return refuse(IllCondNote)
-    }
-    val slotAttr = AttributeReference("__graft_slot", LongType,
-      nullable = true)()
-    val tsAttrSrc = below.output.find(_.name == reg.tsCol) match {
-      case Some(t) if t.dataType == TimestampType ||
-        t.dataType == TimestampNTZType => t
-      case _ => return None
-    }
-    val keyAttrSrc = below.output.find(_.name == reg.keyCol) match {
-      case Some(k) if k.dataType == reg.any.keyType => k
-      case _ => return None
-    }
-    val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
-      nullable = true)()
-    val keyOut = AttributeReference("__graft_key0", reg.any.keyType,
-      nullable = keyAttr.nullable)()
-    val cr = new CondResidue("keyed conditional hybrid", reg.tsCol,
-      reg.wheels.keySet, cols, outersUs, slotAttr, tsOut,
-      sketchServed = keyedSketchServedOf(keyedSk),
-      rawSrcOk = residueRawSrcOk(below))
-    val newAggExprs = cr.rewriteAggExprs(aggExprs,
-      Seq((Seq(keyAttr), keyOut))) match {
-      case Some(es) => es
-      case None => return None
-    }
-    val skCols = cr.sketchCols
-    val skAttrs = skCols.flatMap { case (_, (b, r)) => Seq(b, r) }
-    val skBytesAt = keyedSketchBytesAt(keyedSk) _
-    // interior leg: one row per (key, non-empty minute)
-    val keyVals = new java.util.HashMap[Any, Any]()
-    def kv(key: Any): Any = keyVals.computeIfAbsent(key,
-      k => Literal.create(k, reg.any.keyType).value)
-    val rows = Seq.newBuilder[InternalRow]
-    outerInteriors.foreach { case (a, b) =>
-      anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-        val alls = reg.wheels.map {
-          case (c, _) if c == anyMeasure => c -> anyAll
-          case (c, i) => c -> i.minuteAt(key, slotMs)
-        }
-        val skVals = skCols.flatMap { case ((f, c), _) =>
-          Seq(skBytesAt(f, c, key, slotMs), null) }
-        rows += InternalRow.fromSeq(
-          (kv(key) +: slotMs +: (null +: cols.partialsRow(alls, anyAll.rows)))
-            ++ skVals)
-      }
-    }
-    val interiorRel = LocalRelation(
-      (keyOut +: slotAttr +: tsOut +: cols.partialAttrs) ++ skAttrs,
-      rows.result())
-    val mergedWins = cr.mergedEdgeWindows()
-    val child: LogicalPlan =
-      if (mergedWins.isEmpty) interiorRel
-      else residueParts(below, reg.tsCol, measures, mergedWins, shifts) match {
-        case None =>
-          return refuse("keyed conditional hybrid: the source is missing " +
-            "the typed ts/measure columns an edge scan needs")
-        case Some(parts) =>
-          val edgeLeg = Project(
-            (Alias(keyAttrSrc, "__graft_key0")() +:
-              Alias(Literal(null, LongType), "__graft_slot")() +:
-              Alias(tsAttrSrc, "__graft_ts")() +:
-              parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
-            parts.edgeFilter)
-          Union(Seq(interiorRel, edgeLeg))
-      }
-    Some(Aggregate(Seq(keyOut), newAggExprs, child))
-  }
+      reg: WheelAcceleration.KeyedReg, outersUs: Seq[(Long, Long)],
+      keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] =
+    keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType), below,
+      (key, _) => key).flatMap(keys =>
+      condHybrid("keyed conditional hybrid", aggExprs, below, reg.tsCol,
+        keyedCondInterior(reg.wheels), outersUs, keys,
+        keyedCondSketchOf(keyedSk)))
 
   /** The per-key rows for [[rewriteKeyedConditional]]: for each
     * registered key with data in the outer range, every aggregate
@@ -3345,16 +3223,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
   }
 
-  /** The ms-expressible view of [[orRangesUs]] — what the KEYED grouped
-    * OR fold consumes (its per-(key, cell) fold is ms-domain only). */
-  private def orRangesMs(cond: Expression,
-      tsCol: String): Option[Seq[(Long, Long)]] =
-    orRangesUs(cond, tsCol).flatMap { rs =>
-      if (rs.forall(r => r._1 % 1000L == 0 && r._2 % 1000L == 0))
-        Some(rs.map(r => (r._1 / 1000L, r._2 / 1000L)))
-      else None
-    }
-
   /** Sort + merge overlapping/touching half-open ranges. */
   private def mergeRanges(rs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val sorted = rs.sortBy(_._1)
@@ -3373,11 +3241,12 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     *
     *  - ONE pre-aggregated partials row (sum/min/max per measure + row
     *    count) computed from the index at plan time, and
-    *  - a parquet scan of ONLY the sub-minute edges — together under
-    *    two minutes of data, expressed as direct `ts >= lit AND ts <
-    *    lit` bounds so the parquet reader can row-group-prune
-    *    (PushedFilters), the term that matters when the table is 100 TB
-    *    and the edges are kilobytes.
+    *  - a parquet scan filtered to ONLY the sub-minute edges — together
+    *    under two minutes of data, expressed as direct `ts >= lit AND
+    *    ts < lit` bounds so they are pushed to the reader
+    *    (PushedFilters). The reader still reads every row group it
+    *    cannot skip: on a `TIMESTAMP_NTZ` ts Spark skips none, so the
+    *    edge scan reads the whole table.
     *
     * Merge forms: SUM→SUM(sum), MIN→MIN(min), MAX→MAX(max),
     * COUNT→coalesce(SUM(rows), 0), AVG→SUM(sum)/SUM(rows) — `rows`
@@ -3955,299 +3824,41 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     } yield plan
   }
 
-  /** GROUPED conditional hybrid (round 17, VERDICT r16 #1 — the last
-    * pinned conditional regime): `GROUP BY time-cell` + per-aggregate
-    * range conditions, past the plan-time cell ceiling AND/OR with
-    * sub-minute edges on the outer WHERE or any per-aggregate
-    * condition — the year-of-days × per-window-aggregate retention
-    * dashboard. The grouped mirror of [[foldKeyedConditionalResidue]]
-    * with the GRID CELL where the key was: the outer interiors ship as
-    * per-minute slot-tagged partials rows each pre-keyed to its cell
-    * (the same O(minute entries) emission [[distributedGrouped]]
-    * proves — minute granularity, so each aggregate's range clipping
-    * stays expressible as a FILTER over `__graft_slot`), ONE bounded
-    * edge scan of the merged sub-minute slivers re-derives its cell
-    * from the raw ts, and a real executor-side Aggregate groups per
-    * cell — so the path serves ANY cell count. The outer slivers scan
-    * unconditionally (cell presence — a cell whose only rows fall in
-    * the outer's slivers must still emit a group); `ELSE 0` NULL-vs-0
-    * resolves per cell from exactly-counted outer rows. Second moments
-    * center on the outer interior's GLOBAL mean and gate per (cell,
-    * aggregate range); sketch spellings refuse (no sub-minute sketch
-    * state). Takes ANY merged outer range set, so single-range and
-    * OR-of-ranges outers both land here. */
-  private def foldGroupedConditionalResidue(
-      agg: Aggregate, groupKey: Expression, gExpr: Expression,
-      grid: SlotGrid, aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, tsCol: String,
-      wheels: Map[String, WheelIndex],
-      outersUs: Seq[(Long, Long)],
-      // round 17 sketch seam: fresh unkeyed sketch wheels — per-minute
-      // bytes pre-keyed to their cell, raw values on the edge
-      sketchOpt: Option[WheelAcceleration.SketchReg] = None): Option[LogicalPlan] = {
-    def refuse(msg: String): Option[LogicalPlan] = {
-      if (foldBailNote.isEmpty) foldBailNote = msg
-      None
-    }
-    // per-minute interiors are the clipping granularity — a retention-
-    // evicted minute tier keeps the scan (honest, same contract as the
-    // ungrouped conditional hybrid)
-    if (!wheels.valuesIterator.forall(_.minuteTierComplete))
-      return refuse("grouped conditional hybrid: the minute tier is " +
-        "retention-evicted (evicted interiors keep the scan)")
-    val measures = wheels.keys.toSeq
-    val anyMeasure = measures.head
-    val anyIdx = wheels(anyMeasure)
-    val outerInteriors =
-      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) }
-    val needCond = hasSecondMoment(aggExprs)
-    val gateSpecs =
-      if (!needCond) Nil
-      else condGateSpecs(aggExprs, tsCol, wheels.keySet, outersUs)
-    val shifts = shiftsFor(needCond, measures,
-      c => outerInteriors.map { case (a, b) => wheels(c).query(a, b) }
-        .foldLeft(AllAggregate.identity)(_ combine _))
-    val cols = partialColsFor(measures, shifts)
-    // per-(cell, gate) conditioning: raw edge rows recombine around the
-    // GLOBAL center, so every cell's gated interior must be
-    // well-conditioned there
-    if (needCond) {
-      val gateInteriors = gateSpecs.map { case (_, spans) =>
-        spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
-      val gateAccs = new java.util.HashMap[(Long, Int), AllAggregate]()
-      outerInteriors.foreach { case (a, b) =>
-        anyIdx.minuteEntries(a, b).foreach { case (slotMs, _) =>
-          gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-            if (gateInteriors(gi).exists(r =>
-                slotMs >= r._1 && slotMs < r._2))
-              gateAccs.merge((grid.floorOf(slotMs), gi),
-                wheels(c).minuteAt(slotMs), (x, y) => x.combine(y))
-          }
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val ill = gateAccs.entrySet().asScala.exists { e =>
-        val (_, gi) = e.getKey
-        !e.getValue.varWellConditionedAround(cols.shiftOf(gateSpecs(gi)._1))
-      }
-      if (ill) return refuse(IllCondNote)
-    }
-    val slotAttr = AttributeReference("__graft_slot", LongType,
-      nullable = true)()
-    val tsAttrSrc = below.output.find(_.name == tsCol) match {
-      case Some(t) if t.dataType == TimestampType ||
-        t.dataType == TimestampNTZType => t
-      case _ => return None
-    }
-    val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
-      nullable = true)()
-    val cellOut = AttributeReference("__graft_cell", gExpr.dataType,
-      nullable = gExpr.nullable)()
-    val cr = new CondResidue("grouped conditional hybrid", tsCol,
-      wheels.keySet, cols, outersUs, slotAttr, tsOut,
-      sketchServed = sketchServedOf(sketchOpt),
-      rawSrcOk = residueRawSrcOk(below))
-    val newAggExprs = cr.rewriteAggExprs(aggExprs,
-      Seq((Seq(groupKey, gExpr), cellOut))) match {
-      case Some(es) => es
-      case None => return None
-    }
-    val skCols = cr.sketchCols
-    val skAttrs = skCols.flatMap { case (_, (b, r)) => Seq(b, r) }
-    val skBytesAt = sketchBytesAt(sketchOpt) _
-    // interior leg: one row per non-empty outer minute, pre-keyed to
-    // its grid cell
-    val cellVals = new java.util.HashMap[Long, Any]()
-    def cellOf(slotMs: Long): Any = {
-      val s0 = grid.floorOf(slotMs)
-      cellVals.computeIfAbsent(s0, k => slotLiteral(grid, k, grid.end(k)).value)
-    }
-    val rows = Seq.newBuilder[InternalRow]
-    outerInteriors.foreach { case (a, b) =>
-      anyIdx.minuteEntries(a, b).foreach { case (slotMs, anyAll) =>
-        val alls = wheels.map {
-          case (c, _) if c == anyMeasure => c -> anyAll
-          case (c, i) => c -> i.minuteAt(slotMs)
-        }
-        val skVals = skCols.flatMap { case ((f, c), _) =>
-          Seq(skBytesAt(f, c, slotMs), null) }
-        rows += InternalRow.fromSeq(
-          (cellOf(slotMs) +: slotMs +:
-            (null +: cols.partialsRow(alls, anyAll.rows))) ++ skVals)
-      }
-    }
-    val interiorRel = LocalRelation(
-      (cellOut +: slotAttr +: tsOut +: cols.partialAttrs) ++ skAttrs,
-      rows.result())
-    val mergedWins = cr.mergedEdgeWindows()
-    val child2: LogicalPlan =
-      if (mergedWins.isEmpty) interiorRel
-      else (residueParts(below, tsCol, measures, mergedWins, shifts),
-          rebaseOnto(child, below, gExpr)) match {
-        case (Some(parts), Some(gEval)) =>
-          val edgeLeg = Project(
-            (Alias(gEval, "__graft_cell")() +:
-              Alias(Literal(null, LongType), "__graft_slot")() +:
-              Alias(tsAttrSrc, "__graft_ts")() +:
-              parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
-            parts.edgeFilter)
-          Union(Seq(interiorRel, edgeLeg))
-        case _ =>
-          return refuse("grouped conditional hybrid: the source is missing " +
-            "the typed ts/measure columns an edge scan needs")
-      }
-    Some(Aggregate(Seq(cellOut), newAggExprs, child2))
-  }
-
-  /** KEYED-GROUPED conditional hybrid (round 17 — the last conditional
-    * regime): `GROUP BY (key, time-cell)` + per-aggregate range
-    * conditions, in EVERY regime (below/above the ceiling, aligned or
-    * sub-minute edges, single and OR outers). Same engine as its two
-    * siblings with the group tuple (key, cell): per-(key, minute)
-    * slot-tagged partials each pre-keyed to its cell, ONE bounded
-    * sliver scan carrying the raw key column and re-deriving its cell
-    * from the raw ts, a real executor-side Aggregate per (key, cell).
-    * Second moments center on the outer interior's GLOBAL mean and
-    * gate per ((key, cell), aggregate range); sketch spellings refuse. */
-  private def foldKeyedGroupedConditionalResidue(
-      agg: Aggregate, keyAttr: AttributeReference, slotGroup: Expression,
+  /** GROUPED conditional hybrid (round 17, VERDICT r16 #1): `GROUP BY
+    * time-cell` + per-aggregate range conditions, past the plan-time
+    * cell ceiling AND/OR with sub-minute edges on the outer WHERE or any
+    * per-aggregate condition — the year-of-days × per-window-aggregate
+    * retention dashboard. [[condHybrid]] grouped per grid cell: minute
+    * granularity keeps each aggregate's range clipping expressible as a
+    * FILTER over `__graft_slot`, and an executor-side Aggregate serves
+    * ANY cell count. Takes ANY merged outer range set, so single-range
+    * and OR-of-ranges outers both land here. */
+  private def foldGroupedConditionalResidue(groupKey: Expression,
       gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
-      child: LogicalPlan, below: LogicalPlan,
-      reg: WheelAcceleration.KeyedReg,
+      child: LogicalPlan, below: LogicalPlan, tsCol: String,
+      wheels: Map[String, WheelIndex], outersUs: Seq[(Long, Long)],
+      sketchOpt: Option[WheelAcceleration.SketchReg]): Option[LogicalPlan] =
+    condHybrid("grouped conditional hybrid", aggExprs, below, tsCol,
+      condInterior(wheels), outersUs,
+      Seq(cellGroup(grid, gExpr, Seq(groupKey, gExpr), child, below)),
+      condSketchOf(sketchOpt))
+
+  /** KEYED-GROUPED conditional hybrid (round 17): `GROUP BY (key,
+    * time-cell)` + per-aggregate range conditions, in EVERY regime
+    * (below/above the ceiling, aligned or sub-minute edges, single and
+    * OR outers) — [[condHybrid]] grouped per (key, cell). */
+  private def foldKeyedGroupedConditionalResidue(keyAttr: AttributeReference,
+      slotGroup: Expression, gExpr: Expression, grid: SlotGrid,
+      aggExprs: Seq[NamedExpression], child: LogicalPlan,
+      below: LogicalPlan, reg: WheelAcceleration.KeyedReg,
       outersUs: Seq[(Long, Long)],
-      // round 17 sketch seam: per-key sketch wheels, when fresh
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg] = None): Option[LogicalPlan] = {
-    def refuse(msg: String): Option[LogicalPlan] = {
-      if (foldBailNote.isEmpty) foldBailNote = msg
-      None
-    }
-    val measures = reg.wheels.keys.toSeq
-    val anyIdx = reg.any
-    val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-    val outerInteriors =
-      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) }
-    val needCond = hasSecondMoment(aggExprs)
-    val gateSpecs =
-      if (!needCond) Nil
-      else condGateSpecs(aggExprs, reg.tsCol, reg.wheels.keySet, outersUs)
-    // ONE pre-walk when second moments ask: global shift centers +
-    // per-((key, cell), gate) partials
-    val globalAcc = new java.util.HashMap[String, AllAggregate]()
-    val gateAccs = new java.util.HashMap[(Any, Long, Int), AllAggregate]()
-    if (needCond) {
-      val gateInteriors = gateSpecs.map { case (_, spans) =>
-        spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
-      outerInteriors.foreach { case (a, b) =>
-        anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-          val alls = reg.wheels.map {
-            case (c, _) if c == anyMeasure => c -> anyAll
-            case (c, i) => c -> i.minuteAt(key, slotMs)
-          }
-          measures.foreach { c =>
-            globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
-          }
-          gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-            if (gateInteriors(gi).exists(r =>
-                slotMs >= r._1 && slotMs < r._2))
-              gateAccs.merge((key, grid.floorOf(slotMs), gi), alls(c),
-                (x, y) => x.combine(y))
-          }
-        }
-      }
-    }
-    val shifts: Map[String, Double] =
-      if (!needCond) Map.empty
-      else measures.map { c =>
-        val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
-        c -> (if (al.count == 0L) 0.0 else al.avg)
-      }.toMap
-    val cols = partialColsFor(measures, shifts)
-    if (needCond) {
-      import scala.jdk.CollectionConverters._
-      val ill = gateAccs.entrySet().asScala.exists { e =>
-        val (_, _, gi) = e.getKey
-        !e.getValue.varWellConditionedAround(cols.shiftOf(gateSpecs(gi)._1))
-      }
-      if (ill) return refuse(IllCondNote)
-    }
-    val slotAttr = AttributeReference("__graft_slot", LongType,
-      nullable = true)()
-    val tsAttrSrc = below.output.find(_.name == reg.tsCol) match {
-      case Some(t) if t.dataType == TimestampType ||
-        t.dataType == TimestampNTZType => t
-      case _ => return None
-    }
-    val keyAttrSrc = below.output.find(_.name == reg.keyCol) match {
-      case Some(k) if k.dataType == reg.any.keyType => k
-      case _ => return None
-    }
-    val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
-      nullable = true)()
-    val keyOut = AttributeReference("__graft_key0", reg.any.keyType,
-      nullable = keyAttr.nullable)()
-    val cellOut = AttributeReference("__graft_cell", gExpr.dataType,
-      nullable = gExpr.nullable)()
-    val cr = new CondResidue("keyed-grouped conditional hybrid", reg.tsCol,
-      reg.wheels.keySet, cols, outersUs, slotAttr, tsOut,
-      sketchServed = keyedSketchServedOf(keyedSk),
-      rawSrcOk = residueRawSrcOk(below))
-    val newAggExprs = cr.rewriteAggExprs(aggExprs,
-      Seq((Seq(keyAttr), keyOut),
-        (Seq(slotGroup, gExpr), cellOut))) match {
-      case Some(es) => es
-      case None => return None
-    }
-    val skCols = cr.sketchCols
-    val skAttrs = skCols.flatMap { case (_, (b, r)) => Seq(b, r) }
-    val skBytesAt = keyedSketchBytesAt(keyedSk) _
-    // interior leg: one row per (key, non-empty minute), pre-keyed to
-    // its grid cell
-    val keyVals = new java.util.HashMap[Any, Any]()
-    def kv(key: Any): Any = keyVals.computeIfAbsent(key,
-      k => Literal.create(k, reg.any.keyType).value)
-    val cellVals = new java.util.HashMap[Long, Any]()
-    def cellOf(slotMs: Long): Any = {
-      val s0 = grid.floorOf(slotMs)
-      cellVals.computeIfAbsent(s0, k => slotLiteral(grid, k, grid.end(k)).value)
-    }
-    val rows = Seq.newBuilder[InternalRow]
-    outerInteriors.foreach { case (a, b) =>
-      anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-        val alls = reg.wheels.map {
-          case (c, _) if c == anyMeasure => c -> anyAll
-          case (c, i) => c -> i.minuteAt(key, slotMs)
-        }
-        val skVals = skCols.flatMap { case ((f, c), _) =>
-          Seq(skBytesAt(f, c, key, slotMs), null) }
-        rows += InternalRow.fromSeq(
-          (kv(key) +: cellOf(slotMs) +: slotMs +:
-            (null +: cols.partialsRow(alls, anyAll.rows))) ++ skVals)
-      }
-    }
-    val interiorRel = LocalRelation(
-      (keyOut +: cellOut +: slotAttr +: tsOut +: cols.partialAttrs)
-        ++ skAttrs,
-      rows.result())
-    val mergedWins = cr.mergedEdgeWindows()
-    val child2: LogicalPlan =
-      if (mergedWins.isEmpty) interiorRel
-      else (residueParts(below, reg.tsCol, measures, mergedWins, shifts),
-          rebaseOnto(child, below, gExpr)) match {
-        case (Some(parts), Some(gEval)) =>
-          val edgeLeg = Project(
-            (Alias(keyAttrSrc, "__graft_key0")() +:
-              Alias(gEval, "__graft_cell")() +:
-              Alias(Literal(null, LongType), "__graft_slot")() +:
-              Alias(tsAttrSrc, "__graft_ts")() +:
-              parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
-            parts.edgeFilter)
-          Union(Seq(interiorRel, edgeLeg))
-        case _ =>
-          return refuse("keyed-grouped conditional hybrid: the source is " +
-            "missing the typed ts/measure columns an edge scan needs")
-      }
-    Some(Aggregate(Seq(keyOut, cellOut), newAggExprs, child2))
-  }
+      keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] =
+    keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType), below,
+      (key, _) => key).flatMap(keys =>
+      condHybrid("keyed-grouped conditional hybrid", aggExprs, below,
+        reg.tsCol, keyedCondInterior(reg.wheels), outersUs,
+        keys :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below),
+        keyedCondSketchOf(keyedSk)))
 
   /** Grouped hybrid for an OR of DISJOINT unaligned µs ranges (round
     * 14): the grouped sibling of [[orRangesResidue]] — one interior
@@ -4746,10 +4357,12 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     val bFloor = Math.floorDiv(b, MinuteMs) * MinuteMs
     if (aCeil >= bFloor) return None
     // root the edge window BELOW the pushed range filter (on the raw
-    // column, before any reading-pipeline cast projection), so the
-    // parquet reader can row-group-prune it — the same depth the
-    // grouped residues use; the chain between the Expand and that
-    // point (range filter, cast projections) is preserved above it
+    // column, before any reading-pipeline cast projection), so its
+    // bounds are pushed to the parquet reader (which still reads every
+    // row group it cannot skip — all of them on a TIMESTAMP_NTZ ts) —
+    // the same depth the grouped residues use; the chain between the
+    // Expand and that point (range filter, cast projections) is
+    // preserved above it
     val innerBelow = findFilter(expand.child).map(_._2).getOrElse(expand.child)
     val allMeasures = keyed.map(_._2.wheels.keys.toSeq).getOrElse(wheels.keys.toSeq)
     if (allMeasures.isEmpty) return None
@@ -4978,9 +4591,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       if (foldBailNote.isEmpty) foldBailNote = msg
       None
     }
-    // the keyed index has no retention policy — its minute tier is
-    // always complete; the unkeyed one can be retention-evicted
-    if (keyed.isEmpty && !wheels.valuesIterator.forall(_.minuteTierComplete))
+    val interior = keyed.fold(condInterior(wheels))(k =>
+      keyedCondInterior(k._2.wheels))
+    if (!interior.minuteTierComplete)
       return refuse(s"$noun: the minute tier is " +
         "retention-evicted (evicted interiors keep the scan)")
     // whole-minute interior of each outer range (ms; disjoint because
@@ -4988,8 +4601,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     val outerInteriorsMs =
       outersUs.flatMap { case (x, y) => minuteInteriorMs(x, y) }
     val innerBelow = findFilter(expand.child).map(_._2).getOrElse(expand.child)
-    val allMeasures =
-      keyed.map(_._2.wheels.keys.toSeq).getOrElse(wheels.keys.toSeq)
+    val allMeasures = interior.measures
     if (allMeasures.isEmpty) return None
     // only measures the Expand still carries are referencable on the
     // edge leg (column pruning) — same restriction as slidingResidue
@@ -5013,75 +4625,11 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       Iterator.iterate(wsMax)(_ - slideMs)
         .takeWhile(ws => ws + sizeMs >= slotMs + MinuteMs)
     }
-    val needCond = hasSecondMoment(aggExprs)
-    val gateSpecs =
-      if (!needCond) Nil
-      else condGateSpecs(aggExprs, tsCol,
-        keyed.map(_._2.wheels.keySet).getOrElse(wheels.keySet), outersUs)
-    // unified interior walk: (key-or-null, minute slot, per-measure
-    // partials) — the unkeyed index yields one entry per minute, the
-    // keyed one per (key, minute); O(1) per entry either way
-    val anyMeasure = keyed match {
-      case Some((_, reg)) => reg.wheels.find(_._2 eq reg.any).get._1
-      case None => allMeasures.head
-    }
-    def interiorEntries(): Iterator[(Any, Long, Map[String, AllAggregate])] =
-      outerInteriorsMs.iterator.flatMap { case (iaMs, ibMs) =>
-        keyed match {
-          case None =>
-            wheels(anyMeasure).minuteEntries(iaMs, ibMs).map {
-              case (slotMs, anyAll) =>
-                (null, slotMs, wheels.map {
-                  case (c, _) if c == anyMeasure => c -> anyAll
-                  case (c, i) => c -> i.minuteAt(slotMs)
-                })
-            }
-          case Some((_, reg)) =>
-            reg.any.minuteEntries(iaMs, ibMs).map {
-              case (key, slotMs, anyAll) =>
-                (key, slotMs, reg.wheels.map {
-                  case (c, _) if c == anyMeasure => c -> anyAll
-                  case (c, i) => c -> i.minuteAt(key, slotMs)
-                })
-            }
-        }
-      }
-    // ONE pre-walk when second moments ask: global shift centers +
-    // per-((key,) window, gate) interior partials — raw edge rows
-    // recombine around the GLOBAL center, so every group's gated
-    // interior must be well-conditioned there
-    val globalAcc = new java.util.HashMap[String, AllAggregate]()
-    val gateAccs = new java.util.HashMap[(Any, Long, Int), AllAggregate]()
-    if (needCond) {
-      val gateInteriors = gateSpecs.map { case (_, spans) =>
-        spans.flatMap { case (x, y) => minuteInteriorMs(x, y) } }
-      interiorEntries().foreach { case (key, slotMs, alls) =>
-        allMeasures.foreach { c =>
-          globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
-        }
-        gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-          if (gateInteriors(gi).exists(r => slotMs >= r._1 && slotMs < r._2))
-            windowsOf(slotMs).foreach { ws =>
-              gateAccs.merge((key, ws, gi), alls(c), (x, y) => x.combine(y))
-            }
-        }
-      }
-    }
-    val shifts: Map[String, Double] =
-      if (!needCond) Map.empty
-      else measures.map { c =>
-        val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
-        c -> (if (al.count == 0L) 0.0 else al.avg)
-      }.toMap
+    // shift centers + the per-((key,) window, gate) conditioning check
+    val shifts = condShifts(aggExprs, tsCol, interior, measures, outersUs,
+      (key, slotMs) => windowsOf(slotMs).map(ws => (key, ws)))
+      .getOrElse(return None)
     val cols = partialColsFor(measures, shifts)
-    if (needCond) {
-      import scala.jdk.CollectionConverters._
-      val ill = gateAccs.entrySet().asScala.exists { e =>
-        val (_, _, gi) = e.getKey
-        !e.getValue.varWellConditionedAround(cols.shiftOf(gateSpecs(gi)._1))
-      }
-      if (ill) return refuse(IllCondNote)
-    }
     val mslotAttr = AttributeReference("__graft_mslot", LongType,
       nullable = true)()
     val etsAttr = AttributeReference("__graft_ets", tsAttrProj.dataType,
@@ -5092,11 +4640,11 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       AttributeReference("__graft_key", reg.any.keyType,
         nullable = kA.nullable)()
     }
+    val sketch =
+      if (keyed.isEmpty) condSketchOf(sketchOpt) else keyedCondSketchOf(keyedSk)
     val cr = new CondResidue(noun, tsCol,
       measures.toSet, cols, outersUs, mslotAttr, etsAttr,
-      sketchServed =
-        if (keyed.isEmpty) sketchServedOf(sketchOpt)
-        else keyedSketchServedOf(keyedSk),
+      sketchServed = sketch.served,
       rawSrcOk = (colName, integral) =>
         residueRawSrcOk(innerBelow)(colName, integral) &&
           expand.output.exists(_.name == colName))
@@ -5108,14 +4656,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
     val skCols = cr.sketchCols
     val skAttrs = skCols.flatMap { case (_, (bAt, rAt)) => Seq(bAt, rAt) }
-    val skBytesAt = sketchBytesAt(sketchOpt) _
     // INTERIOR leg: one (synthetic ts = slot start, mslot, partials)
     // row per non-empty minute, re-expanded through the ORIGINAL
     // Expand so each minute lands in exactly its windows. ts keeps the
     // ORIGINAL exprId so the window projections re-root verbatim.
-    val skBytesFor: (String, String, Any, Long) => Array[Byte] =
-      if (keyed.isEmpty) (f, c, _, slotMs) => sketchBytesAt(sketchOpt)(f, c, slotMs)
-      else (f, c, key, slotMs) => keyedSketchBytesAt(keyedSk)(f, c, key, slotMs)
     val keyLits = new java.util.HashMap[Any, Any]()
     def keyLit(key: Any): Any = keyLits.computeIfAbsent(key,
       k => Literal.create(k, keyed.get._2.any.keyType).value)
@@ -5140,16 +4684,16 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     // building + shipping the LocalRelation costs more than the Expand
     // saved, 1.67 → 1.86 s) — above the bound the original Expand stays,
     // distributing the ×windows work to executors.
-    val entries = interiorEntries().toBuffer
+    val entries = interior.entries(outerInteriorsMs).toBuffer
     val windowsPerSlot = (sizeMs + slideMs - 1) / slideMs
     val preExpand = entries.length * windowsPerSlot <= PreExpandBound
     val rows = Seq.newBuilder[InternalRow]
     entries.foreach { case (key, slotMs, alls) =>
       val skVals = skCols.flatMap { case ((f, c), _) =>
-        Seq(skBytesFor(f, c, key, slotMs), null) }
+        Seq(sketch.bytesAt(f, c, key, slotMs), null) }
       val keyVal = keyed.map(_ => keyLit(key)).toSeq
       val entryTail = ((slotMs * 1000L) +: keyVal) ++ (slotMs +: (null +:
-        cols.partialsRow(alls, alls(anyMeasure).rows))) ++ skVals
+        cols.partialsRow(alls, alls(allMeasures.head).rows))) ++ skVals
       if (preExpand) windowsOf(slotMs).foreach { ws =>
         rows += InternalRow.fromSeq(
           InternalRow(ws * 1000L, (ws + sizeMs) * 1000L) +: entryTail)
@@ -5178,7 +4722,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     // outer's own, scanned once at the prunable depth and re-expanded
     // through the ORIGINAL Expand (edge rows enumerate their true
     // windows; membership filter preserved; the key rides the Expand)
-    val mergedWins = cr.mergedEdgeWindows()
+    val mergedWins = cr.mergedEdgeWindows(outerSlivers = true)
     val legs: Seq[LogicalPlan] =
       if (mergedWins.isEmpty) Seq(interiorLeg)
       else residueParts(innerBelow, tsCol, measures, mergedWins, shifts) match {
@@ -5600,7 +5144,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         case _ => false
       })
       groupedCondResidue = (outers: Seq[(Long, Long)]) =>
-        foldGroupedConditionalResidue(agg, groupKey, gExpr, grid,
+        foldGroupedConditionalResidue(groupKey, gExpr, grid,
           aggExprs, child, findFilter(child).map(_._2).getOrElse(child),
           tsCol, wheels, outers, sketch)
       // Left = the ordinary single conjunctive range; Right = an
@@ -6197,7 +5741,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         case _ => false
       })
       keyedGroupedCond = (outers: Seq[(Long, Long)]) =>
-        foldKeyedGroupedConditionalResidue(agg, keyAttr, slotGroup, gExpr,
+        foldKeyedGroupedConditionalResidue(keyAttr, slotGroup, gExpr,
           grid, aggExprs, child,
           findFilter(child).map(_._2).getOrElse(child), reg, outers,
           WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
@@ -6259,7 +5803,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         else if (hasConditional)
           // every single-range conditional regime — aligned or not,
           // below or above the ceiling — is the hybrid (round 17)
-          keyedGroupedCond(Seq((aUs, bUs)))
+          bail(path, foldNote("keyed-grouped conditional not foldable"))(
+            keyedGroupedCond(Seq((aUs, bUs))))
         else if (aUs % (MinuteMs * 1000L) == 0 && bUs % (MinuteMs * 1000L) == 0) {
           val (a, b) = (aUs / 1000L, bUs / 1000L)
           if (reg.any.keys.size.toLong * cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
@@ -6452,10 +5997,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       b = bUs / 1000L
       result <-
         if (hasConditional)
-          bail(path, "composite-keyed conditional not foldable " +
+          bail(path, foldNote("composite-keyed conditional not foldable " +
             "(aggregate without a merge form / non-time condition / " +
-            "missing typed key or ts columns)")(
-            foldCompositeKeyedConditionalResidue(agg, keyAttrs, slotGroup,
+            "missing typed key or ts columns)"))(
+            foldCompositeKeyedConditionalResidue(keyAttrs, slotGroup,
               gExpr, grid, aggExprs, child,
               findFilter(child).map(_._2).getOrElse(child), reg,
               allRangesUs))
@@ -6662,148 +6207,23 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     } yield plan
   }
 
-  /** COMPOSITE-keyed CONDITIONAL hybrid (round 17 — completes the
-    * conditional matrix): `GROUP BY (k1, …, kn, time-cell)` +
-    * per-aggregate range conditions in every regime. The same
-    * [[CondResidue]] engine with the group tuple (k1, …, kn, cell):
-    * per-(tuple-key, minute) partials with each key COMPONENT as its
-    * own relation column, pre-keyed to their cells; ONE bounded sliver
-    * scan carries every raw key column; executor Aggregate per
-    * (tuple, cell). */
+  /** COMPOSITE-keyed CONDITIONAL hybrid (round 17): `GROUP BY (k1, …,
+    * kn, time-cell)` + per-aggregate range conditions in every regime —
+    * [[condHybrid]] with each key COMPONENT as its own group column;
+    * the sliver scan carries every raw key column. */
   private def foldCompositeKeyedConditionalResidue(
-      agg: Aggregate, keyAttrs: Seq[AttributeReference],
-      slotGroup: Expression, gExpr: Expression, grid: SlotGrid,
-      aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, reg: WheelAcceleration.Keyed2Reg,
-      outersUs: Seq[(Long, Long)]): Option[LogicalPlan] = {
-    def refuse(msg: String): Option[LogicalPlan] = {
-      if (foldBailNote.isEmpty) foldBailNote = msg
-      None
-    }
-    val measures = reg.wheels.keys.toSeq
-    val anyIdx = reg.any
-    val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-    val keyFields = reg.any.keyType.asInstanceOf[StructType].fields
-    val keyRaws = reg.keyCols.zip(keyFields).map { case (kc, f) =>
-      below.output.find(o => o.name == kc && o.dataType == f.dataType)
-    }
-    if (keyRaws.exists(_.isEmpty)) return None
-    val outerInteriors =
-      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) }
-    val needCond = hasSecondMoment(aggExprs)
-    val gateSpecs =
-      if (!needCond) Nil
-      else condGateSpecs(aggExprs, reg.tsCol, reg.wheels.keySet, outersUs)
-    val globalAcc = new java.util.HashMap[String, AllAggregate]()
-    val gateAccs = new java.util.HashMap[(Any, Long, Int), AllAggregate]()
-    if (needCond) {
-      val gateInteriors = gateSpecs.map { case (_, spans) =>
-        spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
-      outerInteriors.foreach { case (a, b) =>
-        anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-          val alls = reg.wheels.map {
-            case (c, _) if c == anyMeasure => c -> anyAll
-            case (c, i) => c -> i.minuteAt(key, slotMs)
-          }
-          measures.foreach { c =>
-            globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
-          }
-          gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-            if (gateInteriors(gi).exists(r =>
-                slotMs >= r._1 && slotMs < r._2))
-              gateAccs.merge((key, grid.floorOf(slotMs), gi), alls(c),
-                (x, y) => x.combine(y))
-          }
-        }
-      }
-    }
-    val shifts: Map[String, Double] =
-      if (!needCond) Map.empty
-      else measures.map { c =>
-        val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
-        c -> (if (al.count == 0L) 0.0 else al.avg)
-      }.toMap
-    val cols = partialColsFor(measures, shifts)
-    if (needCond) {
-      import scala.jdk.CollectionConverters._
-      val ill = gateAccs.entrySet().asScala.exists { e =>
-        val (_, _, gi) = e.getKey
-        !e.getValue.varWellConditionedAround(cols.shiftOf(gateSpecs(gi)._1))
-      }
-      if (ill) return refuse(IllCondNote)
-    }
-    val slotAttr = AttributeReference("__graft_slot", LongType,
-      nullable = true)()
-    val tsAttrSrc = below.output.find(_.name == reg.tsCol) match {
-      case Some(t) if t.dataType == TimestampType ||
-        t.dataType == TimestampNTZType => t
-      case _ => return None
-    }
-    val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
-      nullable = true)()
-    val keyOutAttrs = keyFields.toSeq.zip(keyAttrs).zipWithIndex.map {
-      case ((f, kA), i) => AttributeReference(
-        s"__graft_key$i", f.dataType, nullable = kA.nullable)()
-    }
-    val cellOut = AttributeReference("__graft_cell", gExpr.dataType,
-      nullable = gExpr.nullable)()
-    val cr = new CondResidue("composite-keyed conditional hybrid",
-      reg.tsCol, reg.wheels.keySet, cols, outersUs, slotAttr, tsOut)
-    val newAggExprs = cr.rewriteAggExprs(aggExprs,
-      keyAttrs.zip(keyOutAttrs).map { case (kA, kO) =>
-        (Seq[Expression](kA), kO: Attribute)
-      } :+ ((Seq(slotGroup, gExpr), cellOut: Attribute))) match {
-      case Some(es) => es
-      case None => return None
-    }
-    def componentsOf(key: Any): Seq[Any] = {
-      val row = key.asInstanceOf[org.apache.spark.sql.Row]
-      keyFields.toSeq.zipWithIndex.map { case (f, i) =>
-        Literal.create(row.get(i), f.dataType).value }
-    }
-    val keyVals = new java.util.HashMap[Any, Seq[Any]]()
-    val cellVals = new java.util.HashMap[Long, Any]()
-    def cellOf(slotMs: Long): Any = {
-      val s0 = grid.floorOf(slotMs)
-      cellVals.computeIfAbsent(s0, k => slotLiteral(grid, k, grid.end(k)).value)
-    }
-    val rows = Seq.newBuilder[InternalRow]
-    outerInteriors.foreach { case (a, b) =>
-      anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-        val alls = reg.wheels.map {
-          case (c, _) if c == anyMeasure => c -> anyAll
-          case (c, i) => c -> i.minuteAt(key, slotMs)
-        }
-        rows += InternalRow.fromSeq(
-          keyVals.computeIfAbsent(key, k => componentsOf(k)) ++
-            (cellOf(slotMs) +: slotMs +:
-              (null +: cols.partialsRow(alls, anyAll.rows))))
-      }
-    }
-    val interiorRel = LocalRelation(
-      keyOutAttrs ++ (cellOut +: slotAttr +: tsOut +: cols.partialAttrs),
-      rows.result())
-    val mergedWins = cr.mergedEdgeWindows()
-    val child2: LogicalPlan =
-      if (mergedWins.isEmpty) interiorRel
-      else (residueParts(below, reg.tsCol, measures, mergedWins, shifts),
-          rebaseOnto(child, below, gExpr)) match {
-        case (Some(parts), Some(gEval)) =>
-          val edgeLeg = Project(
-            keyRaws.flatten.zipWithIndex.map { case (kr, i) =>
-              Alias(kr, s"__graft_key$i")(): NamedExpression
-            } ++ (Alias(gEval, "__graft_cell")() +:
-              Alias(Literal(null, LongType), "__graft_slot")() +:
-              Alias(tsAttrSrc, "__graft_ts")() +:
-              parts.edgePartials),
-            parts.edgeFilter)
-          Union(Seq(interiorRel, edgeLeg))
-        case _ =>
-          return refuse("composite-keyed conditional hybrid: the source " +
-            "is missing the typed ts/measure columns an edge scan needs")
-      }
-    Some(Aggregate(keyOutAttrs :+ cellOut, newAggExprs, child2))
-  }
+      keyAttrs: Seq[AttributeReference], slotGroup: Expression,
+      gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
+      child: LogicalPlan, below: LogicalPlan,
+      reg: WheelAcceleration.Keyed2Reg,
+      outersUs: Seq[(Long, Long)]): Option[LogicalPlan] =
+    keyGroups(keyAttrs, reg.keyCols,
+      reg.any.keyType.asInstanceOf[StructType].fields.toSeq.map(_.dataType),
+      below, (key, i) => key.asInstanceOf[org.apache.spark.sql.Row].get(i)).flatMap(keys =>
+      condHybrid("composite-keyed conditional hybrid", aggExprs, below,
+        reg.tsCol, keyedCondInterior(reg.wheels), outersUs,
+        keys :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below),
+        condSketchOf(None)))
 
   /** Keyed grouped hybrid (round 9): `GROUP BY (key, time-slot)` with
     * sub-minute range edges — the keyed analogue of

@@ -26,6 +26,30 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet.forall(_.startsWith("q_")))
   }
 
+  test("Verify refuses a filtered run over an existing oracle") {
+    val out = java.nio.file.Files.createTempDirectory("verify-refusal")
+    val oracle = out.resolve("oracle_sql.json")
+    java.nio.file.Files.writeString(oracle, "{\"q_full\": \"SELECT 1\"}")
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx256m") ++
+      jvmArgs ++ Seq("-cp", System.getProperty("java.class.path"),
+        "graft.Verify", TestSpark.Sf0001, out.toString, "q_wheel_cond_residue_sql")
+    try {
+      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      val log = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+      assert(proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), log)
+      assert(proc.exitValue() != 0, log)
+      assert(log.contains("already exists"), log)
+      // nothing ran: the full oracle is intact and no result was written
+      assert(java.nio.file.Files.readString(oracle) == "{\"q_full\": \"SELECT 1\"}")
+      assert(!java.nio.file.Files.exists(out.resolve("q_wheel_cond_residue_sql")))
+    } finally {
+      java.nio.file.Files.deleteIfExists(oracle)
+      java.nio.file.Files.deleteIfExists(out)
+    }
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }

@@ -2772,6 +2772,33 @@ class WheelAccelerationSpec extends AnyFunSuite {
     WheelAcceleration.clear()
   }
 
+  test("enable registers the SQL introspection functions once per session") {
+    // every registration calls enable; a re-register would replace the
+    // function (and log a Spark WARN) on each WheelIngest batch swap
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("graft_bail_reason", "graft_acceleration_status")
+    def builders(s: org.apache.spark.sql.SparkSession) = names.map(n =>
+      s.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    WheelAcceleration.clear()
+    register()
+    val first = builders(spark)
+    assert(first.forall(_.nonEmpty), first)
+    register()
+    builders(spark).zip(first).foreach { case (again, once) =>
+      assert(again.get eq once.get, "enable re-registered a function")
+    }
+    // a new session starts without them and gets both on its first
+    // registration
+    val other = spark.newSession()
+    assert(builders(other).forall(_.isEmpty))
+    WheelAcceleration.register(other, path, Q.t(other, dir, "events"))
+    assert(builders(other).forall(_.nonEmpty))
+    val status = other.sql(s"SELECT graft_acceleration_status('$path') AS s")
+      .collect()(0).getString(0)
+    assert(status.contains("FRESH"), status)
+    WheelAcceleration.clear()
+  }
+
   test("OR-ranges: approximate spellings fold via MERGED sketches (round 13)") {
     WheelAcceleration.clear()
     register()
@@ -3808,6 +3835,78 @@ class WheelAccelerationSpec extends AnyFunSuite {
       spark.conf.unset(capKnob)
       WheelAcceleration.clear()
     }
+  }
+
+  test("sub-minute conditional hybrids share the clipped second-moment " +
+      "conditioning gate across all five group shapes") {
+    // Minutes 0–4 sit near 0 and minutes 5–9 near 2e8, each with ≤0.04
+    // spread. Every shape centers second moments on the outer
+    // interior's global mean (~1e8): a VAR_POP clipped to the low
+    // regime is hopelessly ill-conditioned there and must keep the
+    // scan, while a clip spanning both regimes is dominated by the 1e16
+    // between-regime spread, folds, and matches the scan.
+    import spark.implicits._
+    val src = new java.io.File("target/test-fixtures/accel/condgate5.parquet")
+      .getAbsolutePath
+    val t0 = Q.Jan1
+    (0 until 100).map { i =>
+      val minute = (i / 10).toLong
+      val base = if (minute < 5) 0.0 else 2e8
+      (new java.sql.Timestamp(t0 + minute * 60000L + (i % 10) * 6000L),
+        if (i % 2 == 0) "a" else "b", if ((i / 2) % 2 == 0) "x" else "y",
+        base + (i % 5) * 0.01)
+    }.toDF("ts", "k", "k2", "value").write.mode("overwrite").parquet(src)
+    val events = spark.read.parquet(src)
+    events.createOrReplaceTempView("ev_condgate5")
+    val hour = "(unix_millis(ts) div 3600000) * 3600000 AS h"
+    // (shape, registration, leading select columns, GROUP BY arity)
+    val shapes: Seq[(String, () => Unit, String, Int)] = Seq(
+      ("ungrouped", () => WheelAcceleration.register(spark, src, events), "", 0),
+      ("keyed", () => WheelAcceleration.registerKeyed(spark, src, events, "k"),
+        "k, ", 1),
+      ("time-grouped", () => WheelAcceleration.register(spark, src, events),
+        s"$hour, ", 1),
+      ("keyed x time", () => WheelAcceleration.registerKeyed(
+        spark, src, events, "k"), s"k, $hour, ", 2),
+      ("composite keys x time", () => WheelAcceleration.registerKeyedComposite(
+        spark, src, events, Seq("k", "k2")), s"k, k2, $hour, ", 3))
+    // sub-minute outer edges on both ends
+    val outer = s"unix_millis(ts) >= ${t0 + 7000L} AND " +
+      s"unix_millis(ts) < ${t0 + 600000L - 30000L}"
+    def sql(leading: String, arity: Int, clip: String): String = {
+      val by = (1 to arity).mkString(", ")
+      s"SELECT ${leading}VAR_POP(value) FILTER (WHERE $clip) AS v " +
+        s"FROM ev_condgate5 WHERE $outer" +
+        (if (arity == 0) "" else s" GROUP BY $by ORDER BY $by")
+    }
+    def folds(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect { case l: LocalRelation => l }
+        .nonEmpty
+    try shapes.foreach { case (shape, reg, leading, arity) =>
+      WheelAcceleration.clear()
+      reg()
+      val bad = spark.sql(sql(leading, arity,
+        s"unix_millis(ts) < ${t0 + 5 * 60000L}"))
+      assert(!folds(bad), s"$shape:\n" + bad.queryExecution.optimizedPlan.treeString)
+      assert(WheelAcceleration.lastBailReason(src).getOrElse("")
+        .contains("ill-conditioned"),
+        s"$shape: ${WheelAcceleration.lastBailReason(src)}")
+      // the protected values: the true within-regime variance is ~2e-4
+      bad.collect().foreach(r => assert(r.getDouble(arity) < 1.0, s"$shape: $r"))
+      val okSql = sql(leading, arity, s"unix_millis(ts) >= ${t0 + 60000L}")
+      val ok = spark.sql(okSql)
+      assert(folds(ok), s"$shape:\n" + ok.queryExecution.optimizedPlan.treeString)
+      val got = ok.collect().toSeq
+      WheelAcceleration.clear()
+      val want = spark.sql(okSql).collect().toSeq
+      assert(got.map(r => r.toSeq.take(arity)) == want.map(r => r.toSeq.take(arity)),
+        s"$shape: $got vs $want")
+      got.zip(want).foreach { case (g, w) =>
+        val (gv, wv) = (g.getDouble(arity), w.getDouble(arity))
+        assert(math.abs(gv - wv) <= 1e-9 * math.max(gv.abs, wv.abs),
+          s"$shape: fold $g vs scan $w")
+      }
+    } finally WheelAcceleration.clear()
   }
 
   test("keyed SKETCH spellings go DISTRIBUTED above the key ceiling " +
