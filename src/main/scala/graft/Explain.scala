@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-dump harness (optimization rounds): writes `.explain("formatted")`
   * for the named queries to <outDir>/<name>_<tag>.txt so plan-shape claims
-  * in OPTIMIZATION_*.md are committed evidence, not prose.
+  * in OPTIMIZATION_*.md are committed evidence, not prose. Beside it,
+  * <outDir>/<name>_<tag>.optimized.txt holds the optimized logical plan
+  * with its `#\d+` expression ids stripped, so two runs with the same
+  * tag into two directories compare by `diff -r` (the plan-identity
+  * check of a refactor).
   *
   * Usage: runMain graft.Explain <sfDir> <outDir> <tag> q_a,q_b,...
   * (tag is "before"/"after"). Not part of the library or driver contract.
@@ -31,10 +35,14 @@ object Explain {
       val df = SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"),
-        txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"[explain] wrote $outDir/${n}_$tag.txt")
+      val optimized = df.queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+", "")
+      Seq(s"${n}_$tag.txt" -> txt,
+        s"${n}_$tag.optimized.txt" -> optimized).foreach { case (f, body) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$f"),
+          body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        println(s"[explain] wrote $outDir/$f")
+      }
     }
     spark.stop()
   }

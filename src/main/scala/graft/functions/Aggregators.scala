@@ -153,9 +153,14 @@ object Aggregators {
     override def outputEncoder: Encoder[Seq[(Long, Long)]] = bufferEncoder
   }
 
-  /** Register both on a session as SQL-callable UDAFs. */
-  def register(spark: org.apache.spark.sql.SparkSession, topN: Int = 3): Unit = {
-    spark.udf.register("graft_all", udaf(allAgg))
-    spark.udf.register("graft_topn", udaf(TopN(topN)))
+  /** Register both on a session as SQL-callable UDAFs (`graft_topn`
+    * keeps the top 3), once per session: a re-register would replace
+    * them with a Spark WARN on every use. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    def missing(name: String): Boolean =
+      !spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+    if (missing("graft_all")) spark.udf.register("graft_all", udaf(allAgg))
+    if (missing("graft_topn")) spark.udf.register("graft_topn", udaf(TopN(3)))
   }
 }

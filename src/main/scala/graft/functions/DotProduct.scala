@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,11 +64,15 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   private val FnName = "graft_dot"
 
-  /** Register in the session's function registry and return a builder;
+  /** Register in the session's function registry, once per session (a
+    * re-register would replace it with a Spark WARN on every use);
     * `expr("graft_dot(a, b)")` then plans the codegen expression. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(FnName)))
+      registry.createOrReplaceTempFunction(
+        FnName, exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  }
 
   /** Column API: registers on the active session, builds the call. */
   def dot(spark: SparkSession, a: Column, b: Column): Column = {

@@ -1398,6 +1398,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     sketch = WheelAcceleration.lookup(path)(_.sketch).filter(_.tsCol == tsCol)
     wheels = sumReg.map(_.wheels).getOrElse(Map.empty[String, WheelIndex])
     (aOpt, bOpt) <- filterOpt match {
+      // an OR of ranges over sum wheels was [[rewriteOrRanges]]' to
+      // fold: its refusal note stands
+      case Some((cond, _)) if wheels.nonEmpty &&
+          orRangesUs(cond, tsCol).isDefined => None
       case Some((cond, _)) =>
         bail(path, "filter is not a bare half-open range on " +
           s"the registered ts column '$tsCol'")(rangeUs(cond, tsCol))
@@ -1432,7 +1436,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       } else if (wheels.nonEmpty)
         bail(path, foldNote("unaligned range not foldable hybrid (no " +
           "whole-minute interior, or aggregates without a merge form)"))(
-          rewriteResidue(agg, aggExprs, below, tsCol, wheels, aUs, bUs)
+          residueHybrid("residue hybrid", aggExprs, below, tsCol,
+            residueInterior(wheels), Seq((aUs, bUs)), Nil, None)
             .orElse {
               // round 17: an approximate spelling refuses the numeric
               // hybrid (no merge form) but folds through the residue
@@ -1500,7 +1505,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           bail(path, foldNote("unaligned OR-ranges not foldable hybrid " +
             "(no whole-minute interior, or aggregates without a merge " +
             "form)"))(
-            orRangesResidue(agg, aggExprs, below, tsCol, wheels, merged)
+            residueHybrid("OR-ranges residue hybrid", aggExprs, below, tsCol,
+              residueInterior(wheels), merged, Nil, None)
               .orElse {
                 // round 17: approximate spellings over unaligned OR
                 // outers ride the residue sketch seam (the conditional
@@ -1515,72 +1521,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
               })
       }
     } yield result
-  }
-
-  /** Hybrid fold for an OR of DISJOINT unaligned µs ranges (round 14):
-    * one interior partials row per range with a whole-minute interior,
-    * plus a single edge leg whose filter is the OR of every sub-minute
-    * window (a range too short for an interior contributes its whole
-    * span as one window). Disjointness (mergeRanges ran) guarantees no
-    * row is read twice. */
-  private def orRangesResidue(
-      agg: Aggregate, aggExprs: Seq[NamedExpression], below: LogicalPlan,
-      tsCol: String, wheels: Map[String, WheelIndex],
-      rangesUs: Seq[(Long, Long)]): Option[LogicalPlan] = {
-    val MinuteUs = MinuteMs * 1000L
-    final case class R(aUs: Long, bUs: Long) {
-      val aCeilUs0: Long = Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs
-      val bFloorUs0: Long = Math.floorDiv(bUs, MinuteUs) * MinuteUs
-      // retained core per range (round 15): under KeepN the interior
-      // shrinks to retained-tier boundaries; a range with NO retained
-      // core degrades to ALL-edge — its whole span scans through the
-      // pushed edge filter, still strictly less work than the full-scan
-      // fallback the old refusal paid, and the other ranges keep their
-      // folded interiors
-      val core: Option[(Long, Long)] =
-        if (aCeilUs0 >= bFloorUs0) None
-        else retainedCoreMs(wheels, aCeilUs0 / 1000L, bFloorUs0 / 1000L)
-          .map { case (a, b) => (a * 1000L, b * 1000L) }
-      def aCeilUs: Long = core.map(_._1).getOrElse(aCeilUs0)
-      def bFloorUs: Long = core.map(_._2).getOrElse(bFloorUs0)
-      def hasInterior: Boolean = core.isDefined
-      def edgeWindows: Seq[(Long, Long)] =
-        if (hasInterior) Seq((aUs, aCeilUs), (bFloorUs, bUs))
-        else Seq((aUs, bUs))
-    }
-    val rs = rangesUs.map { case (a, b) => R(a, b) }
-    foldBailNote = "" // a per-range core shrink/degrade is not a refusal
-    val interiors = rs.filter(_.hasInterior)
-    if (interiors.isEmpty) return None // nothing foldable — keep the scan
-    val needCond = hasSecondMoment(aggExprs)
-    val interiorAlls: Seq[Map[String, AllAggregate]] = interiors.map(r =>
-      wheels.map { case (c, i) =>
-        c -> i.query(r.aCeilUs / 1000L, r.bFloorUs / 1000L) })
-    // shift on the COMBINED interior mean (the single-range path's
-    // argument, extended: the union range's own mean)
-    val combined: Map[String, AllAggregate] = wheels.keys.map { c =>
-      c -> interiorAlls.map(_(c)).reduce(_ combine _)
-    }.toMap
-    val shifts = shiftsFor(needCond, wheels.keys, combined)
-    for {
-      parts <- residueParts(below, tsCol, wheels.keys.toSeq,
-        rs.flatMap(_.edgeWindows), shifts)
-      newAggExprs <- mergeAggExprs(parts.cols, wheels.keySet, aggExprs, Seq.empty)
-      if !needCond ||
-        interiorAlls.forall(_.forall { case (c, al) =>
-          al.varWellConditionedAround(parts.cols.shiftOf(c)) }) || {
-          foldBailNote = IllCondNote; false
-        }
-    } yield {
-      val rows = interiorAlls.flatMap { alls =>
-        val anyAll = alls.valuesIterator.next()
-        if (anyAll.rows == 0L) None
-        else Some(InternalRow.fromSeq(parts.partialsRow(alls, anyAll.rows)))
-      }
-      val interior = LocalRelation(parts.partialAttrs, rows)
-      val edgeLeg = Project(parts.edgePartials, parts.edgeFilter)
-      Aggregate(Nil, newAggExprs, Union(Seq(interior, edgeLeg)))
-    }
   }
 
   /** CONDITIONAL-AGGREGATE fold (round 14): the period-comparison
@@ -3233,28 +3173,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }.reverse
   }
 
-  /** HYBRID fold for an UNALIGNED range (round 9, VERDICT r8 #6): the
-    * wheel is minute-granular, so `[a, b)` with sub-minute edges cannot
-    * fold to a constant — but its whole-minute interior
-    * `[ceil(a), floor(b))` can. The Aggregate is rewritten to merge-form
-    * aggregates over a union of
-    *
-    *  - ONE pre-aggregated partials row (sum/min/max per measure + row
-    *    count) computed from the index at plan time, and
-    *  - a parquet scan filtered to ONLY the sub-minute edges — together
-    *    under two minutes of data, expressed as direct `ts >= lit AND
-    *    ts < lit` bounds so they are pushed to the reader
-    *    (PushedFilters). The reader still reads every row group it
-    *    cannot skip: on a `TIMESTAMP_NTZ` ts Spark skips none, so the
-    *    edge scan reads the whole table.
-    *
-    * Merge forms: SUM→SUM(sum), MIN→MIN(min), MAX→MAX(max),
-    * COUNT→coalesce(SUM(rows), 0), AVG→SUM(sum)/SUM(rows) — `rows`
-    * stands in for every per-measure count because registered measures
-    * are never-null (the same contract [[foldRow]] relies on). Bails
-    * (keeping the full scan) on any unsupported aggregate, a missing
-    * measure, a non-timestamp ts column, or an interior shorter than
-    * one slot. */
   /** The per-measure partial-column attributes (sum/min/max per
     * measure + the shared row count) that a merge-form Aggregate
     * ([[mergeAggExprs]]) reads — shared by the hybrid residue folds'
@@ -3649,10 +3567,12 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * interior SHRINKS to boundaries aligned for the tier retained at
     * each end (hour, then day), and the edge scans absorb the
     * difference — each edge window grows to at most one
-    * coarsest-retained slot, still expressed as pushed ts bounds the
-    * parquet reader prunes by, a sliver at any source volume. None when
-    * even the widened core has no retained-tier cover: evicted state
-    * must keep the scan, never read as empty. */
+    * coarsest-retained slot. Its ts bounds are pushed to the reader,
+    * but the reader still reads every row group it cannot skip (all of
+    * them on a `TIMESTAMP_NTZ` ts), so a wider window costs filtered
+    * rows, not a bounded read. None when even the widened core has no
+    * retained-tier cover: evicted state must keep the scan, never read
+    * as empty. */
   private def retainedCoreMs(wheels: Map[String, WheelIndex],
       aCeilMs: Long, bFloorMs: Long): Option[(Long, Long)] = {
     val idx = wheels.valuesIterator.next()
@@ -3685,144 +3605,143 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewriteResidue(
-      agg: Aggregate, aggExprs: Seq[NamedExpression], below: LogicalPlan,
-      tsCol: String, wheels: Map[String, WheelIndex],
-      aUs: Long, bUs: Long): Option[LogicalPlan] = {
-    // µS bounds (round 14): sub-ms edges (direct-timestamp closed
-    // bounds) fold through the same hybrid. floorDiv, not truncating
-    // division: pre-1970 (negative-epoch) bounds would otherwise round
-    // toward zero and let the interior overlap the edges or swallow
-    // rows past b
-    val MinuteUs = MinuteMs * 1000L
-    val aCeil0 = Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs
-    val bFloor0 = Math.floorDiv(bUs, MinuteUs) * MinuteUs
-    if (aCeil0 >= bFloor0) return None // no whole-minute interior to fold
-    // retained core (round 15): KeepN may shrink the interior and widen
-    // the edge windows instead of losing the whole fold to a scan
-    val (aCeil, bFloor) =
-      retainedCoreMs(wheels, aCeil0 / 1000L, bFloor0 / 1000L) match {
-        case Some((a, b)) => (a * 1000L, b * 1000L)
-        case None => return None
-      }
-    val needCond = hasSecondMoment(aggExprs)
-    val alls = wheels.map { case (c, i) =>
-      c -> i.query(aCeil / 1000L, bFloor / 1000L) }
-    // the interior here is ONE combined partial, so centering on its
-    // own mean makes the gate vacuous by construction — the single-
-    // partial recombination is genuinely well-conditioned at any data
-    val shifts = shiftsFor(needCond, wheels.keys, alls)
-    for {
-      parts <- residueParts(below, tsCol, wheels.keys.toSeq,
-        Seq((aUs, aCeil), (bFloor, bUs)), shifts)
-      newAggExprs <- mergeAggExprs(parts.cols, wheels.keySet, aggExprs, Seq.empty)
-      if !needCond ||
-        alls.forall { case (c, al) =>
-          al.varWellConditionedAround(parts.cols.shiftOf(c)) } || {
-          foldBailNote = IllCondNote; false // record WHY the fold is refused
-        }
-    } yield {
-      // union leg 1: the interior, folded from the index to one row
-      val anyAll = alls.valuesIterator.next()
-      val interiorRows =
-        if (anyAll.rows == 0L) Seq.empty
-        else Seq(InternalRow.fromSeq(parts.partialsRow(alls, anyAll.rows)))
-      val interior = LocalRelation(parts.partialAttrs, interiorRows)
-      // union leg 2: the sub-minute edges as a (prunable) scan
-      val edgeLeg = Project(parts.edgePartials, parts.edgeFilter)
-      Aggregate(Nil, newAggExprs, Union(Seq(interior, edgeLeg)))
+  /** RESIDUE HYBRID for unconditional aggregates over ranges with
+    * SUB-MINUTE edges (round 9; OR-of-ranges round 14, retained cores
+    * round 15). The wheel is minute-granular, so `[a, b)` with
+    * sub-minute edges cannot fold to a constant — but its whole-minute
+    * interior `[ceil(a), floor(b))` can. The Aggregate is rewritten to
+    * merge form ([[mergeAggExprs]]) over the union of
+    *
+    *  - interior partials rows computed from the index at plan time,
+    *    pre-keyed to their groups: ONE row per range when ungrouped,
+    *    else one per (key, grid cell) — a tier walk per cell at or
+    *    below [[maxFoldRows]], the index's tier entries above it (an
+    *    entry feed that cannot conform to the grid refuses: the cap is
+    *    a plan-time bound) — and
+    *  - ONE edge leg: a scan filtered to the OR of every range's
+    *    sub-minute windows, its rows deriving their groups from the raw
+    *    row. A range with no retained core scans whole as one window;
+    *    disjoint ranges (mergeRanges ran) mean no row is read twice.
+    *    Aligned ranges leave no window and the plan is interior-only.
+    *
+    * ONE builder serves every shape — ungrouped, time cell, key × cell
+    * and composite keys × cell, each over a single range or an OR of
+    * ranges: the shapes differ only in their [[CondGroup]] columns and
+    * their [[ResidueInterior]] (unkeyed or keyed index). Second moments
+    * center on the combined interior's mean and every interior row must
+    * stay well-conditioned around it (raw edge rows cannot know their
+    * group's shift), else the scan is kept with [[IllCondNote]].
+    *
+    * Scale: the edge scan's ts bounds are pushed to the reader, which
+    * still reads every row group it cannot skip — on a `TIMESTAMP_NTZ`
+    * ts Spark skips none, so the sliver reads the whole table. */
+  private def residueHybrid(noun: String, aggExprs: Seq[NamedExpression],
+      below: LogicalPlan, tsCol: String, interior: ResidueInterior,
+      rangesUs: Seq[(Long, Long)], groups: Seq[CondGroup],
+      grid: Option[SlotGrid]): Option[LogicalPlan] = {
+    def refuse(msg: String): Option[LogicalPlan] = {
+      if (foldBailNote.isEmpty) foldBailNote = msg
+      None
     }
+    // each range's retained whole-minute core (ms); a range without one
+    // scans whole. No core at all keeps the scan with the retention
+    // note; a per-range shrink or degrade is not a refusal
+    val note = foldBailNote
+    val cores = rangesUs.map { case (a, b) =>
+      minuteInteriorMs(a, b).flatMap { case (x, y) => interior.core(x, y) } }
+    val interiors = cores.flatten
+    if (interiors.isEmpty) return None
+    foldBailNote = note
+    val edges = rangesUs.zip(cores).flatMap {
+      case ((a, b), Some((x, y))) => Seq((a, x * 1000L), (y * 1000L, b))
+      case (r, None) => Seq(r)
+    }.filter(w => w._1 < w._2)
+    val measures = interior.measures
+    def merged(x: Map[String, AllAggregate], y: Map[String, AllAggregate]) =
+      x.map { case (c, al) => c -> al.combine(y(c)) }
+    val needCond = hasSecondMoment(aggExprs)
+    // the shift source: every key's tier walk over each retained core
+    lazy val combined = interiors.map { case (a, b) =>
+      interior.keys.foldLeft(measures.map(_ -> AllAggregate.identity).toMap)(
+        (acc, k) => merged(acc, interior.query(k, a, b)))
+    }.reduce(merged)
+    val shifts = shiftsFor(needCond, measures, c => combined(c))
+    val parts =
+      if (edges.isEmpty) None
+      else residueParts(below, tsCol, measures, edges, shifts) match {
+        case None => return refuse(s"$noun: the source is missing the " +
+          "typed ts/measure columns an edge scan needs")
+        case some => some
+      }
+    val edgeGroups = groups.flatMap(_.edge)
+    if (parts.nonEmpty && edgeGroups.size != groups.size)
+      return refuse(s"$noun: a group column is not derivable from the " +
+        "raw rows the edge scan reads")
+    val cols = parts.fold(partialColsFor(measures, shifts))(_.cols)
+    val newAggExprs = mergeAggExprs(cols, measures.toSet, aggExprs,
+      groups.map(g => (g.spellings, g.out: Attribute))).getOrElse(return None)
+    val overCap = grid.exists(g => interior.keys.size.toLong *
+      interiors.map { case (a, b) => cellCount(g, a, b, maxFoldRows) }.sum >
+      maxFoldRows)
+    val entries: Iterator[CondEntry] =
+      if (overCap) interior.entries(interiors, grid.get).getOrElse(return None)
+      else interior.keys.iterator.flatMap { key =>
+        interiors.iterator.flatMap { case (a, b) =>
+          grid.fold(Iterator.single((a, b)))(g => g.starts(a, b).map(s0 =>
+            (math.max(a, s0), math.min(b, g.end(s0)))))
+            .map { case (x, y) => (key, x, interior.query(key, x, y)) }
+            .filter(_._3(measures.head).rows > 0L)
+        }
+      }
+    var conditioned = true
+    val rows = entries.map { case (key, slotMs, alls) =>
+      if (needCond && !alls.forall { case (c, al) =>
+        al.varWellConditionedAround(cols.shiftOf(c)) }) conditioned = false
+      InternalRow.fromSeq(groups.map(_.interior(key, slotMs)) ++
+        cols.partialsRow(alls, alls(measures.head).rows))
+    }.toList
+    if (!conditioned) { foldBailNote = IllCondNote; return None }
+    val interiorRel = LocalRelation(groups.map(_.out) ++ cols.partialAttrs, rows)
+    val child = parts.fold(interiorRel: LogicalPlan)(p => Union(Seq(interiorRel,
+      Project(groups.zip(edgeGroups).map { case (g, e) =>
+        Alias(e, g.out.name)(): NamedExpression } ++ p.edgePartials,
+        p.edgeFilter))))
+    Some(Aggregate(groups.map(_.out), newAggExprs, child))
   }
 
-  /** Grouped hybrid (round 9): `GROUP BY time-slot` with sub-minute
-    * range edges. Interior slots fold to one partials row each (clipped
-    * to `[ceil(a), floor(b))`); the edge rows re-derive their slot key
-    * by evaluating the ORIGINAL grouping expression over the raw rows,
-    * so the final group-by merges each boundary slot's folded interior
-    * with its scanned sub-minute residue — bit-exact, with the scan
-    * bounded to under two minutes of data. */
-  private def rewriteGroupedResidue(
-      agg: Aggregate, groupKey: Expression, gExpr: Expression,
-      grid: SlotGrid, aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, tsCol: String, wheels: Map[String, WheelIndex],
-      aUs: Long, bUs: Long): Option[LogicalPlan] = {
-    // µS bounds (round 14); floorDiv, not truncating division:
-    // pre-1970 (negative-epoch) bounds would otherwise round toward
-    // zero and let the interior overlap the edges or swallow rows
-    // past b
-    val MinuteUs = MinuteMs * 1000L
-    val aCeil0 = Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs / 1000L
-    val bFloor0 = Math.floorDiv(bUs, MinuteUs) * MinuteUs / 1000L
-    if (aCeil0 >= bFloor0) return None
-    // retained core (round 15): shrink the interior under KeepN rather
-    // than losing the grouped hybrid to a scan
-    val (aCeil, bFloor) = retainedCoreMs(wheels, aCeil0, bFloor0) match {
-      case Some(c) => c
-      case None => return None
-    }
-    val needCond = hasSecondMoment(aggExprs)
-    val shifts = shiftsFor(needCond, wheels.keys,
-      c => wheels(c).query(aCeil, bFloor))
-    for {
-      parts <- residueParts(below, tsCol, wheels.keys.toSeq,
-        Seq((aUs, aCeil * 1000L), (bFloor * 1000L, bUs)), shifts)
-      gEval <- rebaseOnto(child, below, gExpr)
-      slotAttr = AttributeReference(
-        "__graft_slot", gExpr.dataType, nullable = gExpr.nullable)()
-      newAggExprs <- mergeAggExprs(parts.cols, wheels.keySet, aggExprs,
-        Seq((Seq(groupKey, gExpr), slotAttr)))
-      plan <- {
-        var conditioned = true
-        def check(alls: collection.Map[String, AllAggregate]): Unit =
-          if (needCond && !alls.forall { case (c, al) =>
-            al.varWellConditionedAround(parts.cols.shiftOf(c)) })
-            conditioned = false
-        val rows = Seq.newBuilder[InternalRow]
-        val interiorFeed =
-          if (cellCount(grid, aCeil, bFloor, maxFoldRows) <= maxFoldRows) None
-          else interiorEntries(wheels, parts.measures.head,
-            Seq((aCeil, bFloor)), grid)
-        if (interiorFeed.isDefined) {
-          // above the fold cap: ship the tier state (O(1) per entry —
-          // minutes when complete, the retained-tier cover under KeepN,
-          // round 15) pre-keyed to its grid slot and let the final
-          // merge Aggregate combine it — same rows, no per-cell walks
-          val measures = parts.measures
-          interiorFeed.get.apply().foreach { case (tier, slotMs, anyAll) =>
-            val alls = measures.map {
-              case c if c == measures.head => c -> anyAll
-              case c => c -> wheels(c).stateAt(tier, slotMs)
-            }.toMap
-            check(alls)
-            val s0 = grid.floorOf(slotMs)
-            rows += InternalRow.fromSeq(slotLiteral(grid, s0, grid.end(s0)).value +:
-              parts.partialsRow(alls, anyAll.rows))
-          }
-        } else {
-          val it = grid.starts(aCeil, bFloor)
-          while (it.hasNext) {
-            val s0 = it.next()
-            val s1 = grid.end(s0)
-            val alls = wheels.map { case (c, i) =>
-              c -> i.query(math.max(aCeil, s0), math.min(bFloor, s1)) }
-            val anyAll = alls.valuesIterator.next()
-            if (anyAll.rows > 0L) {
-              check(alls)
-              rows += InternalRow.fromSeq(
-                slotLiteral(grid, s0, s1).value +: parts.partialsRow(alls, anyAll.rows))
-            }
-          }
-        }
-        if (!conditioned) { foldBailNote = IllCondNote; None } // keep the scan
-        else {
-          val interior = LocalRelation(slotAttr +: parts.partialAttrs, rows.result())
-          val edgeLeg = Project(
-            Alias(gEval, "__graft_slot")() +: parts.edgePartials, parts.edgeFilter)
-          Some(Aggregate(Seq(slotAttr), newAggExprs, Union(Seq(interior, edgeLeg))))
-        }
-      }
-    } yield plan
+  /** A residue hybrid's interior: its measures, its keys (one null key
+    * on an unkeyed index), one key's partials over a minute-aligned ms
+    * span, the retained core of such a span (the keyed index has no
+    * retention, so its core is the span), and the above-cap feed of
+    * (key, slot ms, partials) entries over disjoint ms ranges, each
+    * inside one grid cell — None, note pinned, when none conforms. */
+  private final case class ResidueInterior(measures: Seq[String],
+      keys: Seq[Any],
+      query: (Any, Long, Long) => Map[String, AllAggregate],
+      core: (Long, Long) => Option[(Long, Long)],
+      entries: (Seq[(Long, Long)], SlotGrid) => Option[Iterator[CondEntry]])
+
+  private def residueInterior(wheels: Map[String, WheelIndex]): ResidueInterior = {
+    val head = wheels.keys.head
+    ResidueInterior(wheels.keys.toSeq, Seq(null),
+      (_, a, b) => wheels.map { case (c, i) => c -> i.query(a, b) },
+      (a, b) => retainedCoreMs(wheels, a, b),
+      // minutes when complete, the retained-tier cover under KeepN
+      (ranges, grid) => interiorEntries(wheels, head, ranges, grid).map(feed =>
+        feed().map { case (tier, slotMs, anyAll) =>
+          (null: Any, slotMs, wheels.map {
+            case (c, _) if c == head => c -> anyAll
+            case (c, i) => c -> i.stateAt(tier, slotMs)
+          })
+        }))
   }
+
+  private def keyedResidueInterior(
+      wheels: Map[String, graft.wheel.KeyedWheelIndex]): ResidueInterior =
+    ResidueInterior(wheels.keys.toSeq, wheels.head._2.keys,
+      (key, a, b) => wheels.map { case (c, i) => c -> i.query(key, a, b) },
+      (a, b) => Some((a, b)),
+      (ranges, _) => Some(keyedCondInterior(wheels).entries(ranges)))
 
   /** GROUPED conditional hybrid (round 17, VERDICT r16 #1): `GROUP BY
     * time-cell` + per-aggregate range conditions, past the plan-time
@@ -3842,139 +3761,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       condInterior(wheels), outersUs,
       Seq(cellGroup(grid, gExpr, Seq(groupKey, gExpr), child, below)),
       condSketchOf(sketchOpt))
-
-  /** KEYED-GROUPED conditional hybrid (round 17): `GROUP BY (key,
-    * time-cell)` + per-aggregate range conditions, in EVERY regime
-    * (below/above the ceiling, aligned or sub-minute edges, single and
-    * OR outers) — [[condHybrid]] grouped per (key, cell). */
-  private def foldKeyedGroupedConditionalResidue(keyAttr: AttributeReference,
-      slotGroup: Expression, gExpr: Expression, grid: SlotGrid,
-      aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, reg: WheelAcceleration.KeyedReg,
-      outersUs: Seq[(Long, Long)],
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] =
-    keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType), below,
-      (key, _) => key).flatMap(keys =>
-      condHybrid("keyed-grouped conditional hybrid", aggExprs, below,
-        reg.tsCol, keyedCondInterior(reg.wheels), outersUs,
-        keys :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below),
-        keyedCondSketchOf(keyedSk)))
-
-  /** Grouped hybrid for an OR of DISJOINT unaligned µs ranges (round
-    * 14): the grouped sibling of [[orRangesResidue]] — one interior
-    * partials row per (range, non-empty cell) keyed to its slot, ONE
-    * edge leg whose filter ORs every sub-minute window and whose rows
-    * re-derive their slot key from the raw rows; the final group-by
-    * merges per slot (two ranges' contributions to the same cell are
-    * simply two partial rows). Above the plan-time cell ceiling the
-    * INTERIOR rows switch to the index's minute states (round 14) —
-    * the whole-minute interiors are minute-aligned, so no per-range
-    * clipping is needed — and only a retention-evicted minute tier
-    * still keeps the scan. */
-  private def orGroupedResidue(
-      agg: Aggregate, groupKey: Expression, gExpr: Expression,
-      grid: SlotGrid, aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, tsCol: String, wheels: Map[String, WheelIndex],
-      rangesUs: Seq[(Long, Long)]): Option[LogicalPlan] = {
-    val MinuteUs = MinuteMs * 1000L
-    final case class R(aUs: Long, bUs: Long) {
-      val aCeilMs0: Long =
-        Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs / 1000L
-      val bFloorMs0: Long = Math.floorDiv(bUs, MinuteUs) * MinuteUs / 1000L
-      // retained core per range (round 15) — see [[orRangesResidue]]:
-      // a range with no retained core degrades to all-edge
-      val core: Option[(Long, Long)] =
-        if (aCeilMs0 >= bFloorMs0) None
-        else retainedCoreMs(wheels, aCeilMs0, bFloorMs0)
-      def aCeilMs: Long = core.map(_._1).getOrElse(aCeilMs0)
-      def bFloorMs: Long = core.map(_._2).getOrElse(bFloorMs0)
-      def hasInterior: Boolean = core.isDefined
-      def edgeWindows: Seq[(Long, Long)] =
-        if (hasInterior) Seq((aUs, aCeilMs * 1000L), (bFloorMs * 1000L, bUs))
-        else Seq((aUs, bUs))
-    }
-    val rs = rangesUs.map { case (a, b) => R(a, b) }
-    foldBailNote = "" // a per-range core shrink/degrade is not a refusal
-    val interiors = rs.filter(_.hasInterior)
-    if (interiors.isEmpty) return None
-    // past the plan-time cell ceiling the INTERIOR goes DISTRIBUTED
-    // (round 14, closing the last pinned OR-range refusal): the
-    // per-range whole-minute interiors are themselves minute-ALIGNED,
-    // so their minute states need no per-range clipping — they ship as
-    // partials rows keyed to their grid slot (the same O(minute
-    // entries) emission distributedGrouped proves) and the ONE
-    // edge leg unions in unchanged; the final merge Aggregate groups
-    // per slot on the cluster. Only a retention-evicted minute tier
-    // still refuses.
-    val distributedInterior = interiors.map(r =>
-      cellCount(grid, r.aCeilMs, r.bFloorMs, maxFoldRows)).sum > maxFoldRows
-    // retention-aware feed (round 15): a KeepN-evicted minute tier no
-    // longer refuses outright — the interiors cover through retained
-    // coarser tiers where a grid-conforming cover exists
-    val interiorFeed: Option[() => Iterator[(graft.wheel.Tier, Long, AllAggregate)]] =
-      if (!distributedInterior) None
-      else interiorEntries(wheels, wheels.keys.head,
-        interiors.map(r => (r.aCeilMs, r.bFloorMs)), grid) match {
-        case None => return None // note set by interiorEntries
-        case some => some
-      }
-    val needCond = hasSecondMoment(aggExprs)
-    val shifts = shiftsFor(needCond, wheels.keys,
-      c => interiors.map(r => wheels(c).query(r.aCeilMs, r.bFloorMs))
-        .reduce(_ combine _))
-    for {
-      parts <- residueParts(below, tsCol, wheels.keys.toSeq,
-        rs.flatMap(_.edgeWindows), shifts)
-      gEval <- rebaseOnto(child, below, gExpr)
-      slotAttr = AttributeReference(
-        "__graft_slot", gExpr.dataType, nullable = gExpr.nullable)()
-      newAggExprs <- mergeAggExprs(parts.cols, wheels.keySet, aggExprs,
-        Seq((Seq(groupKey, gExpr), slotAttr)))
-      plan <- {
-        var conditioned = true
-        val rows = Seq.newBuilder[InternalRow]
-        def emit(s0: Long, alls: Map[String, AllAggregate], nRows: Long): Unit = {
-          if (needCond && !alls.forall { case (c, al) =>
-            al.varWellConditionedAround(parts.cols.shiftOf(c)) })
-            conditioned = false
-          rows += InternalRow.fromSeq(
-            slotLiteral(grid, s0, grid.end(s0)).value +:
-              parts.partialsRow(alls, nRows))
-        }
-        if (distributedInterior) {
-          // tier-granular partials rows (minutes when complete, the
-          // retained-tier cover under KeepN), each pre-keyed to its
-          // grid slot — the merge Aggregate below combines them exactly
-          // as it combines the per-cell rows of the plan-time form
-          val headMeasure = wheels.keys.head
-          interiorFeed.get.apply().foreach { case (tier, slotMs, anyAll) =>
-            val alls = wheels.map {
-              case (c, _) if c == headMeasure => c -> anyAll
-              case (c, i) => c -> i.stateAt(tier, slotMs)
-            }
-            emit(grid.floorOf(slotMs), alls, anyAll.rows)
-          }
-        } else interiors.foreach { r =>
-          val it = grid.starts(r.aCeilMs, r.bFloorMs)
-          while (it.hasNext) {
-            val s0 = it.next()
-            val s1 = grid.end(s0)
-            val alls = wheels.map { case (c, i) =>
-              c -> i.query(math.max(r.aCeilMs, s0), math.min(r.bFloorMs, s1)) }
-            val anyAll = alls.valuesIterator.next()
-            if (anyAll.rows > 0L) emit(s0, alls, anyAll.rows)
-          }
-        }
-        if (!conditioned) { foldBailNote = IllCondNote; None }
-        else {
-          val interior = LocalRelation(slotAttr +: parts.partialAttrs, rows.result())
-          val edgeLeg = Project(
-            Alias(gEval, "__graft_slot")() +: parts.edgePartials, parts.edgeFilter)
-          Some(Aggregate(Seq(slotAttr), newAggExprs, Union(Seq(interior, edgeLeg))))
-        }
-      }
-    } yield plan
-  }
 
   /** GROUP BY time-slot over a registered source — answered from the
     * index as one [[LocalRelation]] row per non-empty slot (time-bounded
@@ -5147,6 +4933,21 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         foldGroupedConditionalResidue(groupKey, gExpr, grid,
           aggExprs, child, findFilter(child).map(_._2).getOrElse(child),
           tsCol, wheels, outers, sketch)
+      // unconditional sub-minute edges: the residue hybrid per grid
+      // cell; an approximate spelling it refuses rides the residue
+      // sketch seam (round 17)
+      groupedResidue = (rangesUs: Seq[(Long, Long)]) =>
+        filterOpt.flatMap { case (_, below) =>
+          residueHybrid("grouped residue hybrid", aggExprs, below, tsCol,
+            residueInterior(wheels), rangesUs,
+            Seq(cellGroup(grid, gExpr, Seq(groupKey, gExpr), child, below)),
+            Some(grid))
+        }.orElse {
+          if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
+            foldBailNote = ""
+            groupedCondResidue(rangesUs)
+          } else None
+        }
       // Left = the ordinary single conjunctive range; Right = an
       // OR-of-disjoint-ranges predicate (round 13), pre-merged so a row
       // matched by two disjuncts counts once. BOTH in µS (round 14 —
@@ -5226,17 +5027,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // sub-minute OUTER edges with conditional aggregates
           // (round 17): same hybrid — the outer slivers scan once
           groupedCondResidue(Seq((aUs, bUs)))
-        else filterOpt.flatMap { case (_, below) =>
-          rewriteGroupedResidue(agg, groupKey, gExpr, grid, aggExprs,
-            child, below, tsCol, wheels, aUs, bUs)
-        }.orElse {
-          // round 17: an approximate spelling refuses the numeric
-          // grouped hybrid — ride the residue sketch seam instead
-          if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
-            foldBailNote = ""
-            groupedCondResidue(Seq((aUs, bUs)))
-          } else None
-        }
+        else groupedResidue(Seq((aUs, bUs)))
         }
        // GROUPED OR-ranges fold (round 13): per-cell contributions are
        // COMBINED across ranges (two disjoint sub-cell ranges can land
@@ -5249,8 +5040,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
        // the ungrouped OR fold) — and ABOVE-CAP aligned shapes go
        // DISTRIBUTED through the multi-range [[distributedGrouped]]
        // (pre-merged disjoint ranges, so the minute-state union never
-       // double-counts). Unaligned multi-range shapes keep the scan
-       // (no multi-range residue form).
+       // double-counts). Unaligned disjuncts fold through the residue
+       // hybrids (round 14).
        case scala.util.Right(rangesUs) =>
         bail(path, foldNote("grouped OR-ranges shape not foldable " +
           "(aggregate without a fold / merge form)")) {
@@ -5265,17 +5056,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             // conditional hybrid instead (round 17) — per-aggregate
             // clipping against EVERY disjunct plus the sliver scan
             (if (hasConditional) groupedCondResidue(rangesUs)
-            else filterOpt.flatMap { case (_, below) =>
-              orGroupedResidue(agg, groupKey, gExpr, grid, aggExprs,
-                child, below, tsCol, wheels, rangesUs)
-            }.orElse {
-              // round 17: sketch spellings over unaligned OR outers
-              // ride the residue sketch seam
-              if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
-                foldBailNote = ""
-                groupedCondResidue(rangesUs)
-              } else None
-            })
+            else groupedResidue(rangesUs))
           else {
           val ranges = rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) }
           val cellsTotal =
@@ -5731,6 +5512,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         s"expression over the registered ts column '${reg.tsCol}'"))(
         slotGrid(gExpr, reg.tsCol))
       filterOpt = findFilter(child)
+      below = filterOpt.map(_._2).getOrElse(child)
+      keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
+        .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
+      // the (key, cell) group columns of both keyed-grouped hybrids;
+      // None when the source misses the typed key column
+      groups = keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType),
+        below, (key, _) => key).map(_ :+
+        cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below))
       // per-aggregate conditional windows under the (key, cell) grid
       // (round 17 — the last conditional regime): EVERY regime routes
       // through the keyed-grouped conditional hybrid
@@ -5740,19 +5529,32 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
         case _ => false
       })
-      keyedGroupedCond = (outers: Seq[(Long, Long)]) =>
-        foldKeyedGroupedConditionalResidue(keyAttr, slotGroup, gExpr,
-          grid, aggExprs, child,
-          findFilter(child).map(_._2).getOrElse(child), reg, outers,
-          WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
-            r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
+      keyedGroupedCond = (outers: Seq[(Long, Long)]) => groups.flatMap(gs =>
+        condHybrid("keyed-grouped conditional hybrid", aggExprs, below,
+          reg.tsCol, keyedCondInterior(reg.wheels), outers, gs,
+          keyedCondSketchOf(keyedSk)))
+      // unconditional sub-minute edges: the residue hybrid per (key,
+      // cell); an approximate spelling it refuses rides the residue
+      // sketch seam (round 17)
+      keyedResidue = (rangesUs: Seq[(Long, Long)]) =>
+        bail(path, foldNote("keyed-grouped residue not foldable")) {
+          foldBailNote = ""
+          groups.flatMap(gs => residueHybrid("keyed-grouped residue hybrid",
+            aggExprs, below, reg.tsCol, keyedResidueInterior(reg.wheels),
+            rangesUs, gs, Some(grid))).orElse {
+            if (hasSketchAgg(aggExprs) && keyedSk.nonEmpty) {
+              foldBailNote = ""
+              keyedGroupedCond(rangesUs)
+            } else None
+          }
+        }
       // KEYED OR-ranges (round 13): a disjunction of ranges folds per
       // (key, cell) with contributions combined across ranges — same
       // semantics as the unkeyed grouped Right branch. UNALIGNED
       // disjunctions (round-14 continuation) route through the
       // generalized keyed hybrid: per-(key, range, cell) interiors +
       // ONE edge leg ORing every sub-minute window.
-      orFold = filterOpt.flatMap { case (cond, below) =>
+      orFold = filterOpt.flatMap { case (cond, _) =>
         if (rangeUs(cond, reg.tsCol).isDefined) None
         else orRangesUs(cond, reg.tsCol).map(mergeRanges).flatMap { rangesUs =>
           val MinuteUs = MinuteMs * 1000L
@@ -5764,19 +5566,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           else if (rangesUs.forall { case (x, y) =>
             x % MinuteUs == 0 && y % MinuteUs == 0 })
             keyedOrRangesFold(agg, keyAttr, slotGroup, gExpr, grid, aggExprs,
-              reg, rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) }, path)
-          else
-            rewriteKeyedGroupedResidue(agg, keyAttr, slotGroup, gExpr, grid,
-              aggExprs, child, below, reg, rangesUs).orElse {
-              // round 17: sketch spellings over unaligned keyed-grouped
-              // OR outers ride the residue sketch seam
-              if (hasSketchAgg(aggExprs) &&
-                  WheelAcceleration.lookup(path)(_.keyedSketch).exists(r =>
-                    r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)) {
-                foldBailNote = ""
-                keyedGroupedCond(rangesUs)
-              } else None
-            }
+              reg, rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) },
+              keyedSk)
+          else keyedResidue(rangesUs)
         }
       }
       // µS bounds (round 14): direct-timestamp closed bounds route to
@@ -5810,14 +5602,11 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           if (reg.any.keys.size.toLong * cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
             distributedGrouped(aggExprs, Map.empty, grid, gExpr,
               Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), Seq((a, b)),
-              keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
-                .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
+              keyedSk = keyedSk)
           else {
           // per-key sketch views (late round 11): keyed approx
           // spellings fold per (key, cell) through the same gate as
           // the unkeyed grouped path
-          val keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
-            .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
           val out = Seq.newBuilder[InternalRow]
           var ok = true
           reg.any.keys.foreach { key =>
@@ -5841,19 +5630,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           }
           if (ok) Some(LocalRelation(agg.output, out.result())) else None
           }
-        } else filterOpt.flatMap { case (_, below) =>
-          rewriteKeyedGroupedResidue(agg, keyAttr, slotGroup, gExpr, grid,
-            aggExprs, child, below, reg, Seq((aUs, bUs)))
-        }.orElse {
-          // round 17: an approximate spelling refuses the numeric
-          // keyed-grouped hybrid — ride the residue sketch seam
-          if (hasSketchAgg(aggExprs) &&
-              WheelAcceleration.lookup(path)(_.keyedSketch).exists(r =>
-                r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)) {
-            foldBailNote = ""
-            keyedGroupedCond(Seq((aUs, bUs)))
-          } else None
-        }
+        } else keyedResidue(Seq((aUs, bUs)))
     } yield result
   }
 
@@ -5868,8 +5645,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
   private def keyedOrRangesFold(
       agg: Aggregate, keyAttr: AttributeReference, slotGroup: Expression,
       gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
-      reg: WheelAcceleration.KeyedReg,
-      ranges: Seq[(Long, Long)], path: String): Option[LogicalPlan] = {
+      reg: WheelAcceleration.KeyedReg, ranges: Seq[(Long, Long)],
+      keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] = {
     val aligned = ranges.forall { case (x, y) =>
       x % MinuteMs == 0 && y % MinuteMs == 0 && x < y &&
         grid.soundFor(x, y) }
@@ -5882,8 +5659,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     if (reg.any.keys.size.toLong * cellsTotal > maxFoldRows)
       return distributedGrouped(aggExprs, Map.empty, grid, gExpr,
         Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), ranges,
-        keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
-          .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
+        keyedSk = keyedSk)
     val out = Seq.newBuilder[InternalRow]
     var ok = true
     reg.any.keys.foreach { key =>
@@ -5980,6 +5756,15 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         if (allRangesUs.forall { case (x, y) => grid.soundFor(
           Math.floorDiv(x, 1000L), Math.floorDiv(y + 999L, 1000L)) })
           Some(()) else None)
+      below = findFilter(child).map(_._2).getOrElse(child)
+      // the (k1, …, kn, cell) group columns of both composite hybrids,
+      // each key COMPONENT its own column re-emitted from the
+      // struct-valued index key; None when the source misses a typed
+      // key column
+      groups = keyGroups(keyAttrs, reg.keyCols,
+        reg.any.keyType.asInstanceOf[StructType].fields.toSeq.map(_.dataType),
+        below, (key, i) => key.asInstanceOf[org.apache.spark.sql.Row].get(i))
+        .map(_ :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below))
       // per-aggregate conditional windows (round 17 — completes the
       // conditional matrix): every composite conditional regime is the
       // conditional hybrid
@@ -6000,10 +5785,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           bail(path, foldNote("composite-keyed conditional not foldable " +
             "(aggregate without a merge form / non-time condition / " +
             "missing typed key or ts columns)"))(
-            foldCompositeKeyedConditionalResidue(keyAttrs, slotGroup,
-              gExpr, grid, aggExprs, child,
-              findFilter(child).map(_._2).getOrElse(child), reg,
-              allRangesUs))
+            groups.flatMap(gs => condHybrid("composite-keyed conditional " +
+              "hybrid", aggExprs, below, reg.tsCol,
+              keyedCondInterior(reg.wheels), allRangesUs, gs,
+              condSketchOf(None))))
         else if (ranged.isRight ||
             aUs % (MinuteMs * 1000L) != 0 || bUs % (MinuteMs * 1000L) != 0)
           // SUB-MINUTE range edges (round 17, VERDICT r16 #2 — was the
@@ -6011,11 +5796,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // tuple-key residue hybrid — interior (tuple-key, cell)
           // partials + ONE bounded edge scan carrying every raw key
           // COLUMN (aligned disjuncts degenerate to a pure fold)
-          bail(path, "composite-keyed residue not foldable (aggregate " +
-            "without a merge form / missing typed key or ts columns)")(
-            findFilter(child).map(_._2).flatMap(below =>
-              rewriteCompositeKeyedResidue(agg, keyAttrs, slotGroup, gExpr,
-                grid, aggExprs, child, below, reg, allRangesUs)))
+          bail(path, foldNote("composite-keyed residue not foldable " +
+            "(aggregate without a merge form / missing typed key or ts " +
+            "columns)")) {
+            foldBailNote = ""
+            groups.flatMap(gs => residueHybrid("composite-keyed residue " +
+              "hybrid", aggExprs, below, reg.tsCol,
+              keyedResidueInterior(reg.wheels), allRangesUs, gs, Some(grid)))
+          }
         else if (reg.any.keys.size.toLong *
             cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
           // above the plan-time ceiling: ship the (tuple-key, minute)
@@ -6057,287 +5845,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           if (ok) Some(LocalRelation(agg.output, out.result())) else None
         }
     } yield result
-  }
-
-  /** COMPOSITE-keyed residue hybrid (round 17, VERDICT r16 #2 — was
-    * the pinned "no composite residue path"): `GROUP BY (k1, …, kn,
-    * time-slot)` with SUB-MINUTE range edges. The tuple-key analogue of
-    * [[rewriteKeyedGroupedResidue]]: interior (tuple-key, cell)
-    * partials come from the composite keyed index with each key
-    * COMPONENT re-emitted as its own relation column (struct-valued
-    * index key → n literal columns), the ONE bounded edge scan carries
-    * every raw key column plus the re-derived slot, and the rewritten
-    * group-by merges both legs per (k1, …, kn, cell). Above the
-    * plan-time ceiling the interior switches to the index's
-    * (tuple-key, minute) states — the same emission the composite
-    * distributed form ships. */
-  private def rewriteCompositeKeyedResidue(
-      agg: Aggregate, keyAttrs: Seq[AttributeReference],
-      slotGroup: Expression, gExpr: Expression, grid: SlotGrid,
-      aggExprs: Seq[NamedExpression], child: LogicalPlan,
-      below: LogicalPlan, reg: WheelAcceleration.Keyed2Reg,
-      rangesUs: Seq[(Long, Long)]): Option[LogicalPlan] = {
-    val MinuteUs = MinuteMs * 1000L
-    final case class R(aUs: Long, bUs: Long) {
-      val aCeil: Long =
-        Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs / 1000L
-      val bFloor: Long = Math.floorDiv(bUs, MinuteUs) * MinuteUs / 1000L
-      def hasInterior: Boolean = aCeil < bFloor
-      def edgeWindows: Seq[(Long, Long)] =
-        if (hasInterior) Seq((aUs, aCeil * 1000L), (bFloor * 1000L, bUs))
-        else Seq((aUs, bUs))
-    }
-    val rs = rangesUs.map { case (x, y) => R(x, y) }
-    val interiors = rs.filter(_.hasInterior)
-    if (interiors.isEmpty) return None
-    val keyFields = reg.any.keyType.asInstanceOf[StructType].fields
-    // the raw key columns the edge scan re-emits — each must be typed
-    // exactly as its struct field (the build took them verbatim)
-    val keyRaws = reg.keyCols.zip(keyFields).map { case (kc, f) =>
-      below.output.find(o => o.name == kc && o.dataType == f.dataType)
-    }
-    if (keyRaws.exists(_.isEmpty)) return None
-    val needCond = hasSecondMoment(aggExprs)
-    val shifts = shiftsFor(needCond, reg.wheels.keys, c => {
-      var acc = AllAggregate.identity
-      interiors.foreach { r =>
-        reg.wheels(c).minuteEntries(r.aCeil, r.bFloor).foreach {
-          case (_, _, al) => acc = acc.combine(al) }
-      }
-      acc
-    })
-    // ALIGNED disjuncts produce no edge windows (round 17 OR-outer
-    // support): the plan degenerates to interior-only — a pure fold
-    // with no edge leg, serving `WHERE w1 OR w2 GROUP BY k1, …, slot`
-    val edges = rs.flatMap(_.edgeWindows).filter { case (lo, hi) => lo < hi }
-    val partsOpt: Option[ResidueParts] =
-      if (edges.isEmpty) None
-      else residueParts(below, reg.tsCol, reg.wheels.keys.toSeq, edges,
-        shifts) match {
-        case None => return None
-        case some => some
-      }
-    val cols = partsOpt.map(_.cols)
-      .getOrElse(partialColsFor(reg.wheels.keys.toSeq, shifts))
-    for {
-      gEval <- rebaseOnto(child, below, gExpr)
-      keyOutAttrs = keyFields.toSeq.zip(keyAttrs).zipWithIndex.map {
-        case ((f, kA), i) => AttributeReference(
-          s"__graft_key$i", f.dataType, nullable = kA.nullable)()
-      }
-      slotAttr = AttributeReference(
-        "__graft_slot", gExpr.dataType, nullable = gExpr.nullable)()
-      newAggExprs <- mergeAggExprs(cols, reg.wheels.keySet, aggExprs,
-        keyAttrs.zip(keyOutAttrs).map { case (kA, kO) =>
-          (Seq[Expression](kA), kO: Attribute)
-        } :+ ((Seq(slotGroup, gExpr), slotAttr: Attribute)))
-      plan <- {
-        var conditioned = true
-        def check(alls: collection.Map[String, AllAggregate]): Unit =
-          if (needCond && !alls.forall { case (c, al) =>
-            al.varWellConditionedAround(cols.shiftOf(c)) })
-            conditioned = false
-        val rows = Seq.newBuilder[InternalRow]
-        val anyIdx = reg.any
-        val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-        def componentsOf(key: Any): Seq[Any] = {
-          val row = key.asInstanceOf[org.apache.spark.sql.Row]
-          keyFields.toSeq.zipWithIndex.map { case (f, i) =>
-            Literal.create(row.get(i), f.dataType).value }
-        }
-        val interiorCells = interiors.map(r =>
-          cellCount(grid, r.aCeil, r.bFloor, maxFoldRows)).sum
-        if (anyIdx.keys.size.toLong * interiorCells > maxFoldRows) {
-          // above the fold cap: (tuple-key, minute) states, same merge
-          // Aggregate — no per-(key, cell) driver walks
-          val keyVals = new java.util.HashMap[Any, Seq[Any]]()
-          interiors.foreach { r =>
-            anyIdx.minuteEntries(r.aCeil, r.bFloor).foreach {
-              case (key, slotMs, anyAll) =>
-                val kvs = keyVals.computeIfAbsent(key, k => componentsOf(k))
-                val alls = reg.wheels.map {
-                  case (c, _) if c == anyMeasure => c -> anyAll
-                  case (c, i) => c -> i.minuteAt(key, slotMs)
-                }
-                check(alls)
-                val s0 = grid.floorOf(slotMs)
-                rows += InternalRow.fromSeq(kvs ++
-                  (slotLiteral(grid, s0, grid.end(s0)).value +:
-                    cols.partialsRow(alls, anyAll.rows)))
-            }
-          }
-        } else {
-          anyIdx.keys.foreach { key =>
-            val kvs = componentsOf(key)
-            interiors.foreach { r =>
-              val it = grid.starts(r.aCeil, r.bFloor)
-              while (it.hasNext) {
-                val s0 = it.next()
-                val s1 = grid.end(s0)
-                val alls = reg.wheels.map { case (c, i) =>
-                  c -> i.query(key, math.max(r.aCeil, s0), math.min(r.bFloor, s1)) }
-                val anyAll = alls.valuesIterator.next()
-                if (anyAll.rows > 0L) {
-                  check(alls)
-                  rows += InternalRow.fromSeq(kvs ++
-                    (slotLiteral(grid, s0, s1).value +:
-                      cols.partialsRow(alls, anyAll.rows)))
-                }
-              }
-            }
-          }
-        }
-        if (!conditioned) { foldBailNote = IllCondNote; None } // keep the scan
-        else {
-          val interior = LocalRelation(
-            keyOutAttrs ++ (slotAttr +: cols.partialAttrs), rows.result())
-          val legs: LogicalPlan = partsOpt match {
-            case Some(parts) =>
-              val edgeLeg = Project(
-                keyRaws.flatten.zipWithIndex.map { case (kr, i) =>
-                  Alias(kr, s"__graft_key$i")(): NamedExpression
-                } ++ (Alias(gEval, "__graft_slot")() +: parts.edgePartials),
-                parts.edgeFilter)
-              Union(Seq(interior, edgeLeg))
-            case None => interior
-          }
-          Some(Aggregate(keyOutAttrs :+ slotAttr, newAggExprs, legs))
-        }
-      }
-    } yield plan
-  }
-
-  /** COMPOSITE-keyed CONDITIONAL hybrid (round 17): `GROUP BY (k1, …,
-    * kn, time-cell)` + per-aggregate range conditions in every regime —
-    * [[condHybrid]] with each key COMPONENT as its own group column;
-    * the sliver scan carries every raw key column. */
-  private def foldCompositeKeyedConditionalResidue(
-      keyAttrs: Seq[AttributeReference], slotGroup: Expression,
-      gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
-      child: LogicalPlan, below: LogicalPlan,
-      reg: WheelAcceleration.Keyed2Reg,
-      outersUs: Seq[(Long, Long)]): Option[LogicalPlan] =
-    keyGroups(keyAttrs, reg.keyCols,
-      reg.any.keyType.asInstanceOf[StructType].fields.toSeq.map(_.dataType),
-      below, (key, i) => key.asInstanceOf[org.apache.spark.sql.Row].get(i)).flatMap(keys =>
-      condHybrid("composite-keyed conditional hybrid", aggExprs, below,
-        reg.tsCol, keyedCondInterior(reg.wheels), outersUs,
-        keys :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below),
-        condSketchOf(None)))
-
-  /** Keyed grouped hybrid (round 9): `GROUP BY (key, time-slot)` with
-    * sub-minute range edges — the keyed analogue of
-    * [[rewriteGroupedResidue]]. Interior (key, slot) partials come from
-    * the keyed index; edge rows carry their raw key and re-derived slot
-    * key through the bounded edge scan; the rewritten group-by merges
-    * both contributions per (key, slot). Round-14 continuation:
-    * generalized to a LIST of disjoint µs ranges (the keyed unaligned
-    * OR-of-ranges spelling) — one interior walk per range with a
-    * whole-minute interior, every sub-minute window in the ONE edge
-    * leg; two ranges' contributions to the same (key, cell) are simply
-    * two partial rows for the merge Aggregate. */
-  private def rewriteKeyedGroupedResidue(
-      agg: Aggregate, keyAttr: AttributeReference, slotGroup: Expression,
-      gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
-      child: LogicalPlan, below: LogicalPlan, reg: WheelAcceleration.KeyedReg,
-      rangesUs: Seq[(Long, Long)]): Option[LogicalPlan] = {
-    // µS bounds (round 14); floorDiv, not truncating division:
-    // pre-1970 (negative-epoch) bounds would otherwise round toward
-    // zero and let the interior overlap the edges or swallow rows
-    // past b
-    val MinuteUs = MinuteMs * 1000L
-    final case class R(aUs: Long, bUs: Long) {
-      val aCeil: Long =
-        Math.floorDiv(aUs + MinuteUs - 1, MinuteUs) * MinuteUs / 1000L
-      val bFloor: Long = Math.floorDiv(bUs, MinuteUs) * MinuteUs / 1000L
-      def hasInterior: Boolean = aCeil < bFloor
-      def edgeWindows: Seq[(Long, Long)] =
-        if (hasInterior) Seq((aUs, aCeil * 1000L), (bFloor * 1000L, bUs))
-        else Seq((aUs, bUs))
-    }
-    val rs = rangesUs.map { case (x, y) => R(x, y) }
-    val interiors = rs.filter(_.hasInterior)
-    if (interiors.isEmpty) return None
-    val keyRaw = below.output.find(o =>
-      o.name == reg.keyCol && o.dataType == reg.any.keyType) match {
-      case Some(k) => k
-      case None => return None
-    }
-    val needCond = hasSecondMoment(aggExprs)
-    val shifts = shiftsFor(needCond, reg.wheels.keys,
-      c => interiors.map(r => keyedRangeAll(reg, c, r.aCeil, r.bFloor))
-        .reduce(_ combine _))
-    for {
-      parts <- residueParts(below, reg.tsCol, reg.wheels.keys.toSeq,
-        rs.flatMap(_.edgeWindows), shifts)
-      gEval <- rebaseOnto(child, below, gExpr)
-      keyOutAttr = AttributeReference(
-        "__graft_key", reg.any.keyType, nullable = keyRaw.nullable)()
-      slotAttr = AttributeReference(
-        "__graft_slot", gExpr.dataType, nullable = gExpr.nullable)()
-      newAggExprs <- mergeAggExprs(parts.cols, reg.wheels.keySet, aggExprs,
-        Seq((Seq(keyAttr), keyOutAttr), (Seq(slotGroup, gExpr), slotAttr)))
-      plan <- {
-        var conditioned = true
-        def check(alls: collection.Map[String, AllAggregate]): Unit =
-          if (needCond && !alls.forall { case (c, al) =>
-            al.varWellConditionedAround(parts.cols.shiftOf(c)) })
-            conditioned = false
-        val rows = Seq.newBuilder[InternalRow]
-        val anyIdx = reg.any
-        val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-        val interiorCells = interiors.map(r =>
-          cellCount(grid, r.aCeil, r.bFloor, maxFoldRows)).sum
-        if (anyIdx.keys.size.toLong * interiorCells > maxFoldRows) {
-          // above the fold cap: minute state instead of per-cell walks,
-          // same merge Aggregate (see rewriteGroupedResidue)
-          val keyVals = new java.util.HashMap[Any, Any]()
-          interiors.foreach { r =>
-            anyIdx.minuteEntries(r.aCeil, r.bFloor).foreach { case (key, slotMs, anyAll) =>
-              val kv = keyVals.computeIfAbsent(key,
-                k => Literal.create(k, anyIdx.keyType).value)
-              val alls = reg.wheels.map {
-                case (c, _) if c == anyMeasure => c -> anyAll
-                case (c, i) => c -> i.minuteAt(key, slotMs)
-              }
-              check(alls)
-              val s0 = grid.floorOf(slotMs)
-              rows += InternalRow.fromSeq(kv +: slotLiteral(grid, s0, grid.end(s0)).value +:
-                parts.partialsRow(alls, anyAll.rows))
-            }
-          }
-        } else {
-          anyIdx.keys.foreach { key =>
-            val keyVal = Literal.create(key, anyIdx.keyType).value
-            interiors.foreach { r =>
-              val it = grid.starts(r.aCeil, r.bFloor)
-              while (it.hasNext) {
-                val s0 = it.next()
-                val s1 = grid.end(s0)
-                val alls = reg.wheels.map { case (c, i) =>
-                  c -> i.query(key, math.max(r.aCeil, s0), math.min(r.bFloor, s1)) }
-                val anyAll = alls.valuesIterator.next()
-                if (anyAll.rows > 0L) {
-                  check(alls)
-                  rows += InternalRow.fromSeq(keyVal +: slotLiteral(grid, s0, s1).value +:
-                    parts.partialsRow(alls, anyAll.rows))
-                }
-              }
-            }
-          }
-        }
-        if (!conditioned) { foldBailNote = IllCondNote; None } // keep the scan
-        else {
-          val interior =
-            LocalRelation(keyOutAttr +: slotAttr +: parts.partialAttrs, rows.result())
-          val edgeLeg = Project(
-            Alias(keyRaw, "__graft_key")() +: Alias(gEval, "__graft_slot")() +:
-              parts.edgePartials, parts.edgeFilter)
-          Some(Aggregate(Seq(keyOutAttr, slotAttr), newAggExprs,
-            Union(Seq(interior, edgeLeg))))
-        }
-      }
-    } yield plan
   }
 
   /** The grouping expression itself, or — when the optimizer's

@@ -104,14 +104,19 @@ class FoldSweepSpec extends AnyFunSuite {
       // bare-key pivot grouping (round 14): plain AND conditional
       // mixes fold through the keyed conditional leg
       ("event_type AS g0, ", "GROUP BY 1"))
+    // each entry's ranges are ORed; none = NO PREDICATE
     val ranges = Seq(
-      (Q.R1Start, Q.R1End),                   // day-aligned week
-      (Q.R1Start + 60000L, Q.R1End - 60000L), // minute-aligned interior
-      (Q.R1Start + 30123L, Q.R1End - 7001L),  // sub-minute hybrid edges
-      (-1L, -1L))                             // NO PREDICATE: full span (round 11)
+      Seq((Q.R1Start, Q.R1End)),                   // day-aligned week
+      Seq((Q.R1Start + 60000L, Q.R1End - 60000L)), // minute-aligned interior
+      Seq((Q.R1Start + 30123L, Q.R1End - 7001L)),  // sub-minute hybrid edges
+      // two disjoint sub-minute-edged ranges: the OR residue hybrids
+      Seq((Q.R1Start + 30123L, Q.R1Start + 2 * 86400000L - 7001L),
+        (Q.R1Start + 3 * 86400000L + 15007L, Q.R1End - 41L)),
+      Seq.empty)                                   // full span (round 11)
 
     var folded = 0
     var total = 0
+    var orFolded = 0
     // the CAP dimension (round 11): the same full matrix under a
     // forced plan-time ceiling of 3, so every above-cap fallback —
     // grouped/keyed minute-state partials, the sliding re-rooted
@@ -125,7 +130,7 @@ class FoldSweepSpec extends AnyFunSuite {
       cap <- Seq(None, Some("3"))
       agg <- aggMixes
       (gSel, gBy) <- groupings
-      (a, b) <- ranges
+      rs <- ranges
     } {
       cap match {
         case Some(c) => spark.conf.set(capKnob, c)
@@ -135,13 +140,18 @@ class FoldSweepSpec extends AnyFunSuite {
         if (gSel.isEmpty) ""
         else if (gSel.contains("g1")) " ORDER BY 1, 2" else " ORDER BY 1"
       val where =
-        if (a < 0) "" // the no-predicate full-span shape
-        else s"WHERE unix_millis(ts) >= $a AND unix_millis(ts) < $b "
+        if (rs.isEmpty) "" // the no-predicate full-span shape
+        else rs.map { case (a, b) =>
+          s"unix_millis(ts) >= $a AND unix_millis(ts) < $b" }
+          .mkString(if (rs.size > 1) "WHERE (" else "WHERE ", ") OR (",
+            if (rs.size > 1) ") " else " ")
       val sql = s"SELECT $gSel$agg FROM ev_sweep $where$gBy$order"
       total += 1
       val acc = spark.sql(sql)
-      if (acc.queryExecution.optimizedPlan.collect {
-        case l: LocalRelation => l }.nonEmpty) folded += 1
+      if (foldsToLocal(acc)) {
+        folded += 1
+        if (rs.size > 1) orFolded += 1
+      }
       val got = acc.collect()
       WheelAcceleration.clear()
       val want = spark.sql(sql).collect()
@@ -154,6 +164,8 @@ class FoldSweepSpec extends AnyFunSuite {
     // fold for every grouping here (distributed plans included under
     // the forced cap), and the hybrids fold for all but the above-cap
     // sliding edges — well over half the matrix
+    info(s"folded $folded/$total combinations, $orFolded of them over " +
+      "the OR of ranges")
     assert(folded * 2 >= total, s"only $folded/$total combinations folded")
     spark.conf.unset(capKnob)
     WheelAcceleration.clear()

@@ -2774,24 +2774,40 @@ class WheelAccelerationSpec extends AnyFunSuite {
 
   test("enable registers the SQL introspection functions once per session") {
     // every registration calls enable; a re-register would replace the
-    // function (and log a Spark WARN) on each WheelIngest batch swap
+    // function (and log a Spark WARN) on each WheelIngest batch swap.
+    // The function families register the same way on every use:
+    // graft_dot per similarity query, graft_all/graft_topn per UDAF one
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val names = Seq("graft_bail_reason", "graft_acceleration_status")
-    def builders(s: org.apache.spark.sql.SparkSession) = names.map(n =>
-      s.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    val names = Seq("graft_bail_reason", "graft_acceleration_status",
+      "graft_dot", "graft_all", "graft_topn")
+    // (info, builder) per name: a re-register replaces both, and the
+    // info even where the builder is a cached non-capturing lambda
+    def builders(s: org.apache.spark.sql.SparkSession) = names.map { n =>
+      val registry = s.sessionState.functionRegistry
+      registry.lookupFunction(FunctionIdentifier(n))
+        .zip(registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    }
+    def families(s: org.apache.spark.sql.SparkSession): Unit = {
+      graft.functions.DotProduct.register(s)
+      graft.functions.Aggregators.register(s)
+    }
     WheelAcceleration.clear()
     register()
+    families(spark)
     val first = builders(spark)
     assert(first.forall(_.nonEmpty), first)
     register()
-    builders(spark).zip(first).foreach { case (again, once) =>
-      assert(again.get eq once.get, "enable re-registered a function")
+    families(spark)
+    names.zip(builders(spark).zip(first)).foreach { case (n, (again, once)) =>
+      assert((again.get._1 eq once.get._1) && (again.get._2 eq once.get._2),
+        s"$n was re-registered")
     }
-    // a new session starts without them and gets both on its first
+    // a new session starts without them and gets each on its first
     // registration
     val other = spark.newSession()
     assert(builders(other).forall(_.isEmpty))
     WheelAcceleration.register(other, path, Q.t(other, dir, "events"))
+    families(other)
     assert(builders(other).forall(_.nonEmpty))
     val status = other.sql(s"SELECT graft_acceleration_status('$path') AS s")
       .collect()(0).getString(0)
@@ -3894,6 +3910,84 @@ class WheelAccelerationSpec extends AnyFunSuite {
       // the protected values: the true within-regime variance is ~2e-4
       bad.collect().foreach(r => assert(r.getDouble(arity) < 1.0, s"$shape: $r"))
       val okSql = sql(leading, arity, s"unix_millis(ts) >= ${t0 + 60000L}")
+      val ok = spark.sql(okSql)
+      assert(folds(ok), s"$shape:\n" + ok.queryExecution.optimizedPlan.treeString)
+      val got = ok.collect().toSeq
+      WheelAcceleration.clear()
+      val want = spark.sql(okSql).collect().toSeq
+      assert(got.map(r => r.toSeq.take(arity)) == want.map(r => r.toSeq.take(arity)),
+        s"$shape: $got vs $want")
+      got.zip(want).foreach { case (g, w) =>
+        val (gv, wv) = (g.getDouble(arity), w.getDouble(arity))
+        assert(math.abs(gv - wv) <= 1e-9 * math.max(gv.abs, wv.abs),
+          s"$shape: fold $g vs scan $w")
+      }
+    } finally WheelAcceleration.clear()
+  }
+
+  test("sub-minute residue hybrids share the second-moment conditioning " +
+      "gate and its refusal note across all four group shapes") {
+    // Minutes 0–4 sit near 0 and minutes 5–9 near 2e8, each with ≤0.04
+    // spread. Every residue hybrid centers second moments on its
+    // combined interior's mean (~1e8), so an interior row inside one
+    // regime is ill-conditioned there: the fold must keep the scan and
+    // say why. One interior row spanning both regimes is dominated by
+    // the 1e16 between-regime spread, folds, and matches the scan.
+    import spark.implicits._
+    val src = new java.io.File("target/test-fixtures/accel/residuegate4.parquet")
+      .getAbsolutePath
+    val t0 = Q.Jan1
+    (0 until 100).map { i =>
+      val minute = (i / 10).toLong
+      val base = if (minute < 5) 0.0 else 2e8
+      (new java.sql.Timestamp(t0 + minute * 60000L + (i % 10) * 6000L),
+        if (i % 2 == 0) "a" else "b", if ((i / 2) % 2 == 0) "x" else "y",
+        base + (i % 5) * 0.01)
+    }.toDF("ts", "k", "k2", "value").write.mode("overwrite").parquet(src)
+    val events = spark.read.parquet(src)
+    events.createOrReplaceTempView("ev_residuegate4")
+    def range(a: Long, b: Long) =
+      s"(unix_millis(ts) >= ${t0 + a} AND unix_millis(ts) < ${t0 + b})"
+    // sub-minute edges on both ends, across both regimes
+    val outer = range(7000L, 570000L)
+    def cell(w: Long) = s"(unix_millis(ts) div $w) * $w AS c"
+    // (shape, registration, leading select columns with the grid width,
+    // GROUP BY arity, ill-conditioned WHERE, well-conditioned WHERE)
+    val shapes: Seq[(String, () => Unit, Long => String, Int, String, String)] = Seq(
+      // an OR with one range per regime; the well-conditioned OR has
+      // one interior spanning both and an all-edge sliver
+      ("ungrouped", () => WheelAcceleration.register(spark, src, events),
+        _ => "", 0, s"${range(7000L, 270000L)} OR ${range(307000L, 570000L)}",
+        s"$outer OR ${range(580000L, 590000L)}"),
+      ("minute grid", () => WheelAcceleration.register(spark, src, events),
+        w => s"${cell(w)}, ", 1, outer, outer),
+      ("key x minute", () => WheelAcceleration.registerKeyed(
+        spark, src, events, "k"), w => s"k, ${cell(w)}, ", 2, outer, outer),
+      ("composite keys x minute", () => WheelAcceleration.registerKeyedComposite(
+        spark, src, events, Seq("k", "k2")), w => s"k, k2, ${cell(w)}, ", 3,
+        outer, outer))
+    def sql(leading: String, arity: Int, where: String): String = {
+      val by = (1 to arity).mkString(", ")
+      s"SELECT ${leading}VAR_POP(value) AS v FROM ev_residuegate4 WHERE $where" +
+        (if (arity == 0) "" else s" GROUP BY $by ORDER BY $by")
+    }
+    def folds(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect { case l: LocalRelation => l }
+        .nonEmpty
+    try shapes.foreach { case (shape, reg, leading, arity, badWhere, okWhere) =>
+      WheelAcceleration.clear()
+      reg()
+      // per-minute cells: every interior row sits inside one regime
+      val bad = spark.sql(sql(leading(60000L), arity, badWhere))
+      assert(!folds(bad), s"$shape:\n" + bad.queryExecution.optimizedPlan.treeString)
+      assert(WheelAcceleration.lastBailReason(src).getOrElse("")
+        .contains("ill-conditioned"),
+        s"$shape: ${WheelAcceleration.lastBailReason(src)}")
+      // the protected values: the true within-regime variance is ~2e-4
+      if (arity > 0)
+        bad.collect().foreach(r => assert(r.getDouble(arity) < 1.0, s"$shape: $r"))
+      // hour cells: one interior row per group spans both regimes
+      val okSql = sql(leading(3600000L), arity, okWhere)
       val ok = spark.sql(okSql)
       assert(folds(ok), s"$shape:\n" + ok.queryExecution.optimizedPlan.treeString)
       val got = ok.collect().toSeq
