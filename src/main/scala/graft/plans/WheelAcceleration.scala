@@ -1297,9 +1297,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       "merge-form recombination (SUM of Σ(x-c)² partials around the " +
       "plan-time mean c) would lose the variance digits — scan kept " +
       "(Welford path). Plan-time folds are exempt (central m2, " +
-      "Chan-combined), the edge-free distributed grouped path is exempt " +
-      "(per-group shift columns), and homogeneous data at any magnitude " +
-      "folds everywhere"
+      "Chan-combined), edge-free hybrids center each group on its own " +
+      "mean (per-group shift columns; only a second moment clipped to a " +
+      "sub-range is still gated, around that mean), and homogeneous data " +
+      "at any magnitude folds everywhere"
 
   /** Record `reason` as the path's last bail when `opt` is empty —
     * the [[WheelAcceleration.lastBailReason]] feed. */
@@ -1313,12 +1314,13 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * |keys| × grid-cells — each a tier-walk index query executed
     * inside the optimizer — which is µs-fast at reporting shapes
     * (thousands of cells) but would stall planning for minutes on a
-    * year-of-minutes × wide-dimension statement. Past the cap the
-    * rewrite switches to the DISTRIBUTED fallback: the index's minute
-    * STATE (bounded by the build ceiling, O(1) per entry to emit)
-    * ships as a LocalRelation of partials and a real Aggregate groups
-    * it on the cluster — still scan-free, but the heavy grouping runs
-    * on executors instead of the driver's optimizer thread.
+    * year-of-minutes × wide-dimension statement. Past the cap a
+    * grouped or keyed fold ships the index's minute STATE (bounded by
+    * the build ceiling, O(1) per entry to emit) as a LocalRelation of
+    * partials through the two hybrid builders ([[residueHybrid]],
+    * [[condHybrid]]) and a real Aggregate groups it on the cluster —
+    * still scan-free, but the heavy grouping runs on executors instead
+    * of the driver's optimizer thread.
     * Per-session override: `spark.conf.set(
     * "spark.graft.wheel.rewrite.maxFoldRows", N)` (tests set it low to
     * force the distributed plan); the legacy
@@ -1553,13 +1555,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     val MinuteUs = MinuteMs * 1000L
     // quick structural gate: this leg only applies when some aggregate
     // actually carries a FILTER clause or a CASE WHEN argument
-    val hasConditional = aggExprs.exists(_.exists {
-      case ae: AggregateExpression =>
-        ae.filter.nonEmpty ||
-          ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-      case _ => false
-    })
-    if (!hasConditional) return None
+    if (!hasConditional(aggExprs)) return None
     for {
       path <- sourcePath(below)
       WheelAcceleration.SumReg(tsCol, wheels, _, _) <- WheelAcceleration.lookup(path)(_.sum)
@@ -1596,21 +1592,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         // which folds the whole-minute interiors and scans only the
         // sub-minute slivers; fully aligned statements keep the pure
         // plan-time row
-        def unalignedAgg(ae: AggregateExpression): Boolean = {
-          val condOpt = ae.filter.orElse(
-            ae.aggregateFunction.children.collectFirst {
-              case cw: CaseWhen if cw.branches.size == 1 => cw.branches.head._1
-            })
-          condOpt.flatMap(c => rangeUs(c, tsCol)).exists { case (lo, hi) =>
-            lo.exists(_ % MinuteUs != 0) || hi.exists(_ % MinuteUs != 0)
-          }
-        }
         val anyUnaligned =
           outers.exists(o => o._1 % MinuteUs != 0 || o._2 % MinuteUs != 0) ||
-            aggExprs.exists(_.exists {
-              case ae: AggregateExpression => unalignedAgg(ae)
-              case _ => false
-            })
+            subMinuteAggCond(aggExprs, tsCol)
         val folded =
           if (anyUnaligned)
             foldConditionalResidue(aggExprs, below, tsCol, wheels,
@@ -1694,11 +1678,25 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * executor-side Aggregate groups per tuple, so any group count is
     * served. With groups, the outer slivers scan unconditionally (group
     * presence: a group whose only rows fall there must still emit).
-    * Second moments center on the outer interior's GLOBAL mean and gate
-    * per (group, aggregate range) off [[condShifts]]' one pre-walk.
     * Approximate spellings ride the residue sketch seam when `sketch`
     * serves them. Refuses — note pinned — on non-range conditions,
     * DISTINCT, minute-tier eviction, and non-merge aggregates.
+    *
+    * Second moments and tight sketch requests depend on the edges:
+    *
+    *  - with edge windows, every group centers on the outer interior's
+    *    GLOBAL mean (a raw edge row cannot know its group's) and each
+    *    (group, aggregate range) is conditioning-gated, and sketch
+    *    requests tighter than the wheels' worst case refuse statically;
+    *  - EDGE-FREE (outers and every aggregate range whole minutes — an
+    *    aligned OR outer, or any aligned shape above [[maxFoldRows]]),
+    *    each group ships its OWN mean as a shift column, so only a
+    *    second moment clipped to a sub-range is gated (around that
+    *    mean), and a tighter KLL / Misra-Gries request folds when the
+    *    pre-walk proves every (group, span) stays in the sketch's
+    *    exact regime.
+    *
+    * Both run off [[condShifts]]' one pre-walk.
     *
     * Scale: the edge scan's ts bounds are pushed to the source, but the
     * reader still reads every row group it cannot skip — on a
@@ -1720,36 +1718,56 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       return refuse(s"$noun: the minute tier is " +
         "retention-evicted (evicted interiors keep the scan)")
     val measures = interior.measures
-    val shifts = condShifts(aggExprs, tsCol, interior, measures, outersUs,
-      (key, slotMs) => Iterator.single(groups.map(_.interior(key, slotMs))))
-      .getOrElse(return None)
-    val cols = partialColsFor(measures, shifts)
+    val needCond = hasSecondMoment(aggExprs)
+    val edgeFree = (outersUs ++ aggExprs.flatMap(_.collect {
+      case ae: AggregateExpression => aggSpansUs(ae, tsCol, outersUs)
+    }).flatten).forall { case (a, b) =>
+      minuteSliversUs(a, b).forall(w => w._1 >= w._2) }
+    val groupOf = (key: Any, slotMs: Long) => groups.map(_.interior(key, slotMs))
+    val interiorMs = outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) }
+    def prewalk(gates: Seq[CondGate]) = condShifts(interior.entries(interiorMs),
+      measures, gates, (k, s) => Iterator.single(groupOf(k, s)), edgeFree)
+    val shifts =
+      if (edgeFree || !needCond) Map.empty[String, Double]
+      else {
+        val at = prewalk(varGates(aggExprs, tsCol, measures.toSet, outersUs,
+          clippedOnly = false)).getOrElse(return None)
+        measures.map(c => c -> at(null, c)).toMap
+      }
+    val cols = partialColsFor(measures, shifts, perRowShifts = edgeFree && needCond)
     val slotAttr = AttributeReference("__graft_slot", LongType,
       nullable = true)()
-    val tsAttrSrc = below.output.find(_.name == tsCol) match {
-      case Some(t) if t.dataType == TimestampType ||
-        t.dataType == TimestampNTZType => t
-      case _ => return None
-    }
-    val tsOut = AttributeReference("__graft_ts", tsAttrSrc.dataType,
-      nullable = true)()
+    // only an edge scan reads the raw ts (a no-predicate source may
+    // have pruned it)
+    val tsAttrSrc = below.output.find(t => t.name == tsCol &&
+      (t.dataType == TimestampType || t.dataType == TimestampNTZType))
+    if (tsAttrSrc.isEmpty && !edgeFree) return None
+    val tsOut = AttributeReference("__graft_ts",
+      tsAttrSrc.fold[DataType](TimestampType)(_.dataType), nullable = true)()
+    val proofs = scala.collection.mutable.ListBuffer.empty[CondGate]
+    // no edge scan, no raw column to check
     val cr = new CondResidue(noun, tsCol, measures.toSet, cols, outersUs,
       slotAttr, tsOut, sketchServed = sketch.served,
-      rawSrcOk = residueRawSrcOk(below))
+      rawSrcOk = if (edgeFree) (_, _) => true else residueRawSrcOk(below),
+      proofs = Some(proofs).filter(_ => edgeFree))
     val newAggExprs = cr.rewriteAggExprs(aggExprs,
       groups.map(g => (g.spellings, g.out))).getOrElse(return None)
+    val shiftOf: (Any, String) => Double =
+      if (edgeFree && (needCond || proofs.nonEmpty))
+        prewalk(varGates(aggExprs, tsCol, measures.toSet, outersUs,
+          clippedOnly = true) ++ proofs).getOrElse(return None)
+      else (_, c) => cols.shiftOf(c)
     val skCols = cr.sketchCols
     val skAttrs = skCols.flatMap { case (_, (b, r)) => Seq(b, r) }
     // interior leg: one slot-tagged partials row per interior entry
     // (sketch bytes where served), pre-keyed to its groups
-    val rows = interior.entries(
-      outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) })
-      .map { case (key, slotMs, alls) =>
-        InternalRow.fromSeq(groups.map(_.interior(key, slotMs)) ++
-          (slotMs +: null +: cols.partialsRow(alls, alls(measures.head).rows)) ++
-          skCols.flatMap { case ((f, c), _) =>
-            Seq(sketch.bytesAt(f, c, key, slotMs), null) })
-      }.toList
+    val rows = interior.entries(interiorMs).map { case (key, slotMs, alls) =>
+      val g = groupOf(key, slotMs)
+      InternalRow.fromSeq(g ++ (slotMs +: null +: cols.partialsRowShifted(
+        alls, alls(measures.head).rows, c => shiftOf(g, c))) ++
+        skCols.flatMap { case ((f, c), _) =>
+          Seq(sketch.bytesAt(f, c, key, slotMs), null) })
+    }.toList
     val interiorRel = LocalRelation(
       groups.map(_.out) ++ (slotAttr +: tsOut +: cols.partialAttrs) ++ skAttrs,
       rows)
@@ -1758,22 +1776,23 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     // columns invert: the raw value rides (cast as the build casts),
     // the bytes are NULL
     val mergedWins = cr.mergedEdgeWindows(outerSlivers = groups.nonEmpty)
+      .filter(w => w._1 < w._2)
     val edges = groups.flatMap(_.edge)
     val child: LogicalPlan =
       if (mergedWins.isEmpty) interiorRel
       else residueParts(below, tsCol, measures, mergedWins, shifts) match {
-        case Some(parts) if edges.size == groups.size =>
+        case Some(parts) if edges.size == groups.size && tsAttrSrc.nonEmpty =>
           val edgeLeg = Project(
             groups.zip(edges).map { case (g, e) =>
               Alias(e, g.out.name)(): NamedExpression } ++
               (Alias(Literal(null, LongType), "__graft_slot")() +:
-                Alias(tsAttrSrc, "__graft_ts")() +:
+                Alias(tsAttrSrc.get, "__graft_ts")() +:
                 parts.edgePartials) ++ sketchEdgeAliases(below, skCols),
             parts.edgeFilter)
           Union(Seq(interiorRel, edgeLeg))
         case _ =>
           return refuse(s"$noun: the source is missing the typed " +
-            "ts/measure columns an edge scan needs")
+            "ts/measure/group columns an edge scan needs")
       }
     Some(Aggregate(groups.map(_.out), newAggExprs, child))
   }
@@ -1847,67 +1866,62 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
 
   /** One group per key column of a keyed registration: interior values
     * are `component(key, i)` as a literal of the column's type, edge
-    * rows carry the typed raw key column. None when the source misses
-    * one. */
+    * rows carry the typed raw key column (None when the source misses
+    * it, so only an edge-free plan folds). */
   private def keyGroups(keyAttrs: Seq[AttributeReference],
       keyCols: Seq[String], keyTypes: Seq[DataType], below: LogicalPlan,
-      component: (Any, Int) => Any): Option[Seq[CondGroup]] = {
-    val srcs = keyCols.zip(keyTypes).flatMap { case (kc, dt) =>
-      below.output.find(o => o.name == kc && o.dataType == dt) }
-    if (srcs.size != keyCols.size) None
-    else Some(keyAttrs.zip(keyTypes).zip(srcs).zipWithIndex.map {
-      case (((kA, dt), src), i) =>
+      component: (Any, Int) => Any): Seq[CondGroup] =
+    keyAttrs.zip(keyCols).zip(keyTypes).zipWithIndex.map {
+      case (((kA, kc), dt), i) =>
         val vals = new java.util.HashMap[Any, Any]()
         CondGroup(
           AttributeReference(s"__graft_key$i", dt, nullable = kA.nullable)(),
           (key, _) => vals.computeIfAbsent(key,
             k => Literal.create(component(k, i), dt).value),
-          Some(src), Seq(kA))
-    })
-  }
-
-  /** The conditional hybrids' ONE pre-walk over the interior entries,
-    * taken only when a second moment asks: the outer interior's GLOBAL
-    * per-measure mean (the shift centers — raw edge rows cannot know
-    * their group's shift) and the per-(group, gate) conditioning check,
-    * since every group's gated interior recombines around that center.
-    * `groupsOf` names the groups an entry feeds. Empty shifts when no
-    * second moment is asked; None — note pinned — when a gate fails. */
-  private def condShifts(aggExprs: Seq[NamedExpression], tsCol: String,
-      interior: CondInterior, shiftMeasures: Seq[String],
-      outersUs: Seq[(Long, Long)],
-      groupsOf: (Any, Long) => Iterator[Any]): Option[Map[String, Double]] = {
-    if (!hasSecondMoment(aggExprs)) return Some(Map.empty)
-    val gateSpecs = condGateSpecs(aggExprs, tsCol, interior.measures.toSet,
-      outersUs)
-    val gateInteriors = gateSpecs.map { case (_, spans) =>
-      spans.flatMap { case (a, b) => minuteInteriorMs(a, b) } }
-    val globalAcc = new java.util.HashMap[String, AllAggregate]()
-    val gateAccs = new java.util.HashMap[(Any, Int), AllAggregate]()
-    interior.entries(outersUs.flatMap { case (a, b) => minuteInteriorMs(a, b) })
-      .foreach { case (key, slotMs, alls) =>
-        shiftMeasures.foreach { c =>
-          globalAcc.merge(c, alls(c), (x, y) => x.combine(y))
-        }
-        gateSpecs.zipWithIndex.foreach { case ((c, _), gi) =>
-          if (gateInteriors(gi).exists(r => slotMs >= r._1 && slotMs < r._2))
-            groupsOf(key, slotMs).foreach { g =>
-              gateAccs.merge((g, gi), alls(c), (x, y) => x.combine(y))
-            }
-        }
-      }
-    val shifts = shiftMeasures.map { c =>
-      val al = Option(globalAcc.get(c)).getOrElse(AllAggregate.identity)
-      c -> (if (al.count == 0L) 0.0 else al.avg)
-    }.toMap
-    import scala.jdk.CollectionConverters._
-    val ill = gateAccs.asScala.exists { case ((_, gi), al) =>
-      !al.varWellConditionedAround(shifts.getOrElse(gateSpecs(gi)._1, 0.0))
+          below.output.find(o => o.name == kc && o.dataType == dt), Seq(kA))
     }
-    if (!ill) Some(shifts)
-    else {
-      if (foldBailNote.isEmpty) foldBailNote = IllCondNote
-      None
+
+  /** One check of the hybrids' pre-walk: per group, `measure`'s partial
+    * over the whole minutes of `spans` must pass `ok` around the
+    * group's shift center, else the fold refuses with `note`. */
+  private final case class CondGate(measure: String, spans: Seq[(Long, Long)],
+      ok: (AllAggregate, Double) => Boolean, note: String)
+
+  /** The hybrids' ONE pre-walk over the interior entries: the shift
+    * centers — the GLOBAL per-measure mean, or with `perGroup` each
+    * group's own — and the per-(group, gate) checks. `groupsOf` names
+    * the groups an entry feeds. Returns the shift of (group, measure);
+    * None — note pinned — when a gate fails. */
+  private def condShifts(entries: Iterator[CondEntry], measures: Seq[String],
+      gates: Seq[CondGate], groupsOf: (Any, Long) => Iterator[Any],
+      perGroup: Boolean): Option[(Any, String) => Double] = {
+    val gateInteriors = gates.map(_.spans.flatMap { case (a, b) =>
+      minuteInteriorMs(a, b) })
+    val shiftAccs = new java.util.HashMap[(Any, String), AllAggregate]()
+    val gateAccs = new java.util.HashMap[(Any, Int), AllAggregate]()
+    entries.foreach { case (key, slotMs, alls) =>
+      val gs = groupsOf(key, slotMs).toSeq
+      measures.foreach { c =>
+        (if (perGroup) gs else Seq(null)).foreach(g =>
+          shiftAccs.merge((g, c), alls(c), (x, y) => x.combine(y)))
+      }
+      gates.indices.foreach { gi =>
+        if (gateInteriors(gi).exists(r => slotMs >= r._1 && slotMs < r._2))
+          gs.foreach(g => gateAccs.merge((g, gi), alls(gates(gi).measure),
+            (x, y) => x.combine(y)))
+      }
+    }
+    val shift = (g: Any, c: String) =>
+      Option(shiftAccs.get((if (perGroup) g else null, c)))
+        .filter(_.count > 0L).fold(0.0)(_.avg)
+    import scala.jdk.CollectionConverters._
+    gateAccs.asScala.collectFirst { case ((g, gi), al)
+        if !gates(gi).ok(al, shift(g, gates(gi).measure)) => gates(gi).note
+    } match {
+      case None => Some(shift)
+      case Some(note) =>
+        if (foldBailNote.isEmpty) foldBailNote = note
+        None
     }
   }
 
@@ -2104,13 +2118,11 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * aggregates fold too — `GROUP BY key` over a time range previously
     * kept the scan outright, so the unconditioned spelling is served by
     * the same leg with every aggregate on the outer range. Keyed sketch
-    * views serve approximate spellings per key. Minute-aligned ranges
-    * only. ABOVE the plan-time fold cap the query routes to
-    * [[distributedKeyedConditional]] (round 15): the shipped minute
-    * states are slot-tagged, so each aggregate's range clipping is a
-    * FILTER over `slot_ms` and a merge-form Aggregate groups per key on
-    * executors — sketch spellings and non-merge aggregates still refuse
-    * there. */
+    * views serve approximate spellings per key. Minute-aligned single
+    * ranges at or below [[maxFoldRows]] keys only: sub-minute bounds,
+    * OR outers and wider key sets go to the keyed [[condHybrid]], whose
+    * slot-tagged minute states clip each aggregate's range with a
+    * FILTER and group per key on executors. */
   private def rewriteKeyedConditional(
       agg: Aggregate, grouping: Expression,
       aggExprs: Seq[NamedExpression],
@@ -2146,53 +2158,25 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         case None =>
           Some(Seq((reg.any.baseMs * 1000L, reg.any.horizonMs * 1000L)))
       }
-      outerA = outerRanges.head._1
-      outerB = outerRanges.last._2
       result <- {
         foldBailNote = ""
-        // sub-minute bounds — on the outer WHERE or any per-aggregate
-        // condition — route to the KEYED conditional hybrid (round 16):
-        // per-(key, minute) partials ∪ ONE bounded sliver scan carrying
-        // the key column, a real Aggregate grouping per key
-        def unalignedAgg(ae: AggregateExpression): Boolean = {
-          val condOpt = ae.filter.orElse(
-            ae.aggregateFunction.children.collectFirst {
-              case cw: CaseWhen if cw.branches.size == 1 => cw.branches.head._1
-            })
-          condOpt.flatMap(c => rangeUs(c, reg.tsCol)).exists { case (lo, hi) =>
-            lo.exists(_ % MinuteUs != 0) || hi.exists(_ % MinuteUs != 0)
-          }
-        }
         val anyUnaligned =
           outerRanges.exists(o =>
             o._1 % MinuteUs != 0 || o._2 % MinuteUs != 0) ||
-            aggExprs.exists(_.exists {
-              case ae: AggregateExpression => unalignedAgg(ae)
-              case _ => false
-            })
+            subMinuteAggCond(aggExprs, reg.tsCol)
         val folded =
-          if (anyUnaligned || outerRanges.size > 1)
-            // sub-minute bounds AND/OR a multi-range outer both route
-            // through the hybrid — for aligned disjuncts the sliver set
-            // is empty, so the plan degenerates to pure per-(key,
-            // minute) partials + an executor Aggregate, still scan-free
+          if (anyUnaligned || outerRanges.size > 1 ||
+              reg.any.keys.size.toLong > maxFoldRows)
+            // per-(key, minute) partials ∪ one bounded sliver scan when
+            // a bound is sub-minute; aligned outers leave no sliver, so
+            // the plan is pure partials + an executor Aggregate
             foldKeyedConditionalResidue(keyAttr, aggExprs,
               findFilter(child).map(_._2).getOrElse(child), reg,
               outerRanges,
               WheelAcceleration.lookup(path)(_.keyedSketch).filter(r =>
                 r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
-          else if (reg.any.keys.size.toLong > maxFoldRows)
-            // ABOVE-CAP distributed form (round 15, VERDICT r14 #1):
-            // per-aggregate range clipping IS expressible against
-            // minute-aligned states — as a FILTER over the shipped
-            // slot_ms — so the keyed cohort pivot no longer keeps the
-            // scan past the key ceiling
-            distributedKeyedConditional(agg, keyAttr, aggExprs, reg,
-              outerA / 1000L, outerB / 1000L,
-              WheelAcceleration.lookup(path)(_.keyedSketch)
-                .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol))
           else foldKeyedConditionalRows(agg, keyAttr, aggExprs, path,
-            reg, outerA / 1000L, outerB / 1000L)
+            reg, outerRanges.head._1 / 1000L, outerRanges.head._2 / 1000L)
         if (folded.isEmpty) {
           condBailNote = foldNote("keyed conditional fold refused")
           WheelAcceleration.recordBail(path, condBailNote)
@@ -2215,16 +2199,21 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * for KLL); `sketchAttrs` allocates-or-returns the (bytes, raw)
     * relation attributes; `mkAgg` wraps the new aggregate function
     * with the caller's Complete + span FILTER. Accuracy gates are the
-    * STATIC worst-case forms (the distributed posture): edge-row
-    * counts are unknowable at plan time, so requests tighter than the
-    * wheels' worst case refuse to the scan. */
+    * STATIC worst-case forms when the plan has edges: edge-row counts
+    * are unknowable at plan time, so requests tighter than the wheels'
+    * worst case refuse to the scan. An edge-free caller passes `prove`
+    * instead: a tighter KLL or Misra-Gries request defers to its
+    * per-(group, span) exact-regime proof — `prove(Some(col), limit,
+    * note)` bounds the column's value count, `prove(None, …)` the row
+    * count, and false means the bound is not provable. */
   private def residueSketchExpr(
       fn: AggregateFunction,
       served: (String, String) => Option[Boolean],
       rawSrcOk: (String, Boolean) => Boolean,
       sketchAttrs: (String, String, DataType) => (AttributeReference, AttributeReference),
       refuseMsg: String => Unit,
-      mkAgg: AggregateFunction => Expression): Option[Expression] = {
+      mkAgg: AggregateFunction => Expression,
+      prove: Option[(Option[String], Long, String) => Boolean]): Option[Expression] = {
     def inputCol(e: Expression): Option[String] = e match {
       case at: AttributeReference => Some(at.name)
       case _ => None
@@ -2263,11 +2252,18 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         }
         wheelEps = org.apache.datasketches.kll.KllSketch
           .getNormalizedRankError(graft.wheel.QuantileWheel.K, false)
-        _ <- gate(requestedEps + 1e-12 >= wheelEps,
+        _ <- gate(requestedEps + 1e-12 >= wheelEps ||
+            prove.exists(_(Some(colName), graft.wheel.QuantileWheel.K,
+              "percentile_approx requested rank error tighter than the " +
+                "KLL wheel's guarantee and a group's count exceeds the " +
+                "provable exact regime " +
+                s"(${graft.wheel.QuantileWheel.K} values) — scan kept")),
           f"percentile_approx requested rank error $requestedEps%.6f " +
-            f"tighter than the KLL wheel's $wheelEps%.4f — the residue " +
-            "hybrid gates statically (edge-row counts are unknowable " +
-            "at plan time), scan kept")
+            f"tighter than the KLL wheel's $wheelEps%.4f — " + (
+            if (prove.isEmpty) "the residue hybrid gates statically " +
+              "(edge-row counts are unknowable at plan time), scan kept"
+            else "and its column has no registered measure wheel to " +
+              "prove the exact regime per group — scan kept"))
         ps <- ap.percentageExpression.eval(InternalRow.empty) match {
           case d: java.lang.Double => Some((Seq(d.doubleValue()), true))
           case arr: org.apache.spark.sql.catalyst.util.ArrayData =>
@@ -2307,8 +2303,13 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           case t if t <= 0 => ApproxTopK.DEFAULT_MAX_ITEMS_TRACKED
           case t => t
         }
+        mgCap = graft.wheel.FrequencyWheel.MaxMapSize * 3L / 4L
         _ <- gate(graft.wheel.FrequencyWheel.MaxMapSize >=
-            ApproxTopK.calMaxMapSize(trackedEff),
+            ApproxTopK.calMaxMapSize(trackedEff) ||
+            prove.exists(_(None, mgCap, "approx_top_k tracks more items " +
+              "than the Misra-Gries wheel's budget and a group's row " +
+              s"count exceeds the provable exact regime ($mgCap rows) — " +
+              "scan kept")),
           s"approx_top_k tracks $trackedEff items (map size " +
             s"${ApproxTopK.calMaxMapSize(trackedEff)}) but the " +
             s"Misra-Gries wheel's budget is " +
@@ -2366,8 +2367,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       }).orNull)
 
   /** The seam over a KEYED sketch registration — EVERY key's wheel must
-    * retain its minute tier (the same forall the distributed keyed
-    * sketch form gates on). */
+    * retain its minute tier. */
   private def keyedCondSketchOf(
       keyedSk: Option[WheelAcceleration.KeyedSketchReg]): CondSketch =
     CondSketch(
@@ -2417,7 +2417,10 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       // the seam must also emit the [[sketchCols]] attributes on both
       // union legs (bytes on interior rows, cast raws on edge rows).
       sketchServed: (String, String) => Option[Boolean] = (_, _) => None,
-      rawSrcOk: (String, Boolean) => Boolean = (_, _) => false) {
+      rawSrcOk: (String, Boolean) => Boolean = (_, _) => false,
+      // an edge-free caller's sink for the deferred exact-regime sketch
+      // proofs; None keeps the static accuracy gates
+      proofs: Option[scala.collection.mutable.Buffer[CondGate]] = None) {
 
     var supported = true
     private def fail[T](msg: String, keep: T): T = {
@@ -2491,7 +2494,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
                 refuseMsg = msg => { fail(msg, ()); () },
                 mkAgg = f =>
                   AggregateExpression(f, Complete, isDistinct = false)
-                    .copy(filter = Some(spanFilter(spans)))).getOrElse {
+                    .copy(filter = Some(spanFilter(spans))),
+                prove = proofs.map(buf => (col, limit, note) =>
+                  col.forall(measureNames.contains) && {
+                    buf += CondGate(col.getOrElse(cols.measures.head), spans,
+                      (al, _) => (if (col.isEmpty) al.rows else al.count) <= limit,
+                      note)
+                    true
+                  })).getOrElse {
                 if (supported)
                   fail(s"$noun: no fresh sketch registration serves " +
                     s"${fn.prettyName} on this column (or the source " +
@@ -2564,34 +2574,62 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
   }
 
-  /** Every second moment's (measure, clipped spans) — parsed up-front
-    * so ONE pre-walk can accumulate the per-(group, gate) partials the
-    * conditioning check needs. Shared by the residue hybrids. */
-  private def condGateSpecs(aggExprs: Seq[NamedExpression], tsCol: String,
-      measureNames: Set[String],
-      outersUs: Seq[(Long, Long)]): Seq[(String, Seq[(Long, Long)])] =
+  /** An aggregate's own time condition: its FILTER clause, or the
+    * condition of a single-branch CASE WHEN argument. */
+  private def aggCondOf(ae: AggregateExpression): Option[Expression] =
+    ae.filter.orElse(ae.aggregateFunction.children.collectFirst {
+      case cw: CaseWhen if cw.branches.size == 1 => cw.branches.head._1
+    })
+
+  /** True when some aggregate carries a FILTER clause or a CASE WHEN
+    * argument — the conditional legs' structural cue. */
+  private def hasConditional(aggExprs: Seq[NamedExpression]): Boolean =
+    aggExprs.exists(_.exists {
+      case ae: AggregateExpression => ae.filter.nonEmpty ||
+        ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
+      case _ => false
+    })
+
+  /** True when some aggregate's own time range has a sub-minute bound. */
+  private def subMinuteAggCond(aggExprs: Seq[NamedExpression],
+      tsCol: String): Boolean =
+    aggExprs.exists(_.exists {
+      case ae: AggregateExpression =>
+        aggCondOf(ae).flatMap(c => rangeUs(c, tsCol)).exists { case (lo, hi) =>
+          (lo ++ hi).exists(_ % (MinuteMs * 1000L) != 0) }
+      case _ => false
+    })
+
+  /** An aggregate's spans: its own time range clipped against every
+    * outer range, or the outer ranges when it has none. */
+  private def aggSpansUs(ae: AggregateExpression, tsCol: String,
+      outersUs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    aggCondOf(ae).flatMap(c => rangeUs(c, tsCol)) match {
+      case Some((lo, hi)) => clipSpansUs(outersUs, lo, hi)
+      case None => outersUs
+    }
+
+  /** The conditioning gate of every second moment over a registered
+    * measure, on its clipped spans — with `clippedOnly`, only those
+    * clipped to a sub-range of the outers (a per-group shift already
+    * centers the full-range ones exactly). */
+  private def varGates(aggExprs: Seq[NamedExpression], tsCol: String,
+      measureNames: Set[String], outersUs: Seq[(Long, Long)],
+      clippedOnly: Boolean): Seq[CondGate] =
     aggExprs.flatMap(_.collect {
       case ae: AggregateExpression => ae
     }).flatMap { ae =>
       val fn = ae.aggregateFunction
-      val isVar = fn match {
-        case _: VariancePop | _: StddevPop
-             | _: VarianceSamp | _: StddevSamp => true
-        case _ => false
-      }
-      if (!isVar) Nil
-      else {
-        val condOpt = ae.filter.orElse(fn.children.collectFirst {
-          case cw: CaseWhen if cw.branches.size == 1 => cw.branches.head._1
-        })
-        val spans = condOpt.flatMap(c => rangeUs(c, tsCol)) match {
-          case Some((lo, hi)) => clipSpansUs(outersUs, lo, hi)
-          case None => outersUs
-        }
-        fn.children.flatMap(_.collect {
-          case a: AttributeReference if measureNames.contains(a.name) =>
-            (a.name, spans)
-        })
+      val spans = aggSpansUs(ae, tsCol, outersUs)
+      fn match {
+        case _: VariancePop | _: StddevPop | _: VarianceSamp | _: StddevSamp
+            if !clippedOnly || spans != outersUs =>
+          fn.children.flatMap(_.collect {
+            case a: AttributeReference if measureNames.contains(a.name) =>
+              CondGate(a.name, spans,
+                (al, shift) => al.varWellConditionedAround(shift), IllCondNote)
+          })
+        case _ => Nil
       }
     }
 
@@ -2599,18 +2637,20 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * sub-minute bounds on the outer WHERE or on per-aggregate
     * conditions — [[condHybrid]] grouped per key, so the path serves
     * ANY key cardinality (no per-key driver queries anywhere). Keys
-    * present only in the slivers emerge from the edge rows;
+    * present only in the slivers emerge from the edge rows. With edges,
     * heterogeneous key means far from the global shift center refuse
-    * to the scan, the raw-edge-leg contract. */
+    * to the scan (the raw-edge-leg contract); edge-free — an aligned
+    * OR outer, or any aligned outer past the key ceiling — each key
+    * centers on its own mean. */
   private def foldKeyedConditionalResidue(keyAttr: AttributeReference,
       aggExprs: Seq[NamedExpression], below: LogicalPlan,
       reg: WheelAcceleration.KeyedReg, outersUs: Seq[(Long, Long)],
       keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] =
-    keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType), below,
-      (key, _) => key).flatMap(keys =>
-      condHybrid("keyed conditional hybrid", aggExprs, below, reg.tsCol,
-        keyedCondInterior(reg.wheels), outersUs, keys,
-        keyedCondSketchOf(keyedSk)))
+    condHybrid("keyed conditional hybrid", aggExprs, below, reg.tsCol,
+      keyedCondInterior(reg.wheels), outersUs,
+      keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType), below,
+        (key, _) => key),
+      keyedCondSketchOf(keyedSk))
 
   /** The per-key rows for [[rewriteKeyedConditional]]: for each
     * registered key with data in the outer range, every aggregate
@@ -2705,431 +2745,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     if (supported) Some(LocalRelation(agg.output, out.result())) else None
   }
 
-  /** ABOVE-CAP distributed form of the keyed conditional/pivot fold
-    * (round 15, VERDICT r14 #1). Past `maxFoldRows` keys the per-key
-    * plan-time loop of [[foldKeyedConditionalRows]] would materialize
-    * too many driver rows — instead, ship the registration's non-empty
-    * (key, minute slot) states over the OUTER range once (O(state), the
-    * same emission [[distributedGrouped]] uses) as
-    * `(key, slot_ms, partials…)` rows, and rewrite each aggregate to
-    * merge form over the partials with ITS OWN clipped range attached
-    * as a `FILTER (slot_ms ∈ [lo, hi))` — per-aggregate range clipping
-    * IS expressible against minute-aligned states, which is what the
-    * pinned r14 refusal missed. A real executor-side Aggregate then
-    * groups per key: keys with no state in the outer range emit no row
-    * (SQL GROUP BY), an aggregate whose clipped range is empty sees an
-    * empty filtered input (NULL / COUNT 0), and `SUM(CASE … ELSE 0)`
-    * resolves NULL-vs-0 per key from the shipped row counts
-    * (`outer > in-range` ⟺ an ELSE input exists — the ADVICE r14
-    * semantics, expressed as a plan-side conditional). Second moments
-    * ride per-KEY shift columns (the key's outer-range mean — constant
-    * within the group, so every aggregate of the key shares one exact
-    * recombination center).
-    *
-    * KEYED SKETCH spellings go distributed too (round 16, VERDICT r15
-    * "what's missing" #1): `approx_count_distinct` / `percentile_approx`
-    * / `approx_top_k` over a keyed-sketch registration ship each key's
-    * raw per-minute sketch BYTES as one extra binary relation column
-    * (O(1) per entry — no driver merges), and a
-    * [[graft.functions.SketchBytesAgg]] unions them executor-side with
-    * the same per-aggregate `FILTER (slot_ms ∈ [lo, hi))` clipping. The
-    * accuracy gates are the STATIC worst-case forms of the below-cap
-    * realized-bound gates (the driver no longer holds merged sketches
-    * to inspect): tighter requests refuse to the scan.
-    *
-    * Refuses — scan kept, note pinned — on non-range conditions,
-    * unaligned per-aggregate ranges, DISTINCT, and aggregates without
-    * a merge form. */
-  private def distributedKeyedConditional(
-      agg: Aggregate, keyAttr: AttributeReference,
-      aggExprs: Seq[NamedExpression],
-      reg: WheelAcceleration.KeyedReg,
-      outerAMs: Long, outerBMs: Long,
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg] = None): Option[LogicalPlan] = {
-    val MinuteUs = MinuteMs * 1000L
-    val measures = reg.wheels.keys.toSeq
-    val needCond = hasSecondMoment(aggExprs)
-    val cols = partialColsFor(measures, Map.empty, perRowShifts = needCond)
-    val slotAttr = AttributeReference("__graft_slot", LongType, nullable = false)()
-    val keyOut = AttributeReference("__graft_key0", reg.any.keyType,
-      nullable = keyAttr.nullable)()
-    // per-aggregate clipped ms-range: None = refuse; Some(None) = the
-    // full outer range (no filter); Some(Some(r)) = a clipped range
-    // (possibly empty)
-    def msRangeOf(condOpt: Option[Expression])
-        : Option[Option[(Long, Long)]] = condOpt match {
-      case None => Some(None)
-      case Some(c) => rangeUs(c, reg.tsCol) match {
-        case Some((lo, hi)) =>
-          val a = math.max(outerAMs * 1000L, lo.getOrElse(outerAMs * 1000L))
-          val b = math.min(outerBMs * 1000L, hi.getOrElse(outerBMs * 1000L))
-          val bb = math.max(a, b)
-          if (a % MinuteUs == 0 && bb % MinuteUs == 0)
-            Some(Some((a / 1000L, bb / 1000L)))
-          else None
-        case None => None
-      }
-    }
-    def slotCondFor(r: (Long, Long)): Expression =
-      if (r._1 >= r._2) Literal.FalseLiteral
-      else And(GreaterThanOrEqual(slotAttr, Literal(r._1, LongType)),
-        LessThan(slotAttr, Literal(r._2, LongType)))
-    var supported = true
-    def refuse[T](msg: String, keep: T): T = {
-      if (foldBailNote.isEmpty) foldBailNote = msg
-      supported = false; keep
-    }
-    // CLIPPED second moments to conditioning-gate (round 16, ADVICE
-    // r15): the shift columns carry each key's OUTER-range mean —
-    // exact recombination centers for full-range aggregates, but a
-    // VAR/STDDEV clipped to a SUB-range whose local mean sits far from
-    // that center recombines mean-scale addends and can cancel. Each
-    // (sub-range, measure) a second moment touches is recorded here
-    // and checked per key against the shipped partials before any row
-    // emits; a failing key refuses the whole fold to the scan, the
-    // same posture as every other merge-form path with a plan-time
-    // shift.
-    val condGateRanges =
-      scala.collection.mutable.LinkedHashSet.empty[((Long, Long), String)]
-    // the (family tag, input column) → binary relation attribute of
-    // every sketch-served aggregate — populated while rewriting the
-    // aggExprs, consumed by the emission walk (round 16)
-    val neededSketch = scala.collection.mutable
-      .LinkedHashMap.empty[(String, String), AttributeReference]
-    // percentile_approx requests TIGHTER than the KLL worst-case bound
-    // (incl. the 1e-4 default) are only honest in the EXACT regime —
-    // provable at plan time when the KLL column is ALSO a registered
-    // measure: each key's clipped non-null count ≤ K means the merged
-    // sketch retained every item. Checked per key off the same
-    // pre-walk the conditioning gate rides; a failing key refuses.
-    val kllGates = scala.collection.mutable
-      .LinkedHashSet.empty[(String, Option[(Long, Long)])]
-    // approx_top_k requests past the Misra-Gries counter budget (incl.
-    // the 10000 default vs the wheel's 4096) are only honest when the
-    // merged sketch is EXACT — provable when a key's clipped ROW count
-    // (≥ its distinct count) stays under the no-purge bound
-    // 0.75·MaxMapSize. Same deferred pre-walk proof as the KLL gate.
-    val mgGates = scala.collection.mutable
-      .LinkedHashSet.empty[Option[(Long, Long)]]
-    def sketchAttr(family: String, colName: String): AttributeReference =
-      neededSketch.getOrElseUpdate((family, colName),
-        AttributeReference(s"__graft_sk_${family}_$colName", BinaryType,
-          nullable = true)())
-    def isSketchFn(fn: AggregateFunction): Boolean = fn match {
-      case _: HyperLogLogPlusPlus | _: ApproximatePercentile | _: ApproxTopK => true
-      case _ => false
-    }
-    /** The distributed sketch-merge expression for one approximate
-      * spelling, or None (with the refusal note set when a GATE failed;
-      * unset when there is simply no serving registration). */
-    def sketchMerged(fn: AggregateFunction,
-        rOpt: Option[(Long, Long)]): Option[Expression] = {
-      val filter = rOpt.map(slotCondFor)
-      def inputCol(e: Expression): Option[String] = e match {
-        case at: AttributeReference => Some(at.name)
-        case _ => None
-      }
-      def gate(ok: Boolean, msg: => String): Option[Unit] =
-        if (ok) Some(()) else { refuse(msg, ()); None }
-      def ae(f: AggregateFunction): Expression =
-        AggregateExpression(f, Complete, isDistinct = false).copy(filter = filter)
-      fn match {
-        case hll: HyperLogLogPlusPlus => for {
-          sk <- keyedSk
-          colName <- inputCol(hll.child)
-          wheels <- sk.distinct.get(colName)
-          _ <- gate(wheels.valuesIterator.forall(_.minuteTierComplete),
-            "distributed keyed sketch: a Theta wheel's minute tier is " +
-              "retention-evicted (no per-slot bytes to ship) — scan kept")
-          _ <- gate(hll.relativeSD + 1e-12 >=
-              graft.functions.SketchMergeAggs.ThetaWorstRse,
-            f"approx_count_distinct requested rsd ${hll.relativeSD}%.4f " +
-              f"tighter than the Theta wheel's worst-case " +
-              f"${graft.functions.SketchMergeAggs.ThetaWorstRse}%.4f — the " +
-              "distributed merge gates statically, scan kept")
-        } yield ae(graft.functions.ThetaDistinctMergeAgg(
-          sketchAttr("d", colName)))
-        case ap: ApproximatePercentile => for {
-          sk <- keyedSk
-          colName <- inputCol(ap.child)
-          wheels <- sk.quantile.get(colName)
-          _ <- gate(wheels.valuesIterator.forall(_.minuteTierComplete),
-            "distributed keyed sketch: a KLL wheel's minute tier is " +
-              "retention-evicted — scan kept")
-          requestedEps = ap.accuracyExpression.eval(InternalRow.empty) match {
-            case i: java.lang.Integer => 1.0 / math.max(1, i.intValue())
-            case l: java.lang.Long => 1.0 / math.max(1L, l.longValue()).toDouble
-            case _ => 0.0 // unknown accuracy spelling: strictest reading
-          }
-          wheelEps = org.apache.datasketches.kll.KllSketch
-            .getNormalizedRankError(graft.wheel.QuantileWheel.K, false)
-          _ <- {
-            if (requestedEps + 1e-12 >= wheelEps) Some(())
-            else if (measures.contains(colName)) {
-              // tighter request (incl. the 1e-4 default): defer to the
-              // per-key exact-regime proof off the pre-walk counts
-              kllGates += ((colName, rOpt)); Some(())
-            } else gate(ok = false,
-              f"percentile_approx requested rank error $requestedEps%.6f " +
-                f"tighter than the KLL wheel's $wheelEps%.4f and its " +
-                "column has no registered measure wheel to prove the " +
-                "exact regime per key — scan kept")
-          }
-          ps <- ap.percentageExpression.eval(InternalRow.empty) match {
-            case d: java.lang.Double => Some((Seq(d.doubleValue()), true))
-            case arr: org.apache.spark.sql.catalyst.util.ArrayData =>
-              Some((arr.toDoubleArray().toSeq, false))
-            case _ => None
-          }
-          // the KLL wheel is a doubles sketch: only the double-typed
-          // spelling keeps the output schema bit-identical
-          _ <- if ((ps._2 && ap.dataType == DoubleType) ||
-              (!ps._2 && (ap.dataType match {
-                case ArrayType(DoubleType, _) => true
-                case _ => false
-              }))) Some(()) else None
-        } yield ae(graft.functions.KllQuantileMergeAgg(
-          sketchAttr("q", colName), ps._1, ps._2, ap.dataType))
-        case tk: ApproxTopK => for {
-          sk <- keyedSk
-          _ <- if (tk.expr.dataType == LongType) Some(()) else None
-          colName <- inputCol(tk.expr)
-          wheels <- sk.freq.get(colName)
-          _ <- gate(wheels.valuesIterator.forall(_.minuteTierComplete),
-            "distributed keyed sketch: a Misra-Gries wheel's minute tier " +
-              "is retention-evicted — scan kept")
-          k <- tk.k.eval(InternalRow.empty) match {
-            case i: java.lang.Integer => Some(i.intValue())
-            case l: java.lang.Long => Some(l.intValue())
-            case _ => None
-          }
-          trackedEff = (tk.maxItemsTracked.eval(InternalRow.empty) match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case _ => ApproxTopK.DEFAULT_MAX_ITEMS_TRACKED
-          }) match {
-            case t if t <= 0 => ApproxTopK.DEFAULT_MAX_ITEMS_TRACKED
-            case t => t
-          }
-          _ <- {
-            if (graft.wheel.FrequencyWheel.MaxMapSize >=
-                ApproxTopK.calMaxMapSize(trackedEff)) Some(())
-            else {
-              // request past the wheel's budget: defer to the per-key
-              // exact-regime proof off the pre-walk row counts
-              mgGates += rOpt; Some(())
-            }
-          }
-        } yield ae(graft.functions.MgTopKMergeAgg(
-          sketchAttr("f", colName), k, tk.dataType))
-        case _ => None
-      }
-    }
-    def sumRowsAe(filter: Option[Expression]): AggregateExpression =
-      AggregateExpression(Sum(cols.rowsAttr), Complete,
-        isDistinct = false).copy(filter = filter)
-    def mergedCond(ae: AggregateExpression): Expression = {
-      if (!supported) return ae
-      condParts(ae) match {
-        case None => supported = false; ae
-        case Some((fn, condOpt, elseZero)) => msRangeOf(condOpt) match {
-          case None =>
-            refuse("distributed keyed conditional fold: a per-aggregate " +
-              "condition is not a bare minute-aligned time range on " +
-              s"'${reg.tsCol}'", ae)
-          case Some(rOpt) =>
-            val secondMoment = fn match {
-              case _: VariancePop | _: StddevPop
-                   | _: VarianceSamp | _: StddevSamp => true
-              case _ => false
-            }
-            rOpt match {
-              case Some(r) if secondMoment && r != ((outerAMs, outerBMs)) =>
-                fn.children.foreach(_.foreach {
-                  case a: AttributeReference if measures.contains(a.name) =>
-                    condGateRanges += ((r, a.name))
-                  case _ => ()
-                })
-              case _ => ()
-            }
-            // sketch spellings ride the shipped sketch bytes (round 16)
-            // rather than the numeric merge forms
-            if (isSketchFn(fn)) sketchMerged(fn, rOpt).getOrElse {
-              if (supported) // no serving registration (gates set notes)
-                refuse("distributed keyed sketch spelling: no fresh " +
-                  s"keyed sketch registration serves ${fn.prettyName} " +
-                  "on this column — scan kept", ae)
-              else ae
-            }
-            else {
-            val plain = AggregateExpression(fn, Complete, isDistinct = false)
-            mergeAggExprs(cols, measures.toSet,
-              Seq(Alias(plain, "__graft_m")()), Nil) match {
-              case None => supported = false; ae // note set by mergeAggExprs
-              case Some(Seq(alias)) =>
-                val merged0 = alias.asInstanceOf[Alias].child
-                val filtered = rOpt match {
-                  case None => merged0
-                  case Some(r) =>
-                    val c = slotCondFor(r)
-                    merged0.transformUp {
-                      case iae: AggregateExpression =>
-                        iae.copy(filter = Some(c))
-                    }
-                }
-                if (!elseZero) filtered
-                else {
-                  // NULL survives the ELSE 0 only when every one of
-                  // this key's outer rows hits the branch (no ELSE
-                  // input) — decidable on executors from the shipped
-                  // row counts
-                  val outerRowsE = sumRowsAe(None)
-                  val spanRowsE = rOpt match {
-                    case None => outerRowsE
-                    case Some(r) => Coalesce(Seq(
-                      sumRowsAe(Some(slotCondFor(r))), Literal(0L, LongType)))
-                  }
-                  If(And(IsNull(filtered), GreaterThan(outerRowsE, spanRowsE)),
-                    Literal(0.0, filtered.dataType), filtered)
-                }
-              case Some(_) => supported = false; ae
-            }
-            }
-        }
-      }
-    }
-    val newAggExprs = aggExprs.map { ne =>
-      val substituted = ne.transform {
-        case e if e.semanticEquals(keyAttr) => keyOut
-      }
-      val out = substituted.transformUp {
-        case e: AggregateExpression => mergedCond(e)
-      }.asInstanceOf[NamedExpression]
-      if (out.exprId == ne.exprId) out else Alias(out, ne.name)(ne.exprId)
-    }
-    if (!supported) return None
-    val allowed = cols.partialAttrs.map(_.exprId).toSet +
-      slotAttr.exprId + keyOut.exprId ++
-      neededSketch.valuesIterator.map(_.exprId)
-    if (newAggExprs.exists(_.exists {
-      case at: Attribute => !allowed.contains(at.exprId)
-      case _ => false
-    })) return None
-    // ship the (key, minute) states: one walk for per-key means when a
-    // second moment asks for shift columns, one to emit
-    val anyIdx = reg.any
-    val anyMeasure = reg.wheels.find(_._2 eq anyIdx).get._1
-    val keyVals = new java.util.HashMap[Any, Any]()
-    def kv(key: Any): Any = keyVals.computeIfAbsent(key,
-      k => Literal.create(k, reg.any.keyType).value)
-    val groupMeans = new java.util.HashMap[Any, Map[String, (Double, Long)]]()
-    val gateAccs =
-      new java.util.HashMap[(Any, (Long, Long), String), AllAggregate]()
-    val kllCounts =
-      new java.util.HashMap[(Any, String, Option[(Long, Long)]), java.lang.Long]()
-    val mgCounts =
-      new java.util.HashMap[(Any, Option[(Long, Long)]), java.lang.Long]()
-    def walk(emit: Boolean, rows: scala.collection.mutable.Builder[InternalRow, Seq[InternalRow]]): Unit =
-      anyIdx.minuteEntries(outerAMs, outerBMs).foreach {
-        case (key, slotMs, anyAll) =>
-          val alls = reg.wheels.map {
-            case (c, _) if c == anyMeasure => c -> anyAll
-            case (c, i) => c -> i.minuteAt(key, slotMs)
-          }
-          val k = kv(key)
-          if (!emit) {
-            val prev = groupMeans.get(k)
-            groupMeans.put(k, measures.map { c =>
-              val al = alls(c)
-              val (ps, pc) = if (prev == null) (0.0, 0L) else prev(c)
-              c -> (ps + al.sum, pc + al.count)
-            }.toMap)
-            condGateRanges.foreach { case (r, c) =>
-              if (slotMs >= r._1 && slotMs < r._2) {
-                val gk = (k, r, c)
-                val prevAcc = gateAccs.get(gk)
-                gateAccs.put(gk,
-                  if (prevAcc == null) alls(c) else prevAcc.combine(alls(c)))
-              }
-            }
-            kllGates.foreach { case (c, rOpt) =>
-              if (rOpt.forall(r => slotMs >= r._1 && slotMs < r._2))
-                kllCounts.merge((k, c, rOpt), alls(c).count,
-                  (a, b) => Long.box(a + b))
-            }
-            mgGates.foreach { rOpt =>
-              if (rOpt.forall(r => slotMs >= r._1 && slotMs < r._2))
-                mgCounts.merge((k, rOpt), anyAll.rows,
-                  (a, b) => Long.box(a + b))
-            }
-          } else {
-            def shiftFor(c: String): Double = {
-              val (s, n) = groupMeans.get(k)(c)
-              if (n == 0L) 0.0 else s / n
-            }
-            // sketch-served aggregates ride raw per-(key, minute)
-            // sketch bytes (round 16) — O(1) array reads, no driver
-            // merge; a key/slot absent from a family's wheel ships
-            // null (= that slot contributes nothing to the union)
-            val skBytes: Seq[Any] = neededSketch.keysIterator.map {
-              case ("d", colName) => keyedSk
-                .flatMap(_.distinct.get(colName)).flatMap(_.get(key))
-                .map(_.minuteBytesAt(slotMs)).orNull
-              case ("q", colName) => keyedSk
-                .flatMap(_.quantile.get(colName)).flatMap(_.get(key))
-                .map(_.minuteBytesAt(slotMs)).orNull
-              case (_, colName) => keyedSk
-                .flatMap(_.freq.get(colName)).flatMap(_.get(key))
-                .map(_.minuteBytesAt(slotMs)).orNull
-            }.toSeq
-            rows += InternalRow.fromSeq((k +: (slotMs +:
-              cols.partialsRowShifted(alls, anyAll.rows,
-                if (needCond) shiftFor else cols.shiftOf))) ++ skBytes)
-          }
-      }
-    val rows = Seq.newBuilder[InternalRow]
-    if (needCond || kllGates.nonEmpty || mgGates.nonEmpty) {
-      walk(emit = false, rows)
-      // the per-(key, clipped range) conditioning check itself — runs
-      // off the same plan-time minute walk, so refusal costs nothing
-      // extra and the emitted plan is gated exactly like the hybrid
-      // shapes'
-      import scala.jdk.CollectionConverters._
-      val ill = needCond && gateAccs.entrySet().asScala.exists { e =>
-        val (k, _, c) = e.getKey
-        val (s, n) = groupMeans.get(k)(c)
-        val shift = if (n == 0L) 0.0 else s / n
-        !e.getValue.varWellConditionedAround(shift)
-      }
-      if (ill)
-        return refuse("distributed keyed conditional fold: a clipped " +
-          "second moment is ill-conditioned around its key's outer-range " +
-          "mean (recombination could cancel — the scan is kept)", None)
-      // KLL exact-regime proof for tighter-than-bound requests: every
-      // key's clipped non-null count fits the sketch exactly (≤ K ⇒
-      // the merged sketch retained every item → exact quantiles)
-      if (kllGates.nonEmpty &&
-          kllCounts.values().asScala
-            .exists(_.longValue > graft.wheel.QuantileWheel.K))
-        return refuse("percentile_approx requested rank error tighter " +
-          "than the KLL wheel's guarantee and a key's range count " +
-          s"exceeds the provable exact regime (${graft.wheel.QuantileWheel.K} " +
-          "values) — scan kept", None)
-      val mgCap = graft.wheel.FrequencyWheel.MaxMapSize * 3L / 4L
-      if (mgGates.nonEmpty &&
-          mgCounts.values().asScala.exists(_.longValue > mgCap))
-        return refuse("approx_top_k tracks more items than the " +
-          "Misra-Gries wheel's budget and a key's range row count " +
-          s"exceeds the provable exact regime ($mgCap rows) — scan kept",
-          None)
-    }
-    walk(emit = true, rows)
-    val relAttrs = (keyOut +: slotAttr +: cols.partialAttrs) ++
-      neededSketch.valuesIterator
-    Some(Aggregate(Seq(keyOut), newAggExprs,
-      LocalRelation(relAttrs, rows.result())))
-  }
-
   /** The condition as a disjunction of ≥ 2 fully bounded µS ranges
     * (round 14 — closed raw-timestamp disjuncts included) — None when
     * it is anything else (single ranges take the ordinary path;
@@ -3175,9 +2790,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
 
   /** The per-measure partial-column attributes (sum/min/max per
     * measure + the shared row count) that a merge-form Aggregate
-    * ([[mergeAggExprs]]) reads — shared by the hybrid residue folds'
-    * union legs and the above-cap distributed fallback's partials
-    * relation. */
+    * ([[mergeAggExprs]]) reads — shared by the hybrids' union legs and
+    * the sliding fallback's partials relation. */
   private final case class PartialCols(
       measures: Seq[String],
       sumAttrs: Map[String, AttributeReference],
@@ -3187,12 +2801,12 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       cntAttrs: Map[String, AttributeReference],
       rowsAttr: AttributeReference,
       shifts: Map[String, Double],
-      // per-ROW shift columns (late round 11): the edge-free
-      // distributed grouped path ships each GROUP's own mean as a
-      // column (constant within a group), so its variance recombination
-      // is exact for ANY data — no conditioning gate needed. Empty for
-      // every path with edge legs (a raw edge row cannot know its
-      // group's shift); those use the scalar `shifts` + gate.
+      // per-ROW shift columns: an edge-free hybrid ships each GROUP's
+      // own mean as a column (constant within a group), so its variance
+      // recombination is exact for ANY data — only a second moment
+      // clipped to a sub-range is still gated. Empty for every plan
+      // with edge legs (a raw edge row cannot know its group's shift);
+      // those use the scalar `shifts` + gate.
       shiftAttrs: Map[String, AttributeReference] = Map.empty) {
     def shiftOf(c: String): Double = shifts.getOrElse(c, 0.0)
     def partialAttrs: Seq[AttributeReference] =
@@ -3330,21 +2944,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * surviving reference outside the union's columns. */
   private def mergeAggExprs(cols: PartialCols,
       measureNames: Set[String], aggExprs: Seq[NamedExpression],
-      groupSubst: Seq[(Seq[Expression], Attribute)],
-      // round 16: a caller-supplied substitution for SKETCH spellings
-      // (the distributed grouped paths ship sketch-bytes columns and
-      // merge executor-side) — consulted first; None falls through to
-      // the numeric dispatch (and its refusal note)
-      sketchSub: AggregateExpression => Option[Expression] = _ => None,
-      // relation columns the caller added beyond the partials (the
-      // sketch-bytes attrs) — lazily read AFTER the rewrite populated it
-      extraAllowed: () => Set[ExprId] = () => Set.empty): Option[Seq[NamedExpression]] = {
+      groupSubst: Seq[(Seq[Expression], Attribute)]): Option[Seq[NamedExpression]] = {
     var supported = true
     def merged(e: AggregateExpression): Expression = {
-      sketchSub(e) match {
-        case Some(sub) => return sub
-        case None => ()
-      }
       if (!supported) return e
       if (e.isDistinct || e.filter.nonEmpty) {
         if (foldBailNote.isEmpty) foldBailNote =
@@ -3409,9 +3011,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       // first moment is Σ(x−c) = Σx − n·c — with c ≈ the range mean
       // both sides of the subtraction are stddev-scale, which is the
       // whole point of shift-centering (round 11). Per-ROW shift
-      // columns (the edge-free distributed grouped layout) carry each
-      // GROUP's own mean — constant within the group, so MAX reads it
-      // back — making the recombination exact for any data.
+      // columns (the edge-free hybrids' layout) carry each GROUP's own
+      // mean — constant within the group, so MAX reads it back —
+      // making the recombination exact for any data.
       val sShifted: Expression = cols.shiftAttrs.get(n) match {
         case Some(shiftAt) =>
           Subtract(s, Multiply(cnt, ae(Max(shiftAt))))
@@ -3427,8 +3029,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       // empty-measure group's NULL into 0.0 — guard on the non-null
       // count like the scan does (POP needs ≥1 value, SAMP ≥2). The
       // count itself is NULL — not 0 — when a slot FILTER (the
-      // distributed keyed conditional, round 15) excludes every row,
-      // so coalesce before comparing.
+      // conditional hybrids) excludes every row, so coalesce before
+      // comparing.
       If(LessThanOrEqual(Coalesce(Seq(rows, Literal(0L, LongType))),
         Literal(if (samp) 1L else 0L, LongType)),
         Literal(null, DoubleType), v)
@@ -3455,8 +3057,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     // any surviving reference outside the union's columns (a bare
     // column in the select list, a grouping leak) disqualifies
     val allowed =
-      cols.partialAttrs.map(_.exprId).toSet ++ groupSubst.map(_._2.exprId) ++
-        extraAllowed()
+      cols.partialAttrs.map(_.exprId).toSet ++ groupSubst.map(_._2.exprId)
     if (newAggExprs.exists(_.exists {
       case at: Attribute => !allowed.contains(at.exprId)
       case _ => false
@@ -3505,15 +3106,15 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * central m2 via [[AllAggregate.shiftedSq]] around `c` ≈ the fold
     * range's own mean, so executor recombination stays a plain SUM
     * with stddev-scale addends). Homogeneous data — any magnitude,
-    * any spread — is now well-conditioned by construction, and the
-    * edge-free distributed grouped path ships PER-GROUP shifts (each
-    * group's own mean as a column) making it exact for ANY data with
-    * no gate at all. Only the shapes with raw edge legs (which cannot
-    * know their group's shift) can still cancel on heterogeneous group
-    * means far from the global `c` with tiny within-group spread; those
-    * sites check the partials they are about to ship
-    * ([[AllAggregate.varWellConditionedAround]] the same `c`) and keep
-    * the scan when any fails. PLAN-TIME folds ([[foldRow]]) need no
+    * any spread — is now well-conditioned by construction, and every
+    * EDGE-FREE hybrid ships PER-GROUP shifts (each group's own mean as
+    * a column), exact for ANY data; only a second moment clipped to a
+    * sub-range is still gated there, around its group's mean. Plans
+    * with raw edge legs (which cannot know their group's shift) can
+    * still cancel on heterogeneous group means far from the global `c`
+    * with tiny within-group spread; those check the partials they are
+    * about to ship ([[AllAggregate.varWellConditionedAround]] the same
+    * `c`) and keep the scan when any fails. PLAN-TIME folds ([[foldRow]]) need no
     * gate or shift: their variance reads the Chan-combined central
     * moment directly and is Welford-exact. */
   private def hasSecondMoment(aggExprs: Seq[NamedExpression]): Boolean =
@@ -3622,15 +3223,20 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     *    sub-minute windows, its rows deriving their groups from the raw
     *    row. A range with no retained core scans whole as one window;
     *    disjoint ranges (mergeRanges ran) mean no row is read twice.
-    *    Aligned ranges leave no window and the plan is interior-only.
+    *    Aligned ranges leave no window and the plan is interior-only:
+    *    that is also how every aligned grouped shape above the cap
+    *    folds, the no-predicate full span included.
     *
     * ONE builder serves every shape — ungrouped, time cell, key × cell
     * and composite keys × cell, each over a single range or an OR of
     * ranges: the shapes differ only in their [[CondGroup]] columns and
-    * their [[ResidueInterior]] (unkeyed or keyed index). Second moments
-    * center on the combined interior's mean and every interior row must
-    * stay well-conditioned around it (raw edge rows cannot know their
-    * group's shift), else the scan is kept with [[IllCondNote]].
+    * their [[ResidueInterior]] (unkeyed or keyed index). With edges,
+    * second moments center on the combined interior's mean and every
+    * interior row must stay well-conditioned around it (raw edge rows
+    * cannot know their group's shift), else the scan is kept with
+    * [[IllCondNote]]. EDGE-FREE, each group ships its own mean as a
+    * shift column ([[condShifts]]' per-group pre-walk) and folds any
+    * data ungated.
     *
     * Scale: the edge scan's ts bounds are pushed to the reader, which
     * still reads every row group it cannot skip — on a `TIMESTAMP_NTZ`
@@ -3660,12 +3266,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     def merged(x: Map[String, AllAggregate], y: Map[String, AllAggregate]) =
       x.map { case (c, al) => c -> al.combine(y(c)) }
     val needCond = hasSecondMoment(aggExprs)
-    // the shift source: every key's tier walk over each retained core
+    val perGroup = needCond && edges.isEmpty
+    // the edge plans' shift source: every key's tier walk over each
+    // retained core
     lazy val combined = interiors.map { case (a, b) =>
       interior.keys.foldLeft(measures.map(_ -> AllAggregate.identity).toMap)(
         (acc, k) => merged(acc, interior.query(k, a, b)))
     }.reduce(merged)
-    val shifts = shiftsFor(needCond, measures, c => combined(c))
+    val shifts = shiftsFor(needCond && !perGroup, measures, c => combined(c))
     val parts =
       if (edges.isEmpty) None
       else residueParts(below, tsCol, measures, edges, shifts) match {
@@ -3677,28 +3285,37 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     if (parts.nonEmpty && edgeGroups.size != groups.size)
       return refuse(s"$noun: a group column is not derivable from the " +
         "raw rows the edge scan reads")
-    val cols = parts.fold(partialColsFor(measures, shifts))(_.cols)
+    val cols = parts.fold(partialColsFor(measures, shifts, perGroup))(_.cols)
     val newAggExprs = mergeAggExprs(cols, measures.toSet, aggExprs,
       groups.map(g => (g.spellings, g.out: Attribute))).getOrElse(return None)
     val overCap = grid.exists(g => interior.keys.size.toLong *
       interiors.map { case (a, b) => cellCount(g, a, b, maxFoldRows) }.sum >
       maxFoldRows)
-    val entries: Iterator[CondEntry] =
+    val entries: () => Iterator[CondEntry] =
       if (overCap) interior.entries(interiors, grid.get).getOrElse(return None)
-      else interior.keys.iterator.flatMap { key =>
-        interiors.iterator.flatMap { case (a, b) =>
-          grid.fold(Iterator.single((a, b)))(g => g.starts(a, b).map(s0 =>
-            (math.max(a, s0), math.min(b, g.end(s0)))))
-            .map { case (x, y) => (key, x, interior.query(key, x, y)) }
-            .filter(_._3(measures.head).rows > 0L)
-        }
+      else {
+        val cells = interior.keys.iterator.flatMap { key =>
+          interiors.iterator.flatMap { case (a, b) =>
+            grid.fold(Iterator.single((a, b)))(g => g.starts(a, b).map(s0 =>
+              (math.max(a, s0), math.min(b, g.end(s0)))))
+              .map { case (x, y) => (key, x, interior.query(key, x, y)) }
+              .filter(_._3(measures.head).rows > 0L)
+          }
+        }.toList
+        () => cells.iterator
       }
+    val groupOf = (key: Any, slotMs: Long) => groups.map(_.interior(key, slotMs))
+    val shiftOf: (Any, String) => Double =
+      if (perGroup) condShifts(entries(), measures, Nil,
+        (k, s) => Iterator.single(groupOf(k, s)), perGroup = true).get
+      else (_, c) => cols.shiftOf(c)
     var conditioned = true
-    val rows = entries.map { case (key, slotMs, alls) =>
-      if (needCond && !alls.forall { case (c, al) =>
+    val rows = entries().map { case (key, slotMs, alls) =>
+      if (needCond && !perGroup && !alls.forall { case (c, al) =>
         al.varWellConditionedAround(cols.shiftOf(c)) }) conditioned = false
-      InternalRow.fromSeq(groups.map(_.interior(key, slotMs)) ++
-        cols.partialsRow(alls, alls(measures.head).rows))
+      val g = groupOf(key, slotMs)
+      InternalRow.fromSeq(g ++ cols.partialsRowShifted(
+        alls, alls(measures.head).rows, c => shiftOf(g, c)))
     }.toList
     if (!conditioned) { foldBailNote = IllCondNote; return None }
     val interiorRel = LocalRelation(groups.map(_.out) ++ cols.partialAttrs, rows)
@@ -3714,12 +3331,13 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * span, the retained core of such a span (the keyed index has no
     * retention, so its core is the span), and the above-cap feed of
     * (key, slot ms, partials) entries over disjoint ms ranges, each
-    * inside one grid cell — None, note pinned, when none conforms. */
+    * inside one grid cell, as a fresh iterator per call — None, note
+    * pinned, when none conforms. */
   private final case class ResidueInterior(measures: Seq[String],
       keys: Seq[Any],
       query: (Any, Long, Long) => Map[String, AllAggregate],
       core: (Long, Long) => Option[(Long, Long)],
-      entries: (Seq[(Long, Long)], SlotGrid) => Option[Iterator[CondEntry]])
+      entries: (Seq[(Long, Long)], SlotGrid) => Option[() => Iterator[CondEntry]])
 
   private def residueInterior(wheels: Map[String, WheelIndex]): ResidueInterior = {
     val head = wheels.keys.head
@@ -3728,7 +3346,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       (a, b) => retainedCoreMs(wheels, a, b),
       // minutes when complete, the retained-tier cover under KeepN
       (ranges, grid) => interiorEntries(wheels, head, ranges, grid).map(feed =>
-        feed().map { case (tier, slotMs, anyAll) =>
+        () => feed().map { case (tier, slotMs, anyAll) =>
           (null: Any, slotMs, wheels.map {
             case (c, _) if c == head => c -> anyAll
             case (c, i) => c -> i.stateAt(tier, slotMs)
@@ -3741,7 +3359,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     ResidueInterior(wheels.keys.toSeq, wheels.head._2.keys,
       (key, a, b) => wheels.map { case (c, i) => c -> i.query(key, a, b) },
       (a, b) => Some((a, b)),
-      (ranges, _) => Some(keyedCondInterior(wheels).entries(ranges)))
+      (ranges, _) => Some(() => keyedCondInterior(wheels).entries(ranges)))
 
   /** GROUPED conditional hybrid (round 17, VERDICT r16 #1): `GROUP BY
     * time-cell` + per-aggregate range conditions, past the plan-time
@@ -3850,27 +3468,11 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       a = aOpt.getOrElse(any.baseMs)
       b = bOpt.getOrElse(any.horizonMs)
       if a < b
-      hasConditional = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.filter.nonEmpty ||
-            ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-        case _ => false
-      })
+      hasCond = hasConditional(aggExprs)
       // a per-aggregate condition with sub-minute µs bounds — the
       // regime the per-window plan-time fold cannot clip (round 17:
       // routes to the sliding conditional hybrid's sliver leg)
-      subMinuteAggCond = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          val condOpt = ae.filter.orElse(
-            ae.aggregateFunction.children.collectFirst {
-              case cw: CaseWhen if cw.branches.size == 1 => cw.branches.head._1
-            })
-          condOpt.flatMap(c => rangeUs(c, tsCol)).exists { case (lo, hi) =>
-            lo.exists(_ % (MinuteMs * 1000L) != 0) ||
-              hi.exists(_ % (MinuteMs * 1000L) != 0)
-          }
-        case _ => false
-      })
+      subMinuteCond = subMinuteAggCond(aggExprs, tsCol)
       result <-
         if (bounds.isRight)
           bail(path, foldNote("sliding OR-of-ranges outer not foldable " +
@@ -3890,7 +3492,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         // cap, or with sub-minute edges anywhere, take the sliding
         // conditional hybrid (round 17) — the family's sliver leg.
         if ((b - a) / slideMs + sizeMs / slideMs > maxFoldRows) {
-          if (hasConditional)
+          if (hasCond)
             bail(path, foldNote("above-cap sliding conditional not " +
               "foldable hybrid"))(
               slidingCondResidue(agg, winAttr, expand, membership, aggExprs,
@@ -3912,8 +3514,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
                 .orElse(slidingSketchFallback(agg, winAttr, expand,
                   membership, aggExprs, tsCol, wheels, slideMs, offMs,
                   sizeMs, a, b, sketch)))
-        } else if (hasConditional &&
-            (subMinuteAggCond || a % MinuteMs != 0 || b % MinuteMs != 0))
+        } else if (hasCond &&
+            (subMinuteCond || a % MinuteMs != 0 || b % MinuteMs != 0))
           // sub-minute edges (per-aggregate or outer) with conditional
           // aggregates: the sliding conditional hybrid (round 17 — was
           // the pinned "sliding windows have no sliver leg" refusal)
@@ -3943,7 +3545,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
               val subst = Seq((Seq(winAttr: Expression),
                 Literal(InternalRow(ws * 1000L, (ws + sizeMs) * 1000L), winType)))
               val folded =
-                if (hasConditional)
+                if (hasCond)
                   foldConditionalRow(aggExprs, path, tsCol, wheels,
                     Seq((math.max(a, ws) * 1000L,
                       math.min(b, ws + sizeMs) * 1000L)),
@@ -4018,12 +3620,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       a = aOpt.getOrElse(reg.any.baseMs)
       b = bOpt.getOrElse(reg.any.horizonMs)
       if a < b
-      hasConditional = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.filter.nonEmpty ||
-            ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-        case _ => false
-      })
+      hasCond = hasConditional(aggExprs)
       keyedSkOpt = WheelAcceleration.lookup(path)(_.keyedSketch)
         .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
       result <-
@@ -4035,7 +3632,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         // irrelevant and sub-minute edges are the edge leg's job.
         // OR-of-ranges outers ride the same hybrid whatever the
         // aggregates are.
-        if (hasConditional || bounds.isRight)
+        if (hasCond || bounds.isRight)
           bail(path, foldNote("keyed sliding conditional/OR not foldable " +
             "hybrid"))(
             slidingCondResidue(agg, winAttr, expand, membership, aggExprs,
@@ -4412,9 +4009,16 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         .takeWhile(ws => ws + sizeMs >= slotMs + MinuteMs)
     }
     // shift centers + the per-((key,) window, gate) conditioning check
-    val shifts = condShifts(aggExprs, tsCol, interior, measures, outersUs,
-      (key, slotMs) => windowsOf(slotMs).map(ws => (key, ws)))
-      .getOrElse(return None)
+    val shifts =
+      if (!hasSecondMoment(aggExprs)) Map.empty[String, Double]
+      else {
+        val at = condShifts(interior.entries(outerInteriorsMs), measures,
+          varGates(aggExprs, tsCol, allMeasures.toSet, outersUs,
+            clippedOnly = false),
+          (key, slotMs) => windowsOf(slotMs).map(ws => (key, ws)),
+          perGroup = false).getOrElse(return None)
+        measures.map(c => c -> at(null, c)).toMap
+      }
     val cols = partialColsFor(measures, shifts)
     val mslotAttr = AttributeReference("__graft_mslot", LongType,
       nullable = true)()
@@ -4566,7 +4170,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * combines the partials on executors — scan-free, with the heavy
     * per-window work on the cluster instead of the optimizer thread;
     * the machinery proven on the hybrid edge legs ([[slidingResidue]])
-    * and the grouped fallback ([[distributedGrouped]]). Bails (None →
+    * and the above-cap grouped folds ([[residueHybrid]]). Bails (None →
     * scan) on a retention-evicted minute tier, a non-timestamp ts, or
     * an aggregate with no merge form. ALIGNED ranges only — sub-minute
     * edges above the cap take [[slidingResidue]]'s `aboveCap` variant
@@ -4904,45 +4508,26 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
         slotGrid(gExpr, tsCol))
       filterOpt = findFilter(child)
       any = wheels.valuesIterator.next()
+      below = filterOpt.map(_._2).getOrElse(child)
       // per-aggregate conditional windows anywhere in the select list
       // (round 16, routed comprehensively round 17 — VERDICT r16 #1)
-      hasConditional = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.filter.nonEmpty ||
-            ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-        case _ => false
-      })
+      hasCond = hasConditional(aggExprs)
       // ... and whether any per-aggregate range has SUB-MINUTE edges —
       // the per-cell plan-time fold deliberately refuses those; the
       // grouped conditional hybrid serves them with one bounded edge
       // scan (round 17)
-      subMinuteAggCond = hasConditional && aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          val condOpt = ae.filter.orElse(
-            ae.aggregateFunction.children.collectFirst {
-              case cw: CaseWhen if cw.branches.size == 1 =>
-                cw.branches.head._1
-            })
-          condOpt.flatMap(c => rangeUs(c, tsCol)).exists { case (lo, hi) =>
-            lo.exists(_ % (MinuteMs * 1000L) != 0) ||
-              hi.exists(_ % (MinuteMs * 1000L) != 0)
-          }
-        case _ => false
-      })
+      subMinuteCond = hasCond && subMinuteAggCond(aggExprs, tsCol)
       groupedCondResidue = (outers: Seq[(Long, Long)]) =>
         foldGroupedConditionalResidue(groupKey, gExpr, grid,
-          aggExprs, child, findFilter(child).map(_._2).getOrElse(child),
-          tsCol, wheels, outers, sketch)
-      // unconditional sub-minute edges: the residue hybrid per grid
-      // cell; an approximate spelling it refuses rides the residue
-      // sketch seam (round 17)
+          aggExprs, child, below, tsCol, wheels, outers, sketch)
+      // plain aggregates over sub-minute edges, or past the cell
+      // ceiling: the residue hybrid per grid cell; an approximate
+      // spelling it refuses rides the conditional hybrid's sketch seam
       groupedResidue = (rangesUs: Seq[(Long, Long)]) =>
-        filterOpt.flatMap { case (_, below) =>
-          residueHybrid("grouped residue hybrid", aggExprs, below, tsCol,
-            residueInterior(wheels), rangesUs,
-            Seq(cellGroup(grid, gExpr, Seq(groupKey, gExpr), child, below)),
-            Some(grid))
-        }.orElse {
+        residueHybrid("grouped residue hybrid", aggExprs, below, tsCol,
+          residueInterior(wheels), rangesUs,
+          Seq(cellGroup(grid, gExpr, Seq(groupKey, gExpr), child, below)),
+          Some(grid)).orElse {
           if (hasSketchAgg(aggExprs) && sketch.nonEmpty) {
             foldBailNote = ""
             groupedCondResidue(rangesUs)
@@ -4984,12 +4569,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           // partials pre-keyed to their cells, per-aggregate FILTERs
           // over the slot column, one bounded sliver scan when edges
           // exist (none here for aligned conditions: pure fold)
-          if (hasConditional && (overCap || subMinuteAggCond))
+          if (hasCond && (overCap || subMinuteCond))
             groupedCondResidue(Seq((aUs, bUs)))
-          else if (overCap)
-            distributedGrouped(aggExprs, wheels, grid, gExpr,
-              Seq((Seq(groupKey, gExpr))), None, Seq((a, b)),
-              unkeyedSk = sketch)
+          else if (overCap) groupedResidue(Seq((aUs, bUs)))
           else {
           val slotRows = Seq.newBuilder[InternalRow]
           var ok = true
@@ -5009,7 +4591,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             if (alls.valuesIterator.next().rows > 0L) {
               val subst = Seq((Seq(groupKey, gExpr), slotLiteral(grid, s0, s1)))
               val folded =
-                if (hasConditional)
+                if (hasCond)
                   foldConditionalRow(aggExprs, path, tsCol, wheels,
                     Seq((math.max(a, s0) * 1000L, math.min(b, s1) * 1000L)),
                     MinuteUs, groupSubst = subst)
@@ -5023,7 +4605,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
           }
           if (ok) Some(LocalRelation(agg.output, slotRows.result())) else None
           }
-        } else if (hasConditional)
+        } else if (hasCond)
           // sub-minute OUTER edges with conditional aggregates
           // (round 17): same hybrid — the outer slivers scan once
           groupedCondResidue(Seq((aUs, bUs)))
@@ -5037,9 +4619,9 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
        // SKETCH spellings fold too — each cell remembers its clipped
        // sub-ranges and [[foldRow]]'s spans form merges the per-span
        // range-sketches (every family is mergeable, same argument as
-       // the ungrouped OR fold) — and ABOVE-CAP aligned shapes go
-       // DISTRIBUTED through the multi-range [[distributedGrouped]]
-       // (pre-merged disjoint ranges, so the minute-state union never
+       // the ungrouped OR fold) — and ABOVE-CAP aligned shapes ship
+       // their minute states through the residue hybrid (pre-merged
+       // disjoint ranges, so the minute-state union never
        // double-counts). Unaligned disjuncts fold through the residue
        // hybrids (round 14).
        case scala.util.Right(rangesUs) =>
@@ -5055,20 +4637,17 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             // Conditional aggregates route through the grouped
             // conditional hybrid instead (round 17) — per-aggregate
             // clipping against EVERY disjunct plus the sliver scan
-            (if (hasConditional) groupedCondResidue(rangesUs)
+            (if (hasCond) groupedCondResidue(rangesUs)
             else groupedResidue(rangesUs))
           else {
           val ranges = rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) }
           val cellsTotal =
             ranges.map { case (x, y) => cellCount(grid, x, y, maxFoldRows) }.sum
-          if (hasConditional && (cellsTotal > maxFoldRows || subMinuteAggCond))
+          if (hasCond && (cellsTotal > maxFoldRows || subMinuteCond))
             // conditional windows past the ceiling / with sub-minute
             // per-aggregate edges, multi-range outer (round 17)
             groupedCondResidue(rangesUs)
-          else if (cellsTotal > maxFoldRows)
-            distributedGrouped(aggExprs, wheels, grid, gExpr,
-              Seq((Seq(groupKey, gExpr))), None, ranges,
-              unkeyedSk = sketch)
+          else if (cellsTotal > maxFoldRows) groupedResidue(rangesUs)
           else {
             val cells = scala.collection.mutable.LinkedHashMap
               .empty[Long, (Map[String, AllAggregate], List[(Long, Long)])]
@@ -5099,7 +4678,7 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
               val subst = Seq((Seq(groupKey, gExpr),
                 slotLiteral(grid, s0, grid.end(s0))))
               val folded =
-                if (hasConditional)
+                if (hasCond)
                   foldConditionalRow(aggExprs, path, tsCol, wheels,
                     spans.map(s => (s._1 * 1000L, s._2 * 1000L)),
                     MinuteMs * 1000L, groupSubst = subst)
@@ -5120,19 +4699,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     } yield result
   }
 
-  /** ABOVE-CAP distributed fallback for the grouped folds (round 10,
-    * VERDICT r9 #2): instead of one plan-time index query per
-    * (key ×) grid cell, emit the index's non-empty MINUTE state in
-    * `[a, b)` — bounded by the build ceiling, O(1) per entry — as a
-    * LocalRelation of (group keys, partials) rows, pre-keyed to their
-    * grid slot by one `floorOf` each, and let a real [[Aggregate]] in
-    * merge form ([[mergeAggExprs]]) combine them on the cluster. Still
-    * scan-free; the shuffle-side grouping is Spark's, not the
-    * optimizer's. `keyed = Some((keyAttr, reg))` adds the dimension
-    * key axis. Bails (None → scan path) when the minute tier is
-    * retention-evicted (its state no longer spans the range) or an
-    * aggregate has no merge form. */
-  /** The distributed interiors' entry feed: a complete minute tier
+  /** The above-cap residue interior's entry feed ([[residueInterior]]):
+    * a complete minute tier
     * streams minute states (the common case); under KeepN minute
     * eviction (round 15, VERDICT r14 #3) each range instead covers
     * through RETAINED coarser tiers via [[WheelIndex.coverEntries]] —
@@ -5140,8 +4708,8 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * single grid cell, so slot keying stays exact — and the previous
     * blanket refusal narrows to ranges with no conforming retained
     * cover. `ranges` must be disjoint (mergeRanges ran) so no state
-    * ships twice. Returns a FRESH iterator per call (the shift
-    * pre-pass and the emission pass both walk it). */
+    * ships twice. Returns a FRESH iterator per call (the per-group
+    * shift pre-pass and the emission pass both walk it). */
   private def interiorEntries(wheels: Map[String, WheelIndex],
       headMeasure: String, ranges: Seq[(Long, Long)], grid: SlotGrid)
       : Option[() => Iterator[(graft.wheel.Tier, Long, AllAggregate)]] = {
@@ -5183,308 +4751,6 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     }
   }
 
-  private def distributedGrouped(
-      aggExprs: Seq[NamedExpression],
-      wheels: Map[String, WheelIndex],
-      grid: SlotGrid, gExpr: Expression,
-      slotSpellings: Seq[Seq[Expression]],
-      keyedIn: Option[(AttributeReference, WheelAcceleration.KeyedReg)],
-      // one or more DISJOINT pre-merged ranges (round 14): the grouped
-      // OR fold above its cap ships the union of the per-range minute
-      // states — disjointness (mergeRanges ran) means no entry is
-      // emitted twice
-      ranges: Seq[(Long, Long)],
-      // COMPOSITE form (round 13): N grouping attributes over a
-      // struct-keyed wheel family — each tuple component ships as its
-      // own relation column. The single-key form routes through this
-      // too (one attribute, the key type itself).
-      composite: Option[(Seq[AttributeReference], Seq[DataType],
-        Map[String, graft.wheel.KeyedWheelIndex])] = None,
-      // round 16 (grouped extension of VERDICT r15 missing #1): the
-      // path-matched sketch registrations — when a grouped statement
-      // carries approximate spellings, their per-slot sketch BYTES ride
-      // the shipped relation as extra binary columns and a
-      // SketchBytesAgg unions them per group (the grouping IS the
-      // range clipping, so no FILTER is needed)
-      unkeyedSk: Option[WheelAcceleration.SketchReg] = None,
-      keyedSk: Option[WheelAcceleration.KeyedSketchReg] = None): Option[LogicalPlan] = {
-    val keyed: Option[(Seq[AttributeReference], Seq[DataType],
-        Map[String, graft.wheel.KeyedWheelIndex])] =
-      composite.orElse(keyedIn.map { case (kA, reg) =>
-        (Seq(kA), Seq(reg.any.keyType), reg.wheels)
-      })
-    val measures = keyed.map(_._3.keys.toSeq).getOrElse(wheels.keys.toSeq)
-    // unkeyed sources feed from minute states, or (round 15) from a
-    // retained-tier cover when KeepN evicted minutes; None = no
-    // conforming cover → keep the scan (keyed wheels have no retention)
-    val unkeyedFeed: Option[() => Iterator[(graft.wheel.Tier, Long, AllAggregate)]] =
-      if (keyed.nonEmpty) None
-      else interiorEntries(wheels, measures.head, ranges, grid) match {
-        case None => return None
-        case some => some
-      }
-    val needCond = hasSecondMoment(aggExprs)
-    // PER-GROUP shifts (late round 11): this path has no edge legs, so
-    // each (key,) slot group's partials can center on the GROUP's own
-    // mean, shipped as a constant-within-group shift column — the
-    // variance recombination is then exact for ANY data (every shifted
-    // addend is a within-group deviation) and needs NO conditioning
-    // gate, unlike the hybrid shapes whose raw edge rows cannot know
-    // their group's shift
-    val cols = partialColsFor(measures, Map.empty, perRowShifts = needCond)
-    val slotAttr = AttributeReference(
-      "__graft_slot", gExpr.dataType, nullable = gExpr.nullable)()
-    val keyOutAttrs: Seq[AttributeReference] = keyed.toSeq.flatMap {
-      case (kAs, kTs, _) => kAs.zip(kTs).zipWithIndex.map {
-        case ((kA, kT), i) =>
-          AttributeReference(s"__graft_key$i", kT, nullable = kA.nullable)()
-      }
-    }
-    val subst = keyed.toSeq.flatMap { case (kAs, _, _) =>
-      kAs.zip(keyOutAttrs).map { case (kA, out) =>
-        (Seq[Expression](kA), out.asInstanceOf[Attribute])
-      }
-    } ++ slotSpellings.map(sp => (sp, slotAttr.asInstanceOf[Attribute]))
-    // ---- grouped sketch spellings (round 16) ----
-    val neededSketch = scala.collection.mutable
-      .LinkedHashMap.empty[(String, String), AttributeReference]
-    // deferred exact-regime proofs for tighter-than-bound requests: a
-    // KLL column's / the MG row count per GROUP, accumulated by the
-    // pre-walk, must fit the sketch capacity
-    val kllGateCols = scala.collection.mutable.LinkedHashSet.empty[String]
-    var mgGate = false
-    def sketchSub(ae: AggregateExpression): Option[Expression] = {
-      if (ae.isDistinct || ae.filter.nonEmpty) return None
-      def inputCol(e: Expression): Option[String] = e match {
-        case at: AttributeReference => Some(at.name)
-        case _ => None
-      }
-      def attrFor(family: String, colName: String): AttributeReference =
-        neededSketch.getOrElseUpdate((family, colName),
-          AttributeReference(s"__graft_sk_${family}_$colName", BinaryType,
-            nullable = true)())
-      def bail(msg: String): Option[Expression] = {
-        if (foldBailNote.isEmpty) foldBailNote = msg
-        None
-      }
-      // a family's wheel set for a column, when a sketch registration
-      // rides this path's source and retains its full minute tier (the
-      // per-slot bytes feed); composite keys have no sketch form
-      def complete(ok: Boolean): Boolean = ok
-      def mk(f: AggregateFunction): Option[Expression] =
-        Some(AggregateExpression(f, Complete, isDistinct = false))
-      ae.aggregateFunction match {
-        case hll: HyperLogLogPlusPlus => inputCol(hll.child).flatMap { c =>
-          val serves = keyedSk.exists(r => r.distinct.get(c)
-              .exists(_.valuesIterator.forall(_.minuteTierComplete))) ||
-            (keyed.isEmpty && unkeyedSk.exists(r => r.distinct.get(c)
-              .exists(_.minuteTierComplete)))
-          if (!serves) None
-          else if (hll.relativeSD + 1e-12 <
-              graft.functions.SketchMergeAggs.ThetaWorstRse)
-            bail(f"approx_count_distinct requested rsd " +
-              f"${hll.relativeSD}%.4f tighter than the Theta wheel's " +
-              f"worst-case ${graft.functions.SketchMergeAggs.ThetaWorstRse}%.4f " +
-              "— the distributed grouped merge gates statically, scan kept")
-          else mk(graft.functions.ThetaDistinctMergeAgg(attrFor("d", c)))
-        }
-        case ap: ApproximatePercentile => inputCol(ap.child).flatMap { c =>
-          val serves = keyedSk.exists(r => r.quantile.get(c)
-              .exists(_.valuesIterator.forall(_.minuteTierComplete))) ||
-            (keyed.isEmpty && unkeyedSk.exists(r => r.quantile.get(c)
-              .exists(_.minuteTierComplete)))
-          if (!serves) return None
-          val requestedEps = ap.accuracyExpression.eval(InternalRow.empty) match {
-            case i: java.lang.Integer => 1.0 / math.max(1, i.intValue())
-            case l: java.lang.Long => 1.0 / math.max(1L, l.longValue()).toDouble
-            case _ => 0.0
-          }
-          val wheelEps = org.apache.datasketches.kll.KllSketch
-            .getNormalizedRankError(graft.wheel.QuantileWheel.K, false)
-          val gateOk =
-            if (requestedEps + 1e-12 >= wheelEps) true
-            else if (measures.contains(c)) { kllGateCols += c; true }
-            else false
-          if (!gateOk)
-            return bail(f"percentile_approx requested rank error " +
-              f"$requestedEps%.6f tighter than the KLL wheel's " +
-              f"$wheelEps%.4f and its column has no registered measure " +
-              "wheel to prove the exact regime per group — scan kept")
-          val ps = ap.percentageExpression.eval(InternalRow.empty) match {
-            case d: java.lang.Double => Some((Seq(d.doubleValue()), true))
-            case arr: org.apache.spark.sql.catalyst.util.ArrayData =>
-              Some((arr.toDoubleArray().toSeq, false))
-            case _ => None
-          }
-          ps.filter { case (_, scalar) =>
-            (scalar && ap.dataType == DoubleType) ||
-              (!scalar && (ap.dataType match {
-                case ArrayType(DoubleType, _) => true
-                case _ => false
-              }))
-          }.flatMap { case (pct, scalar) =>
-            mk(graft.functions.KllQuantileMergeAgg(
-              attrFor("q", c), pct, scalar, ap.dataType))
-          }
-        }
-        case tk: ApproxTopK if tk.expr.dataType == LongType =>
-          inputCol(tk.expr).flatMap { c =>
-            val serves = keyedSk.exists(r => r.freq.get(c)
-                .exists(_.valuesIterator.forall(_.minuteTierComplete))) ||
-              (keyed.isEmpty && unkeyedSk.exists(r => r.freq.get(c)
-                .exists(_.minuteTierComplete)))
-            if (!serves) return None
-            val k = tk.k.eval(InternalRow.empty) match {
-              case i: java.lang.Integer => Some(i.intValue())
-              case l: java.lang.Long => Some(l.intValue())
-              case _ => None
-            }
-            val trackedEff = (tk.maxItemsTracked.eval(InternalRow.empty) match {
-              case i: java.lang.Integer => i.intValue()
-              case l: java.lang.Long => l.intValue()
-              case _ => ApproxTopK.DEFAULT_MAX_ITEMS_TRACKED
-            }) match {
-              case t if t <= 0 => ApproxTopK.DEFAULT_MAX_ITEMS_TRACKED
-              case t => t
-            }
-            if (graft.wheel.FrequencyWheel.MaxMapSize <
-                ApproxTopK.calMaxMapSize(trackedEff)) mgGate = true
-            k.flatMap(kk => mk(graft.functions.MgTopKMergeAgg(
-              attrFor("f", c), kk, tk.dataType)))
-          }
-        case _ => None
-      }
-    }
-    mergeAggExprs(cols, measures.toSet, aggExprs, subst, sketchSub,
-      () => neededSketch.valuesIterator.map(_.exprId).toSet).flatMap { newAggExprs =>
-      val rows = Seq.newBuilder[InternalRow]
-      def slotVal(slotMs: Long): Any = {
-        val s0 = grid.floorOf(slotMs)
-        slotLiteral(grid, s0, grid.end(s0)).value
-      }
-      // pass 1 (only when a second moment is requested): per-group
-      // (sum, cnt) per measure → the group means the shift columns
-      // carry; same O(minute entries) walk as the emission pass
-      val groupMeans = new java.util.HashMap[(Any, Long), Map[String, (Double, Long)]]()
-      def accumulate(gk: (Any, Long), alls: collection.Map[String, AllAggregate]): Unit = {
-        val prev = groupMeans.get(gk)
-        val next = measures.map { c =>
-          val al = alls(c)
-          val (ps, pc) = if (prev == null) (0.0, 0L) else prev(c)
-          c -> (ps + al.sum, pc + al.count)
-        }.toMap
-        groupMeans.put(gk, next)
-      }
-      def shiftFor(gk: (Any, Long)): String => Double = { c =>
-        val (s, n) = groupMeans.get(gk)(c)
-        if (n == 0L) 0.0 else s / n
-      }
-      // deferred exact-regime accounting (round 16): per-GROUP counts
-      // off the pre-walk, mirroring the keyed conditional's proofs
-      val kllCounts = new java.util.HashMap[(Any, String), java.lang.Long]()
-      val mgCounts = new java.util.HashMap[Any, java.lang.Long]()
-      def gateCounts(gk: Any, alls: collection.Map[String, AllAggregate],
-          rowsN: Long): Unit = {
-        kllGateCols.foreach { c =>
-          kllCounts.merge((gk, c), alls(c).count, (a, b) => Long.box(a + b))
-        }
-        if (mgGate) mgCounts.merge(gk, rowsN, (a, b) => Long.box(a + b))
-      }
-      // sketch-served aggregates ride raw per-slot sketch bytes — from
-      // the per-key wheels (keyed) or the unkeyed wheels' matching tier
-      // block (retained covers ship hour/day states); a slot with no
-      // sketch state ships null = contributes nothing to the union
-      def skBytesKeyed(key: Any, slotMs: Long): Seq[Any] =
-        neededSketch.keysIterator.map {
-          case ("d", c) => keyedSk.flatMap(_.distinct.get(c))
-            .flatMap(_.get(key)).map(_.minuteBytesAt(slotMs)).orNull
-          case ("q", c) => keyedSk.flatMap(_.quantile.get(c))
-            .flatMap(_.get(key)).map(_.minuteBytesAt(slotMs)).orNull
-          case (_, c) => keyedSk.flatMap(_.freq.get(c))
-            .flatMap(_.get(key)).map(_.minuteBytesAt(slotMs)).orNull
-        }.toSeq
-      def skBytesUnkeyed(tier: graft.wheel.Tier, slotMs: Long): Seq[Any] =
-        neededSketch.keysIterator.map {
-          case ("d", c) => unkeyedSk.flatMap(_.distinct.get(c))
-            .map(_.bytesAt(tier, slotMs)).orNull
-          case ("q", c) => unkeyedSk.flatMap(_.quantile.get(c))
-            .map(_.bytesAt(tier, slotMs)).orNull
-          case (_, c) => unkeyedSk.flatMap(_.freq.get(c))
-            .map(_.bytesAt(tier, slotMs)).orNull
-        }.toSeq
-      def walk(emit: Boolean): Unit = keyed match {
-        case Some((kAs, kTs, kWheels)) =>
-          val keyVals = new java.util.HashMap[Any, Seq[Any]]()
-          val anyIdx = kWheels.valuesIterator.next()
-          val anyMeasure = kWheels.find(_._2 eq anyIdx).get._1
-          // a composite key arrives as one struct-valued Row: ship each
-          // component as its own Catalyst value, in key-column order
-          def components(key: Any): Seq[Any] =
-            if (kAs.size == 1) Seq(Literal.create(key, kTs.head).value)
-            else {
-              val r = key.asInstanceOf[org.apache.spark.sql.Row]
-              kTs.zipWithIndex.map { case (t, i) =>
-                Literal.create(r.get(i), t).value }
-            }
-          ranges.foreach { case (a, b) =>
-            anyIdx.minuteEntries(a, b).foreach { case (key, slotMs, anyAll) =>
-              val kvs = keyVals.computeIfAbsent(key, components)
-              val alls = kWheels.map {
-                case (c, _) if c == anyMeasure => c -> anyAll
-                case (c, i) => c -> i.minuteAt(key, slotMs)
-              }
-              val gk = (kvs: Any, grid.floorOf(slotMs))
-              if (!emit) { accumulate(gk, alls); gateCounts(gk, alls, anyAll.rows) }
-              else rows += InternalRow.fromSeq((kvs ++ (slotVal(slotMs) +:
-                cols.partialsRowShifted(alls, anyAll.rows,
-                  if (needCond) shiftFor(gk) else cols.shiftOf))) ++
-                skBytesKeyed(key, slotMs))
-            }
-          }
-        case None =>
-          unkeyedFeed.get.apply().foreach { case (tier, slotMs, anyAll) =>
-            val alls = measures.map {
-              case c if c == measures.head => c -> anyAll
-              case c => c -> wheels(c).stateAt(tier, slotMs)
-            }.toMap
-            val gk = (null, grid.floorOf(slotMs))
-            if (!emit) { accumulate(gk, alls); gateCounts(gk, alls, anyAll.rows) }
-            else rows += InternalRow.fromSeq(
-              (slotVal(slotMs) +: cols.partialsRowShifted(alls, anyAll.rows,
-                if (needCond) shiftFor(gk) else cols.shiftOf)) ++
-                skBytesUnkeyed(tier, slotMs))
-          }
-      }
-      val needPreWalk = needCond || kllGateCols.nonEmpty || mgGate
-      if (needPreWalk) {
-        walk(emit = false)
-        import scala.jdk.CollectionConverters._
-        if (kllGateCols.nonEmpty && kllCounts.values().asScala
-            .exists(_.longValue > graft.wheel.QuantileWheel.K)) {
-          if (foldBailNote.isEmpty) foldBailNote =
-            "percentile_approx requested rank error tighter than the KLL " +
-              "wheel's guarantee and a group's count exceeds the provable " +
-              s"exact regime (${graft.wheel.QuantileWheel.K} values) — scan kept"
-          return None
-        }
-        val mgCap = graft.wheel.FrequencyWheel.MaxMapSize * 3L / 4L
-        if (mgGate && mgCounts.values().asScala
-            .exists(_.longValue > mgCap)) {
-          if (foldBailNote.isEmpty) foldBailNote =
-            "approx_top_k tracks more items than the Misra-Gries wheel's " +
-              "budget and a group's row count exceeds the provable exact " +
-              s"regime ($mgCap rows) — scan kept"
-          return None
-        }
-      }
-      walk(emit = true)
-      val relAttrs = (keyOutAttrs ++ (slotAttr +: cols.partialAttrs)) ++
-        neededSketch.valuesIterator
-      val groupAttrs = keyOutAttrs :+ slotAttr
-      Some(Aggregate(groupAttrs, newAggExprs, LocalRelation(relAttrs, rows.result())))
-    }
-  }
-
   /** GROUP BY (dimension key, time-slot) over a source with a registered
     * KEYED index: one LocalRelation row per (key, non-empty slot) —
     * cardinality bounded by |keys| × slots. The key grouping must be a
@@ -5515,60 +4781,62 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       below = filterOpt.map(_._2).getOrElse(child)
       keyedSk = WheelAcceleration.lookup(path)(_.keyedSketch)
         .filter(r => r.tsCol == reg.tsCol && r.keyCol == reg.keyCol)
-      // the (key, cell) group columns of both keyed-grouped hybrids;
-      // None when the source misses the typed key column
+      // the (key, cell) group columns of both keyed-grouped hybrids
       groups = keyGroups(Seq(keyAttr), Seq(reg.keyCol), Seq(reg.any.keyType),
-        below, (key, _) => key).map(_ :+
-        cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below))
+        below, (key, _) => key) :+
+        cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below)
       // per-aggregate conditional windows under the (key, cell) grid
       // (round 17 — the last conditional regime): EVERY regime routes
       // through the keyed-grouped conditional hybrid
-      hasConditional = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.filter.nonEmpty ||
-            ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-        case _ => false
-      })
-      keyedGroupedCond = (outers: Seq[(Long, Long)]) => groups.flatMap(gs =>
-        condHybrid("keyed-grouped conditional hybrid", aggExprs, below,
-          reg.tsCol, keyedCondInterior(reg.wheels), outers, gs,
-          keyedCondSketchOf(keyedSk)))
-      // unconditional sub-minute edges: the residue hybrid per (key,
-      // cell); an approximate spelling it refuses rides the residue
-      // sketch seam (round 17)
+      hasCond = hasConditional(aggExprs)
+      keyedGroupedCond = (outers: Seq[(Long, Long)]) =>
+        bail(path, foldNote("keyed-grouped conditional not foldable")) {
+          foldBailNote = ""
+          condHybrid("keyed-grouped conditional hybrid", aggExprs, below,
+            reg.tsCol, keyedCondInterior(reg.wheels), outers, groups,
+            keyedCondSketchOf(keyedSk))
+        }
+      // plain aggregates over sub-minute edges, or past the (key, cell)
+      // ceiling: the residue hybrid per (key, cell); an approximate
+      // spelling it refuses rides the conditional hybrid's sketch seam
       keyedResidue = (rangesUs: Seq[(Long, Long)]) =>
         bail(path, foldNote("keyed-grouped residue not foldable")) {
           foldBailNote = ""
-          groups.flatMap(gs => residueHybrid("keyed-grouped residue hybrid",
-            aggExprs, below, reg.tsCol, keyedResidueInterior(reg.wheels),
-            rangesUs, gs, Some(grid))).orElse {
-            if (hasSketchAgg(aggExprs) && keyedSk.nonEmpty) {
-              foldBailNote = ""
+          residueHybrid("keyed-grouped residue hybrid", aggExprs, below,
+            reg.tsCol, keyedResidueInterior(reg.wheels), rangesUs, groups,
+            Some(grid)).orElse {
+            if (hasSketchAgg(aggExprs) && keyedSk.nonEmpty)
               keyedGroupedCond(rangesUs)
-            } else None
+            else None
           }
         }
-      // KEYED OR-ranges (round 13): a disjunction of ranges folds per
-      // (key, cell) with contributions combined across ranges — same
-      // semantics as the unkeyed grouped Right branch. UNALIGNED
-      // disjunctions (round-14 continuation) route through the
-      // generalized keyed hybrid: per-(key, range, cell) interiors +
-      // ONE edge leg ORing every sub-minute window.
+      // at or below the (key, cell) ceiling, aligned ranges fold per
+      // (key, cell) at plan time ([[keyedCellsFold]])
+      overCap = (ranges: Seq[(Long, Long)]) => reg.any.keys.size.toLong *
+        ranges.map { case (x, y) => cellCount(grid, x, y, maxFoldRows) }.sum >
+        maxFoldRows
+      keyedFold = (rangesUs: Seq[(Long, Long)]) => {
+        val ranges = rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) }
+        if (hasCond) keyedGroupedCond(rangesUs)
+        else if (rangesUs.exists { case (x, y) =>
+            x % (MinuteMs * 1000L) != 0 || y % (MinuteMs * 1000L) != 0 } ||
+            overCap(ranges))
+          keyedResidue(rangesUs)
+        else bail(path, foldNote("keyed-grouped fold refused")) {
+          foldBailNote = ""
+          keyedCellsFold(agg, keyAttr, slotGroup, gExpr, grid, aggExprs, reg,
+            ranges, keyedSk.filter(_ => ranges.size == 1))
+        }
+      }
+      // KEYED OR-ranges (round 13): a disjunction of ranges folds like
+      // one range, its disjuncts pre-merged so SQL OR semantics hold
       orFold = filterOpt.flatMap { case (cond, _) =>
         if (rangeUs(cond, reg.tsCol).isDefined) None
         else orRangesUs(cond, reg.tsCol).map(mergeRanges).flatMap { rangesUs =>
-          val MinuteUs = MinuteMs * 1000L
           if (!rangesUs.forall { case (x, y) =>
             grid.soundFor(Math.floorDiv(x, 1000L), Math.floorDiv(y, 1000L)) })
             None
-          else if (hasConditional)
-            keyedGroupedCond(rangesUs)
-          else if (rangesUs.forall { case (x, y) =>
-            x % MinuteUs == 0 && y % MinuteUs == 0 })
-            keyedOrRangesFold(agg, keyAttr, slotGroup, gExpr, grid, aggExprs,
-              reg, rangesUs.map { case (x, y) => (x / 1000L, y / 1000L) },
-              keyedSk)
-          else keyedResidue(rangesUs)
+          else keyedFold(rangesUs)
         }
       }
       // µS bounds (round 14): direct-timestamp closed bounds route to
@@ -5585,105 +4853,54 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       bUs = bOpt.getOrElse(reg.any.horizonMs * 1000L)
       if aUs < bUs
       // zone-walked grids (round 14): only the sound era folds (the OR
-      // fold checked its own ranges inside keyedOrRangesFold)
+      // fold checked its own ranges)
       _ <- bail(path, ZoneUnsoundNote)(
         if (orFold.isDefined || grid.soundFor(
           Math.floorDiv(aUs, 1000L), Math.floorDiv(bUs, 1000L)))
           Some(()) else None)
-      result <-
-        if (orFold.isDefined) orFold
-        else if (hasConditional)
-          // every single-range conditional regime — aligned or not,
-          // below or above the ceiling — is the hybrid (round 17)
-          bail(path, foldNote("keyed-grouped conditional not foldable"))(
-            keyedGroupedCond(Seq((aUs, bUs))))
-        else if (aUs % (MinuteMs * 1000L) == 0 && bUs % (MinuteMs * 1000L) == 0) {
-          val (a, b) = (aUs / 1000L, bUs / 1000L)
-          if (reg.any.keys.size.toLong * cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
-            distributedGrouped(aggExprs, Map.empty, grid, gExpr,
-              Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), Seq((a, b)),
-              keyedSk = keyedSk)
-          else {
-          // per-key sketch views (late round 11): keyed approx
-          // spellings fold per (key, cell) through the same gate as
-          // the unkeyed grouped path
-          val out = Seq.newBuilder[InternalRow]
-          var ok = true
-          reg.any.keys.foreach { key =>
-            val skView = keyedSk.map(_.viewFor(key))
-            val it = grid.starts(a, b)
-            while (ok && it.hasNext) {
-              val s0 = it.next()
-              val s1 = grid.end(s0)
-              val alls = reg.wheels.map { case (c, i) =>
-                c -> i.query(key, math.max(a, s0), math.min(b, s1)) }
-              if (alls.valuesIterator.next().rows > 0L) {
-                foldRow(aggExprs, alls, Seq(
-                  (Seq(keyAttr), Literal.create(key, reg.any.keyType)),
-                  (Seq(slotGroup, gExpr), slotLiteral(grid, s0, s1))),
-                  skView, (math.max(a, s0), math.min(b, s1))) match {
-                  case Some(vals) => out += InternalRow.fromSeq(vals)
-                  case None => ok = false
-                }
-              }
-            }
-          }
-          if (ok) Some(LocalRelation(agg.output, out.result())) else None
-          }
-        } else keyedResidue(Seq((aUs, bUs)))
+      // a single range routes like a disjunction of one: conditional
+      // aggregates in every regime to the conditional hybrid (round 17)
+      result <- orFold.orElse(keyedFold(Seq((aUs, bUs))))
     } yield result
   }
 
-  /** KEYED OR-ranges fold (round 13): `GROUP BY key, time-slot` over a
-    * disjunction of fully bounded ranges — per-(key, cell) index
-    * queries combined across ranges by the associative AllAggregate
-    * merge (pre-merged disjuncts, so SQL OR semantics hold). Sketch
-    * spellings are not served (no single sketch view spans a combined
-    * multi-range cell); above-cap shapes go distributed (round 14) and
-    * UNALIGNED disjunctions route through the generalized keyed hybrid
-    * (round-14 continuation) before reaching here. */
-  private def keyedOrRangesFold(
+  /** The per-(key, cell) plan-time fold of `GROUP BY key, time-slot`
+    * over disjoint minute-aligned ms ranges: each key's cell
+    * contributions combined across ranges by the associative
+    * AllAggregate merge. Per-key sketch views serve approximate
+    * spellings over a single range only (no single sketch view spans a
+    * combined multi-range cell). */
+  private def keyedCellsFold(
       agg: Aggregate, keyAttr: AttributeReference, slotGroup: Expression,
       gExpr: Expression, grid: SlotGrid, aggExprs: Seq[NamedExpression],
       reg: WheelAcceleration.KeyedReg, ranges: Seq[(Long, Long)],
       keyedSk: Option[WheelAcceleration.KeyedSketchReg]): Option[LogicalPlan] = {
-    val aligned = ranges.forall { case (x, y) =>
-      x % MinuteMs == 0 && y % MinuteMs == 0 && x < y &&
-        grid.soundFor(x, y) }
-    if (!aligned) return None
-    val cellsTotal =
-      ranges.map { case (x, y) => cellCount(grid, x, y, maxFoldRows) }.sum
-    // above the plan-time ceiling: the (key, minute) partials of every
-    // disjoint range ship through the multi-range distributed merge
-    // (round 14) — wide dimensions × multi-range stay scan-free
-    if (reg.any.keys.size.toLong * cellsTotal > maxFoldRows)
-      return distributedGrouped(aggExprs, Map.empty, grid, gExpr,
-        Seq(Seq(slotGroup, gExpr)), Some((keyAttr, reg)), ranges,
-        keyedSk = keyedSk)
     val out = Seq.newBuilder[InternalRow]
     var ok = true
     reg.any.keys.foreach { key =>
+      val skView = keyedSk.map(_.viewFor(key))
       val cells = scala.collection.mutable.LinkedHashMap
-        .empty[Long, Map[String, AllAggregate]]
+        .empty[Long, (Map[String, AllAggregate], (Long, Long))]
       ranges.foreach { case (x, y) =>
         val it = grid.starts(x, y)
         while (it.hasNext) {
           val s0 = it.next()
-          val s1 = grid.end(s0)
+          val span = (math.max(x, s0), math.min(y, grid.end(s0)))
           val alls = reg.wheels.map { case (c, i) =>
-            c -> i.query(key, math.max(x, s0), math.min(y, s1)) }
+            c -> i.query(key, span._1, span._2) }
           if (alls.valuesIterator.next().rows > 0L)
             cells(s0) = cells.get(s0) match {
-              case Some(prev) =>
-                prev.map { case (c, al) => c -> al.combine(alls(c)) }
-              case None => alls
+              case Some((prev, sp)) =>
+                (prev.map { case (c, al) => c -> al.combine(alls(c)) }, sp)
+              case None => (alls, span)
             }
         }
       }
-      cells.toSeq.sortBy(_._1).foreach { case (s0, alls) =>
+      cells.toSeq.sortBy(_._1).foreach { case (s0, (alls, span)) =>
         if (ok) foldRow(aggExprs, alls, Seq(
           (Seq(keyAttr), Literal.create(key, reg.any.keyType)),
-          (Seq(slotGroup, gExpr), slotLiteral(grid, s0, grid.end(s0))))) match {
+          (Seq(slotGroup, gExpr), slotLiteral(grid, s0, grid.end(s0)))),
+          skView, span) match {
           case Some(vals) => out += InternalRow.fromSeq(vals)
           case None => ok = false
         }
@@ -5702,13 +4919,14 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
     * each key COMPONENT re-emitted as its own output literal from the
     * struct-valued index key.
     *
-    * PAST THE PLAN-TIME CEILING the shape goes DISTRIBUTED through the
-    * generalized [[distributedGrouped]] — the (tuple-key, minute)
-    * partials ship with each key component as its own relation column
-    * and a merge-form Aggregate groups them on the cluster — so wide
-    * tuple dimensions stay scan-free; only aggregates without a merge
-    * form (and sub-minute range edges — no composite residue path)
-    * bail, each with a PINNED reason. */
+    * PAST THE PLAN-TIME CEILING, over sub-minute edges or over an OR of
+    * ranges the shape goes through [[residueHybrid]] — the (tuple-key,
+    * minute) partials ship with each key component as its own relation
+    * column and a merge-form Aggregate groups them on the cluster, with
+    * one bounded edge scan when an edge exists — so wide tuple
+    * dimensions stay scan-free; conditional aggregates take
+    * [[condHybrid]]. Only aggregates without a merge form bail, each
+    * with a PINNED reason. */
   private def rewriteCompositeKeyed(
       agg: Aggregate,
       groupings: Seq[Expression],
@@ -5759,36 +4977,32 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
       below = findFilter(child).map(_._2).getOrElse(child)
       // the (k1, …, kn, cell) group columns of both composite hybrids,
       // each key COMPONENT its own column re-emitted from the
-      // struct-valued index key; None when the source misses a typed
-      // key column
+      // struct-valued index key
       groups = keyGroups(keyAttrs, reg.keyCols,
         reg.any.keyType.asInstanceOf[StructType].fields.toSeq.map(_.dataType),
-        below, (key, i) => key.asInstanceOf[org.apache.spark.sql.Row].get(i))
-        .map(_ :+ cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below))
+        below, (key, i) => key.asInstanceOf[org.apache.spark.sql.Row].get(i)) :+
+        cellGroup(grid, gExpr, Seq(slotGroup, gExpr), child, below)
       // per-aggregate conditional windows (round 17 — completes the
       // conditional matrix): every composite conditional regime is the
       // conditional hybrid
-      hasConditional = aggExprs.exists(_.exists {
-        case ae: AggregateExpression =>
-          ae.filter.nonEmpty ||
-            ae.aggregateFunction.children.exists(_.isInstanceOf[CaseWhen])
-        case _ => false
-      })
+      hasCond = hasConditional(aggExprs)
       aUs = allRangesUs.head._1
       bUs = allRangesUs.last._2
       // ms bounds for the aligned single-range path (exact there:
       // aUs/bUs are whole-minute µs on that branch)
       a = aUs / 1000L
       b = bUs / 1000L
+      compositeResidue = () => residueHybrid("composite-keyed residue hybrid",
+        aggExprs, below, reg.tsCol, keyedResidueInterior(reg.wheels),
+        allRangesUs, groups, Some(grid))
       result <-
-        if (hasConditional)
+        if (hasCond)
           bail(path, foldNote("composite-keyed conditional not foldable " +
             "(aggregate without a merge form / non-time condition / " +
             "missing typed key or ts columns)"))(
-            groups.flatMap(gs => condHybrid("composite-keyed conditional " +
-              "hybrid", aggExprs, below, reg.tsCol,
-              keyedCondInterior(reg.wheels), allRangesUs, gs,
-              condSketchOf(None))))
+            condHybrid("composite-keyed conditional hybrid", aggExprs, below,
+              reg.tsCol, keyedCondInterior(reg.wheels), allRangesUs, groups,
+              condSketchOf(None)))
         else if (ranged.isRight ||
             aUs % (MinuteMs * 1000L) != 0 || bUs % (MinuteMs * 1000L) != 0)
           // SUB-MINUTE range edges (round 17, VERDICT r16 #2 — was the
@@ -5800,22 +5014,17 @@ case class WheelSumRewrite() extends Rule[LogicalPlan] {
             "(aggregate without a merge form / missing typed key or ts " +
             "columns)")) {
             foldBailNote = ""
-            groups.flatMap(gs => residueHybrid("composite-keyed residue " +
-              "hybrid", aggExprs, below, reg.tsCol,
-              keyedResidueInterior(reg.wheels), allRangesUs, gs, Some(grid)))
+            compositeResidue()
           }
         else if (reg.any.keys.size.toLong *
             cellCount(grid, a, b, maxFoldRows) > maxFoldRows)
-          // above the plan-time ceiling: ship the (tuple-key, minute)
-          // partials through the distributed merge-form Aggregate —
-          // each key COMPONENT as its own relation column (round 13)
+          // above the plan-time ceiling: the same hybrid, edge-free —
+          // (tuple-key, minute) partials, a merge-form Aggregate
           bail(path, "composite-keyed fold above maxFoldRows not " +
-            "foldable distributed (aggregate without a merge form)")(
-            distributedGrouped(aggExprs, Map.empty, grid, gExpr,
-              Seq(Seq(slotGroup, gExpr)), None, Seq((a, b)),
-              composite = Some((keyAttrs,
-                reg.any.keyType.asInstanceOf[StructType].fields
-                  .map(_.dataType).toSeq, reg.wheels))))
+            "foldable (aggregate without a merge form)") {
+            foldBailNote = ""
+            compositeResidue()
+          }
         else {
           val keyFields =
             reg.any.keyType.asInstanceOf[StructType].fields

@@ -104,6 +104,10 @@ class FoldSweepSpec extends AnyFunSuite {
       // bare-key pivot grouping (round 14): plain AND conditional
       // mixes fold through the keyed conditional leg
       ("event_type AS g0, ", "GROUP BY 1"))
+    // two disjoint minute-aligned ranges: under the forced cap, the
+    // edge-free hybrids' above-cap OR shapes
+    val alignedOr = Seq((Q.R1Start + 60000L, Q.R1Start + 2 * 86400000L - 120000L),
+      (Q.R1Start + 3 * 86400000L + 180000L, Q.R1End - 60000L))
     // each entry's ranges are ORed; none = NO PREDICATE
     val ranges = Seq(
       Seq((Q.R1Start, Q.R1End)),                   // day-aligned week
@@ -112,11 +116,15 @@ class FoldSweepSpec extends AnyFunSuite {
       // two disjoint sub-minute-edged ranges: the OR residue hybrids
       Seq((Q.R1Start + 30123L, Q.R1Start + 2 * 86400000L - 7001L),
         (Q.R1Start + 3 * 86400000L + 15007L, Q.R1End - 41L)),
+      alignedOr,
       Seq.empty)                                   // full span (round 11)
 
     var folded = 0
     var total = 0
     var orFolded = 0
+    // per range input: (folded, total)
+    val perRange = Array.fill(ranges.size)((0, 0))
+    val startNs = System.nanoTime()
     // the CAP dimension (round 11): the same full matrix under a
     // forced plan-time ceiling of 3, so every above-cap fallback —
     // grouped/keyed minute-state partials, the sliding re-rooted
@@ -148,7 +156,10 @@ class FoldSweepSpec extends AnyFunSuite {
       val sql = s"SELECT $gSel$agg FROM ev_sweep $where$gBy$order"
       total += 1
       val acc = spark.sql(sql)
-      if (foldsToLocal(acc)) {
+      val ri = ranges.indexOf(rs)
+      val fold = foldsToLocal(acc)
+      perRange(ri) = (perRange(ri)._1 + (if (fold) 1 else 0), perRange(ri)._2 + 1)
+      if (fold) {
         folded += 1
         if (rs.size > 1) orFolded += 1
       }
@@ -165,7 +176,13 @@ class FoldSweepSpec extends AnyFunSuite {
     // the forced cap), and the hybrids fold for all but the above-cap
     // sliding edges — well over half the matrix
     info(s"folded $folded/$total combinations, $orFolded of them over " +
-      "the OR of ranges")
+      "an OR of ranges; per range input " +
+      perRange.map { case (f, t) => s"$f/$t" }.mkString(", ") +
+      f"; ${(System.nanoTime() - startNs) / 1e9}%.0f s")
+    // every aligned OR combination folds: interior-only plans, below the
+    // cap per cell and above it through the edge-free hybrids
+    val (orF, orT) = perRange(ranges.indexOf(alignedOr))
+    assert(orF == orT, s"aligned OR folded only $orF/$orT")
     assert(folded * 2 >= total, s"only $folded/$total combinations folded")
     spark.conf.unset(capKnob)
     WheelAcceleration.clear()

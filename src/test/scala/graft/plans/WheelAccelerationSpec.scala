@@ -5021,4 +5021,134 @@ class WheelAccelerationSpec extends AnyFunSuite {
     assert(gotKG == wantKG, s"$gotKG vs $wantKG")
     WheelAcceleration.clear()
   }
+
+  test("keyed x time refusals record their notes: the OR-outer " +
+      "conditional, the aligned OR fold and the per-(key, cell) fold") {
+    WheelAcceleration.clear()
+    WheelAcceleration.registerKeyed(spark, path, events, "event_type")
+    events.createOrReplaceTempView("events_accel")
+    def r(a: Long, b: Long) =
+      s"(unix_millis(ts) >= $a AND unix_millis(ts) < $b)"
+    val or2 = s"${r(Q.R1Start, Q.R1Start + 86400000L)} OR " +
+      s"${r(Q.R1Start + 2 * 86400000L, Q.R1Start + 3 * 86400000L)}"
+    // (select list, WHERE, a fragment the refusal note must carry)
+    val cases = Seq(
+      ("SUM(value) FILTER (WHERE value > 1) AS s", or2,
+        "per-aggregate condition is not a bare time range"),
+      ("percentile(value, 0.5) AS p", or2, "percentile"),
+      ("percentile(value, 0.5) AS p", r(Q.R1Start, Q.R1End), "percentile"))
+    try cases.foreach { case (select, where, note) =>
+      // a stale note must not survive a refusal that records nothing
+      WheelAcceleration.recordBail(path, "sentinel")
+      val df = spark.sql("SELECT event_type, " +
+        s"(unix_millis(ts) div 3600000) * 3600000 AS h, $select " +
+        s"FROM events_accel WHERE $where GROUP BY 1, 2")
+      assert(df.queryExecution.optimizedPlan.collect {
+        case l: LocalRelation => l }.isEmpty,
+        df.queryExecution.optimizedPlan.treeString)
+      val reason = WheelAcceleration.lastBailReason(path).getOrElse("")
+      assert(reason.contains(note), s"$select over $where: $reason")
+    } finally WheelAcceleration.clear()
+  }
+
+  test("edge-free hybrids center each group on its own mean: STDDEV_POP " +
+      "over keys near 0 and near 2e8 folds in four shapes") {
+    // Key a sits near 0 and key b near 2e8, each with <= 0.04 spread.
+    // A global shift (~1e8) would cancel the within-key variance, but
+    // a plan with no edge scan ships every group's own mean as a shift
+    // column, so each shape folds and matches the scan.
+    import spark.implicits._
+    val src = new java.io.File("target/test-fixtures/accel/pergroupshift.parquet")
+      .getAbsolutePath
+    val t0 = Q.Jan1
+    (0 until 100).map { i =>
+      val key = if (i % 2 == 0) "a" else "b"
+      val base = if (key == "a") 0.0 else 2e8
+      (new java.sql.Timestamp(t0 + (i / 10) * 60000L + (i % 10) * 6000L),
+        key, if ((i / 2) % 2 == 0) "x" else "y", base + (i % 5) * 0.01)
+    }.toDF("ts", "k", "k2", "value").write.mode("overwrite").parquet(src)
+    def ev = spark.read.parquet(src)
+    def reg(): Unit = {
+      WheelAcceleration.registerKeyed(spark, src, ev, "k")
+      WheelAcceleration.registerKeyedComposite(spark, src, ev, Seq("k", "k2"))
+    }
+    ev.createOrReplaceTempView("ev_pergroupshift")
+    def r(a: Long, b: Long) =
+      s"(unix_millis(ts) >= ${t0 + a} AND unix_millis(ts) < ${t0 + b})"
+    val or2 = s"${r(0L, 180000L)} OR ${r(300000L, 540000L)}"
+    val hour = "(unix_millis(ts) div 3600000) * 3600000"
+    val minute = "(unix_millis(ts) div 60000) * 60000"
+    val capKnob = "spark.graft.wheel.rewrite.maxFoldRows"
+    // (shape, GROUP BY columns, WHERE, cap)
+    val shapes = Seq(
+      ("key over an aligned OR", Seq("k"), or2, None),
+      ("composite keys x minute over an aligned OR",
+        Seq("k", "k2", minute), or2, None),
+      ("key above the cap", Seq("k"), r(0L, 600000L), Some("1")),
+      ("key x hour above the cap", Seq("k", hour), r(0L, 600000L), Some("1")))
+    try shapes.foreach { case (shape, cols, where, cap) =>
+      val by = cols.indices.map(_ + 1).mkString(", ")
+      val sql = s"SELECT ${cols.mkString(", ")}, STDDEV_POP(value) AS sd " +
+        s"FROM ev_pergroupshift WHERE $where GROUP BY $by ORDER BY $by"
+      WheelAcceleration.clear()
+      reg()
+      cap.foreach(spark.conf.set(capKnob, _))
+      val df = spark.sql(sql)
+      assert(df.queryExecution.optimizedPlan.collect {
+        case l: LocalRelation => l }.nonEmpty,
+        s"$shape: ${WheelAcceleration.lastBailReason(src)}\n" +
+          df.queryExecution.optimizedPlan.treeString)
+      assert(!df.queryExecution.executedPlan.toString.contains("FileScan"),
+        shape)
+      val got = df.collect().toSeq
+      spark.conf.unset(capKnob)
+      WheelAcceleration.clear()
+      val want = spark.sql(sql).collect().toSeq
+      val n = cols.size
+      assert(got.map(_.toSeq.take(n)) == want.map(_.toSeq.take(n)),
+        s"$shape: $got vs $want")
+      got.zip(want).foreach { case (g, w) =>
+        val (gv, wv) = (g.getDouble(n), w.getDouble(n))
+        assert(math.abs(gv - wv) <= 1e-10 + 1e-4 * math.max(gv.abs, wv.abs),
+          s"$shape: fold $g vs scan $w")
+      }
+    } finally {
+      spark.conf.unset(capKnob)
+      WheelAcceleration.clear()
+    }
+  }
+
+  test("above the cap, unkeyed sketch spellings need the sum wheels' " +
+      "minute tier: a KeepN-evicted one keeps the scan with a note") {
+    // The above-cap sketch fold ships per-minute sketch bytes beside the
+    // sum wheels' minute partials, so evicted sum-wheel minutes refuse
+    // even when the sketch wheels still keep theirs.
+    WheelAcceleration.clear()
+    val idx = graft.wheel.WheelIndex.build(events, "ts", "value",
+      Map(graft.wheel.Tier.Minute -> graft.wheel.Retention.KeepN(24 * 60)))
+    assert(idx.retainedStartMs(graft.wheel.Tier.Minute) > idx.baseMs,
+      "fixture must actually evict minutes")
+    WheelAcceleration.registerPrebuilt(spark, path, "ts", Map("value" -> idx))
+    WheelAcceleration.registerSketches(spark, path, events,
+      distinctCols = Seq("user_id"))
+    events.createOrReplaceTempView("ev_keepn_sk")
+    val capKnob = "spark.graft.wheel.rewrite.maxFoldRows"
+    spark.conf.set(capKnob, "2")
+    try {
+      val sql = "SELECT (unix_millis(ts) div 86400000) * 86400000 AS d, " +
+        "approx_count_distinct(user_id) AS u FROM ev_keepn_sk " +
+        s"WHERE unix_millis(ts) >= ${Q.Jan1 + 86400000L} AND " +
+        s"unix_millis(ts) < ${Q.Jan1 + 4 * 86400000L} GROUP BY 1 ORDER BY 1"
+      val df = spark.sql(sql)
+      assert(df.queryExecution.optimizedPlan.collect {
+        case l: LocalRelation => l }.isEmpty,
+        df.queryExecution.optimizedPlan.treeString)
+      val reason = WheelAcceleration.lastBailReason(path).getOrElse("")
+      assert(reason.contains("minute tier is retention-evicted"), reason)
+      assert(df.collect().nonEmpty)
+    } finally {
+      spark.conf.unset(capKnob)
+      WheelAcceleration.clear()
+    }
+  }
 }

@@ -130,7 +130,7 @@ class PlanAuditSpec extends AnyFunSuite {
       val p = plan(k)
       assert(!p.contains("FileScan"), p)
       assert(p.contains("LocalTableScan"), p)
-      assert(p.contains("graft_theta_distinct_merge"), p)
+      assert(p.contains("graft_theta_update_merge"), p)
     }
 
   test("q_wheel_keyed_sketch_distributed_sql: above-cap keyed sketch " +
@@ -140,7 +140,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("LocalTableScan"), p)
     // a REAL executor-side aggregate runs the sketch union (not a
     // plan-time literal): the merge aggregate's name is in the plan
-    assert(p.contains("graft_theta_distinct_merge"), p)
+    assert(p.contains("graft_theta_update_merge"), p)
   }
 
   for (k <- Seq("q_wheel_case_sql", "q_wheel_filter_sql", "q_wheel_pivot_sql"))
